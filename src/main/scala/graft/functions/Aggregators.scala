@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed UDAFs (SURVEY §2.12): order-preserving capped distinct (A5) and the
@@ -31,10 +32,8 @@ object Aggregators {
       }
     override def finish(b: Map[String, Long]): Seq[String] =
       b.toSeq.sortBy { case (v, p) => (p, v) }.take(cap).map(_._1)
-    override def bufferEncoder: Encoder[Map[String, Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    override def outputEncoder: Encoder[Seq[String]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+    override def bufferEncoder: Encoder[Map[String, Long]] = firstPositionsEncoder
+    override def outputEncoder: Encoder[Seq[String]] = valuesEncoder
   }
 
   /** A9/X18: usage+cost accumulation across items
@@ -64,7 +63,14 @@ object Aggregators {
         b.embedTokens / 1000.0 * rates.per1kEmbedTokens +
         b.complInTokens / 1000.0 * rates.per1kComplIn +
         b.complOutTokens / 1000.0 * rates.per1kComplOut)
-    override def bufferEncoder: Encoder[Usage] = Encoders.product[Usage]
-    override def outputEncoder: Encoder[CostReport] = Encoders.product[CostReport]
+    override def bufferEncoder: Encoder[Usage] = usageEncoder
+    override def outputEncoder: Encoder[CostReport] = costReportEncoder
   }
+
+  // Derived once per JVM rather than in every task, for the reason given
+  // at graft.functions.TopKByScore's encoder.
+  private val firstPositionsEncoder: Encoder[Map[String, Long]] = ExpressionEncoder()
+  private val valuesEncoder: Encoder[Seq[String]] = ExpressionEncoder()
+  private val usageEncoder: Encoder[Usage] = Encoders.product[Usage]
+  private val costReportEncoder: Encoder[CostReport] = Encoders.product[CostReport]
 }

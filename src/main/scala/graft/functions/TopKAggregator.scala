@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Bounded-heap top-k as an Aggregator (SURVEY §4's "single-pass TopK with a
@@ -21,7 +22,6 @@ import org.apache.spark.sql.expressions.Aggregator
 class TopKByScore(k: Int)
     extends Aggregator[(Long, Double), List[(Long, Double)], List[(Long, Double)]] {
   require(k > 0, s"k must be positive, got $k")
-  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
   private val ord: Ordering[(Long, Double)] =
     Ordering.by[(Long, Double), (Double, Long)] { case (id, score) => (-score, id) }
@@ -43,9 +43,19 @@ class TopKByScore(k: Int)
 
   override def finish(buf: List[(Long, Double)]): List[(Long, Double)] = buf.sorted(ord)
 
-  override def bufferEncoder: Encoder[List[(Long, Double)]] =
-    ExpressionEncoder[List[(Long, Double)]]()
-  override def outputEncoder: Encoder[List[(Long, Double)]] =
+  override def bufferEncoder: Encoder[List[(Long, Double)]] = TopKByScore.encoder
+  override def outputEncoder: Encoder[List[(Long, Double)]] = TopKByScore.encoder
+}
+
+object TopKByScore {
+  /** Derived once per JVM. Spark asks an Aggregator for its encoders in
+    * every task, and deriving one from a TypeTag runs Scala runtime
+    * reflection through a mirror of the task thread's class loader, which
+    * the reflection library holds only weakly: after each GC the next task
+    * rebuilds it, scanning the classpath jars (≈100–280 ms added to the
+    * first search after a GC on a 4-core local session).
+    */
+  private val encoder: Encoder[List[(Long, Double)]] =
     ExpressionEncoder[List[(Long, Double)]]()
 }
 
@@ -58,7 +68,6 @@ class TopKByScore(k: Int)
 class TopTokensByCount(k: Int)
     extends Aggregator[(String, Long), List[(String, Long)], List[(String, Long)]] {
   require(k > 0, s"k must be positive, got $k")
-  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
   private val ord: Ordering[(String, Long)] =
     Ordering.by[(String, Long), (Long, String)] { case (tok, c) => (-c, tok) }
@@ -77,8 +86,12 @@ class TopTokensByCount(k: Int)
 
   override def finish(buf: List[(String, Long)]): List[(String, Long)] = buf.sorted(ord)
 
-  override def bufferEncoder: Encoder[List[(String, Long)]] =
-    ExpressionEncoder[List[(String, Long)]]()
-  override def outputEncoder: Encoder[List[(String, Long)]] =
+  override def bufferEncoder: Encoder[List[(String, Long)]] = TopTokensByCount.encoder
+  override def outputEncoder: Encoder[List[(String, Long)]] = TopTokensByCount.encoder
+}
+
+object TopTokensByCount {
+  /** Derived once per JVM, as [[TopKByScore]]'s. */
+  private val encoder: Encoder[List[(String, Long)]] =
     ExpressionEncoder[List[(String, Long)]]()
 }

@@ -1046,19 +1046,24 @@ object Dedup {
     *
     * The returned ids are the batch ids to DROP; survivors = batch ids
     * minus the set (null ids excluded by the caller — the distributed
-    * semi join dropped them implicitly).
+    * semi join dropped them implicitly). A pair with a null endpoint and a
+    * null dup id are dropped before the collects: the distributed shape's
+    * joins never match a null either. Dup ids are de-duplicated before
+    * their collect, so it holds at most one row per batch id.
     */
   private[operators] def novelDropIds(batchPairs: DataFrame, dupIds: DataFrame,
       driverEdgeCap: Long = 200000L): Option[Array[Long]] = {
     def tooLarge(e: Throwable): Boolean =
       e.getMessage != null && e.getMessage.contains("maxResultSize")
     val pairs =
-      try batchPairs.select(col("id_a"), col("id_b")).collect()
+      try batchPairs.select(col("id_a"), col("id_b"))
+        .filter(col("id_a").isNotNull && col("id_b").isNotNull).collect()
       catch { case e: org.apache.spark.SparkException if tooLarge(e) =>
         return None }
     if (pairs.length > driverEdgeCap) return None
     val dups =
-      try dupIds.collect().map(_.getLong(0))
+      try dupIds.filter(col("id").isNotNull).dropDuplicates("id")
+        .collect().map(_.getLong(0))
       catch { case e: org.apache.spark.SparkException if tooLarge(e) =>
         return None }
     // union-find with path compression over the pair endpoints

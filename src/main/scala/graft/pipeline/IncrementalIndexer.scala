@@ -32,6 +32,18 @@ object IncrementalIndexer {
     StructField("attempts", IntegerType),
     StructField("blocked", BooleanType)))
 
+  /** The index table's columns — the `newDocs` projection in [[runOnce]]. */
+  private[pipeline] val indexSchema = StructType(Seq(
+    StructField("id", StringType),
+    StructField("parent_id", LongType),
+    StructField("chunk_id", IntegerType),
+    StructField("content", StringType),
+    StructField("n_tokens", IntegerType),
+    StructField("chunk_offset", LongType),
+    StructField("source", StringType),
+    StructField("lang", StringType),
+    StructField("contentVector", ArrayType(FloatType, containsNull = false))))
+
   private def readOr(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     if (graft.core.Fs.exists(spark, dir))
       // schema supplied (it is this writer's own) — skips the per-read
@@ -40,7 +52,20 @@ object IncrementalIndexer {
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** One incremental run. `docs` needs (doc_id, text, source, lang). */
+  /** One incremental run. `docs` needs (doc_id, text, source, lang).
+    *
+    * A run that would change nothing writes nothing (the reference's
+    * hourly no-change run diffs the listing and uploads and deletes
+    * nothing): it launches no chunk/embed work and rewrites neither the
+    * index nor the state table, and `indexSize` is one count over the
+    * existing index. The skip fires exactly when the rewrite would put
+    * back the rows already there: both tables exist, no listed document
+    * is new or changed outside the blocked set (`processed == 0`), every
+    * index parent is listed (`purgedParents == 0`), and the listing's
+    * `doc_id`s are non-null, distinct and matched one-to-one with the
+    * state rows, none of which has a null column. Any other run takes the
+    * rewrite path below.
+    */
   def runOnce(spark: SparkSession, docs: DataFrame, indexDir: String, stateDir: String,
       runId: String, p: SplitParams = ChunkIndexer.defaultSplit,
       embedder: Embedder = new HashingEmbedder(64)): RunSummary = {
@@ -69,6 +94,12 @@ object IncrementalIndexer {
       count(when(!isBlocked && changed, 1)).as("processed")).head()
     val (sourceDocs, blockedCount, unchanged, processed) =
       (stats.getLong(0), stats.getLong(1), stats.getLong(2), stats.getLong(3))
+    val unchangedSize =
+      if (processed == 0) unchangedIndexSize(spark, hashed, state, indexDir, stateDir)
+      else None
+    if (unchangedSize.isDefined)
+      return RunSummary(runId, sourceDocs, processed, unchanged, blockedCount,
+        purgedParents = 0, chunksWritten = 0, indexSize = unchangedSize.get)
     val toProcess = joined.filter(!isBlocked && changed)
       .select(hashed.columns.toIndexedSeq.map(col): _*)
 
@@ -86,7 +117,7 @@ object IncrementalIndexer {
     val chunksWritten = newDocs.count()
 
     // K2/K3 replace + J2 purge against the current source listing
-    val index = readOr(spark, indexDir, newDocs.schema)
+    val index = readOr(spark, indexDir, indexSchema)
     val replaced = ChunkIndexer.replaceParents(index, newDocs)
     val purged = ChunkIndexer.purgeMissing(replaced,
       hashed.select(col("doc_id").as("parent_id")))
@@ -118,6 +149,33 @@ object IncrementalIndexer {
       purgedParents, chunksWritten, finalIndex.count())
   }
 
+  /** The index row count when a run with nothing to process
+    * (`processed == 0`) would rewrite both tables with exactly the rows
+    * they hold; None when the rewrite would change either table. With
+    * nothing processed, the rewrite keeps the index rows whose parent is
+    * listed and writes one state row per listing row, built from the one
+    * state row it matches. So the tables stay the same when both exist and,
+    * for every key (null included), the listing has exactly one row, the
+    * state exactly one row with no null column, and the key is listed if
+    * the index has rows for it. One grouped pass over the three key
+    * columns checks all of it and counts the index.
+    */
+  private def unchangedIndexSize(spark: SparkSession, listing: DataFrame,
+      state: DataFrame, indexDir: String, stateDir: String): Option[Long] = {
+    if (!graft.core.Fs.exists(spark, indexDir) || !graft.core.Fs.exists(spark, stateDir))
+      return None
+    val complete = Seq("content_hash", "attempts", "blocked").map(col(_).isNotNull).reduce(_ && _)
+    val keys = listing.select(col("doc_id").as("k"), lit(1).as("l"), lit(0).as("s"), lit(0).as("i"))
+      .unionByName(state.select(col("parent_id").as("k"), lit(0).as("l"),
+        when(complete, 1).otherwise(2).as("s"), lit(0).as("i")))
+      .unionByName(readOr(spark, indexDir, indexSchema)
+        .select(col("parent_id").as("k"), lit(0).as("l"), lit(0).as("s"), lit(1).as("i")))
+    val r = keys.groupBy("k").agg(sum("l").as("l"), sum("s").as("s"), sum("i").as("i"))
+      .agg(count(when(col("l") =!= 1 || col("s") =!= 1, 1)), coalesce(sum("i"), lit(0L)))
+      .head()
+    if (r.getLong(0) == 0) Some(r.getLong(1)) else None
+  }
+
   /** Post-purge consistency check (blob_storage_indexer.py:1761-1830): a
     * bounded re-scan of the index asserting the purged parents actually
     * vanished. Where the reference polls an eventually-consistent search
@@ -130,7 +188,7 @@ object IncrementalIndexer {
     // a not-yet-created index trivially has no leaks (same missing-table
     // tolerance as readOr above)
     if (!graft.core.Fs.exists(spark, indexDir)) return Array.empty
-    spark.read.parquet(indexDir).select(col("parent_id")).distinct()
+    spark.read.schema(indexSchema).parquet(indexDir).select(col("parent_id")).distinct()
       .join(currentParents.select(col(currentParents.columns.head).as("parent_id")),
         Seq("parent_id"), "left_anti")
       .collect().map(_.getLong(0))
@@ -192,7 +250,7 @@ object IncrementalIndexer {
       blocked: Boolean, resetAttempts: Boolean): Unit = {
     if (!graft.core.Fs.exists(spark, stateDir)) return
     val hit = col("parent_id") === parentId
-    var state = spark.read.parquet(stateDir)
+    var state = spark.read.schema(stateSchema).parquet(stateDir)
       .withColumn("blocked", when(hit, lit(blocked)).otherwise(col("blocked")))
     if (resetAttempts)
       state = state.withColumn("attempts", when(hit, lit(0)).otherwise(col("attempts")))

@@ -36,6 +36,15 @@ object StreamingIngest {
       residRatioMax: Double = 1.25,
       klMax: Double = 0.5)
 
+  /** `body` with `description` as its jobs' description, cleared after
+    * it: the overlap legs run on reused [[graft.core.Pools.io]] threads, so
+    * a label left set would tag later, unrelated jobs on that thread.
+    */
+  private def labelled[T](s: SparkSession, description: String)(body: => T): T = {
+    s.sparkContext.setJobDescription(description)
+    try body finally s.sparkContext.setJobDescription(null)
+  }
+
   /** Default hash-bucket count for the index tables. Size it to the
     * index's data, not its row count at gate scale: each micro-batch's
     * upsert rewrites every touched bucket, so an oversharded index pays
@@ -277,18 +286,14 @@ object StreamingIngest {
               implicit val ec: scala.concurrent.ExecutionContext =
                 graft.core.Pools.io
               val up = Seq(
-                Future {
-                  s.sparkContext.setJobDescription(
-                    s"embed-ingest b$batchId: sks upsert")
+                Future(labelled(s, s"embed-ingest b$batchId: sks upsert") {
                   PartitionedUpsert.upsertByKey(s, sksDir, delta,
                     "id", buckets, Some(keyRows))
-                },
-                Future {
-                  s.sparkContext.setJobDescription(
-                    s"embed-ingest b$batchId: bands upsert")
+                }),
+                Future(labelled(s, s"embed-ingest b$batchId: bands upsert") {
                   PartitionedUpsert.upsertByKey(s, bandsDir, deltaBands,
                     "id", buckets, Some(keyRows))
-                })
+                }))
               val outcomes = up.map(f => scala.util.Try(
                 Await.result(f, scala.concurrent.duration.Duration.Inf)))
               outcomes.collectFirst { case scala.util.Failure(e) => throw e }
@@ -385,18 +390,14 @@ object StreamingIngest {
               implicit val ec: scala.concurrent.ExecutionContext =
                 graft.core.Pools.io
               val up = Seq(
-                Future {
-                  s.sparkContext.setJobDescription(
-                    s"neardup-ingest b$batchId: sigs upsert")
+                Future(labelled(s, s"neardup-ingest b$batchId: sigs upsert") {
                   PartitionedUpsert.upsertByKey(s, sigsDir, deltaSigs,
                     "id", buckets, Some(keyRows))
-                },
-                Future {
-                  s.sparkContext.setJobDescription(
-                    s"neardup-ingest b$batchId: bands upsert")
+                }),
+                Future(labelled(s, s"neardup-ingest b$batchId: bands upsert") {
                   PartitionedUpsert.upsertByKey(s, bandsDir, deltaBands,
                     "id", buckets, Some(keyRows))
-                })
+                }))
               // await BOTH before surfacing a failure: rethrowing on the
               // first would leave the other table's overwrite running
               // detached, racing any replay of this batch

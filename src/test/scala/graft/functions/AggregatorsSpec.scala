@@ -41,4 +41,17 @@ class AggregatorsSpec extends AnyFunSuite {
     val expected = 12 * 0.01 + 6.0 * 0.00013 + 1.0 * 0.0025 + 0.2 * 0.01
     assert(math.abs(rep.costUsd - expected) < 1e-12)
   }
+
+  test("typed aggregators reuse one encoder per type across instances") {
+    // Spark asks for the encoders in every task; deriving them there runs
+    // Scala reflection whose class-loader mirror a GC can drop
+    assert(new TopKByScore(3).outputEncoder eq new TopKByScore(10).bufferEncoder)
+    assert(new TopTokensByCount(3).outputEncoder eq new TopTokensByCount(7).bufferEncoder)
+    val distinct = (new Aggregators.OrderedCappedDistinct(3), new Aggregators.OrderedCappedDistinct(9))
+    assert(distinct._1.bufferEncoder eq distinct._2.bufferEncoder)
+    assert(distinct._1.outputEncoder eq distinct._2.outputEncoder)
+    val cost = (new Aggregators.CostAccumulator(), new Aggregators.CostAccumulator())
+    assert(cost._1.bufferEncoder eq cost._2.bufferEncoder)
+    assert(cost._1.outputEncoder eq cost._2.outputEncoder)
+  }
 }

@@ -74,6 +74,23 @@ class IngestSurvivorsSpec extends AnyFunSuite {
     assert(a == Set(1L, 4L))
   }
 
+  test("null ids in pairs and dups are skipped; a repeated dup id collects once") {
+    import spark.implicits._
+    val ids = 1L to 6L
+    // {1,2} a cluster; the pairs with a null end connect nothing; {5,6}
+    // touched by dup 5, which arrives twice beside a null
+    val pairs = Seq[(Option[Long], Option[Long])](Some(1L) -> Some(2L),
+      None -> Some(3L), Some(4L) -> None, Some(5L) -> Some(6L)).toDF("id_a", "id_b")
+    val dups = Seq[Option[Long]](Some(5L), None, Some(5L)).toDF("id")
+    val drop = Dedup.novelDropIds(pairs, dups)
+      .getOrElse(fail("fast path must engage under the cap")).toSet
+    val viaDriver = ids.filterNot(drop).toSet
+    val viaDistributed = Dedup.novelSurvivorIds(idsDf(ids: _*), pairs, dups)
+      .collect().map(_.getLong(0)).toSet
+    assert(viaDriver == viaDistributed)
+    assert(viaDriver == Set(1L, 3L, 4L))
+  }
+
   test("overflow cap returns None — the caller falls back distributed") {
     assert(Dedup.novelDropIds(pairsDf(1L -> 2L, 3L -> 4L), idsDf(),
       driverEdgeCap = 1L).isEmpty)

@@ -267,6 +267,56 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(landed > 0, "arrivals must still index through the monitored run")
   }
 
+  test("upsert legs leave no job description on the reused overlap-pool threads") {
+    import graft.operators.Dedup
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val root = Files.createTempDirectory("graft-ingest-label").toString
+    val vecs = s"$root/vecs"; val index = s"$root/index"
+    // an existing index, so the batch's two upserts run as overlap legs
+    val sk = Dedup.embeddingSketches(Seq(2L -> planeVec(90)).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", bands = 8, rowsPerBand = 4)
+    PartitionedUpsert.writeInitial(sk, s"$index/sks", "id", 8)
+    PartitionedUpsert.writeInitial(Dedup.embeddingBandIndex(sk), s"$index/bands", "id", 8)
+    writeStagedVecs(vecs, 0, Seq(1L -> planeVec(0)))
+    StreamingIngest.runAvailableNowNearDupEmbeddings(spark, vecs, index,
+      s"$root/ckpt", minCosine = 0.9, bands = 8, rowsPerBand = 4, buckets = 8)
+    assert(PartitionedUpsert.read(spark, s"$index/sks").filter($"id" === 1L).count() == 1,
+      "the novel arrival must land through the upsert legs")
+    // submit a job from each of eight pool threads at once (the probes
+    // hold each other at a barrier, so each takes its own thread; the
+    // pool reuses its most recently idle threads first, the upsert legs'
+    // among them) and record the description each job carries
+    val sc = spark.sparkContext
+    val probes = 8
+    val seen = new ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.probe") != null)
+          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.io
+      val barrier = new CountDownLatch(probes)
+      val jobs = (1 to probes).map(_ => Future {
+        barrier.countDown()
+        barrier.await(60, TimeUnit.SECONDS)
+        sc.setLocalProperty("graft.test.probe", "1")
+        try sc.parallelize(Seq(1), 1).count()
+        finally sc.setLocalProperty("graft.test.probe", null)
+      })
+      jobs.foreach(Await.result(_, 2.minutes))
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (seen.size < probes && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val labels = seen.asScala.toSeq
+    assert(labels.size == probes)
+    assert(!labels.exists(_.startsWith("embed-ingest")), s"stale labels: $labels")
+  }
+
   test("chain split across micro-batches: streaming keeps what batch CC drops (documented non-equivalence)") {
     import graft.operators.Dedup
     // A~B and B~C but A!~C (0°, 25°, 50° at threshold cos 0.9 = 25.8°):
