@@ -1,10 +1,88 @@
 package graft
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 object Bench {
+
+  private val mapper = new ObjectMapper()
+
+  /** The bench record as (headline, full record), each one JSON line.
+    * `full` holds (query, best seconds or -1 if it threw, jobs) sorted by
+    * name. Millisecond precision keeps the lines compact; -1.0 marks a
+    * query that threw — a failing run must read as broken, not fast, so
+    * any failure forces the headline total to -1.0 and is counted.
+    *
+    * Key order of the full record: metric, value, unit, failed,
+    * [filtered, repeat, anchor_geomean, anchor_n], queries, sf, canary,
+    * floor_normalized, jobs, [extra_samples], [duckdb_anchor]. The
+    * headline has n_queries before its queries (the 10 slowest) and stops
+    * after floor_normalized.
+    */
+  private[graft] def records(full: Seq[(String, Double, Long)], sfDir: String,
+      filtered: Option[Int], repeat: Int, anchorTimes: Map[String, Double],
+      canaryOpen: Double, canarySeries: Seq[Double], canaryEvery: Int,
+      redoSegments: Int, floorBase: Double, extraSamples: Seq[(String, Int)],
+      anchor: Option[JsonNode]): (String, String) = {
+    def r3(v: Double): Double = if (v < 0) -1.0 else math.rint(v * 1000) / 1000
+    val results = full.map { case (name, elapsed, _) => name -> elapsed }
+    val failed = results.count(_._2 < 0)
+    val total = if (failed > 0) -1.0 else r3(results.map(_._2).sum)
+    // Gate number in-record: geometric mean of spark_wall/duckdb_wall over
+    // the anchor queries present in this run (all 16 on a full or
+    // anchors-filtered run). -1.0 if any covered anchor failed.
+    val anchorCovered = results.filter { case (k, _) => anchorTimes.contains(k) }
+    val anchorGeo =
+      if (anchorCovered.isEmpty) None
+      else if (anchorCovered.exists(_._2 < 0)) Some(-1.0)
+      else Some(math.exp(anchorCovered.map { case (k, v) =>
+        math.log(v / anchorTimes(k)) }.sum / anchorCovered.size))
+    // Floor-normalized headline: wall minus jobs×(cleanest canary floor),
+    // clamped at 0 per query — approximates the data-dependent cost with
+    // the scheduler floors discounted, so cross-round totals compare
+    // without a human knowing the ambient-load band. An ESTIMATE (job
+    // attribution is listener-async, the floor varies within a run);
+    // the raw total stays the headline of record.
+    val normTotal =
+      if (failed > 0) -1.0
+      else r3(full.map { case (_, t, j) => math.max(0.0, t - j * floorBase) }.sum)
+
+    def record(queries: Seq[(String, Double)], nQueries: Option[Int]): ObjectNode = {
+      val o = mapper.createObjectNode().put("metric", "total").put("value", total)
+        .put("unit", "sec").put("failed", failed)
+      filtered.foreach(n => o.put("filtered", n))
+      if (repeat > 1) o.put("repeat", repeat)
+      anchorGeo.foreach(g => o.put("anchor_geomean", math.rint(g * 1000) / 1000)
+        .put("anchor_n", anchorCovered.size))
+      nQueries.foreach(n => o.put("n_queries", n))
+      val q = o.putObject("queries")
+      queries.foreach { case (k, v) => q.put(k, r3(v)) }
+      o.put("sf", sfDir)
+      val c = o.putObject("canary").put("open", r3(canaryOpen))
+      val series = c.putArray("series")
+      canarySeries.foreach(v => series.add(r3(v)))
+      c.put("every", canaryEvery).put("redo_segments", redoSegments).put("unit", "sec")
+      o.putObject("floor_normalized").put("value", normTotal)
+        .put("jobs_total", full.map(_._3).sum).put("floor", r3(floorBase))
+        .put("unit", "sec")
+      o
+    }
+    val headline = record(results.sortBy(-_._2).take(10), Some(results.size))
+    val rec = record(results, None)
+    val jobs = rec.putObject("jobs")
+    full.foreach { case (k, _, j) => jobs.put(k, j) }
+    if (extraSamples.nonEmpty) {
+      val x = rec.putObject("extra_samples")
+      extraSamples.foreach { case (k, n) => x.put(k, n) }
+    }
+    anchor.foreach(a => rec.set[JsonNode]("duckdb_anchor", a))
+    (mapper.writeValueAsString(headline), mapper.writeValueAsString(rec))
+  }
 
   /** Scheduler-floor canary: median of three single-job `range(1).count()`
     * rounds. The suite's sub-second queries are dominated by per-job
-    * scheduler floors (~85ms/job on this box, see SCALING.md FloorProbe),
+    * scheduler floors (~85ms/job on the 32-core bench host, SCALING.md
+    * "Constant-factor floor vs the DuckDB anchor"),
     * so a loaded machine inflates every query by roughly the same floor
     * multiple — the r11 driver record read uniformly ~20-40% above a
     * same-HEAD steady-state run purely from co-tenant load, and nothing in
@@ -42,26 +120,31 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // DuckDB anchor wall-times (scripts/duckdb_anchor.py, committed). Read
-    // up front: the anchor names double as the "anchors" filter set below,
-    // and the summary line self-reports the gate geomean so a window hunt
-    // can read one number per run instead of post-processing the record.
-    val anchorTimes: Map[String, Double] = {
+    // DuckDB anchor (scripts/duckdb_anchor.py, committed): DuckDB's
+    // wall-times for the anchor queries on the same sf0.1 tables, so the
+    // record carries both engines' numbers rather than only round-over-round
+    // history. Read up front: the anchor names double as the "anchors"
+    // filter set below, and the summary line self-reports the gate geomean
+    // so a window hunt can read one number per run instead of
+    // post-processing the record. A malformed or hand-edited file drops
+    // the anchor, never the record.
+    val anchor: Option[JsonNode] = {
       val p = java.nio.file.Paths.get("DUCKDB_ANCHOR.json")
-      if (!java.nio.file.Files.isReadable(p)) Map.empty
+      if (!java.nio.file.Files.isReadable(p)) None
       else try {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-        val q = node.get("queries")
-        if (q == null || !q.isObject) Map.empty
-        else {
-          val it = q.fields()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-          b.result()
-        }
-      } catch { case _: Throwable => Map.empty }
+        val node = Option(mapper.readTree(java.nio.file.Files.readAllBytes(p)))
+          .filter(_.isObject)
+        if (node.isEmpty) System.err.println("[bench] anchor not a JSON object; omitted")
+        node
+      } catch {
+        case t: Throwable =>
+          System.err.println(s"[bench] anchor unparseable; omitted: $t"); None
+      }
     }
+    val anchorTimes: Map[String, Double] = anchor
+      .flatMap(a => Option(a.get("queries"))).filter(_.isObject)
+      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asDouble()).toMap)
+      .getOrElse(Map.empty)
 
     // Query filter: SPARK_GRAFT_BENCH_QUERIES = "anchors" (the DuckDB-anchor
     // set) or a comma-list of query names. A filtered pass (~40s for the 16
@@ -97,7 +180,8 @@ object Bench {
     val qs = Seq.fill(repeat)(qsOnce).flatten
 
     // Per-query JOB counts, for the floor-normalized headline: the suite's
-    // sub-second queries are scheduler-floor-bound (~80ms/job, FloorProbe),
+    // sub-second queries are scheduler-floor-bound (~80ms/job, SCALING.md
+    // "Constant-factor floor vs the DuckDB anchor"),
     // so "wall minus jobs×floor" approximates the data-dependent cost and
     // makes cross-round totals comparable without a human discounting the
     // ambient-load band (r12 verdict item 7). Listener delivery is
@@ -269,85 +353,16 @@ object Bench {
           if (!t.isNaN && t < elapsed) (name, t, j) else (name, elapsed, jobs)
         } else (name, elapsed, jobs)
       }
-    val results = full.map { case (name, elapsed, _) => name -> elapsed }
     if (polluted.nonEmpty) redone += canaryFloor(spark)
-
-    // Millisecond precision keeps the line compact; -1.0 marks a query that
-    // threw — a failing run must read as broken, not fast, so any failure
-    // forces the headline total to -1.0 and is counted.
-    def r3(v: Double): Double = if (v < 0) -1.0 else math.rint(v * 1000) / 1000
-    val qjson = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val failed = results.count(_._2 < 0)
-    val total = if (failed > 0) -1.0 else r3(results.map(_._2).sum)
-    val canaryJson = {
-      val series = (canarySeries ++ redone).map(r3).mkString("[", ",", "]")
-      s""","canary":{"open":${r3(canaryOpen)},"series":$series,"every":$canaryEvery,"redo_segments":${polluted.size},"unit":"sec"}"""
-    }
-    // Floor-normalized headline: wall minus jobs×(cleanest canary floor),
-    // clamped at 0 per query — approximates the data-dependent cost with
-    // the scheduler floors discounted, so cross-round totals compare
-    // without a human knowing the ambient-load band. An ESTIMATE (job
-    // attribution is listener-async, the floor varies within a run);
-    // the raw total stays the headline of record.
-    val jobsTotal = full.map(_._3).sum
-    val normTotal =
-      if (failed > 0) -1.0
-      else r3(full.map { case (_, t, j) =>
-        math.max(0.0, t - j * floorBase) }.sum)
-    val normJson =
-      s""","floor_normalized":{"value":$normTotal,"jobs_total":$jobsTotal,"floor":${r3(floorBase)},"unit":"sec"}"""
-    val jobsJson = full.map { case (k, _, j) => s"\"" + k + "\":" + j }
-      .mkString(",\"jobs\":{", ",", "}")
-    val extrasJson =
-      if (extraSamples.isEmpty) ""
-      else extraSamples.map { case (k, n) => s"\"" + k + "\":" + n }
-        .mkString(",\"extra_samples\":{", ",", "}")
-    // External comparative anchor: DUCKDB_ANCHOR.json records DuckDB's
-    // wall-times for the headline TPC-H trio on the same sf0.1 tables
-    // (generated by scripts/duckdb_anchor.py, committed), so the summary
-    // carries both engines' numbers rather than only round-over-round
-    // history. Embedded verbatim; absent file → key omitted.
-    val anchor = {
-      val p = java.nio.file.Paths.get("DUCKDB_ANCHOR.json")
-      if (java.nio.file.Files.isReadable(p)) {
-        val raw = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        // Validate before splicing: a malformed or hand-edited anchor file
-        // must drop the key, not corrupt the whole summary line for every
-        // downstream parser. Jackson is already on the Spark classpath.
-        try {
-          val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(raw)
-          if (node != null && node.isObject) ",\"duckdb_anchor\":" + node.toString
-          else { System.err.println("[bench] anchor not a JSON object; omitted"); "" }
-        } catch {
-          case t: Throwable =>
-            System.err.println(s"[bench] anchor unparseable; omitted: $t"); ""
-        }
-      } else ""
-    }
-    // Gate number in-record: geometric mean of spark_wall/duckdb_wall over
-    // the anchor queries present in this run (all 16 on a full or
-    // anchors-filtered run). -1.0 if any covered anchor failed.
-    val anchorCovered = results.filter { case (k, _) => anchorTimes.contains(k) }
-    val anchorGeo =
-      if (anchorCovered.isEmpty) None
-      else if (anchorCovered.exists(_._2 < 0)) Some(-1.0)
-      else Some(math.exp(anchorCovered.map { case (k, v) =>
-        math.log(v / anchorTimes(k)) }.sum / anchorCovered.size))
-    val geoJson = anchorGeo.map(g =>
-      s""","anchor_geomean":${math.rint(g * 1000) / 1000},"anchor_n":${anchorCovered.size}""").getOrElse("")
-    val filteredJson = keep.map(k => s""","filtered":${k.size}""").getOrElse("") +
-      (if (repeat > 1) s""","repeat":$repeat""" else "")
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed$filteredJson$geoJson,"queries":$qjson,"sf":"$sfDir"$canaryJson$normJson$jobsJson$extrasJson$anchor}"""
+    val (headline, line) = records(full, sfDir, keep.map(_.size), repeat,
+      anchorTimes, canaryOpen, (canarySeries ++ redone).toSeq, canaryEvery,
+      polluted.size, floorBase, extraSamples.toSeq, anchor)
     // Human-friendly headline FIRST (short self-contained record, queries
     // map limited to the 10 slowest) — the full record is printed LAST so
     // a tail capture's final JSON line is the complete per-query record
     // (r19 verdict item 1: the driver's extractor reads the run's last
     // line, which used to be this short form and parsed as null).
-    val slow = results.sortBy(-_._2).take(10)
-      .map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed$filteredJson$geoJson,"n_queries":${results.size},"queries":$slow,"sf":"$sfDir"$canaryJson$normJson}""")
+    println(headline)
     // Durable copies: a log-tail capture can truncate the (long) per-query
     // line; the files are the parse-safe record. bench_record.json sits at
     // the repo root where the driver (and a human) can find it without

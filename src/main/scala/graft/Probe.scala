@@ -1,15 +1,31 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Ad-hoc perf probe: run selected queries N times in one session. */
+/** Dev probe over the registered queries. The first argument picks the mode:
+  *   run (default)           time each query named in SPARK_GRAFT_PROBE over
+  *                           SPARK_GRAFT_REPS warm reps in one session
+  *   show <name> [sfDir] [n] print one query's first n result rows
+  *   plan                    print the formatted physical plan of each query
+  *                           named in SPARK_GRAFT_PROBE (pushdown, broadcast
+  *                           choice and codegen span audit)
+  */
 object Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = sys.env.getOrElse("SPARK_GRAFT_PROBE", "d2_minhash_pairs").split(",")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+  def main(args: Array[String]): Unit = args.headOption.getOrElse("run") match {
+    case "run" => run()
+    case "show" if args.length >= 2 =>
+      show(args(1), args.lift(2).getOrElse("/root/testdata/sf0.01"),
+        args.lift(3).fold(50)(_.toInt))
+    case "plan" => plan()
+    case _ => sys.error("usage: Probe [run | show <name> [sfDir] [n] | plan]")
+  }
+
+  private def names: Seq[String] =
+    sys.env.getOrElse("SPARK_GRAFT_PROBE", "d2_minhash_pairs").split(",").toSeq
+
+  private def session(cores: Int): SparkSession = {
     val builder = Tables.configure(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false"))
@@ -20,6 +36,13 @@ object Probe {
       })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private def run(): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val spark = session(32)
     // job counter + drain, as in Bench: per-rep job counts attribute the
     // scheduler-floor share of a sub-second query
     val jobCounter = new java.util.concurrent.atomic.AtomicLong()
@@ -52,17 +75,27 @@ object Probe {
       drain()
       val j0 = jobCounter.get()
       val t0 = System.nanoTime()
-      // SPARK_GRAFT_CONSUME=rdd: consume via toRdd.count() (executes the
-      // identical physical plan, skips count()'s extra two-stage agg —
-      // A/B harness for the Bench consumption question)
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val cnt =
-        if (sys.env.get("SPARK_GRAFT_CONSUME").contains("rdd"))
-          df.queryExecution.toRdd.count()
-        else df.count()
+      val cnt = SparkEntry.queries(n)(spark, sfDir).count()
       val t = (System.nanoTime() - t0) / 1e9
       drain()
       println(f"PROBE $n rep=$r rows=$cnt t=$t%.2f jobs=${jobCounter.get() - j0}")
+    }
+    spark.stop()
+  }
+
+  private def show(name: String, sfDir: String, n: Int): Unit = {
+    val spark = session(8)
+    SparkEntry.queries(name)(spark, sfDir).show(n, truncate = false)
+    spark.stop()
+  }
+
+  private def plan(): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val spark = session(4)
+    names.foreach { n =>
+      println(s"==== $n ====")
+      println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
     }
     spark.stop()
   }

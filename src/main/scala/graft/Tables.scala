@@ -74,9 +74,10 @@ object Tables {
   // Memoized per (session, sfDir, table): `spark.read.parquet` performs
   // file listing + footer schema read + analysis on EVERY call, and the
   // multi-table queries pay it 4-6x per execution — measured ~0.42s of
-  // q05's ~1.0s wall at sf0.1 (FloorProbe: fresh-build 0.98s vs reused-
-  // DataFrame 0.56s). Production engines hold this in a catalog; here the
-  // analyzed DataFrame is the catalog entry. Safe because every load
+  // q05's ~1.0s wall at sf0.1 (fresh-build 0.98s vs reused-DataFrame
+  // 0.56s; SCALING.md "Constant-factor floor vs the DuckDB anchor").
+  // Production engines hold this in a catalog; here the analyzed
+  // DataFrame is the catalog entry. Safe because every load
   // target is driver-generated read-only testdata (mutable job outputs go
   // through spark.read directly, never through load). WeakHashMap keyed
   // on the session so stopped sessions don't pin their plans.

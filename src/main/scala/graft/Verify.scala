@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -38,24 +40,14 @@ object Verify {
         errors(name) = String.valueOf(e).linesIterator.nextOption().getOrElse("")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    // Jackson escapes quotes, backslashes and ALL control chars — a tab or
+    // CR in oracle SQL must not make the compare's json.load fail and
+    // silently zero the correctness check.
+    val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      mapper.writeValueAsString(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/errors.json"),
+      mapper.writeValueAsString(errors))
     System.err.println(
       s"[verify] dumped ${names.size - errors.size}/${names.size}, failed ${errors.size}")
     spark.stop()

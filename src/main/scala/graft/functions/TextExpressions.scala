@@ -30,7 +30,7 @@ object TextKernels {
     * replaces the five-operator SQL chain
     * (trim→split→filter→transform/slice/array_join) whose higher-order
     * functions are CodegenFallback: the chain alone cost 0.38 s of d11's
-    * 0.59 s at sf0.1 (FloorProbe r12 `d11_scan_window_md5`). Tokenization
+    * 0.59 s at sf0.1 (SCALING.md "Floor attribution: d11, a7"). Tokenization
     * matches the SQL chain exactly — space-only trim (SQL `trim` touches
     * only ' '), split on single spaces, empties dropped — and window g
     * covers tokens [g*w, min(n, g*w+w)), so `array_join(slice(toks,

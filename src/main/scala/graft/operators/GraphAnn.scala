@@ -398,10 +398,10 @@ object GraphAnn {
     *
     * MEMORY SIZING: the per-iteration candidate shuffle is n·(2k)² rows
     * — at 512k×k=20 that is ~800 M pairs, which exceeds a single 8 GB
-    * JVM running 32 concurrent tasks (measured: the GraphStudy harness
-    * OOMs; SCALING.md "512k stress"). `candidateSlices` makes peak
-    * candidate volume a TUNABLE instead of a cliff: the 2-hop generation
-    * splits into S hash-bands of the PIVOT node (the join key), and each
+    * JVM running 32 concurrent tasks (measured OOM at 512k; SCALING.md
+    * "512k stress"). `candidateSlices` makes peak candidate volume a
+    * TUNABLE instead of a cliff: the 2-hop generation splits into S
+    * hash-bands of the PIVOT node (the join key), and each
     * band's candidates fold through the bounded-heap top-k into the
     * accumulator before the next band generates — top-k under the
     * deterministic (sim desc, id asc) order is an associative merge, so
@@ -415,7 +415,7 @@ object GraphAnn {
     */
   def nnDescent(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 4, sampleRate: Double = 1.0,
-      adjCap: Int = -1, candidateSlices: Int = 1,
+      candidateSlices: Int = 1,
       foldCarriedSims: Option[Boolean] = None): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -470,9 +470,10 @@ object GraphAnn {
         .select(col("id"), col("nbr"))
     }.reduce(_.unionByName(_))
     var edges = bestK(seeds).localCheckpoint(true)
-    // adjCap < 0 -> the default 2k hub guard; SkewProbe passes MaxValue
-    // to measure the uncapped pathology (production never should)
-    val cap = if (adjCap < 0) 2 * k else adjCap
+    // the 2k hub guard: uncapped, a 7 200-clone clump ran the build 3.36×
+    // its uniform time, capped 0.85× (SCALING.md "Skew study: NN-Descent
+    // hub axis")
+    val cap = 2 * k
     val topCap = udaf(new graft.functions.TopKByScore(cap))
     for (_ <- 1 to iters) {
       // dedup BEFORE the cap: a mutual edge appears in both directions
@@ -497,12 +498,11 @@ object GraphAnn {
       // vector joins over the n·cap running set, the dominant repeated
       // cost of the sliced build's S sequential folds (and one full
       // re-score per iteration of the unsliced build)
-      val undirected = (if (cap == Int.MaxValue) sym
-        else sym
-          .groupBy(col("id"))
-          .agg(topCap(col("nbr"), col("sim")).as("top"))
-          .select(col("id"), explode(col("top")).as("e"))
-          .select(col("id"), col("e._1").as("nbr"), col("e._2").as("sim")))
+      val undirected = sym
+        .groupBy(col("id"))
+        .agg(topCap(col("nbr"), col("sim")).as("top"))
+        .select(col("id"), explode(col("top")).as("e"))
+        .select(col("id"), col("e._1").as("nbr"), col("e._2").as("sim"))
         .localCheckpoint(true) // read twice by the self-join
       val slices = math.max(1, candidateSlices)
       def thin(pairs: DataFrame): DataFrame =

@@ -1,8 +1,11 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,7 +80,7 @@ object AdminServer {
     })
     server.createContext("/api/version", (ex: HttpExchange) => handle(ex) {
       if (ex.getRequestURI.getPath != "/api/version") (404, """{"error":"not found"}""")
-      else (200, jsonObj(Seq("version" -> jsonStr(version))))
+      else (200, json("version" -> version))
     })
 
     server.createContext("/api/jobs", (ex: HttpExchange) => handle(ex) {
@@ -94,16 +97,7 @@ object AdminServer {
             if (id.isEmpty || id.length > 200)
               (400, """{"error":"runId is required"}""")
             else {
-              val s = run(id)
-              (200, jsonObj(Seq(
-                "runId" -> jsonStr(s.runId),
-                "sourceDocs" -> s.sourceDocs.toString,
-                "processed" -> s.processed.toString,
-                "skippedNoChange" -> s.skippedNoChange.toString,
-                "skippedBlocked" -> s.skippedBlocked.toString,
-                "purgedParents" -> s.purgedParents.toString,
-                "chunksWritten" -> s.chunksWritten.toString,
-                "indexSize" -> s.indexSize.toString)))
+              (200, mapper.writeValueAsString(run(id)))
             }
         }
       } else if (path != "/api/jobs") (404, """{"error":"not found"}""")
@@ -168,7 +162,7 @@ object AdminServer {
       val (status, payload) =
         try body
         catch {
-          case b: BadRequest => (400, jsonObj(Seq("error" -> jsonStr(b.msg))))
+          case b: BadRequest => (400, json("error" -> b.msg))
           case t: Throwable =>
             // log server-side; the body must not echo internal class
             // names/paths back to the client
@@ -236,7 +230,7 @@ object AdminServer {
     if (!pageSize.matches("\\d{1,9}") || pageSize.toInt < 1 || pageSize.toInt > 100)
       return (400, """{"error":"pageSize must be in [1, 100]"}""")
     if (!df.columns.contains(sortField))
-      return (400, jsonObj(Seq("error" -> jsonStr(s"unknown sortField $sortField"))))
+      return (400, json("error" -> s"unknown sortField $sortField"))
     if (sortOrder != "asc" && sortOrder != "desc")
       return (400, """{"error":"sortOrder must be asc or desc"}""")
     // offset in Long: page=999999999&pageSize=100 passes the digit guards
@@ -252,17 +246,14 @@ object AdminServer {
     val total = once.count()
     val rows = pageSlice(once, sortField, desc = sortOrder == "desc",
       tieBreak, offset.toInt, pageSize.toInt).collect()
-    val fields = rows.headOption.map(_.schema.fields).getOrElse(Array.empty[StructField])
-    val items = rows.map { r =>
-      jsonObj(fields.indices.map(i => fields(i).name -> jsonVal(r.get(i))))
-    }
-    (200, jsonObj(Seq(
-      "items" -> items.mkString("[", ",", "]"),
-      "total" -> total.toString,
+    val items = rows.map(r => ListMap(r.schema.fieldNames.zip(r.toSeq): _*))
+    (200, json(
+      "items" -> items,
+      "total" -> total,
       // normalized, not echoed raw: "01" passes \d{1,9} but a leading-zero
       // number is invalid JSON (RFC 8259)
-      "page" -> page.toInt.toString,
-      "pageSize" -> pageSize.toInt.toString)))
+      "page" -> page.toInt,
+      "pageSize" -> pageSize.toInt))
   }
 
   private def unblock(spark: SparkSession, stateDir: String,
@@ -278,29 +269,15 @@ object AdminServer {
           (404, """{"error":"parent not found"}""")
         else {
           IncrementalIndexer.unblock(spark, stateDir, id)
-          (200, jsonObj(Seq("status" -> jsonStr("ok"), "parentId" -> id.toString)))
+          (200, json("status" -> "ok", "parentId" -> id))
         }
     }
 
   // ------------------------------------------------------------------- json
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  private def jsonVal(v: Any): String = v match {
-    case null => "null"
-    case s: String => jsonStr(s)
-    case b: Boolean => b.toString
-    case n: java.lang.Number => n.toString
-    case other => jsonStr(other.toString)
-  }
-
-  /** values are PRE-SERIALIZED json fragments. */
-  private def jsonObj(kv: Seq[(String, String)]): String =
-    kv.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
+  /** One JSON object with the keys in the given order. */
+  private def json(kv: (String, Any)*): String =
+    mapper.writeValueAsString(ListMap(kv: _*))
 }

@@ -30,7 +30,8 @@ object Coverage8 {
   //   transform(sequence(0, ceil(n/w)-1), g -> array_join(slice(toks,
   //     g*w+1, w), ' '))
   // over toks = filter(split(trim(text),' '), t -> t != ''), which was
-  // CodegenFallback and dominated d11 (FloorProbe r12: 0.38 s of 0.59 s).
+  // CodegenFallback and dominated d11 (0.38 s of 0.59 s; SCALING.md "Floor
+  // attribution: d11, a7").
   private def paraWindows(text: Column): Column =
     graft.functions.GraftFunctions.para_windows(text, lit(ParaWords))
 

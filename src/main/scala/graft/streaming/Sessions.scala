@@ -239,17 +239,17 @@ object Sessions {
     * timed bench runs coexist in one session.
     */
   def streamingClickAttribution(spark: SparkSession, sfDir: String,
-      joinWindowSec: Long, partitions: Int = 8): DataFrame = {
+      joinWindowSec: Long): DataFrame = {
     val name = s"graft_attrib_${attribRuns.incrementAndGet()}"
     // A stream-stream join materializes one state store per shuffle
     // partition per side per microbatch; at gate scale the store setup
     // dominates wall, so the streaming query runs at a modest partition
     // count (restored after) — at 100 TB the deployment raises it with
-    // the data, exactly like any streaming job's partition sizing.
-    // `partitions` is exposed so FloorProbe can measure the store-setup
-    // floor directly (2/4/8/16 — SCALING.md r11); the gate uses 8.
+    // the data, exactly like any streaming job's partition sizing. The
+    // 2/4/8/16 store-setup sweep behind 8 is in SCALING.md "Floor
+    // attribution: k9, t14, st5 (round 11)".
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try streamingClickAttributionInner(spark, sfDir, joinWindowSec, name)
     finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }

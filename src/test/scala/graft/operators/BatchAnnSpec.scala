@@ -104,23 +104,21 @@ class BatchAnnSpec extends AnyFunSuite {
   test("pq batch: a saturated ADC-table cache still scores identically") {
     // maxCachedTables = 1 forces a cache clear on nearly every probe
     // switch within a task (the r11 bulk-clear bound); scores must be
-    // bit-identical to the unconstrained run, and to the retired
-    // repartition(probe_id) layout
+    // bit-identical to the unconstrained run
     val pq = Similarity.buildIvfPq(spark, emb, "vec_id", "embedding",
       nCells = 8, subspaces = 8, codesPerSub = 16, ivfIters = 2, pqIters = 2)
     val probes = emb.filter($"vec_id" < 6)
       .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
-    def run(cap: Int, oldLayout: Boolean) =
+    def run(cap: Int) =
       Similarity.searchIvfPqBatch(spark, pq, emb, "vec_id", "embedding",
           probes, "probe_id", "probe_vec", nprobe = 3, k = 5,
-          maxCachedTables = cap, repartitionByProbe = oldLayout)
+          maxCachedTables = cap)
         .select($"probe_id", $"id", round($"sim", 6).as("sim"), $"rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .sortBy(t => (t._1, t._4)).toSeq
-    val base = run(8192, false)
+    val base = run(8192)
     assert(base.nonEmpty)
-    assert(run(1, false) == base)
-    assert(run(8192, true) == base)
+    assert(run(1) == base)
   }
 
   test("ranks are dense 1..k per probe; sims non-increasing") {
