@@ -34,6 +34,17 @@ object Fs {
     else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
   }
 
+  /** Sorted names of the data files directly under `dir` — Spark's own
+    * rule: names starting with `_` or `.` (`_SUCCESS`, checksums) are
+    * not data. Same resolution rule as [[exists]]; absent path → empty. */
+  def listDataFileNames(spark: SparkSession, dir: String): Seq[String] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+  }
+
   /** Serializable carrier for the session's Hadoop configuration — the
     * spark.hadoop.* settings (filesystem credentials, implementations)
     * live ONLY in `sparkContext.hadoopConfiguration`, never in a default

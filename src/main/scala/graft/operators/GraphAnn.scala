@@ -1054,22 +1054,38 @@ object GraphAnn {
   }
 
   /** Collect the probe batch (bounded — a serving batch, never the
-    * corpus) and route each probe to its nprobe cells: routing in RAW
+    * corpus) as (id, vec). A null id or vector has no route and no
+    * beam, so it is refused up front with the column's name rather than
+    * surfacing as an NPE inside the decoder or the normalizer.
+    */
+  private def collectProbes(probes: DataFrame, probeId: String,
+      probeVec: String): Array[(Long, Array[Float])] = {
+    val spark = probes.sparkSession
+    import spark.implicits._
+    probes.select(col(probeId).cast("long"), col(probeVec))
+      .as[(Option[Long], Array[Float])].collect()
+      .map {
+        case (None, _) => throw new IllegalArgumentException(
+          s"routed search: probe id column `$probeId` holds a null " +
+            "(or a value that does not cast to long)")
+        case (_, null) => throw new IllegalArgumentException(
+          s"routed search: probe vector column `$probeVec` holds a null")
+        case (Some(pid), v) => (pid, v)
+      }
+  }
+
+  /** Route each probe of the batch to its nprobe cells: routing in RAW
     * space (the centroids' space), searching on unit vectors.
     */
   private def routeBatch(probes: DataFrame, probeId: String,
       probeVec: String, centroids: Array[(Int, Array[Float])],
-      nprobe: Int): Map[Int, Array[(Long, Array[Float])]] = {
-    val spark = probes.sparkSession
-    import spark.implicits._
-    probes.select(col(probeId).cast("long"), col(probeVec))
-      .as[(Long, Array[Float])].collect()
+      nprobe: Int): Map[Int, Array[(Long, Array[Float])]] =
+    collectProbes(probes, probeId, probeVec)
       .flatMap { case (pid, v) =>
         val u = l2unit(v)
         Similarity.nearestCells(centroids, v, nprobe).map(c => (c, (pid, u)))
       }
       .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-  }
 
   private def routedSearchCore(nodes: DataFrame,
       routes: Map[Int, Array[(Long, Array[Float])]], k: Int, ef: Int,
@@ -1248,8 +1264,10 @@ object GraphAnn {
     }
 
   /** COLD-START float serving — [[searchGraphRoutedPqColdStart]]'s
-    * float twin: resolve CURRENT once, read the routing head from the
-    * version's artifacts, serve through [[searchGraphRoutedPersisted]]
+    * float twin: resolve CURRENT on every call, take the version's
+    * routing centroids from [[routingHead]] (decoded at most once per
+    * published version; the drift reference is not read — routing
+    * never needs it), serve through [[searchGraphRoutedPersisted]]
     * (row-identical to the in-memory routed search over the same
     * files). No corpus handle needed — the cells carry the floats.
     */
@@ -1260,10 +1278,38 @@ object GraphAnn {
     val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
       throw new IllegalStateException(
         s"no published serving state under $root"))
-    val (centroids, _) = Similarity.readIvfHead(spark, s"$root/$v/artifacts")
-    searchGraphRoutedPersisted(spark, s"$root/$v/cells", centroids, probes,
-      probeId, probeVec, nprobe, k, ef, tombstones, allowed)
+    searchGraphRoutedPersisted(spark, s"$root/$v/cells",
+      routingHead(spark, root, v), probes, probeId, probeVec, nprobe, k, ef,
+      tombstones, allowed)
   }
+
+  /** The float serving root's routing head, per root: the last served
+    * version's centroid array (driver-side floats only — no DataFrame,
+    * no session) under a content stamp of the version name plus the
+    * part-file names of `<version>/artifacts/centroids`. Spark names
+    * every part file with a fresh UUID, so a publish — or a root deleted
+    * and republished at the same path and version name — changes the
+    * stamp and the next call re-reads; a hit costs one directory
+    * listing and no Spark job. One entry per root; `compute` serializes
+    * a root's concurrent misses into one read.
+    */
+  private final case class RoutingHead(stamp: Seq[String],
+      centroids: Array[(Int, Array[Float])])
+  private val routingHeads =
+    new java.util.concurrent.ConcurrentHashMap[String, RoutingHead]()
+
+  private def routingHead(spark: SparkSession, root: String,
+      version: String): Array[(Int, Array[Float])] = {
+    val dir = s"$root/$version/artifacts/centroids"
+    val stamp = version +: graft.core.Fs.listDataFileNames(spark, dir)
+    routingHeads.compute(root, (_, held) =>
+      if (held != null && held.stamp == stamp) held
+      else RoutingHead(stamp, Similarity.readCentroids(spark, dir))
+    ).centroids
+  }
+
+  /** Roots the routing-head memo holds an entry for. */
+  private[operators] def routingHeadRoots: Int = routingHeads.size
 
   /** [[writeGraphCells]] for a PQ index — the writer is schema-agnostic
     * (partition-per-cell on `part`), named so the PQ serving surface is
@@ -2141,18 +2187,14 @@ object GraphAnn {
     */
   private def routePqBatch(probes: DataFrame, probeId: String,
       probeVec: String, index: Similarity.IvfPqIndex,
-      nprobe: Int): Map[Int, Array[(Long, Array[Float])]] = {
-    val spark = probes.sparkSession
-    import spark.implicits._
-    probes.select(col(probeId).cast("long"), col(probeVec))
-      .as[(Long, Array[Float])].collect()
+      nprobe: Int): Map[Int, Array[(Long, Array[Float])]] =
+    collectProbes(probes, probeId, probeVec)
       .flatMap { case (pid, v) =>
         val u = l2unit(v)
         Similarity.nearestCells(index.centroids, u, nprobe)
           .map(c => (c, (pid, u)))
       }
       .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-  }
 
   /** Beam-search one PQ segment (= one IVF cell): scores are the ADC
     * decomposition `q̂·c_cell + Σ table(sub)(code)` — no float vector is

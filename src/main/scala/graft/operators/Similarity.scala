@@ -293,17 +293,26 @@ object Similarity {
   }
 
   /** [[writeIvfHead]]'s reader: (centroids in build order, drift
-    * reference if stored) — the cold-start head a float serving root
-    * needs (routing + the drift monitor), nothing corpus-sized.
+    * reference if stored) — the head a float serving root's maintenance
+    * needs (routing + the drift monitor), nothing corpus-sized. Two
+    * reads per call; the cold-start search needs only the centroids and
+    * takes them from [[GraphAnn.searchGraphRoutedColdStart]]'s
+    * per-version memo instead.
     */
   def readIvfHead(spark: SparkSession, dir: String):
-      (Array[(Int, Array[Float])], Option[DriftStats]) = {
-    val cents = spark.read.schema(centroidsSchema)
-      .parquet(s"$dir/centroids").collect()
+      (Array[(Int, Array[Float])], Option[DriftStats]) =
+    (readCentroids(spark, s"$dir/centroids"),
+      readDriftStats(spark, s"$dir/drift_stats"))
+
+  /** A centroid table ([[writeIvf]] / [[writeIvfHead]]'s `centroids`)
+    * read back in build order (cell asc): one collect job, floats
+    * bit-exact. Every float-tier centroid read goes through here.
+    */
+  private[operators] def readCentroids(spark: SparkSession,
+      path: String): Array[(Int, Array[Float])] =
+    spark.read.schema(centroidsSchema).parquet(path).collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
-    (cents, readDriftStats(spark, s"$dir/drift_stats"))
-  }
 
   /** Reconstruct an [[IvfIndex]] from a [[writeIvf]] directory —
     * [[readIvfPq]]'s float-tier twin, completing cold-start API symmetry
@@ -313,14 +322,10 @@ object Similarity {
     * Centroids round-trip bit-exactly and sort in build order (cell
     * asc); the assignments stay a lazy partition-pruned scan.
     */
-  def readIvf(spark: SparkSession, dir: String): IvfIndex = {
-    val cents = spark.read.schema(centroidsSchema)
-      .parquet(s"$dir/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    IvfIndex(cents, spark.read.schema(assignmentsSchema).parquet(s"$dir/assignments")
-      .select(col("id"), col("vec"), col("cell")))
-  }
+  def readIvf(spark: SparkSession, dir: String): IvfIndex =
+    IvfIndex(readCentroids(spark, s"$dir/centroids"),
+      spark.read.schema(assignmentsSchema).parquet(s"$dir/assignments")
+        .select(col("id"), col("vec"), col("cell")))
 
   /** Incremental append to a persisted IVF index: new vectors are assigned
     * to the EXISTING centroids (the k-row side table broadcasts; nothing
@@ -339,9 +344,7 @@ object Similarity {
     */
   def appendToIvf(spark: SparkSession, dir: String, df: DataFrame,
       idCol: String, vecCol: String): Unit = {
-    val centroids = spark.read.schema(centroidsSchema)
-      .parquet(s"$dir/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+    val centroids = readCentroids(spark, s"$dir/centroids")
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("cell", assignUdf(spark, centroids)(col("vec")))
@@ -620,16 +623,26 @@ object Similarity {
 
   /** Read a [[writeDriftStats]] table back (None if never written —
     * pre-drift-monitor indexes stay readable; tables written before the
-    * `cell_mean_rn` column read back with `cellMeanRn` empty).
+    * `cell_mean_rn` column read back with `cellMeanRn` empty). A table
+    * that exists but cannot be read also degrades to None — the monitor
+    * is advisory — but with a WARN naming the path.
     */
-  def readDriftStats(spark: SparkSession, path: String): Option[DriftStats] = {
-    val df =
-      try spark.read.schema(driftStatsSchema).parquet(path)
-      catch { case scala.util.control.NonFatal(_) => return None }
-    val rows =
-      try df.collect()
-      catch { case scala.util.control.NonFatal(_) => return None }
-    driftStatsFromRows(rows)
+  def readDriftStats(spark: SparkSession, path: String): Option[DriftStats] =
+    if (!graft.core.Fs.exists(spark, path)) None
+    else
+      try driftStatsFromRows(
+        spark.read.schema(driftStatsSchema).parquet(path).collect())
+      catch {
+        case scala.util.control.NonFatal(e) => driftUnreadable(path, e)
+      }
+
+  /** The drift-degrade signal: an existing but unreadable drift
+    * reference serves as "no reference", loudly. */
+  private def driftUnreadable(path: String, e: Throwable): Option[DriftStats] = {
+    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"drift reference at $path is unreadable; continuing without it " +
+        s"(drift=None): $e")
+    None
   }
 
   /** Rebuild a [[DriftStats]] from [[driftStatsSchema]]-shaped rows
@@ -662,9 +675,7 @@ object Similarity {
       idCol: String, vecCol: String, residRatioMax: Double = 1.25,
       klMax: Double = 0.5): DriftReport = {
     import spark.implicits._
-    val centroids = spark.read.schema(centroidsSchema)
-      .parquet(s"$dir/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+    val centroids = readCentroids(spark, s"$dir/centroids")
     val ref = readDriftStats(spark, s"$dir/drift_stats").getOrElse {
       val st = driftStatsAssigned(spark,
         spark.read.schema(assignmentsSchema).parquet(s"$dir/assignments"), "cell", "vec", centroids)
@@ -869,9 +880,7 @@ object Similarity {
     */
   def searchIvfPartitioned(spark: SparkSession, dir: String, probe: Array[Float],
       nprobe: Int, k: Int): DataFrame = {
-    val centroids = spark.read.schema(centroidsSchema)
-      .parquet(s"$dir/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+    val centroids = readCentroids(spark, s"$dir/centroids")
     val cells = nearestCells(centroids, probe, nprobe)
     spark.read.schema(assignmentsSchema).parquet(s"$dir/assignments")
       .filter(col("cell").isin(cells: _*))
@@ -892,9 +901,7 @@ object Similarity {
   def searchIvfPartitionedBatch(spark: SparkSession, dir: String,
       probes: DataFrame, probeId: String, probeVec: String,
       nprobe: Int, k: Int): DataFrame = {
-    val centroids = spark.read.schema(centroidsSchema)
-      .parquet(s"$dir/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+    val centroids = readCentroids(spark, s"$dir/centroids")
     val bc = spark.sparkContext.broadcast(centroids)
     val cellsOf = udf((v: Seq[Float]) => nearestCells(bc.value, v.toArray, nprobe))
     val probeCells = probes.filter(col(probeVec).isNotNull)
@@ -1372,24 +1379,33 @@ object Similarity {
         col("sub").as("a"), col("code").as("b"), col("centroid").as("vec"),
         nullI.as("clump"), nullD.as("mass"), nullL.as("n"),
         nullD.as("mean_rn"), nullD.as("p95_rn"), nullD.as("cmr")))
-    def collectLegs(withDrift: Boolean): Array[Row] =
-      (coreLegs ++ (if (withDrift)
-        Seq(leg(s"$dir/drift_stats", driftStatsSchema, "d",
-          col("cell").as("a"), nullI.as("b"), nullF.as("vec"),
-          nullI.as("clump"), col("mass"), col("n"), col("mean_rn"),
-          col("p95_rn"), col("cell_mean_rn").as("cmr")))
-      else Nil)).reduce(_ unionByName _).collect()
-    // an unreadable drift_stats degrades to drift=None (the pre-fusion
-    // readDriftStats contract — r19 advice): retry the collect WITHOUT
-    // the drift leg so a corrupt monitor table can't take the manifest/
-    // centroids/codebook read down with it
+    def driftLeg = leg(s"$dir/drift_stats", driftStatsSchema, "d",
+      col("cell").as("a"), nullI.as("b"), nullF.as("vec"),
+      nullI.as("clump"), col("mass"), col("n"), col("mean_rn"),
+      col("p95_rn"), col("cell_mean_rn").as("cmr"))
+    def collectLegs(legs: Seq[DataFrame]): Array[Row] =
+      legs.reduce(_ unionByName _).collect()
+    // an unreadable drift_stats degrades to drift=None (readDriftStats's
+    // rule): when the fused collect fails, probe the drift leg ALONE. If
+    // it reads, the failure is a core leg's — rethrow it, no second core
+    // collect; if it does not, WARN and collect the core legs without it
+    // so a corrupt monitor table can't take the manifest/centroids/
+    // codebook read down with it
     val (rows, driftReadable) =
-      if (!hasDrift) (collectLegs(withDrift = false), false)
+      if (!hasDrift) (collectLegs(coreLegs), false)
       else
-        try (collectLegs(withDrift = true), true)
+        try (collectLegs(coreLegs :+ driftLeg), true)
         catch {
-          case scala.util.control.NonFatal(_) =>
-            (collectLegs(withDrift = false), false)
+          case scala.util.control.NonFatal(e) =>
+            val driftFailure =
+              try { driftLeg.collect(); None }
+              catch { case scala.util.control.NonFatal(d) => Some(d) }
+            driftFailure match {
+              case None => throw e
+              case Some(d) =>
+                driftUnreadable(s"$dir/drift_stats", d)
+                (collectLegs(coreLegs), false)
+            }
         }
     val byTag = rows.groupBy(_.getString(0))
     val man = byTag.getOrElse("m", throw new IllegalStateException(

@@ -178,4 +178,121 @@ class DriftSpec extends AnyFunSuite {
     Similarity.writeIvfPq(pq, dir)
     assert(Similarity.readIvfPq(spark, dir).driftStats.isEmpty)
   }
+
+  // ── unreadable drift references ───────────────────────────────────────
+
+  /** Run `body`; return it with the WARN messages logged meanwhile. */
+  private def withWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger, LoggerContext}
+    val msgs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "drift-spec-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.WARN)
+          msgs.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val root = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext].getRootLogger.asInstanceOf[Logger]
+    root.addAppender(app)
+    try {
+      val out = body
+      import scala.jdk.CollectionConverters._
+      (out, msgs.asScala.toSeq)
+    } finally { root.removeAppender(app); app.stop() }
+  }
+  /** Replace every data file under `dir` with bytes that are not parquet
+    * (and drop the checksums, so the read fails on the content). */
+  private def corrupt(dir: String): Unit =
+    new java.io.File(dir).listFiles().foreach { f =>
+      if (f.getName.endsWith(".crc")) f.delete()
+      else if (f.getName.startsWith("part-"))
+        java.nio.file.Files.write(f.toPath, "not parquet".getBytes("UTF-8"))
+    }
+  /** (failed, total) jobs `body` launched from this thread; its error. */
+  private def jobOutcomes(body: => Any): (Int, Int, Option[Throwable]) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val failed = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.test.jobs") == tag)
+          mine.add(e.jobId)
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (mine.contains(e.jobId) &&
+            e.jobResult != org.apache.spark.scheduler.JobSucceeded)
+          failed.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    val err =
+      try { body; None }
+      catch { case scala.util.control.NonFatal(e) => Some(e) }
+      finally sc.setLocalProperty("graft.test.jobs", null)
+    graft.ListenerDrain.drain(spark)
+    sc.removeSparkListener(listener)
+    (failed.get, mine.size, err)
+  }
+
+  private lazy val pqSmall = Similarity.buildIvfPq(spark, emb, "vec_id",
+    "embedding", nCells = 8, subspaces = 8, codesPerSub = 8, ivfIters = 1,
+    pqIters = 1)
+  private lazy val pqRef = Similarity.driftStats(spark,
+    emb.select($"embedding"), "embedding", pqSmall.centroids, unit = true)
+
+  test("readDriftStats: absent is a silent None; unreadable is None with a WARN naming the path") {
+    val base = java.nio.file.Files.createTempDirectory("graft-drift4").toString
+    val (absent, quiet) = withWarnings(
+      Similarity.readDriftStats(spark, s"$base/never_written"))
+    assert(absent.isEmpty)
+    assert(!quiet.exists(_.contains("drift reference")), quiet)
+    val path = s"$base/drift_stats"
+    Similarity.writeIvfHead(spark, pqSmall.centroids, base, Some(pqRef))
+    assert(Similarity.readDriftStats(spark, path).isDefined)
+    corrupt(path)
+    val (bad, warned) = withWarnings(Similarity.readDriftStats(spark, path))
+    assert(bad.isEmpty, "an unreadable reference degrades to None")
+    assert(warned.exists(_.contains(s"drift reference at $path is unreadable")),
+      s"the degrade must be loud and name $path: $warned")
+  }
+
+  test("readIvfPq: an unreadable drift leg degrades to None with a WARN; the core legs still read") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-drift5").toString + "/art"
+    Similarity.writeIvfPq(pqSmall, dir, Some(3), Some(pqRef))
+    val good = Similarity.readIvfPq(spark, dir)
+    assert(good.driftStats.isDefined)
+    corrupt(s"$dir/drift_stats")
+    val (art, warned) = withWarnings(Similarity.readIvfPq(spark, dir))
+    assert(art.driftStats.isEmpty)
+    assert(warned.exists(
+        _.contains(s"drift reference at $dir/drift_stats is unreadable")),
+      s"the degrade must name the drift path: $warned")
+    assert(art.clumpBound == Some(3))
+    assert(art.index.centroids.map(_._1).toSeq ==
+      good.index.centroids.map(_._1).toSeq)
+    assert(art.index.centroids.zip(good.index.centroids).forall {
+      case ((_, a), (_, b)) => java.util.Arrays.equals(a, b) })
+    def book(a: Similarity.IvfPqArtifacts) =
+      a.index.book.centroids.map(_.map(_.toSeq).toSeq).toSeq
+    assert(book(art) == book(good))
+  }
+
+  test("readIvfPq: a core-leg failure is rethrown without a second core collect") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-drift6").toString + "/art"
+    Similarity.writeIvfPq(pqSmall, dir, Some(3), Some(pqRef))
+    corrupt(s"$dir/codebook")
+    val ((failed, total, err), warned) =
+      withWarnings(jobOutcomes(Similarity.readIvfPq(spark, dir)))
+    assert(err.isDefined, "a corrupt codebook must fail the read")
+    assert(!warned.exists(_.contains("drift reference")),
+      s"a readable drift leg must not be blamed: $warned")
+    // the fused collect fails once; the drift leg alone reads fine, so
+    // the core legs are not collected again
+    assert(failed == 1, s"$failed failed of $total jobs")
+  }
 }

@@ -998,4 +998,126 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(GraphAnn.purgeTombstones(nodes, all, m = M,
       efConstruction = 48).count() == 0L)
   }
+
+  test("routed search refuses a null probe vector or id, naming the column") {
+    val probes = emb.filter($"vec_id" < 3)
+      .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
+    val nullVec = probes.withColumn("probe_vec",
+      when($"probe_id" === 1L, lit(null)).otherwise($"probe_vec"))
+    val nullId = probes.withColumn("probe_id",
+      when($"probe_id" === 1L, lit(null).cast("long")).otherwise($"probe_id"))
+    def refusal(f: => Any): String =
+      intercept[IllegalArgumentException](f).getMessage
+    val v = refusal(GraphAnn.searchGraphRouted(cellNodes, ivf.centroids,
+      nullVec, "probe_id", "probe_vec", nprobe = 3, k = 5, ef = 32))
+    assert(v.contains("probe_vec") && v.contains("null"), v)
+    val i = refusal(GraphAnn.searchGraphRouted(cellNodes, ivf.centroids,
+      nullId, "probe_id", "probe_vec", nprobe = 3, k = 5, ef = 32))
+    assert(i.contains("probe_id") && i.contains("null"), i)
+    // the PQ tier routes through the same collect
+    val pq = refusal(GraphAnn.searchGraphRoutedPq(pqNodes, ivfPq, emb,
+      "vec_id", "embedding", nullVec, "probe_id", "probe_vec", nprobe = 3,
+      k = 5, ef = 32))
+    assert(pq.contains("probe_vec"), pq)
+  }
+
+  // ── cold-start routing-head memo ──────────────────────────────────────
+
+  /** Run `body` and return it with the call sites (stage details) of the
+    * Spark jobs it launched from this thread. */
+  private def withJobSites[T](body: => T): (T, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.test.sites") == tag)
+          sites.add(e.stageInfos.map(_.details).mkString("\n"))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.sites", tag)
+    try {
+      val out = body
+      graft.ListenerDrain.drain(spark)
+      (out, sites.asScala.toSeq)
+    } finally {
+      sc.setLocalProperty("graft.test.sites", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+  private def headReads(sites: Seq[String]) = sites.filter(s =>
+    Seq("readIvfHead", "readCentroids", "readDriftStats").exists(s.contains))
+
+  private lazy val memoProbes = emb.filter($"vec_id" < 4)
+    .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+    .sortBy(t => (t._1, t._4)).toSeq
+  private def coldStart(root: String) = rows(GraphAnn.searchGraphRoutedColdStart(
+    spark, root, memoProbes, "probe_id", "probe_vec", nprobe = 2, k = 5,
+    ef = 32))
+  private def persisted(dir: String,
+      centroids: Array[(Int, Array[Float])]) = rows(
+    GraphAnn.searchGraphRoutedPersisted(spark, dir, centroids, memoProbes,
+      "probe_id", "probe_vec", nprobe = 2, k = 5, ef = 32))
+  /** A second float serving state with retrained (different) centroids. */
+  private lazy val ivf2 = Similarity.buildIvf(spark, emb, "vec_id",
+    "embedding", nCells = 5, iters = 3)
+  private lazy val cellNodes2 = GraphAnn.buildGraphPerCell(spark,
+    ivf2.assignments, m = M, efConstruction = 48).localCheckpoint(true)
+
+  test("cold start: a repeat search on one version reads no routing head") {
+    val root = java.nio.file.Files.createTempDirectory("graft-head1").toString
+    val ref = Similarity.driftStatsAssigned(spark, ivf.assignments, "cell",
+      "vec", ivf.centroids)
+    val v = GraphAnn.publishServing(cellNodes, ivf.centroids, root, Some(ref))
+    val (first, missSites) = withJobSites(coldStart(root))
+    assert(headReads(missSites).nonEmpty,
+      "the first search on a version must read its centroids")
+    assert(!missSites.exists(_.contains("readDriftStats")),
+      "routing never needs the drift reference")
+    val (again, hitSites) = withJobSites(coldStart(root))
+    assert(hitSites.nonEmpty, "the search itself still runs jobs")
+    assert(headReads(hitSites).isEmpty,
+      s"a repeat on v$v must not re-read the head:\n${headReads(hitSites)}")
+    assert(hitSites.length == missSites.length - 1)
+    assert(again == first)
+    assert(first == persisted(s"$root/$v/cells", ivf.centroids))
+  }
+
+  test("cold start: the first search after a publish routes with the new centroids") {
+    val root = java.nio.file.Files.createTempDirectory("graft-head2").toString
+    val v0 = GraphAnn.publishServing(cellNodes, ivf.centroids, root)
+    assert(coldStart(root) == persisted(s"$root/$v0/cells", ivf.centroids))
+    val v1 = GraphAnn.publishServing(cellNodes2, ivf2.centroids, root)
+    val fresh = persisted(s"$root/$v1/cells", ivf2.centroids)
+    assert(fresh != persisted(s"$root/$v1/cells", ivf.centroids),
+      "the fixture must tell the two heads apart")
+    assert(coldStart(root) == fresh)
+  }
+
+  test("cold start: a root deleted and republished at v000 serves no stale head") {
+    val root = java.nio.file.Files.createTempDirectory("graft-head3").toString
+    assert(GraphAnn.publishServing(cellNodes, ivf.centroids, root) == "v000")
+    coldStart(root)
+    graft.core.Fs.delete(spark, root)
+    assert(GraphAnn.publishServing(cellNodes2, ivf2.centroids, root) == "v000")
+    assert(coldStart(root) == persisted(s"$root/v000/cells", ivf2.centroids))
+  }
+
+  test("cold start: the routing-head memo holds one entry per root") {
+    val roots = Seq("graft-head4a", "graft-head4b")
+      .map(java.nio.file.Files.createTempDirectory(_).toString)
+    val before = GraphAnn.routingHeadRoots
+    for (i <- 0 until 3; root <- roots) {
+      val (n, c) = if (i % 2 == 0) (cellNodes, ivf.centroids)
+        else (cellNodes2, ivf2.centroids)
+      val v = GraphAnn.publishServing(n, c, root)
+      assert(coldStart(root) == persisted(s"$root/$v/cells", c))
+    }
+    assert(GraphAnn.routingHeadRoots == before + roots.length)
+  }
 }
