@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One stored graph node: `vec` is the L2-NORMALIZED embedding (so layer
@@ -881,16 +881,88 @@ object GraphAnn {
     val bcSlices = spark.sparkContext.broadcast(
       cellSlices(base.groupByKey(_._1).count(), maxSegmentSize))
     val bcBase = spark.sparkContext.broadcast(segBase)
-    base.groupByKey { case (c, id, _) => (c, sliceOf(id, c, bcSlices.value)) }
-      .flatMapGroups { (key: (Int, Int), it) =>
-        val (cell, slice) = key
-        val rows = it.map(t => (t._2, t._3)).toArray
-        java.util.Arrays.sort(rows, Ordering.by[(Long, Array[Float]), Long](_._1))
-        val b = new Builder(m, efConstruction)
-        rows.foreach { case (id, v) => b.insert(id, l2unit(v)) }
-        b.emit(cell, bcBase.value.getOrElse(cell, 0) + slice)
+    val keyed = base.map { case (c, id, v) =>
+      (c, sliceOf(id, c, bcSlices.value), (id, v)) }
+    perSegment(keyed, cellTasks(spark)) { (cell, slice, it) =>
+      val rows = it.toArray
+      java.util.Arrays.sort(rows, Ordering.by[(Long, Array[Float]), Long](_._1))
+      val b = new Builder(m, efConstruction)
+      rows.foreach { case (id, v) => b.insert(id, l2unit(v)) }
+      b.emit(cell, bcBase.value.getOrElse(cell, 0) + slice)
+    }.toDF()
+  }
+
+  /** Build each (part, seg) group of `keyed` — rows (part, seg, payload)
+    * — with `build`, the whole group in one task, as `groupByKey` +
+    * `flatMapGroups` would, but routed by an explicit partition id
+    * ([[SegmentTasks]]): AQE coalesces a group-by shuffle of a few MB into
+    * one partition, which runs every segment's single-threaded graph
+    * build back to back on one core, while an explicit-id exchange keeps
+    * its task count. Each task sorts its rows by (part, seg) and streams
+    * them group by group, so its peak memory stays one group. `build`
+    * sees the group's payloads in arbitrary order (sort them itself) and
+    * the same rows per group as the group-by shape, so its output is
+    * unchanged.
+    */
+  private def perSegment[P, U: org.apache.spark.sql.Encoder](
+      keyed: org.apache.spark.sql.Dataset[(Int, Int, P)], tasks: SegmentTasks)(
+      build: (Int, Int, Iterator[P]) => Iterator[U]): org.apache.spark.sql.Dataset[U] =
+    keyed.repartitionById(tasks.n, tasks.of(col("_1"), col("_2")))
+      .sortWithinPartitions("_1", "_2")
+      .mapPartitions { it =>
+        val rows = it.buffered
+        Iterator.continually(rows).takeWhile(_.hasNext).flatMap { _ =>
+          val (part, seg, _) = rows.head
+          val group = scala.collection.mutable.ArrayBuffer.empty[P]
+          while (rows.hasNext && rows.head._1 == part && rows.head._2 == seg)
+            group += rows.next()._3
+          build(part, seg, group.iterator)
+        }
       }
-      .toDF()
+
+  /** Where [[perSegment]] sends each (part, seg) group: `n` tasks and the
+    * task of a group.
+    */
+  private final case class SegmentTasks(n: Int, of: (Column, Column) => Column)
+
+  /** Groups not known on the driver (a build's cells): `part + seg` round
+    * robin over the session's cores — IVF cell ids are dense from 0, so
+    * a build's cells spread evenly, and an oversized cell's slices land
+    * on consecutive cores.
+    */
+  private def cellTasks(spark: SparkSession): SegmentTasks = {
+    val n = spark.sparkContext.defaultParallelism
+    SegmentTasks(n, (part, seg) => pmod(part + seg, lit(n)))
+  }
+
+  /** Groups known on the driver with their sizes (a purge's touched
+    * segments): packed largest first onto min(#groups, cores) tasks
+    * ([[graft.core.TaskPacking.leastLoaded]]), so k groups run as
+    * min(k, cores) non-empty tasks of similar size.
+    */
+  private def packedTasks(spark: SparkSession, groups: Map[(Int, Int), Long]): SegmentTasks = {
+    val keys = groups.keys.toIndexedSeq.sorted
+    val (n, task) = graft.core.TaskPacking.leastLoaded(keys.map(groups),
+      spark.sparkContext.defaultParallelism)
+    // keyed by one long per (part, seg): part · 2^32 + seg
+    val taskOf = keys.indices.map { i =>
+      val (part, seg) = keys(i)
+      ((part.toLong << 32) + seg) -> task(i)
+    }.toMap
+    SegmentTasks(n, (part, seg) =>
+      element_at(typedLit(taskOf), shiftleft(part.cast("long"), 32) + seg.cast("long")))
+  }
+
+  /** Every (part, seg) segment of `nodes` holding one of the sorted
+    * tombstone `ids`, with its node count: ≤ nSegments driver rows.
+    */
+  private def touchedSegments(nodes: DataFrame,
+      ids: org.apache.spark.broadcast.Broadcast[Array[Long]]): Map[(Int, Int), Long] = {
+    val isTomb = udf((id: Long) => java.util.Arrays.binarySearch(ids.value, id) >= 0)
+    nodes.groupBy(col("part"), col("seg"))
+      .agg(count(lit(1)), max(isTomb(col("id"))).as("hit"))
+      .filter(col("hit"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
   }
 
   /** Incremental append for the ROUTED tier — [[appendSegments]]'s twin
@@ -1150,8 +1222,16 @@ object GraphAnn {
     org.apache.spark.sql.types.StructField("part",
       org.apache.spark.sql.types.IntegerType)))
 
-  def writeGraphCells(nodes: DataFrame, dir: String): Unit =
-    nodes.write.mode("overwrite").partitionBy("part").parquet(dir)
+  def writeGraphCells(nodes: DataFrame, dir: String): Unit = {
+    // one task per cell, cells round robin over the cores: one file per
+    // cell directory instead of one per (input partition, cell) — each
+    // file costs a fixed create/commit — and still every core writing.
+    // A cell already has to fit one task (its graph is built in one), so
+    // writing it from one adds no constraint
+    val n = nodes.sparkSession.sparkContext.defaultParallelism
+    nodes.repartitionById(n, pmod(col("part"), lit(n)))
+      .write.mode("overwrite").partitionBy("part").parquet(dir)
+  }
 
   /** ATOMIC publication of a graph rebuild — [[writeGraphCells]] composed
     * with [[graft.pipeline.VersionedIndex]], the same snapshot-isolation
@@ -1464,21 +1544,20 @@ object GraphAnn {
     val ds = nodes.as[GraphNode]
     def isTomb(id: Long): Boolean =
       java.util.Arrays.binarySearch(bcIds.value, id) >= 0
-    val touched = ds.filter(n => isTomb(n.id))
-      .map(n => (n.part, n.seg)).distinct().collect().toSet
+    val touched = touchedSegments(nodes, bcIds)
     if (touched.isEmpty) return nodes
-    val bcSegs = spark.sparkContext.broadcast(touched)
+    val bcSegs = spark.sparkContext.broadcast(touched.keySet)
     val untouched = ds.filter(n => !bcSegs.value.contains((n.part, n.seg)))
-    val rebuilt = ds
+    val survivors = ds
       .filter(n => bcSegs.value.contains((n.part, n.seg)) && !isTomb(n.id))
-      .groupByKey(n => (n.part, n.seg))
-      .flatMapGroups { (key: (Int, Int), it) =>
-        val rows = it.map(n => (n.id, n.vec)).toArray
-        java.util.Arrays.sort(rows, Ordering.by[(Long, Array[Float]), Long](_._1))
-        val b = new Builder(m, efConstruction)
-        rows.foreach { case (id, v) => b.insert(id, v) } // vecs already unit
-        b.emit(key._1, key._2)
-      }
+      .map(n => (n.part, n.seg, (n.id, n.vec)))
+    val rebuilt = perSegment(survivors, packedTasks(spark, touched)) { (part, seg, it) =>
+      val rows = it.toArray
+      java.util.Arrays.sort(rows, Ordering.by[(Long, Array[Float]), Long](_._1))
+      val b = new Builder(m, efConstruction)
+      rows.foreach { case (id, v) => b.insert(id, v) } // vecs already unit
+      b.emit(part, seg)
+    }
     untouched.unionByName(rebuilt).toDF()
   }
 
@@ -1541,22 +1620,20 @@ object GraphAnn {
     val bcSlices = spark.sparkContext.broadcast(
       cellSlices(base.groupByKey(_._1).count(), maxSegmentSize))
     val bcBase = spark.sparkContext.broadcast(segBase)
-    base.groupByKey { case (c, id, _, _) =>
-        (c, sliceOf(id, c, bcSlices.value)) }
-      .flatMapGroups { (key: (Int, Int), it) =>
-        val (cell, slice) = key
-        val rows = it.map(t => (t._2, t._3, t._4)).toArray
-        java.util.Arrays.sort(rows,
-          Ordering.by[(Long, Array[Float], Array[Byte]), Long](_._1))
-        val codesOf = new java.util.HashMap[Long, Array[Byte]](rows.length * 2)
-        rows.foreach { case (id, _, cs) => codesOf.put(id, cs) }
-        val b = new Builder(m, efConstruction)
-        rows.foreach { case (id, v, _) => b.insert(id, l2unit(v)) }
-        b.emit(cell, bcBase.value.getOrElse(cell, 0) + slice).map(n =>
-          PqGraphNode(n.part, n.id, codesOf.get(n.id), n.level, n.neighbors,
-            n.seg))
-      }
-      .toDF()
+    val keyed = base.map { case (c, id, v, cs) =>
+      (c, sliceOf(id, c, bcSlices.value), (id, v, cs)) }
+    perSegment(keyed, cellTasks(spark)) { (cell, slice, it) =>
+      val rows = it.toArray
+      java.util.Arrays.sort(rows,
+        Ordering.by[(Long, Array[Float], Array[Byte]), Long](_._1))
+      val codesOf = new java.util.HashMap[Long, Array[Byte]](rows.length * 2)
+      rows.foreach { case (id, _, cs) => codesOf.put(id, cs) }
+      val b = new Builder(m, efConstruction)
+      rows.foreach { case (id, v, _) => b.insert(id, l2unit(v)) }
+      b.emit(cell, bcBase.value.getOrElse(cell, 0) + slice).map(n =>
+        PqGraphNode(n.part, n.id, codesOf.get(n.id), n.level, n.neighbors,
+          n.seg))
+    }.toDF()
   }
 
   /** Incremental append for the PQ tier — [[appendGraphCells]]' twin on
@@ -2450,10 +2527,9 @@ object GraphAnn {
     val ds = nodes.as[PqGraphNode]
     def isTomb(id: Long): Boolean =
       java.util.Arrays.binarySearch(bcIds.value, id) >= 0
-    val touched = ds.filter(n => isTomb(n.id))
-      .map(n => (n.part, n.seg)).distinct().collect().toSet
+    val touched = touchedSegments(nodes, bcIds)
     if (touched.isEmpty) return nodes
-    val bcSegs = spark.sparkContext.broadcast(touched)
+    val bcSegs = spark.sparkContext.broadcast(touched.keySet)
     val untouched = ds.filter(n => !bcSegs.value.contains((n.part, n.seg)))
     val survivors = ds
       .filter(n => bcSegs.value.contains((n.part, n.seg)) && !isTomb(n.id))
@@ -2475,21 +2551,21 @@ object GraphAnn {
         s"nodes but the corpus join returned $nJoined rows — the corpus " +
         "has drifted from the index (missing or duplicated ids); " +
         "rebuilding would silently lose or duplicate nodes")
-    val rebuilt = joined
+    val keyed = joined
       .as[(Long, Int, Int, Array[Byte], Array[Float])]
-      .groupByKey { case (_, part, seg, _, _) => (part, seg) }
-      .flatMapGroups { (key: (Int, Int), it) =>
-        val rows = it.map(t => (t._1, t._5, t._4)).toArray
-        java.util.Arrays.sort(rows,
-          Ordering.by[(Long, Array[Float], Array[Byte]), Long](_._1))
-        val codesOf = new java.util.HashMap[Long, Array[Byte]](rows.length * 2)
-        rows.foreach { case (id, _, cs) => codesOf.put(id, cs) }
-        val b = new Builder(m, efConstruction)
-        rows.foreach { case (id, v, _) => b.insert(id, l2unit(v)) }
-        b.emit(key._1, key._2).map(n =>
-          PqGraphNode(n.part, n.id, codesOf.get(n.id), n.level, n.neighbors,
-            n.seg))
-      }
+      .map { case (id, part, seg, cs, v) => (part, seg, (id, v, cs)) }
+    val rebuilt = perSegment(keyed, packedTasks(spark, touched)) { (part, seg, it) =>
+      val rows = it.toArray
+      java.util.Arrays.sort(rows,
+        Ordering.by[(Long, Array[Float], Array[Byte]), Long](_._1))
+      val codesOf = new java.util.HashMap[Long, Array[Byte]](rows.length * 2)
+      rows.foreach { case (id, _, cs) => codesOf.put(id, cs) }
+      val b = new Builder(m, efConstruction)
+      rows.foreach { case (id, v, _) => b.insert(id, l2unit(v)) }
+      b.emit(part, seg).map(n =>
+        PqGraphNode(n.part, n.id, codesOf.get(n.id), n.level, n.neighbors,
+          n.seg))
+    }
     untouched.toDF().unionByName(rebuilt.toDF())
   }
 

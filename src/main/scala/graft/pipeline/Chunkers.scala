@@ -44,6 +44,9 @@ object Chunkers {
     }
   }
 
+  /** The chunk UDF's name in [[chunkDocuments]]' plans. */
+  val ChunkUdfName = "chunk_text"
+
   /** Binary formats whose payload is decoded structurally, not by charset. */
   val binaryExts: Set[String] = Set("pdf", "docx", "xlsx", "xls", "pptx")
 
@@ -73,18 +76,28 @@ object Chunkers {
 
   /** Explode documents into chunk rows with sequence ids, running offsets and
     * stable keys. Input needs (idCol, textCol [, extCol]); output adds
-    * chunk_id, content, n_tokens, chunk_offset, chunk_key.
+    * chunk_id, content, n_tokens, chunk_offset, chunk_key. The chunker runs
+    * once per input row, on this frame's input only.
     */
   def chunkDocuments(docs: DataFrame, idCol: String, textCol: String,
       extCol: Option[String], p: SplitParams): DataFrame = {
     val splitUdf = udf((text: String, ext: String) =>
       chunkText(text, if (ext == null) "txt" else ext, p)
-        .filter(c => p.tokenizer.count(c) >= p.minChunkTokens))
+        .filter(c => p.tokenizer.count(c) >= p.minChunkTokens)).withName(ChunkUdfName)
     val ext = extCol.map(col).getOrElse(lit("txt"))
+    // posexplode_outer + a null-position filter, not posexplode: the same
+    // rows, in a form the optimizer cannot see through. For an inner
+    // generator over a column, InferFiltersFromGenerate derives
+    // `size(_chunks) > 0 AND isnotnull(_chunks)`, and pushdown substitutes
+    // the chunk UDF for `_chunks` and moves that filter below any join
+    // under `docs`: behind runOnce's change-detect join, the inner form
+    // chunks every listed document to keep the changed few, and chunks
+    // each kept one twice
     val exploded = docs
       .withColumn("_chunks", splitUdf(col(textCol), ext))
       .select(docs.columns.toIndexedSeq.map(col) :+
-        posexplode(col("_chunks")).as(Seq("chunk_id", "content")): _*)
+        posexplode_outer(col("_chunks")).as(Seq("chunk_id", "content")): _*)
+      .filter(col("chunk_id").isNotNull)
     val w = Window.partitionBy(col(idCol)).orderBy(col("chunk_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val keyUdf = udf((id: String, cid: Int) => TextKeys.stableChunkKey(id, cid))

@@ -33,7 +33,7 @@ object IncrementalIndexer {
     StructField("blocked", BooleanType)))
 
   /** The index table's columns — the `newDocs` projection in [[runOnce]]. */
-  private[pipeline] val indexSchema = StructType(Seq(
+  private[graft] val indexSchema = StructType(Seq(
     StructField("id", StringType),
     StructField("parent_id", LongType),
     StructField("chunk_id", IntegerType),
@@ -49,8 +49,16 @@ object IncrementalIndexer {
       // schema supplied (it is this writer's own) — skips the per-read
       // schema-inference job (r19; see Similarity's artifact-schema note)
       spark.read.schema(schema).parquet(dir)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else emptyTable(spark, schema)
+
+  /** An empty table the optimizer knows is empty: a `LocalRelation`, so
+    * `PropagateEmptyRelation` folds a join against it away. (An `emptyRDD`
+    * scan has no size estimate: a first run's change-detect against it
+    * plans as a sort-merge join, whose exchange AQE coalesces into one
+    * task.)
+    */
+  private[graft] def emptyTable(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** One incremental run. `docs` needs (doc_id, text, source, lang).
     *
@@ -108,7 +116,13 @@ object IncrementalIndexer {
     // chunksWritten counter) derives from this checkpoint, so the embedder —
     // the cost the whole incremental design exists to avoid — runs exactly
     // once per chunk per run
-    val chunks = Chunkers.chunkDocuments(toProcess, "doc_id", "text", None, p)
+    // spread the changed documents over the cores by doc_id: the chunk
+    // window needs that clustering anyway, so this exchange replaces the
+    // window's own, and its explicit count keeps AQE from packing a first
+    // build's chunking and embedding into one task
+    val chunks = Chunkers.chunkDocuments(
+      toProcess.repartition(spark.sparkContext.defaultParallelism, col("doc_id")),
+      "doc_id", "text", None, p)
     val newDocs = ChunkIndexer.embedChunks(chunks, "content", embedder)
       .select(col("chunk_key").as("id"), col("doc_id").as("parent_id"),
         col("chunk_id"), col("content"), col("n_tokens"), col("chunk_offset"),
@@ -127,7 +141,10 @@ object IncrementalIndexer {
 
     // materialize before overwriting the index table we just read
     val finalIndex = purged.localCheckpoint(true)
-    finalIndex.write.mode(SaveMode.Overwrite).partitionBy("source").parquet(indexDir)
+    val perSource = finalIndex.groupBy("source").count().collect()
+      .map(r => Option(r.getString(0)) -> r.getLong(1)).toSeq
+    bySourceTasks(finalIndex, perSource)
+      .write.mode(SaveMode.Overwrite).partitionBy("source").parquet(indexDir)
 
     // state': successful parents get attempts=0, hash updated; blocked rows
     // persist so poison pills stay skipped (F3 semantics)
@@ -146,7 +163,36 @@ object IncrementalIndexer {
     newState.write.mode(SaveMode.Overwrite).parquet(stateDir)
 
     RunSummary(runId, sourceDocs, processed, unchanged, blockedCount,
-      purgedParents, chunksWritten, finalIndex.count())
+      purgedParents, chunksWritten, perSource.map(_._2).sum)
+  }
+
+  /** `index` routed to write tasks by `source`, so the `partitionBy("source")`
+    * write makes one file per source directory instead of one per (input
+    * partition, source) — each file costs a fixed create and commit —
+    * while every core still writes. A source holding more than an even
+    * share of the rows (total ÷ cores) is split by `parent_id` into
+    * ceil(rows ÷ share) slices, so no task is handed a large source whole;
+    * the slices are packed largest first onto min(#slices, cores) tasks
+    * ([[graft.core.TaskPacking.leastLoaded]]). `perSource` is the row
+    * count per source (None: null source). One parent's chunks always
+    * share a task.
+    */
+  private def bySourceTasks(index: DataFrame, perSource: Seq[(Option[String], Long)]): DataFrame = {
+    val cores = index.sparkSession.sparkContext.defaultParallelism
+    val share = math.max(1L, (perSource.map(_._2).sum + cores - 1) / cores)
+    // (source, slice) per slice, with the slice's rows
+    val slices = perSource.flatMap { case (source, rows) =>
+      val k = math.max(1L, (rows + share - 1) / share).toInt
+      Seq.tabulate(k)(i => ((source, i), rows / k))
+    }.toIndexedSeq
+    val (n, sliceTask) = graft.core.TaskPacking.leastLoaded(slices.map(_._2), cores)
+    val tasksOf = slices.indices.groupMap(i => slices(i)._1._1)(sliceTask)
+      .map { case (source, ts) => source -> ts.toArray }
+    val taskOf = udf((source: String, parent: java.lang.Long) => {
+      val ts = tasksOf(Option(source))
+      if (parent == null) ts(0) else ts(java.lang.Math.floorMod(parent.longValue, ts.length))
+    })
+    index.repartitionById(n, taskOf(col("source"), col("parent_id")))
   }
 
   /** The index row count when a run with nothing to process

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.core.SplitParams
-import graft.pipeline.{ChunkIndexer, Chunkers}
+import graft.pipeline.{ChunkIndexer, Chunkers, IncrementalIndexer}
 import graft.services.{Embedder, HashingEmbedder}
 
 /** The reference's cron-scheduled incremental ingestion as Structured
@@ -44,9 +44,9 @@ object StreamingIndexer {
               col("chunk_offset"), col("source"), col("lang"), col("contentVector"))
           val spark2 = batch.sparkSession
           val index =
-            if (graft.core.Fs.exists(spark2, indexDir)) spark2.read.parquet(indexDir)
-            else spark2.createDataFrame(
-              spark2.sparkContext.emptyRDD[org.apache.spark.sql.Row], newDocs.schema)
+            if (graft.core.Fs.exists(spark2, indexDir))
+              spark2.read.schema(IncrementalIndexer.indexSchema).parquet(indexDir)
+            else IncrementalIndexer.emptyTable(spark2, newDocs.schema)
           ChunkIndexer.replaceParents(index, newDocs)
             .localCheckpoint(true)
             .write.mode(SaveMode.Overwrite).parquet(indexDir)

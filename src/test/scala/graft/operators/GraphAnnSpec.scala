@@ -1120,4 +1120,130 @@ class GraphAnnSpec extends AnyFunSuite {
     }
     assert(GraphAnn.routingHeadRoots == before + roots.length)
   }
+
+  // ---- per-segment rebuild routing (explicit-id exchange, streamed groups)
+
+  /** A seeded corpus: 300 vectors of 16 dims, ids 0..299. */
+  private lazy val seeded = {
+    val rnd = new scala.util.Random(11)
+    (0L until 300L).map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
+  }
+  private lazy val seededDf = seeded.toDF("id", "vec")
+  /** Six fixed cells: id mod 6 (no training, so no float-sum order in play). */
+  private lazy val seededCells = seededDf.withColumn("cell", ($"id" % 6).cast("int"))
+  private lazy val seededCentroids: Array[(Int, Array[Float])] =
+    seeded.take(6).zipWithIndex.map { case ((_, v), c) => c -> v }.toArray
+  /** Fifty vectors per cell, at most 20 per segment: three slices per cell. */
+  private lazy val slicedNodes = GraphAnn.buildGraphPerCell(spark, seededCells,
+    m = M, efConstruction = 48, maxSegmentSize = 20).localCheckpoint(true)
+  private lazy val seededPq = {
+    val rnd = new scala.util.Random(5)
+    val book = Similarity.PqCodebook(4, 4,
+      Array.fill(4, 8)(Array.fill(4)(rnd.nextGaussian().toFloat * 0.3f)))
+    val proto = Similarity.IvfPqIndex(seededCentroids.map { case (c, v) =>
+      c -> Similarity.l2unit(v.toSeq) }, book, null)
+    proto.copy(coded = Similarity.encodeIntoIvfPq(spark, seededDf, "id", "vec", proto)
+      .localCheckpoint(true))
+  }
+
+  /** SHA-256 over a frame's rows (columns by name, floats by bit pattern), sorted. */
+  private def digest(df: org.apache.spark.sql.DataFrame): String = {
+    def render(x: Any): String = x match {
+      case b: Array[Byte] => b.map(v => f"$v%02x").mkString
+      case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
+      case f: Float => Integer.toHexString(java.lang.Float.floatToIntBits(f))
+      case other => String.valueOf(other)
+    }
+    val rows = df.collect().map(r => r.schema.fieldNames.sorted
+      .map(n => s"$n=${render(r.get(r.fieldIndex(n)))}").mkString("|")).sorted
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.mkString("\n").getBytes("UTF-8")).map(v => f"$v%02x").mkString
+  }
+
+  /** The first `k` (part, seg) segments of `nodes`: their smallest id and size. */
+  private def firstSegments(nodes: org.apache.spark.sql.DataFrame, k: Int) =
+    nodes.select($"part", $"seg", $"id").as[(Int, Int, Long)].collect()
+      .groupBy(t => (t._1, t._2)).toSeq.sortBy(_._1).take(k)
+      .map { case (_, ns) => (ns.map(_._3).min, ns.length) }
+
+  /** One tombstone in each of the first `k` segments of `nodes`. */
+  private def tombsTouching(nodes: org.apache.spark.sql.DataFrame, k: Int) =
+    firstSegments(nodes, k).map(_._1).toDF("id")
+
+  test("per-segment builds, appends and purges are byte-identical to the group-by shape") {
+    // digests recorded from the groupByKey + flatMapGroups shape these
+    // builds had before they were routed by explicit partition ids
+    val cellNodes = GraphAnn.buildGraphPerCell(spark, seededCells, m = M, efConstruction = 48)
+    val appended = GraphAnn.appendGraphCells(slicedNodes.filter($"id" < 200),
+      seededDf.filter($"id" >= 200), "id", "vec", seededCentroids, m = M,
+      efConstruction = 48, maxSegmentSize = 12)
+    val purged = GraphAnn.purgeTombstones(slicedNodes, tombsTouching(slicedNodes, 7),
+      m = M, efConstruction = 48)
+    val none = GraphAnn.purgeTombstones(slicedNodes, Seq(-1L).toDF("id"), m = M,
+      efConstruction = 48)
+    assert(none eq slicedNodes, "an empty touched set passes the input through")
+    val pqNodes = GraphAnn.buildGraphPerCellPq(spark, seededDf, "id", "vec", seededPq,
+      m = M, efConstruction = 48, maxSegmentSize = 20).localCheckpoint(true)
+    val pqPurged = GraphAnn.purgeTombstonesPq(pqNodes, tombsTouching(pqNodes, 5),
+      seededDf, "id", "vec", m = M, efConstruction = 48)
+    val pqAppended = GraphAnn.appendGraphCellsPq(pqNodes.filter($"id" < 240),
+      seededDf.filter($"id" >= 240), "id", "vec", seededPq, m = M, efConstruction = 48,
+      maxSegmentSize = 8)
+    val got = Seq("build" -> cellNodes, "sliced" -> slicedNodes, "append" -> appended,
+      "purge" -> purged, "pq build" -> pqNodes, "pq purge" -> pqPurged,
+      "pq append" -> pqAppended).map { case (n, df) => n -> digest(df) }
+    assert(got == Seq(
+      "build" ->
+        "2a3a4f5f4f215cfe26a3d8597ea3413f6cd63e73a8710a1095b3bd465c86b280",
+      "sliced" ->
+        "c5210753785e4a4104bd8f79deaedbe7d37863788d9f269741fcd97adf62db9c",
+      "append" ->
+        "0957a35bd3c4a29c438355fc9f88447708bdbbd2dd9e6a24d3d70a28e76e4616",
+      "purge" ->
+        "c685a9c00c7d509ceda05759b324db69efea96e539249ee4c2e36f2eb714bca9",
+      "pq build" ->
+        "de36a4b51b800575abd3be8461d48c1eda860e8b2c8d4d3d67dfb93cc9935e15",
+      "pq purge" ->
+        "9e965219b8e59563fa37712a7e8ca2f951242cbbb4386ffa2f4aecf152c1b4c2",
+      "pq append" ->
+        "8c0eb5ac55e49e356de3a12c3abd1d3e04ac634138b660ecd7a7f54bfd19f1f5"))
+  }
+
+  /** Tasks that read shuffle rows while `body` materializes. */
+  private def shuffleReadingTasks(body: => Unit): Seq[Long] = {
+    import org.apache.spark.scheduler._
+    val records = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.shuffleReadMetrics.recordsRead > 0)
+          records.add(e.taskMetrics.shuffleReadMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; graft.ListenerDrain.drain(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    records.asScala.toSeq
+  }
+
+  test("a purge touching k segments rebuilds them in min(k, cores) tasks") {
+    val cores = spark.sparkContext.defaultParallelism
+    Seq(1, 3, 7, 18).foreach { k =>
+      val purged = GraphAnn.purgeTombstones(slicedNodes, tombsTouching(slicedNodes, k),
+        m = M, efConstruction = 48)
+      val tasks = shuffleReadingTasks(purged.localCheckpoint(true))
+      assert(tasks.size == math.min(k, cores),
+        s"$k touched segments rebuilt in ${tasks.size} tasks (rows read: $tasks)")
+      assert(tasks.sum == firstSegments(slicedNodes, k).map(_._2 - 1).sum)
+    }
+  }
+
+  test("a published cells directory holds one data file per cell") {
+    val root = java.nio.file.Files.createTempDirectory("graft-cells-files").toString
+    val v = GraphAnn.publishServing(slicedNodes.repartition(5), seededCentroids, root)
+    val cells = new java.io.File(s"$root/$v/cells").listFiles()
+      .filter(_.getName.startsWith("part=")).map(d =>
+        d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    assert(cells.size == 6 && cells.values.forall(_ == 1), cells)
+    assert(spark.read.schema(GraphAnn.cellsSchema).parquet(s"$root/$v/cells").count() == 300)
+  }
 }

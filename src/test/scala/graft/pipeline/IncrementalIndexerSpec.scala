@@ -344,6 +344,112 @@ class IncrementalIndexerSpec extends AnyFunSuite {
     assert(changedBytes > 0)
   }
 
+  /** `p` with a tokenizer that records every text the chunker counts. */
+  private def recordingSplit(p: graft.core.SplitParams) =
+    p.copy(tokenizer = new IncrementalIndexerSpec.RecordingTokenizer(p.tokenizer))
+
+  /** The texts the chunker counts while chunking `texts` once each. */
+  private def chunkerCalls(texts: Seq[String], p: graft.core.SplitParams): Seq[String] = {
+    IncrementalIndexerSpec.counted.clear()
+    texts.foreach(t => Chunkers.chunkText(t, "txt", p)
+      .filter(c => p.tokenizer.count(c) >= p.minChunkTokens))
+    IncrementalIndexerSpec.drainCounted()
+  }
+
+  test("each run chunks each new or changed document exactly once, and nothing else") {
+    val (indexDir, stateDir) = tmp()
+    val p = recordingSplit(ChunkIndexer.defaultSplit)
+    val texts = (1L to 12L).map(i => i -> s"doc$i body words ${"w " * i.toInt}".trim).toMap
+    IncrementalIndexerSpec.counted.clear()
+    IncrementalIndexer.runOnce(spark, docs(texts), indexDir, stateDir, "run1", p)
+    val first = IncrementalIndexerSpec.drainCounted()
+    // the first build has no state: the change-detect join is folded away
+    // and every document is chunked once (it was chunked twice)
+    assert(first.sorted == chunkerCalls(texts.values.toSeq, p).sorted)
+
+    val edited = texts + (5L -> "doc5 was edited since the last run")
+    val r2 = IncrementalIndexer.runOnce(spark, docs(edited), indexDir, stateDir, "run2", p)
+    val second = IncrementalIndexerSpec.drainCounted()
+    assert(r2.processed == 1)
+    assert(second.sorted == chunkerCalls(Seq(edited(5L)), p).sorted,
+      s"a run with one changed document out of ${edited.size} chunked: ${second.distinct}")
+  }
+
+  test("the chunk query evaluates no UDF beneath the change-detect join") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan}
+    val (indexDir, stateDir) = tmp()
+    IncrementalIndexer.runOnce(spark, docs(base), indexDir, stateDir, "run1")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.optimizedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      IncrementalIndexer.runOnce(spark, docs(base + (2L -> "fresh words")), indexDir,
+        stateDir, "run2")
+      graft.ListenerDrain.drain(spark)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    def udfs(plan: LogicalPlan): Seq[ScalaUDF] =
+      plan.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+    val chunkPlans = plans.asScala.toSeq.filter(_.exists(_.isInstanceOf[Generate]))
+    assert(chunkPlans.size == 1, s"expected one chunk query, saw ${chunkPlans.size}")
+    val plan = chunkPlans.head
+    assert(udfs(plan).count(_.udfName.contains(Chunkers.ChunkUdfName)) == 1,
+      "the chunk UDF must appear once, in the generator's input")
+    val beneath = plan.collect { case j: Join => j }.flatMap(j => j.children.flatMap(udfs))
+    assert(beneath.isEmpty, s"UDFs evaluated beneath the change-detect join: $beneath\n$plan")
+  }
+
+  /** source → data files under its `source=` directory. */
+  private def filesPerSource(indexDir: String): Map[String, Seq[String]] =
+    new java.io.File(indexDir).listFiles().filter(_.getName.startsWith("source=")).map { d =>
+      d.getName -> d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSeq
+    }.toMap
+
+  /** The write task (partition id) of a `part-NNNNN-…` data file. */
+  private def writeTask(file: String): Int = file.split("-")(1).toInt
+
+  private def sourcedDocs(rows: Seq[(Long, String)]) = {
+    import spark.implicits._
+    rows.map { case (id, source) => (id, s"doc$id text for $source ${"w " * (id % 7).toInt}".trim,
+      source, "en") }.toDF("doc_id", "text", "source", "lang")
+  }
+
+  test("the index holds one data file per source, written by several tasks") {
+    val (indexDir, stateDir) = tmp()
+    // eight sources of five parents each over four cores: no source holds
+    // more than an even share of the rows, so none is split
+    val listing = (1L to 40L).map(i => i -> s"s${i % 8}")
+    IncrementalIndexer.runOnce(spark, sourcedDocs(listing), indexDir, stateDir, "run1")
+    val first = filesPerSource(indexDir)
+    assert(first.size == 8 && first.values.forall(_.size == 1), first)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(first.values.flatten.map(writeTask).toSet.size == cores,
+      s"the index was written by ${first.values.flatten.map(writeTask).toSet.size} tasks")
+    // a changed run rewrites the same layout
+    val r2 = IncrementalIndexer.runOnce(spark, sourcedDocs(listing.filter(_._1 != 3L)),
+      indexDir, stateDir, "run2")
+    assert(r2.purgedParents == 1)
+    val second = filesPerSource(indexDir)
+    assert(second.size == 8 && second.values.forall(_.size == 1), second)
+  }
+
+  test("a source holding most of the index is split over several write tasks") {
+    val (indexDir, stateDir) = tmp()
+    val listing = (1L to 40L).map(i => i -> (if (i <= 34) "big" else s"s${i % 3}"))
+    val r = IncrementalIndexer.runOnce(spark, sourcedDocs(listing), indexDir, stateDir, "run1")
+    val files = filesPerSource(indexDir)
+    assert(files("source=big").map(writeTask).toSet.size > 1,
+      s"the dominant source was written whole by one task: $files")
+    assert(spark.read.parquet(indexDir).count() == r.indexSize)
+    assert(spark.read.parquet(indexDir).select("parent_id").distinct().count() == 40)
+  }
+
   test("run log retention keeps the newest maxRunFiles summaries (admin.py:202-228)") {
     val dir = Files.createTempDirectory("graft-runlog").toString
     def summary(i: Int) = IncrementalIndexer.RunSummary(
@@ -365,5 +471,25 @@ class IncrementalIndexerSpec extends AnyFunSuite {
     val one = java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir, "runs", "run007.json"))
     assert(one.contains("\"runId\":\"run007\"") && one.contains("\"chunksWritten\":10"))
+  }
+}
+
+object IncrementalIndexerSpec {
+  /** Texts counted by [[RecordingTokenizer]]s in this JVM (local mode:
+    * the tasks run here).
+    */
+  val counted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  def drainCounted(): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val out = counted.asScala.toSeq
+    counted.clear()
+    out
+  }
+
+  /** `inner`, recording every text the chunker counts. */
+  final class RecordingTokenizer(inner: graft.core.Tokenizer) extends graft.core.Tokenizer {
+    override def tokens(s: String): Array[String] = inner.tokens(s)
+    override def count(s: String): Int = { counted.add(s); inner.count(s) }
   }
 }
