@@ -1,9 +1,8 @@
 #!/usr/bin/env python3
 """Per-call-site job histogram of a Spark event log.
 
-Reads one Spark event log (plain JSON lines, or `.zstd`/`.zst` compressed,
-decompressed with the `zstd` binary; or a rolling log's `eventlog_v2_*`
-directory) and prints three tables:
+Reads one Spark event log (plain JSON lines, or `.zstd` compressed,
+decompressed with the `zstd` binary) and prints three tables:
 
   1. jobs per root SQL execution, grouped by the execution's call site (the
      first `graft.` frame of its stack; `~` marks a caller's own frame when
@@ -16,17 +15,17 @@ directory) and prints three tables:
 Jobs outside any SQL execution are grouped by their first stage's call site.
 
 Usage:
-  python3 scripts/job_histogram.py <eventlog> [--site SUBSTR] [--min-tasks N]
+  python3 scripts/job_histogram.py <eventlog>
 
 Produce a log by starting the JVM with
-`-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=<dir>` (add
-`-Dspark.eventLog.compress=true -Dspark.eventLog.compression.codec=zstd`
-for a compressed one).
+`-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=<dir>
+-Dspark.eventLog.rolling.enabled=false` (Spark 4 otherwise writes a rolling
+log directory); add `-Dspark.eventLog.compress=true
+-Dspark.eventLog.compression.codec=zstd` for a compressed one.
 """
 import argparse
 import collections
 import json
-import os
 import subprocess
 import sys
 
@@ -38,14 +37,8 @@ WRITE_METRICS = ("number of written files", "written output")
 
 
 def events(path):
-    """Yield the log's events as dicts; a rolling log's directory
-    (`eventlog_v2_*`) is read file by file, in order."""
-    if os.path.isdir(path):
-        parts = [f for f in os.listdir(path) if f.startswith("events_")]
-        for f in sorted(parts, key=lambda f: int(f.split("_")[1])):
-            yield from events(os.path.join(path, f))
-        return
-    if path.endswith((".zstd", ".zst")):
+    """Yield the log's events as dicts."""
+    if path.endswith(".zstd"):
         p = subprocess.Popen(["zstd", "-dc", path], stdout=subprocess.PIPE, text=True)
         lines = p.stdout
     else:
@@ -91,8 +84,6 @@ def plan_metrics(info, out):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("log")
-    ap.add_argument("--site", default="", help="only call sites containing this text")
-    ap.add_argument("--min-tasks", type=int, default=0, help="only stages with at least this many tasks")
     a = ap.parse_args()
 
     root_of, site_of, exec_time = {}, {}, {}
@@ -156,16 +147,13 @@ def main():
             if s in stage_tasks:
                 stage_owner.setdefault(s, job_site[j])
 
-    keep = lambda site: a.site in site
-
     print("== jobs per root call site")
     roots = collections.defaultdict(set)
     jobs = collections.Counter()
     for j, site in job_site.items():
-        if keep(site):
-            jobs[site] += 1
-            x = job_exec[j]
-            roots[site].add(root_of.get(x, x) if x is not None else ("job", j))
+        jobs[site] += 1
+        x = job_exec[j]
+        roots[site].add(root_of.get(x, x) if x is not None else ("job", j))
     print(f"{'execs':>6} {'jobs':>6} {'jobs/exec':>9}  call site")
     for site, n in jobs.most_common():
         print(f"{len(roots[site]):>6} {n:>6} {n / len(roots[site]):>9.2f}  {site}")
@@ -174,10 +162,9 @@ def main():
     print(f"{'stage':>6} {'tasks':>6} {'max task ms':>11} {'wall ms':>8}  call site  [stage name]")
     for s in sorted(stage_tasks):
         site = stage_owner.get(s, stage_site.get(s, "<no stage>"))
-        if keep(site) and stage_tasks[s] >= a.min_tasks:
-            longest = max(task_ms[s]) if task_ms[s] else 0
-            print(f"{s:>6} {stage_tasks[s]:>6} {longest:>11} {stage_wall.get(s, 0):>8}  {site}"
-                  f"  [{stage_name.get(s, '')}]")
+        longest = max(task_ms[s]) if task_ms[s] else 0
+        print(f"{s:>6} {stage_tasks[s]:>6} {longest:>11} {stage_wall.get(s, 0):>8}  {site}"
+              f"  [{stage_name.get(s, '')}]")
 
     print("\n== writes")
     print(f"{'exec':>6} {'files':>6} {'bytes':>10} {'wall ms':>8}  call site")
@@ -186,12 +173,10 @@ def main():
         values = {names[acc]: v for acc, v in driver_accums.get(x, {}).items() if acc in names}
         if "number of written files" not in values:
             continue
-        site = root_site(x)
-        if keep(site):
-            start, end = exec_time.get(x, [None, None])
-            wall = end - start if start and end else 0
-            print(f"{x:>6} {values['number of written files']:>6} "
-                  f"{values.get('written output', 0):>10} {wall:>8}  {site}")
+        start, end = exec_time.get(x, [None, None])
+        wall = end - start if start and end else 0
+        print(f"{x:>6} {values['number of written files']:>6} "
+              f"{values.get('written output', 0):>10} {wall:>8}  {root_site(x)}")
 
 
 if __name__ == "__main__":

@@ -22,7 +22,7 @@ object Hashing {
   /** splitmix64 finalizer — the one canonical copy (coefficient seeding and
     * the winnowing rolling hash both mix through it).
     */
-  private def fmix64(x0: Long): Long = {
+  private[graft] def fmix64(x0: Long): Long = {
     var z = x0
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL

@@ -1225,9 +1225,11 @@ object GraphAnn {
   def writeGraphCells(nodes: DataFrame, dir: String): Unit = {
     // one task per cell, cells round robin over the cores: one file per
     // cell directory instead of one per (input partition, cell) — each
-    // file costs a fixed create/commit — and still every core writing.
-    // A cell already has to fit one task (its graph is built in one), so
-    // writing it from one adds no constraint
+    // file costs a fixed create/commit — and every core writing while
+    // there are at least as many cells as cores. The price: a hot cell's
+    // whole write runs on one task, although `cellSlices` and
+    // `maxSegmentSize` split its graph build over several (SCALING.md,
+    // "Delta cycle cost")
     val n = nodes.sparkSession.sparkContext.defaultParallelism
     nodes.repartitionById(n, pmod(col("part"), lit(n)))
       .write.mode("overwrite").partitionBy("part").parquet(dir)

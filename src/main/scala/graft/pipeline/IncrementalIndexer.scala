@@ -170,8 +170,10 @@ object IncrementalIndexer {
     * write makes one file per source directory instead of one per (input
     * partition, source) — each file costs a fixed create and commit —
     * while every core still writes. A source holding more than an even
-    * share of the rows (total ÷ cores) is split by `parent_id` into
-    * ceil(rows ÷ share) slices, so no task is handed a large source whole;
+    * share of the rows (total ÷ cores) is split by a hash of `parent_id`
+    * into ceil(rows ÷ share) slices, so no task is handed a large source
+    * whole however its ids are spaced (ids sharing a stride with the slice
+    * count would all fall in one slice of the raw id);
     * the slices are packed largest first onto min(#slices, cores) tasks
     * ([[graft.core.TaskPacking.leastLoaded]]). `perSource` is the row
     * count per source (None: null source). One parent's chunks always
@@ -190,7 +192,9 @@ object IncrementalIndexer {
       .map { case (source, ts) => source -> ts.toArray }
     val taskOf = udf((source: String, parent: java.lang.Long) => {
       val ts = tasksOf(Option(source))
-      if (parent == null) ts(0) else ts(java.lang.Math.floorMod(parent.longValue, ts.length))
+      if (parent == null) ts(0)
+      else ts(java.lang.Math.floorMod(graft.functions.Hashing.fmix64(parent.longValue),
+        ts.length.toLong).toInt)
     })
     index.repartitionById(n, taskOf(col("source"), col("parent_id")))
   }

@@ -440,14 +440,18 @@ class IncrementalIndexerSpec extends AnyFunSuite {
   }
 
   test("a source holding most of the index is split over several write tasks") {
-    val (indexDir, stateDir) = tmp()
-    val listing = (1L to 40L).map(i => i -> (if (i <= 34) "big" else s"s${i % 3}"))
-    val r = IncrementalIndexer.runOnce(spark, sourcedDocs(listing), indexDir, stateDir, "run1")
-    val files = filesPerSource(indexDir)
-    assert(files("source=big").map(writeTask).toSet.size > 1,
-      s"the dominant source was written whole by one task: $files")
-    assert(spark.read.parquet(indexDir).count() == r.indexSize)
-    assert(spark.read.parquet(indexDir).select("parent_id").distinct().count() == 40)
+    // consecutive ids, and ids sharing a stride (12) with every slice count
+    // up to 4: slicing the raw id would send all of the latter to one task
+    for (stride <- Seq(1L, 12L)) {
+      val (indexDir, stateDir) = tmp()
+      val listing = (1L to 40L).map(i => i * stride -> (if (i <= 34) "big" else s"s${i % 3}"))
+      val r = IncrementalIndexer.runOnce(spark, sourcedDocs(listing), indexDir, stateDir, "run1")
+      val files = filesPerSource(indexDir)
+      assert(files("source=big").map(writeTask).toSet.size > 1,
+        s"stride $stride: the dominant source was written whole by one task: $files")
+      assert(spark.read.parquet(indexDir).count() == r.indexSize)
+      assert(spark.read.parquet(indexDir).select("parent_id").distinct().count() == 40)
+    }
   }
 
   test("run log retention keeps the newest maxRunFiles summaries (admin.py:202-228)") {
