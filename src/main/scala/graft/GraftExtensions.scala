@@ -4,10 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{ChunkDocument, CosineSimF32, CosineSimI8, DotProductF32, L2NormF32, TokenCount}
+import graft.operators.RoutedGraphSearchStrategy
 
 /** SparkSessionExtensions entry point: makes graft's native expressions —
   * the vector kernels and the `chunk_document` generator — first-class SQL
-  * functions in any session built with
+  * functions, and plans the persisted routed graph search
+  * ([[graft.operators.RoutedGraphSearchStrategy]]), in any session built with
   * `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`.
   *
@@ -44,5 +46,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // graft_token_count(text): codegen'd hot-path tokenizer count
     ext.injectFunction((FunctionIdentifier("graft_token_count"), info("graft_token_count"),
       (es: Seq[Expression]) => TokenCount(es(0))))
+    // the persisted routed graph search's one-job plan
+    ext.injectPlannerStrategy(_ => RoutedGraphSearchStrategy)
   }
 }

@@ -21,6 +21,9 @@ object Tables {
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // graft's SQL functions and planner strategies (the persisted
+      // routed graph search plans only through them)
+      .withExtensions(new GraftExtensions)
       // Checkpoint/broadcast/shuffle state is freed by the ContextCleaner,
       // which only learns an RDD is dead after a GC collects its reference.
       // A large-heap driver may not GC for the life of a mid-sized job, so

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Resolution-independent filesystem probes. Table/index directories are
@@ -37,12 +37,18 @@ object Fs {
   /** Sorted names of the data files directly under `dir` — Spark's own
     * rule: names starting with `_` or `.` (`_SUCCESS`, checksums) are
     * not data. Same resolution rule as [[exists]]; absent path → empty. */
-  def listDataFileNames(spark: SparkSession, dir: String): Seq[String] = {
+  def listDataFileNames(spark: SparkSession, dir: String): Seq[String] =
+    listDataFiles(spark, dir).map(_.getPath.getName)
+
+  /** [[listDataFileNames]]' files with their statuses, in name order. */
+  def listDataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+    val all = try fs.listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    all.filter(st => st.isFile &&
+        !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
   }
 
   /** Serializable carrier for the session's Hadoop configuration — the

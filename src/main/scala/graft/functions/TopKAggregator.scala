@@ -23,8 +23,7 @@ class TopKByScore(k: Int)
     extends Aggregator[(Long, Double), List[(Long, Double)], List[(Long, Double)]] {
   require(k > 0, s"k must be positive, got $k")
 
-  private val ord: Ordering[(Long, Double)] =
-    Ordering.by[(Long, Double), (Double, Long)] { case (id, score) => (-score, id) }
+  private val ord = TopKByScore.order
 
   override def zero: List[(Long, Double)] = Nil
 
@@ -48,6 +47,10 @@ class TopKByScore(k: Int)
 }
 
 object TopKByScore {
+  /** The top-k order over (id, score): score desc, then id asc. */
+  val order: Ordering[(Long, Double)] =
+    Ordering.by[(Long, Double), (Double, Long)] { case (id, score) => (-score, id) }
+
   /** Derived once per JVM. Spark asks an Aggregator for its encoders in
     * every task, and deriving one from a TypeTag runs Scala runtime
     * reflection through a mirror of the task thread's class loader, which

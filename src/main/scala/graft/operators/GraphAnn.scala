@@ -661,8 +661,9 @@ object GraphAnn {
     * natively and narrow transforms preserve it; call this after
     * re-reading nodes from storage or repartitioning by any other key —
     * a cell's parquet file larger than `maxPartitionBytes` splits across
-    * scan partitions ([[searchGraphRoutedPersisted]] already applies
-    * this to the probed cells). One shuffle of exactly the nodes passed.
+    * scan partitions ([[searchGraphRoutedPersisted]] needs no restore: it
+    * reads each probed cell's files whole in one task). One shuffle of
+    * exactly the nodes passed.
     */
   def restoreSegmentLocality(nodes: DataFrame): DataFrame =
     nodes.repartition(col("part"), col("seg"))
@@ -723,7 +724,7 @@ object GraphAnn {
     * ([[entryAndRoots]]). Emits (probe_id, id, sim) candidate rows, ≤ k
     * per query.
     */
-  private def searchSegment(ns: Array[GraphNode],
+  private[operators] def searchSegment(ns: Array[GraphNode],
       queries: Iterable[(Long, Array[Float])], k: Int, ef: Int,
       emit: Int => Boolean = emitAll): Iterator[(Long, Long, Double)] = {
     if (ns.isEmpty) return Iterator.empty
@@ -777,8 +778,7 @@ object GraphAnn {
     * segment only. All builders in this object emit that layout and
     * narrow transforms preserve it; if `nodes` was re-read from storage
     * or repartitioned by anything other than (part, seg), restore it
-    * with [[restoreSegmentLocality]] first (the persisted path does
-    * exactly this — [[searchGraphRoutedPersisted]]).
+    * with [[restoreSegmentLocality]] first.
     *
     * `tombstones` (optional, one `id` column) masks DELETED documents at
     * serving time — the Lucene deletes-bitset model: beams traverse
@@ -807,34 +807,35 @@ object GraphAnn {
       // hashed into one partition) are disconnected graphs with their own
       // entry points — one beam per group, never one beam per partition
       it.toArray.groupBy(n => (n.part, n.seg)).iterator.flatMap { case (_, ns) =>
-        searchSegment(ns, bc.value, kLocal, efLocal, liveEmit(bcTomb, ns))
+        searchSegment(ns, bc.value, kLocal, efLocal, liveEmit(bcTomb.map(_.value), ns))
       }
     }.toDF("probe_id", "id", "sim")
     mergeTopK(cands, k)
   }
 
-  /** Tombstone ids as a broadcast SORTED long array (binary-search
-    * membership, no boxing in the beam loop). None stays None so the
-    * unfiltered path pays nothing.
+  /** Tombstone ids as a SORTED long array (binary-search membership, no
+    * boxing in the beam loop). None stays None so the unfiltered path
+    * pays nothing.
     */
-  private def broadcastTombstones(spark: SparkSession,
-      tombstones: Option[DataFrame]): Option[
-        org.apache.spark.broadcast.Broadcast[Array[Long]]] =
+  private def collectTombstones(tombstones: Option[DataFrame]): Option[Array[Long]] =
     tombstones.map { df =>
       val ids = df.select(col("id").cast("long"))
         .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
       java.util.Arrays.sort(ids)
-      spark.sparkContext.broadcast(ids)
+      ids
     }
 
-  /** Per-segment emit predicate masking a broadcast tombstone set. */
-  private def liveEmit(
-      bcTomb: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]],
-      ns: Array[GraphNode]): Int => Boolean = bcTomb match {
+  /** [[collectTombstones]] as a broadcast. */
+  private def broadcastTombstones(spark: SparkSession,
+      tombstones: Option[DataFrame]): Option[
+        org.apache.spark.broadcast.Broadcast[Array[Long]]] =
+    collectTombstones(tombstones).map(spark.sparkContext.broadcast(_))
+
+  /** Per-segment emit predicate masking a sorted tombstone set. */
+  private[operators] def liveEmit(tombstones: Option[Array[Long]],
+      ns: Array[GraphNode]): Int => Boolean = tombstones match {
     case None => emitAll
-    case Some(b) =>
-      val sorted = b.value
-      i => java.util.Arrays.binarySearch(sorted, ns(i).id) < 0
+    case Some(sorted) => i => java.util.Arrays.binarySearch(sorted, ns(i).id) < 0
   }
 
   /** Cell-routed composition — the 100 TB shape from the SCALING.md
@@ -1115,7 +1116,7 @@ object GraphAnn {
             case Some(qs) =>
               val ns = fs.map(f =>
                 GraphNode(f.part, f.id, f.vec, f.level, f.neighbors, f.seg))
-              val live = liveEmit(bcTomb, ns)
+              val live = liveEmit(bcTomb.map(_.value), ns)
               searchSegment(ns, qs, kLocal, efLocal,
                 i => fs(i).allowed && live(i))
             case None => Iterator.empty
@@ -1173,7 +1174,7 @@ object GraphAnn {
         case ((cell, _), ns) =>
           bc.value.get(cell) match {
             case Some(qs) =>
-              searchSegment(ns, qs, kLocal, efLocal, liveEmit(bcTomb, ns))
+              searchSegment(ns, qs, kLocal, efLocal, liveEmit(bcTomb.map(_.value), ns))
             case None => Iterator.empty
           }
       }
@@ -1263,8 +1264,8 @@ object GraphAnn {
       allowed: Option[DataFrame] = None): DataFrame = {
     val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no published graph version under $root"))
-    searchGraphRoutedPersisted(spark, s"$root/$v", centroids, probes,
-      probeId, probeVec, nprobe, k, ef, tombstones, allowed)
+    persistedSearch(spark, s"$root/$v", s"root $root version $v", centroids,
+      probes, probeId, probeVec, nprobe, k, ef, tombstones, allowed)
   }
 
   /** [[searchGraphRouted]] against the PERSISTED layout — the 100 TB
@@ -1278,12 +1279,30 @@ object GraphAnn {
     * its flag join restores segment locality, so the persisted filtered
     * path is row-identical to the in-memory filtered path over the same
     * files); `tombstones` composes with it (emit = allowed AND live).
+    *
+    * The unfiltered search is one [[RoutedGraphSearch]] plan node: one
+    * Spark job of one stage, no exchange, the per-probe top-k merged on
+    * the driver. The session must carry [[RoutedGraphSearchStrategy]]
+    * (`spark.sql.extensions=graft.GraftExtensions`, which
+    * [[graft.Tables.configure]] installs); without it the call refuses
+    * with an `IllegalStateException` naming that setting.
     */
   def searchGraphRoutedPersisted(spark: SparkSession, dir: String,
       centroids: Array[(Int, Array[Float])], probes: DataFrame,
       probeId: String, probeVec: String, nprobe: Int, k: Int,
       ef: Int, tombstones: Option[DataFrame] = None,
-      allowed: Option[DataFrame] = None): DataFrame = allowed match {
+      allowed: Option[DataFrame] = None): DataFrame =
+    persistedSearch(spark, dir, s"cells $dir", centroids, probes, probeId,
+      probeVec, nprobe, k, ef, tombstones, allowed)
+
+  /** [[searchGraphRoutedPersisted]] with `where` naming the served state
+    * in the search job's description.
+    */
+  private def persistedSearch(spark: SparkSession, dir: String, where: String,
+      centroids: Array[(Int, Array[Float])], probes: DataFrame,
+      probeId: String, probeVec: String, nprobe: Int, k: Int,
+      ef: Int, tombstones: Option[DataFrame],
+      allowed: Option[DataFrame]): DataFrame = allowed match {
     case Some(a) =>
       // the filtered path prunes to the routed cells itself (the filter
       // lands in this scan's PartitionFilters) and repartitions after
@@ -1291,18 +1310,20 @@ object GraphAnn {
       searchGraphRoutedFiltered(spark.read.schema(cellsSchema).parquet(dir), centroids,
         probes, probeId, probeVec, a, nprobe, k, ef, tombstones)
     case None =>
-      // route ONCE: the same map prunes the scan and drives the beams
+      if (!graft.core.Fs.exists(spark, dir))
+        throw new java.io.FileNotFoundException(s"no graph cells directory at $dir")
+      // route ONCE: the same map picks the cells' files and drives the
+      // beams; each cell's files are read whole by one task, so every
+      // (part, seg) segment stays local without a repartition
       val routes = routeBatch(probes, probeId, probeVec, centroids, nprobe)
-      val cells = routes.keys.toSeq
-      val nodes = spark.read.schema(cellsSchema).parquet(dir)
-        .filter(col("part").isin(cells: _*))
-        // a cell whose parquet file exceeds maxPartitionBytes splits
-        // across scan partitions, breaking the per-task segment locality
-        // the beams need (adjacency ids must resolve locally); one
-        // bounded shuffle of ONLY the probed cells' nodes reassembles
-        // each (cell, seg) whole in one task
-        .repartition(col("part"), col("seg"))
-      routedSearchCore(nodes, routes, k, ef, tombstones)
+      val cells = routes.keys.toSeq.sorted
+      val files = cells.flatMap(c =>
+        graft.core.Fs.listDataFiles(spark, s"$dir/part=$c").map(st =>
+          CellFile(c, st.getPath.toString, st.getLen, st.getModificationTime)))
+      val nProbes = routes.valuesIterator.flatMap(_.iterator.map(_._1)).toSet.size
+      RoutedGraphSearch.toDF(spark, RoutedGraphSearchSpec(files, routes, k, ef,
+        collectTombstones(tombstones),
+        s"routed graph search: $where, ${cells.size} probed cells, $nProbes probes"))
   }
 
   /** Publish the COMPLETE FLOAT serving state under one version — graph
@@ -1360,7 +1381,7 @@ object GraphAnn {
     val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
       throw new IllegalStateException(
         s"no published serving state under $root"))
-    searchGraphRoutedPersisted(spark, s"$root/$v/cells",
+    persistedSearch(spark, s"$root/$v/cells", s"root $root version $v",
       routingHead(spark, root, v), probes, probeId, probeVec, nprobe, k, ef,
       tombstones, allowed)
   }

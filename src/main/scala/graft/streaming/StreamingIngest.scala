@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.core.Jobs.labelled
 import graft.operators.Dedup
 import graft.pipeline.PartitionedUpsert
 
@@ -35,15 +36,6 @@ object StreamingIngest {
       ref: graft.operators.Similarity.DriftStats,
       residRatioMax: Double = 1.25,
       klMax: Double = 0.5)
-
-  /** `body` with `description` as its jobs' description, cleared after
-    * it: the overlap legs run on reused [[graft.core.Pools.io]] threads, so
-    * a label left set would tag later, unrelated jobs on that thread.
-    */
-  private def labelled[T](s: SparkSession, description: String)(body: => T): T = {
-    s.sparkContext.setJobDescription(description)
-    try body finally s.sparkContext.setJobDescription(null)
-  }
 
   /** Default hash-bucket count for the index tables. Size it to the
     * index's data, not its row count at gate scale: each micro-batch's
@@ -286,11 +278,11 @@ object StreamingIngest {
               implicit val ec: scala.concurrent.ExecutionContext =
                 graft.core.Pools.io
               val up = Seq(
-                Future(labelled(s, s"embed-ingest b$batchId: sks upsert") {
+                Future(labelled(s.sparkContext, s"embed-ingest b$batchId: sks upsert") {
                   PartitionedUpsert.upsertByKey(s, sksDir, delta,
                     "id", buckets, Some(keyRows))
                 }),
-                Future(labelled(s, s"embed-ingest b$batchId: bands upsert") {
+                Future(labelled(s.sparkContext, s"embed-ingest b$batchId: bands upsert") {
                   PartitionedUpsert.upsertByKey(s, bandsDir, deltaBands,
                     "id", buckets, Some(keyRows))
                 }))
@@ -390,11 +382,11 @@ object StreamingIngest {
               implicit val ec: scala.concurrent.ExecutionContext =
                 graft.core.Pools.io
               val up = Seq(
-                Future(labelled(s, s"neardup-ingest b$batchId: sigs upsert") {
+                Future(labelled(s.sparkContext, s"neardup-ingest b$batchId: sigs upsert") {
                   PartitionedUpsert.upsertByKey(s, sigsDir, deltaSigs,
                     "id", buckets, Some(keyRows))
                 }),
-                Future(labelled(s, s"neardup-ingest b$batchId: bands upsert") {
+                Future(labelled(s.sparkContext, s"neardup-ingest b$batchId: bands upsert") {
                   PartitionedUpsert.upsertByKey(s, bandsDir, deltaBands,
                     "id", buckets, Some(keyRows))
                 }))

@@ -1246,4 +1246,161 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(cells.size == 6 && cells.values.forall(_ == 1), cells)
     assert(spark.read.schema(GraphAnn.cellsSchema).parquet(s"$root/$v/cells").count() == 300)
   }
+
+  // ---- the planned persisted search: one job, one stage, no exchange
+
+  /** Jobs this thread launches in `body`: (stage ids, description), and
+    * the shuffle bytes (read + written) of their stages.
+    */
+  private def searchJobs[T](body: => T): (T, Seq[(Seq[Int], String)], Long) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[Int], String)]
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffle = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.test.jobs") == tag) {
+          jobs.add((e.stageIds, e.properties.getProperty("spark.job.description")))
+          e.stageIds.foreach(stages.add(_))
+        }
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId) && e.stageInfo.taskMetrics != null) {
+          val m = e.stageInfo.taskMetrics
+          shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten +
+            m.shuffleReadMetrics.totalBytesRead)
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try {
+      val out = body
+      graft.ListenerDrain.drain(spark)
+      (out, jobs.asScala.toSeq, shuffle.get())
+    } finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** A fresh cells directory holding `cellNodes`. */
+  private def cellsDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    GraphAnn.writeGraphCells(cellNodes, dir)
+    dir
+  }
+
+  private lazy val batchProbes = emb.filter($"vec_id" % 7 === 3)
+    .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
+
+  test("cold start: a search runs one job of one stage and shuffles nothing") {
+    val root = java.nio.file.Files.createTempDirectory("graft-onejob").toString
+    GraphAnn.publishServing(cellNodes, ivf.centroids, root)
+    // a serving request's probes are a local relation: collecting them
+    // runs no job
+    val probes = memoProbes.as[(Long, Array[Float])].collect().toSeq
+      .toDF("probe_id", "probe_vec")
+    def search() = rows(GraphAnn.searchGraphRoutedColdStart(spark, root, probes,
+      "probe_id", "probe_vec", nprobe = 2, k = 5, ef = 32))
+    search() // the first search on a version also reads its routing head
+    val (got, jobs, shuffled) = searchJobs(search())
+    assert(got == coldStart(root))
+    assert(jobs.size == 1, s"one job per search, got ${jobs.size}")
+    assert(jobs.head._1.size == 1, s"one stage, got ${jobs.head._1}")
+    assert(shuffled == 0L, s"no shuffle, got $shuffled bytes")
+  }
+
+  test("the search job's description names the root, version, probed cells and probes") {
+    val root = java.nio.file.Files.createTempDirectory("graft-jobdesc").toString
+    val v = GraphAnn.publishServing(cellNodes, ivf.centroids, root)
+    coldStart(root)
+    val (_, jobs, _) = searchJobs(coldStart(root))
+    val cells = memoProbes.select($"probe_vec").as[Array[Float]].collect()
+      .flatMap(GraphAnn.routeCells(ivf.centroids, _, 2)).distinct.length
+    val desc = jobs.map(_._2).mkString
+    Seq(root, v, s"$cells probed cells", "4 probes").foreach(part =>
+      assert(desc.contains(part), s"'$desc' must name $part"))
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null,
+      "the description is cleared after the search")
+  }
+
+  test("a session without GraftExtensions refuses a persisted search, naming the setting") {
+    import org.apache.spark.sql.SparkSession
+    val dir = cellsDir("graft-bare")
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val bare = try SparkSession.builder().getOrCreate()
+      finally { SparkSession.setDefaultSession(spark); SparkSession.setActiveSession(spark) }
+    assert(bare ne spark)
+    assert(!RoutedGraphSearchStrategy.installedIn(bare))
+    assert(RoutedGraphSearchStrategy.installedIn(spark))
+    val e = intercept[IllegalStateException](GraphAnn.searchGraphRoutedPersisted(
+      bare, dir, ivf.centroids, memoProbes, "probe_id", "probe_vec", nprobe = 2,
+      k = 5, ef = 32))
+    assert(e.getMessage.contains("spark.sql.extensions=graft.GraftExtensions"),
+      e.getMessage)
+  }
+
+  test("planned persisted search is row-identical to the in-memory routed search") {
+    val dir = cellsDir("graft-planned")
+    def mem(nodes: org.apache.spark.sql.DataFrame,
+        tombs: Option[org.apache.spark.sql.DataFrame] = None) =
+      GraphAnn.searchGraphRouted(nodes, ivf.centroids, batchProbes, "probe_id",
+        "probe_vec", nprobe = 3, k = 6, ef = 48, tombstones = tombs)
+    def disk(tombs: Option[org.apache.spark.sql.DataFrame] = None) =
+      GraphAnn.searchGraphRoutedPersisted(spark, dir, ivf.centroids, batchProbes,
+        "probe_id", "probe_vec", nprobe = 3, k = 6, ef = 48, tombstones = tombs)
+    assert(batchProbes.count() > 1)
+    // a multi-probe batch, ranks included, and the same schema
+    assert(disk().schema == mem(cellNodes).schema)
+    assert(rows(disk()) == rows(mem(cellNodes)))
+    // tombstones
+    val tombs = Some(emb.filter($"vec_id" % 3 === 1).select($"vec_id".as("id")))
+    assert(rows(disk(tombs)) == rows(mem(cellNodes, tombs)))
+    // a split size under every cell file: each cell is still read whole
+    val files = new java.io.File(dir).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+    val small = 256L
+    assert(files.forall(_.length() > small))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", small.toString)
+    try {
+      assert(spark.read.schema(GraphAnn.cellsSchema).parquet(dir)
+        .rdd.getNumPartitions > files.length, "the plain scan splits the files")
+      assert(rows(disk()) == rows(mem(cellNodes)))
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    // a composed plan runs the search through doExecute
+    val nearCount = disk().filter($"rank" <= 3 && $"sim" > 0.1).count()
+    assert(nearCount == mem(cellNodes).filter($"rank" <= 3 && $"sim" > 0.1).count())
+    assert(nearCount > 0)
+    // a probe routed to a cell with no part= directory
+    val probe = batchProbes.select($"probe_vec").as[Array[Float]].head()
+    val gone = GraphAnn.routeCells(ivf.centroids, probe, 3).head
+    graft.core.Fs.delete(spark, s"$dir/part=$gone")
+    assert(rows(disk()) == rows(mem(cellNodes.filter($"part" =!= gone))))
+    graft.core.Fs.delete(spark, dir)
+  }
+
+  test("the planned search lists only the probed cells' files") {
+    val dir = cellsDir("graft-listing")
+    val df = GraphAnn.searchGraphRoutedPersisted(spark, dir, ivf.centroids,
+      memoProbes, "probe_id", "probe_vec", nprobe = 2, k = 5, ef = 32)
+    val listed = df.queryExecution.analyzed.collectFirst {
+      case s: RoutedGraphSearch => s.spec.files
+    }.getOrElse(fail("no RoutedGraphSearch node in the plan"))
+    val probed = memoProbes.select($"probe_vec").as[Array[Float]].collect()
+      .flatMap(GraphAnn.routeCells(ivf.centroids, _, 2)).toSet
+    assert(probed.size < ivf.centroids.length, "the fixture must leave cells unprobed")
+    val expected = probed.toSeq.flatMap(c =>
+      new java.io.File(s"$dir/part=$c").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(f => (c, f.getCanonicalPath)))
+    assert(listed.map(f => (f.cell, new java.io.File(new java.net.URI(f.path))
+      .getCanonicalPath)).toSet == expected.toSet)
+    assert(df.queryExecution.executedPlan.isInstanceOf[RoutedGraphSearchExec],
+      df.queryExecution.executedPlan.treeString)
+    graft.core.Fs.delete(spark, dir)
+  }
 }
