@@ -32,6 +32,9 @@ object Tables {
       // escape hatch defaults to 30min; 2min bounds the accumulation
       // window for long multi-query sessions at negligible cost.
       .config("spark.cleaner.periodicGC.interval", "2min")
+      // local files get their permissions through java.nio instead of a
+      // forked `chmod` per file, `.crc` file and directory
+      .config("spark.hadoop.fs.file.impl", classOf[graft.core.NioLocalFileSystem].getName)
 
   /** Normalize the `ts` column to session-local TimestampType regardless of
     * how the generator wrote it: TIMESTAMP(NANOS) (read as long under the

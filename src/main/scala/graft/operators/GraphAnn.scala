@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.functions._
 
 /** One stored graph node: `vec` is the L2-NORMALIZED embedding (so layer
@@ -1129,23 +1131,20 @@ object GraphAnn {
   /** Collect the probe batch (bounded — a serving batch, never the
     * corpus) as (id, vec). A null id or vector has no route and no
     * beam, so it is refused up front with the column's name rather than
-    * surfacing as an NPE inside the decoder or the normalizer.
+    * surfacing as an NPE inside the decoder or the normalizer. The rows
+    * are read by index: a typed `.as[...]` would derive a reflection
+    * encoder on every call.
     */
   private def collectProbes(probes: DataFrame, probeId: String,
-      probeVec: String): Array[(Long, Array[Float])] = {
-    val spark = probes.sparkSession
-    import spark.implicits._
-    probes.select(col(probeId).cast("long"), col(probeVec))
-      .as[(Option[Long], Array[Float])].collect()
-      .map {
-        case (None, _) => throw new IllegalArgumentException(
-          s"routed search: probe id column `$probeId` holds a null " +
-            "(or a value that does not cast to long)")
-        case (_, null) => throw new IllegalArgumentException(
-          s"routed search: probe vector column `$probeVec` holds a null")
-        case (Some(pid), v) => (pid, v)
-      }
-  }
+      probeVec: String): Array[(Long, Array[Float])] =
+    probes.select(col(probeId).cast("long"), col(probeVec)).collect().map { r =>
+      if (r.isNullAt(0)) throw new IllegalArgumentException(
+        s"routed search: probe id column `$probeId` holds a null " +
+          "(or a value that does not cast to long)")
+      if (r.isNullAt(1)) throw new IllegalArgumentException(
+        s"routed search: probe vector column `$probeVec` holds a null")
+      (r.getLong(0), r.getSeq[Float](1).toArray)
+    }
 
   /** Route each probe of the batch to its nprobe cells: routing in RAW
     * space (the centroids' space), searching on unit vectors.
@@ -1265,7 +1264,7 @@ object GraphAnn {
     val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no published graph version under $root"))
     persistedSearch(spark, s"$root/$v", s"root $root version $v", centroids,
-      probes, probeId, probeVec, nprobe, k, ef, tombstones, allowed)
+      None, probes, probeId, probeVec, nprobe, k, ef, tombstones, allowed)
   }
 
   /** [[searchGraphRouted]] against the PERSISTED layout — the 100 TB
@@ -1292,14 +1291,16 @@ object GraphAnn {
       probeId: String, probeVec: String, nprobe: Int, k: Int,
       ef: Int, tombstones: Option[DataFrame] = None,
       allowed: Option[DataFrame] = None): DataFrame =
-    persistedSearch(spark, dir, s"cells $dir", centroids, probes, probeId,
-      probeVec, nprobe, k, ef, tombstones, allowed)
+    persistedSearch(spark, dir, s"cells $dir", centroids, None, probes,
+      probeId, probeVec, nprobe, k, ef, tombstones, allowed)
 
   /** [[searchGraphRoutedPersisted]] with `where` naming the served state
-    * in the search job's description.
+    * in the search job's description; the unfiltered search reads the
+    * cells with `reader` when one is given.
     */
   private def persistedSearch(spark: SparkSession, dir: String, where: String,
-      centroids: Array[(Int, Array[Float])], probes: DataFrame,
+      centroids: Array[(Int, Array[Float])],
+      reader: Option[PartitionedFile => Iterator[InternalRow]], probes: DataFrame,
       probeId: String, probeVec: String, nprobe: Int, k: Int,
       ef: Int, tombstones: Option[DataFrame],
       allowed: Option[DataFrame]): DataFrame = allowed match {
@@ -1323,7 +1324,8 @@ object GraphAnn {
       val nProbes = routes.valuesIterator.flatMap(_.iterator.map(_._1)).toSet.size
       RoutedGraphSearch.toDF(spark, RoutedGraphSearchSpec(files, routes, k, ef,
         collectTombstones(tombstones),
-        s"routed graph search: $where, ${cells.size} probed cells, $nProbes probes"))
+        s"routed graph search: $where, ${cells.size} probed cells, $nProbes probes",
+        reader))
   }
 
   /** Publish the COMPLETE FLOAT serving state under one version — graph
@@ -1381,38 +1383,71 @@ object GraphAnn {
     val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
       throw new IllegalStateException(
         s"no published serving state under $root"))
+    val head = routingHead(spark, root, v)
     persistedSearch(spark, s"$root/$v/cells", s"root $root version $v",
-      routingHead(spark, root, v), probes, probeId, probeVec, nprobe, k, ef,
-      tombstones, allowed)
+      head.centroids, Some(head.reader.read), probes, probeId, probeVec,
+      nprobe, k, ef, tombstones, allowed)
   }
 
   /** The float serving root's routing head, per root: the last served
     * version's centroid array (driver-side floats only — no DataFrame,
-    * no session) under a content stamp of the version name plus the
+    * no node data) under a content stamp of the version name plus the
     * part-file names of `<version>/artifacts/centroids`. Spark names
     * every part file with a fresh UUID, so a publish — or a root deleted
     * and republished at the same path and version name — changes the
     * stamp and the next call re-reads; a hit costs one directory
     * listing and no Spark job. One entry per root; `compute` serializes
     * a root's concurrent misses into one read.
+    *
+    * Beside the centroids the entry keeps the cells reader the search
+    * reads the version's files with ([[RoutedGraphSearchExec.cellsReader]]:
+    * a Hadoop-configuration copy and its broadcast). It is rebuilt with
+    * the head, and on a hit whose session or SQL settings
+    * (`sessionState.conf.getAllConfs`) differ from those it was built
+    * under. A direct `sparkContext.hadoopConfiguration` edit is not seen
+    * by that check: it takes effect at the next publish.
     */
   private final case class RoutingHead(stamp: Seq[String],
-      centroids: Array[(Int, Array[Float])])
+      centroids: Array[(Int, Array[Float])], reader: CellsReader)
+  /** A cells reader and the session (held weakly) and settings it was
+    * built under.
+    */
+  private final case class CellsReader(
+      session: java.lang.ref.WeakReference[SparkSession],
+      confs: Map[String, String],
+      read: PartitionedFile => Iterator[InternalRow]) {
+    def builtFor(spark: SparkSession, now: Map[String, String]): Boolean =
+      (session.get eq spark) && confs == now
+  }
   private val routingHeads =
     new java.util.concurrent.ConcurrentHashMap[String, RoutingHead]()
+  private val cellsReaderCount = new java.util.concurrent.atomic.AtomicLong()
+
+  private def buildCellsReader(spark: SparkSession,
+      confs: Map[String, String]): CellsReader = {
+    cellsReaderCount.incrementAndGet()
+    CellsReader(new java.lang.ref.WeakReference(spark), confs,
+      RoutedGraphSearchExec.cellsReader(spark))
+  }
 
   private def routingHead(spark: SparkSession, root: String,
-      version: String): Array[(Int, Array[Float])] = {
+      version: String): RoutingHead = {
     val dir = s"$root/$version/artifacts/centroids"
     val stamp = version +: graft.core.Fs.listDataFileNames(spark, dir)
+    val confs = spark.sessionState.conf.getAllConfs
     routingHeads.compute(root, (_, held) =>
-      if (held != null && held.stamp == stamp) held
-      else RoutingHead(stamp, Similarity.readCentroids(spark, dir))
-    ).centroids
+      if (held == null || held.stamp != stamp)
+        RoutingHead(stamp, Similarity.readCentroids(spark, dir),
+          buildCellsReader(spark, confs))
+      else if (held.reader.builtFor(spark, confs)) held
+      else held.copy(reader = buildCellsReader(spark, confs)))
   }
 
   /** Roots the routing-head memo holds an entry for. */
   private[operators] def routingHeadRoots: Int = routingHeads.size
+
+  /** Cells readers the routing-head memo has built. */
+  private[operators] def cellsReaderBuilds: Long = cellsReaderCount.get
 
   /** [[writeGraphCells]] for a PQ index — the writer is schema-agnostic
     * (partition-per-cell on `part`), named so the PQ serving surface is

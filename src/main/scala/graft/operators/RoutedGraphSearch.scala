@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -21,10 +22,14 @@ final case class CellFile(cell: Int, path: String, length: Long,
   * directory, fixed on the driver before planning: the probed cells'
   * files, the probes routed to each cell (unit vectors), the beam
   * parameters, the sorted tombstone ids and the job description.
+  * `reader` is a cells reader built earlier under the same session and
+  * settings ([[RoutedGraphSearchExec.cellsReader]]); without one the
+  * search builds its own.
   */
 final case class RoutedGraphSearchSpec(files: Seq[CellFile],
     routes: Map[Int, Array[(Long, Array[Float])]], k: Int, ef: Int,
-    tombstones: Option[Array[Long]], description: String) {
+    tombstones: Option[Array[Long]], description: String,
+    reader: Option[PartitionedFile => Iterator[InternalRow]] = None) {
   /** Summary for plan strings: the arrays are never printed. */
   def summary: Seq[String] = Seq(s"cells=${files.map(_.cell).distinct.size}",
     s"files=${files.size}", s"probes=${routes.values.flatten.map(_._1).toSet.size}",
@@ -105,7 +110,7 @@ final case class RoutedGraphSearchExec(spec: RoutedGraphSearchSpec,
 
   private def search(): Array[InternalRow] = {
     val cands = graft.core.Jobs.labelled(sparkContext, spec.description)(
-      candidates().collect())
+      candidates())
     val writer = new UnsafeRowWriter(4)
     val rows = cands.groupBy(_._1).toArray.sortBy(_._1).flatMap { case (pid, cs) =>
       RoutedGraphSearchExec.topK(cs, spec.k).zipWithIndex
@@ -121,11 +126,14 @@ final case class RoutedGraphSearchExec(spec: RoutedGraphSearchSpec,
   }
 
   /** The scan-and-beam stage: ≤ k (probe_id, id, sim) rows per probe and
-    * task.
+    * task. The task function is a [[SearchCellsTask]], not a lambda, and
+    * goes straight to `runJob`: Spark's closure check returns at once
+    * for it instead of reading and scanning a capturing class's bytecode
+    * on every request.
     */
-  private def candidates(): RDD[(Long, Long, Double)] = {
+  private def candidates(): Array[(Long, Long, Double)] = {
     val cells = spec.files.groupBy(_.cell).toIndexedSeq.sortBy(_._1)
-    if (cells.isEmpty) return sparkContext.emptyRDD
+    if (cells.isEmpty) return Array.empty
     val (n, taskOf) = graft.core.TaskPacking.leastLoaded(
       cells.map(_._2.map(_.length).sum), sparkContext.defaultParallelism)
     val partitions = (0 until n).map { t =>
@@ -136,44 +144,64 @@ final case class RoutedGraphSearchExec(spec: RoutedGraphSearchSpec,
             f.length, Array.empty[String], f.modificationTime, f.length)
         }.toArray)
     }
-    val dataSchema = StructType(GraphAnn.cellsSchema.filter(_.name != "part"))
-    val partSchema = StructType(Seq(StructField("part", IntegerType)))
-    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
-      session, dataSchema, partSchema, dataSchema, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      session.sessionState.newHadoopConfWithOptions(Map.empty))
-    val numNodes = longMetric("numNodes")
-    val routes = spec.routes
-    val tombstones = spec.tombstones
-    val k = spec.k
-    val ef = math.max(spec.ef, spec.k)
-    new FileScanRDD(session, reader, partitions,
-        StructType(dataSchema ++ partSchema)).mapPartitions { rows =>
-      // row layout: id, vec, level, neighbors, seg, then the part value;
-      // decode before the next row — the reader reuses its row object
-      val nodes = rows.map { r =>
-        val nb = r.getArray(3)
-        GraphNode(r.getInt(5), r.getLong(0), r.getArray(1).toFloatArray(),
-          r.getInt(2), Array.tabulate(nb.numElements())(nb.getArray(_).toLongArray()),
-          r.getInt(4))
-      }.toArray
-      numNodes.add(nodes.length)
-      nodes.groupBy(g => (g.part, g.seg)).toSeq
-        .flatMap { case ((cell, _), ns) =>
-          routes.get(cell).fold(Iterator.empty[(Long, Long, Double)])(qs =>
-            GraphAnn.searchSegment(ns, qs, k, ef, GraphAnn.liveEmit(tombstones, ns)))
-        }
-        .groupBy(_._1).iterator.flatMap { case (pid, cs) =>
-          RoutedGraphSearchExec.topK(cs, k).map { case (id, sim) => (pid, id, sim) }
-        }
-    }
+    val reader = spec.reader.getOrElse(RoutedGraphSearchExec.cellsReader(session))
+    val scan = new FileScanRDD(session, reader, partitions,
+      RoutedGraphSearchExec.readSchema)
+    sparkContext.runJob(scan, new SearchCellsTask(spec.routes, spec.tombstones,
+      spec.k, math.max(spec.ef, spec.k), longMetric("numNodes"))).flatten
   }
 }
 
 object RoutedGraphSearchExec {
+  private val dataSchema = StructType(GraphAnn.cellsSchema.filter(_.name != "part"))
+  private val partSchema = StructType(Seq(StructField("part", IntegerType)))
+  private val readSchema = StructType(dataSchema ++ partSchema)
+
+  /** A row reader of the cells layout under `session`'s settings: its
+    * rows are (id, vec, level, neighbors, seg, part). Each call copies
+    * the session's Hadoop configuration and broadcasts it.
+    */
+  private[operators] def cellsReader(
+      session: SparkSession): PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(
+      session, dataSchema, partSchema, dataSchema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      session.sessionState.newHadoopConfWithOptions(Map.empty))
+
   /** The first k (id, sim) of one probe's candidates in
     * [[graft.functions.TopKByScore]]'s order.
     */
-  private def topK(cands: Seq[(Long, Long, Double)], k: Int): Seq[(Long, Double)] =
+  private[operators] def topK(cands: Seq[(Long, Long, Double)], k: Int): Seq[(Long, Double)] =
     cands.map(c => (c._2, c._3)).sorted(graft.functions.TopKByScore.order).take(k)
+}
+
+/** One search task over its cells' files: decode the nodes, beam-search
+  * each routed (part, seg) segment and return ≤ k (probe_id, id, sim)
+  * candidates per probe.
+  */
+private[operators] final class SearchCellsTask(
+    routes: Map[Int, Array[(Long, Array[Float])]],
+    tombstones: Option[Array[Long]], k: Int, ef: Int, numNodes: SQLMetric)
+    extends ((TaskContext, Iterator[InternalRow]) => Array[(Long, Long, Double)])
+    with Serializable {
+  def apply(ctx: TaskContext,
+      rows: Iterator[InternalRow]): Array[(Long, Long, Double)] = {
+    // row layout: id, vec, level, neighbors, seg, then the part value;
+    // decode before the next row — the reader reuses its row object
+    val nodes = rows.map { r =>
+      val nb = r.getArray(3)
+      GraphNode(r.getInt(5), r.getLong(0), r.getArray(1).toFloatArray(),
+        r.getInt(2), Array.tabulate(nb.numElements())(nb.getArray(_).toLongArray()),
+        r.getInt(4))
+    }.toArray
+    numNodes.add(nodes.length)
+    nodes.groupBy(g => (g.part, g.seg)).toSeq
+      .flatMap { case ((cell, _), ns) =>
+        routes.get(cell).fold(Iterator.empty[(Long, Long, Double)])(qs =>
+          GraphAnn.searchSegment(ns, qs, k, ef, GraphAnn.liveEmit(tombstones, ns)))
+      }
+      .groupBy(_._1).iterator.flatMap { case (pid, cs) =>
+        RoutedGraphSearchExec.topK(cs, k).map { case (id, sim) => (pid, id, sim) }
+      }.toArray
+  }
 }

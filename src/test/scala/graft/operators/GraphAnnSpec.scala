@@ -1021,6 +1021,47 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(pq.contains("probe_vec"), pq)
   }
 
+  // ── the probe collect ─────────────────────────────────────────────────
+
+  test("probe collect: a null id, an id that does not cast to long and a null vector are refused") {
+    val root = java.nio.file.Files.createTempDirectory("graft-probes").toString
+    GraphAnn.publishServing(cellNodes, ivf.centroids, root)
+    val probes = emb.filter($"vec_id" < 3)
+      .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
+    def refusal(p: org.apache.spark.sql.DataFrame): String =
+      intercept[IllegalArgumentException](GraphAnn.searchGraphRoutedColdStart(
+        spark, root, p, "probe_id", "probe_vec", nprobe = 2, k = 5, ef = 32))
+        .getMessage
+    val idRefusal = "routed search: probe id column `probe_id` holds a null " +
+      "(or a value that does not cast to long)"
+    assert(refusal(probes.withColumn("probe_id", when($"probe_id" === 1L,
+      lit(null).cast("long")).otherwise($"probe_id"))) == idRefusal)
+    // an id that does not cast: ANSI casts refuse it with Spark's own
+    // IllegalArgumentException; a non-ANSI cast makes it a null
+    val malformed = probes.withColumn("probe_id", when($"probe_id" === 1L,
+      lit("p1")).otherwise($"probe_id".cast("string")))
+    val ansi = refusal(malformed)
+    assert(ansi.contains("CAST_INVALID_INPUT") && ansi.contains("'p1'"), ansi)
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try assert(refusal(malformed) == idRefusal)
+    finally spark.conf.unset("spark.sql.ansi.enabled")
+    assert(refusal(probes.withColumn("probe_vec", when($"probe_id" === 1L,
+      lit(null)).otherwise($"probe_vec"))) ==
+      "routed search: probe vector column `probe_vec` holds a null")
+  }
+
+  test("probe collect: probes that need a job serve rows identical to the in-memory search") {
+    val root = java.nio.file.Files.createTempDirectory("graft-probe-job").toString
+    GraphAnn.publishServing(cellNodes, ivf.centroids, root)
+    val (_, sites) = withJobSites(batchProbes.collect())
+    assert(sites.nonEmpty, "the fixture's probes must come from a job")
+    assert(batchProbes.count() > 1)
+    assert(rows(GraphAnn.searchGraphRoutedColdStart(spark, root, batchProbes,
+      "probe_id", "probe_vec", nprobe = 3, k = 6, ef = 48)) ==
+      rows(GraphAnn.searchGraphRouted(cellNodes, ivf.centroids, batchProbes,
+        "probe_id", "probe_vec", nprobe = 3, k = 6, ef = 48)))
+  }
+
   // ── cold-start routing-head memo ──────────────────────────────────────
 
   /** Run `body` and return it with the call sites (stage details) of the
@@ -1119,6 +1160,33 @@ class GraphAnnSpec extends AnyFunSuite {
       assert(coldStart(root) == persisted(s"$root/$v/cells", c))
     }
     assert(GraphAnn.routingHeadRoots == before + roots.length)
+  }
+
+  test("cold start: the memo builds one cells reader per version, session and settings") {
+    val root = java.nio.file.Files.createTempDirectory("graft-reader").toString
+    val v0 = GraphAnn.publishServing(cellNodes, ivf.centroids, root)
+    def builds[T](body: => T): Long = {
+      val before = GraphAnn.cellsReaderBuilds
+      body
+      GraphAnn.cellsReaderBuilds - before
+    }
+    val expected = persisted(s"$root/$v0/cells", ivf.centroids)
+    assert(builds { assert(coldStart(root) == expected)
+      assert(coldStart(root) == expected) } == 1,
+      "two searches on one version build one reader")
+    val v1 = GraphAnn.publishServing(cellNodes2, ivf2.centroids, root)
+    assert(builds(coldStart(root)) == 1, "a publish builds a new reader")
+    assert(builds(coldStart(root)) == 0)
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    try assert(builds { assert(coldStart(root) ==
+        persisted(s"$root/$v1/cells", ivf2.centroids)) } == 1,
+        "a parquet read setting builds a new reader")
+    finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+    assert(builds(coldStart(root)) == 1, "unsetting it builds another")
+    val other = spark.newSession()
+    assert(builds(GraphAnn.searchGraphRoutedColdStart(other, root, memoProbes,
+      "probe_id", "probe_vec", nprobe = 2, k = 5, ef = 32).collect()) == 1,
+      "a new session builds a new reader")
   }
 
   // ---- per-segment rebuild routing (explicit-id exchange, streamed groups)
