@@ -2,8 +2,11 @@
 """Attribute a JFR recording's execution samples to graft call sites and Spark phases.
 
     python3 scripts/jfr_hotspots.py <recording.jfr> --thread main [--start S] [--end S] [--top N]
+    python3 scripts/jfr_hotspots.py <recording.jfr> --thread "Executor task launch"
 
-Reads the `jdk.ExecutionSample` events of one thread through
+Reads the `jdk.ExecutionSample` events of the threads whose name starts
+with `--thread` (one name such as `main`, or a prefix such as
+`Executor task launch`, which sums over every Spark task thread) through
 `jfr print --json --stack-depth 300` (the default depth of 5 hides every
 caller) and streams them, so a long recording needs little memory.
 `--start`/`--end` bound the window: a number is seconds after the
@@ -26,6 +29,7 @@ launch `perfbench.Main` on the classpath it saves in
 import argparse
 import datetime
 import json
+import os
 import subprocess
 import sys
 
@@ -125,37 +129,40 @@ def bound(arg, first):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("recording")
-    ap.add_argument("--thread", required=True, help="Java thread name, e.g. main")
+    ap.add_argument("--thread", required=True,
+                    help="Java thread name or name prefix, e.g. main or 'Executor task launch'")
     ap.add_argument("--start", help="window start: seconds after the earliest sample, or an ISO time")
     ap.add_argument("--end", help="window end: seconds after the earliest sample, or an ISO time")
     ap.add_argument("--top", type=int, default=25, help="call sites to print")
     a = ap.parse_args()
 
     # JFR prints events per chunk and thread buffer, not in time order:
-    # classify every sample of the thread, then apply the window
+    # classify every sample of the matching threads, then apply the window
     first, samples = None, []
     for ev in events(a.recording):
         v = ev["values"]
         t = parse_time(v["startTime"])
         first = t if first is None else min(first, t)
-        if (v.get("sampledThread") or {}).get("javaName") != a.thread:
+        thread = (v.get("sampledThread") or {}).get("javaName") or ""
+        if not thread.startswith(a.thread):
             continue
         frames = [frame_name(f) for f in (v.get("stackTrace") or {}).get("frames", [])]
-        samples.append((t, phase_of(frames), site_of(frames)))
+        samples.append((t, thread, phase_of(frames), site_of(frames)))
     start, end = bound(a.start, first), bound(a.end, first)
     phases = {p: 0 for p in PHASE_NAMES}
     sites = {}
-    n = 0
-    for t, phase, site in samples:
+    n, threads = 0, set()
+    for t, thread, phase, site in samples:
         if (start and t < start) or (end and t > end):
             continue
         sites.setdefault(site, {p: 0 for p in PHASE_NAMES})[phase] += 1
         phases[phase] += 1
+        threads.add(thread)
         n += 1
     if n == 0:
-        raise SystemExit(f"no execution samples of thread {a.thread!r} in the window")
+        raise SystemExit(f"no execution samples of a thread named {a.thread!r}… in the window")
 
-    print(f"{n} samples of thread {a.thread!r}")
+    print(f"{n} samples of {len(threads)} thread(s) named {a.thread!r}…")
     print(f"{'phase':<16}{'samples':>9}{'share':>8}")
     for p in PHASE_NAMES:
         print(f"{p:<16}{phases[p]:>9}{phases[p] / n:>8.1%}")
@@ -170,4 +177,10 @@ def main():
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    try:
+        sys.exit(main())
+    except BrokenPipeError:
+        # the reader (e.g. `| head`) closed the pipe: stop quietly, and point
+        # stdout at /dev/null so the interpreter's final flush cannot fail
+        os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
+        sys.exit(0)

@@ -26,6 +26,7 @@ log directory); add `-Dspark.eventLog.compress=true
 import argparse
 import collections
 import json
+import os
 import subprocess
 import sys
 
@@ -180,4 +181,10 @@ def main():
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    try:
+        sys.exit(main())
+    except BrokenPipeError:
+        # the reader (e.g. `| head`) closed the pipe: stop quietly, and point
+        # stdout at /dev/null so the interpreter's final flush cannot fail
+        os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
+        sys.exit(0)

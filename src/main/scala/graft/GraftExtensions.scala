@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{ChunkDocument, CosineSimF32, CosineSimI8, DotProductF32, L2NormF32, TokenCount}
+import graft.functions.{ChunkDocument, CosineSimF32, CosineSimI8, DotProductF32, L2NormF32,
+  NearestCellF32, TokenCount}
 import graft.operators.RoutedGraphSearchStrategy
 
 /** SparkSessionExtensions entry point: makes graft's native expressions —
@@ -34,6 +35,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // cosine_f32(a, b): float32 cosine similarity
     ext.injectFunction((FunctionIdentifier("cosine_f32"), info("cosine_f32"),
       (es: Seq[Expression]) => CosineSimF32(es(0), es(1))))
+    // nearest_cell_f32(vec, ids, centroids, column): the IVF cell assignment
+    ext.injectFunction((FunctionIdentifier("nearest_cell_f32"), info("nearest_cell_f32"),
+      (es: Seq[Expression]) => NearestCellF32(es)))
     // l2norm_f32(a): float32 L2 norm
     ext.injectFunction((FunctionIdentifier("l2norm_f32"), info("l2norm_f32"),
       (es: Seq[Expression]) => L2NormF32(es(0))))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit, typedLit}
 import graft.core._
 
 /** Registration + Column-level API for graft's custom functions.
@@ -21,6 +21,8 @@ object GraftFunctions {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("dot_f32", es => DotProductF32(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("cosine_f32", es => CosineSimF32(es(0), es(1)), "scala_udf")
+    // hot-path: the IVF cell assignment of every k-means iteration and append
+    reg.createOrReplaceTempFunction("nearest_cell_f32", es => NearestCellF32(es), "scala_udf")
     reg.createOrReplaceTempFunction("l2norm_f32", es => L2NormF32(es(0)), "scala_udf")
     reg.createOrReplaceTempFunction("cosine_i8", es => CosineSimI8(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("binary_dot_f32",
@@ -76,6 +78,13 @@ object GraftFunctions {
   // Column API
   def dot_f32(a: Column, b: Column): Column = call_function("dot_f32", a, b)
   def cosine_f32(a: Column, b: Column): Column = call_function("cosine_f32", a, b)
+  /** The id of the centroid nearest `vec`; a null vector is refused with
+    * an error that names `column`.
+    */
+  def nearest_cell_f32(vec: Column, centroids: Array[(Int, Array[Float])],
+      column: String): Column =
+    call_function("nearest_cell_f32", vec, typedLit(centroids.map(_._1)),
+      typedLit(centroids.map(_._2)), lit(column))
   def l2norm_f32(a: Column): Column = call_function("l2norm_f32", a)
   def cosine_i8(codes: Column, probe: Column): Column = call_function("cosine_i8", codes, probe)
   def binary_dot_f32(bits: Column, probe: Column): Column =

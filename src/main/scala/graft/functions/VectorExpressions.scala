@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -39,6 +41,26 @@ object VectorKernels {
     val n = x.numElements()
     while (i < n) { val a = x.getFloat(i).toDouble; s += a * a; i += 1 }
     math.sqrt(s)
+  }
+
+  /** The id of the centroid nearest `v` in squared L2: float difference,
+    * float square, double accumulation, and the first strictly smaller
+    * distance wins. A vector no distance is smaller for (a NaN element)
+    * goes to the first centroid's id, which always names a live cell.
+    */
+  def nearestCentroid(v: ArrayData, ids: Array[Int], cents: Array[Array[Float]]): Int = {
+    if (ids.isEmpty)
+      throw new IllegalArgumentException("nearest_cell_f32: no centroids to assign to")
+    val n = v.numElements()
+    var best = ids(0); var bestD = Double.MaxValue
+    var ci = 0
+    while (ci < cents.length) {
+      val c = cents(ci); var d = 0.0; var i = 0
+      while (i < n) { val x = v.getFloat(i) - c(i); d += x * x; i += 1 }
+      if (d < bestD) { bestD = d; best = ids(ci) }
+      ci += 1
+    }
+    best
   }
 }
 
@@ -228,4 +250,55 @@ case class L2NormF32(child: Expression)
        """.stripMargin
     })
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** The IVF assignment: the id of the centroid nearest an `array<float>`
+  * vector ([[VectorKernels.nearestCentroid]]). The centroids are constants
+  * held by the expression, so a k-means iteration ships them in its task
+  * binary and needs no broadcast. A null vector has no cell: it is refused
+  * with an IllegalArgumentException that names `column`.
+  */
+case class NearestCellF32(child: Expression, ids: Array[Int],
+    cents: Array[Array[Float]], column: String) extends UnaryExpression {
+  require(ids.length == cents.length, "nearest_cell_f32: one id per centroid")
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+  override def prettyName: String = "nearest_cell_f32"
+  override def stringArgs: Iterator[Any] =
+    Iterator(child, s"${ids.length} centroids", column)
+  private def nullVector = s"nearest_cell_f32: column $column holds a null vector, " +
+    "which has no cell; drop or fill null vectors before assigning cells"
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) throw new IllegalArgumentException(nullVector)
+    VectorKernels.nearestCentroid(v.asInstanceOf[ArrayData], ids, cents)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val idsRef = ctx.addReferenceObj("ids", ids, "int[]")
+    val centsRef = ctx.addReferenceObj("cents", cents, "float[][]")
+    val msg = ctx.addReferenceObj("nullVector", nullVector, "String")
+    ev.copy(code = code"""
+      |${c.code}
+      |if (${c.isNull}) throw new IllegalArgumentException($msg);
+      |int ${ev.value} = graft.functions.VectorKernels.nearestCentroid(
+      |  ${c.value}, $idsRef, $centsRef);
+     """.stripMargin, isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object NearestCellF32 {
+  /** The SQL form `nearest_cell_f32(vec, ids, centroids, column)`: ids is
+    * a constant `array<int>`, centroids a constant `array<array<float>>`
+    * of the same length, column the name a null vector is refused with.
+    */
+  def apply(es: Seq[Expression]): NearestCellF32 = {
+    require(es.length == 4 && es.tail.forall(_.foldable),
+      "nearest_cell_f32(vec, ids, centroids, column) takes a vector and three constants")
+    val ids = es(1).eval().asInstanceOf[ArrayData].toIntArray()
+    val cs = es(2).eval().asInstanceOf[ArrayData]
+    val cents = Array.tabulate(cs.numElements())(i => cs.getArray(i).toFloatArray())
+    NearestCellF32(es(0), ids, cents, es(3).eval().toString)
+  }
 }

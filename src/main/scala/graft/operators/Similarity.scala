@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.GraftFunctions
+import scala.jdk.CollectionConverters._
 
 /** Similarity search over embedding columns (SURVEY §7.1 item 7, W7 top-k).
   *
@@ -57,22 +58,66 @@ object Similarity {
     */
   final case class IvfIndex(centroids: Array[(Int, Array[Float])], assignments: DataFrame)
 
-  private def assignUdf(spark: SparkSession, centroids: Array[(Int, Array[Float])]) = {
-    val bc = spark.sparkContext.broadcast(centroids)
-    udf((v: Seq[Float]) => {
-      val cs = bc.value
-      var best = 0; var bestD = Double.MaxValue
-      for ((ci, c) <- cs) {
-        var d = 0.0; var i = 0
-        while (i < v.length) { val x = v(i) - c(i); d += x * x; i += 1 }
-        if (d < bestD) { bestD = d; best = ci }
+  /** Per-key elementwise means of a (key int, vec `array<float>`) frame,
+    * in ONE job of one stage and no shuffle: each task sums its rows per
+    * (key, position) in doubles and counts them, skipping null vectors and
+    * null elements as `avg` does; the driver adds the partials from 0.0 in
+    * partition order, the order Spark's final `avg` merges the map
+    * outputs of a partial aggregate, so every mean is bit-identical to a
+    * `posexplode → groupBy(key, pos) → avg` over the same frame. The
+    * partials are (keys × dim) per task, never the rows. A key's mean has
+    * the length of its longest vector; a position whose elements are all
+    * null is refused.
+    */
+  private[operators] def groupedMeans(frame: DataFrame): Map[Int, Array[Float]] = {
+    type Acc = (Array[Double], Array[Long])
+    val partials = frame.queryExecution.toRdd.mapPartitions { rows =>
+      val acc = new java.util.HashMap[Int, Acc]
+      rows.foreach { r =>
+        if (!r.isNullAt(1)) {
+          val v = r.getArray(1); val n = v.numElements()
+          val (sums, counts) = acc.compute(r.getInt(0), (_, a) => widened(a, n))
+          var i = 0
+          while (i < n) {
+            if (!v.isNullAt(i)) { sums(i) += v.getFloat(i); counts(i) += 1 }
+            i += 1
+          }
+        }
       }
-      best
-    })
+      Iterator.single(acc)
+    }.collect()
+    val total = new java.util.HashMap[Int, Acc]
+    for (part <- partials; e <- part.entrySet().asScala) {
+      val (ps, pc) = e.getValue
+      val (ts, tc) = total.compute(e.getKey, (_, a) => widened(a, ps.length))
+      var i = 0
+      while (i < ps.length) { ts(i) += ps(i); tc(i) += pc(i); i += 1 }
+    }
+    total.asScala.map { case (key, (ts, tc)) =>
+      key -> Array.tabulate(ts.length) { i =>
+        require(tc(i) > 0, s"groupedMeans: every element at position $i of key $key is null")
+        (ts(i) / tc(i)).toFloat
+      }
+    }.toMap
   }
+
+  /** `acc` (null: none yet) with room for `n` positions. */
+  private def widened(acc: (Array[Double], Array[Long]), n: Int): (Array[Double], Array[Long]) =
+    if (acc == null) (new Array[Double](n), new Array[Long](n))
+    else if (acc._1.length >= n) acc
+    else (java.util.Arrays.copyOf(acc._1, n), java.util.Arrays.copyOf(acc._2, n))
+
+  /** `nearest_cell_f32` is a session function: register graft's
+    * functions on a session that has none yet.
+    */
+  private def registerCellFunction(spark: SparkSession): Unit =
+    if (!spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("nearest_cell_f32")))
+      GraftFunctions.register(spark)
 
   def buildIvf(spark: SparkSession, corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int, iters: Int = 3): IvfIndex = {
+    registerCellFunction(spark)
     // ONE source scan: every k-means iteration and the final assignment
     // re-read the checkpointed blocks, never the parquet (at scale the
     // source scan dominates an iteration; blocks are freed when dropped)
@@ -81,27 +126,22 @@ object Similarity {
     var centroids: Array[(Int, Array[Float])] = data
       .orderBy(col("id")).limit(nCells).collect()
       .zipWithIndex.map { case (r, i) => (i, r.getSeq[Float](1).toArray) }
+    def cell(cs: Array[(Int, Array[Float])]) =
+      GraftFunctions.nearest_cell_f32(col("vec"), cs, vecCol).as("cell")
 
     for (_ <- 1 to iters) {
-      val assigned = data.withColumn("cell", assignUdf(spark, centroids)(col("vec")))
-      // new centroid = elementwise mean. ONE partial-agg shuffle of
-      // (nCells × dim) sums; the tiny result assembles on the driver —
-      // no second shuffle, no per-cell array re-sort
-      val means = assigned
-        .select(col("cell"), posexplode(col("vec")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos")).agg(avg(col("x")).as("m"))
-        .collect()
+      // new centroid = elementwise mean: one job, one stage, no shuffle;
+      // a cell no row is nearest to drops out
+      val means = groupedMeans(data.select(cell(centroids), col("vec")))
       // empty corpus / all-null vectors → keep the previous centroids
       if (means.nonEmpty) {
-        val dim = means.iterator.map(_.getInt(1)).max + 1
-        centroids = means.groupBy(_.getInt(0)).toArray.map { case (cell, rows) =>
-          val c = new Array[Float](dim)
-          rows.foreach(r => c(r.getInt(1)) = r.getDouble(2).toFloat)
-          (cell, c)
-        }.sortBy(_._1)
+        val dim = means.valuesIterator.map(_.length).max
+        centroids = means.toArray.sortBy(_._1).map { case (c, m) =>
+          (c, java.util.Arrays.copyOf(m, dim))
+        }
       }
     }
-    IvfIndex(centroids, data.withColumn("cell", assignUdf(spark, centroids)(col("vec"))))
+    IvfIndex(centroids, data.select(col("id"), col("vec"), cell(centroids)))
   }
 
   /** The nprobe cells whose centroids are closest to the probe vector.
@@ -344,10 +384,11 @@ object Similarity {
     */
   def appendToIvf(spark: SparkSession, dir: String, df: DataFrame,
       idCol: String, vecCol: String): Unit = {
+    registerCellFunction(spark)
     val centroids = readCentroids(spark, s"$dir/centroids")
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("cell", assignUdf(spark, centroids)(col("vec")))
+      .withColumn("cell", GraftFunctions.nearest_cell_f32(col("vec"), centroids, vecCol))
       .write.mode("append").partitionBy("cell").parquet(s"$dir/assignments")
   }
 
@@ -982,17 +1023,15 @@ object Similarity {
     */
   final case class BinaryIndex(codes: DataFrame, means: Array[Float])
 
-  /** Build the 1-bit index: per-dimension means via one partial-agg'd
-    * shuffle (posexplode → groupBy(dim).avg — map-side combine keeps the
-    * shuffle at dim × partitions rows however large the corpus), then one
-    * map packs each vector's bits against the broadcast means.
+  /** Build the 1-bit index: per-dimension means in one pass
+    * ([[groupedMeans]] over a single key — the driver receives dim sums
+    * per partition however large the corpus), then one map packs each
+    * vector's bits against the broadcast means.
     */
   def quantizeBinary(corpus: DataFrame, idCol: String, vecCol: String): BinaryIndex = {
     val spark = corpus.sparkSession
-    val means = corpus
-      .select(posexplode(col(vecCol)).as(Seq("i", "x")))
-      .groupBy(col("i")).agg(avg(col("x")).as("m"))
-      .collect().sortBy(_.getInt(0)).map(_.getDouble(1).toFloat)
+    val means = groupedMeans(corpus.select(lit(0), col(vecCol)))
+      .getOrElse(0, Array.emptyFloatArray)
     val bc = spark.sparkContext.broadcast(means)
     val pack = udf((v: Seq[Float]) =>
       if (v == null) null
@@ -1094,10 +1133,12 @@ object Similarity {
   }
 
   /** Train a PQ codebook with per-subspace Lloyd iterations, fully
-    * distributed: vectors explode once into (id, sub, subvec) rows, every
-    * iteration is one assignment map (broadcast codebook) plus ONE
-    * partial-agg shuffle of (subspaces × codes × subDim) means. The driver
-    * holds only the codebook (e.g. 8×16×8 floats), never the corpus.
+    * distributed: vectors explode once into (id, sub, subvec) rows, and
+    * every iteration is ONE job of one stage and no shuffle that assigns
+    * codes (`nearest_cell_f32` against the sub's codebook) and sums
+    * (subspaces × codes × subDim) partials per task ([[groupedMeans]]).
+    * The driver holds only the codebook (e.g. 8×16×8 floats) and the
+    * per-task partials, never the corpus.
     * Deterministic init: subvectors of the first `codesPerSub` rows by id.
     */
   def trainPq(spark: SparkSession, corpus: DataFrame, idCol: String, vecCol: String,
@@ -1127,21 +1168,20 @@ object Similarity {
         init(c).slice(sc * subDim, (sc + 1) * subDim))
     }
 
+    registerCellFunction(spark)
+    val nCodes = book.head.length
     for (_ <- 1 to iters) {
-      val bc = spark.sparkContext.broadcast(book)
-      val assign = udf((sub: Int, v: Seq[Float]) => nearestCode(bc.value(sub), v.toArray))
-      val means = subRows
-        .withColumn("code", assign(col("sub"), col("subvec")))
-        .select(col("sub"), col("code"), posexplode(col("subvec")).as(Seq("pos", "x")))
-        .groupBy(col("sub"), col("code"), col("pos")).agg(avg(col("x")).as("m"))
-        .collect()
-      // never mutate the broadcast object: a lost-block recompute of a task
-      // that still references `bc` would otherwise see a later iteration's
-      // centroids. Copy, update the copy, then retire the old broadcast.
-      val next = book.map(_.map(_.clone()))
+      // key = sub · nCodes + code, the code assigned against the sub's own
+      // codebook; one job, one stage, no shuffle per iteration
+      val code = (0 until subspaces).foldLeft(null: Column) { (acc, sc) =>
+        val cell = GraftFunctions.nearest_cell_f32(col("subvec"),
+          book(sc).zipWithIndex.map(_.swap), vecCol)
+        if (acc == null) when(col("sub") === sc, cell) else acc.when(col("sub") === sc, cell)
+      }
+      val means = groupedMeans(subRows.select(col("sub") * nCodes + code, col("subvec")))
       // codes that captured no rows keep their previous centroid
-      means.foreach(r => next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3).toFloat)
-      bc.destroy()
+      val next = book.map(_.clone())
+      means.foreach { case (key, m) => next(key / nCodes)(key % nCodes) = m }
       book = next
     }
     PqCodebook(subspaces, subDim, book)
