@@ -1449,26 +1449,12 @@ object GraphAnn {
   /** Cells readers the routing-head memo has built. */
   private[operators] def cellsReaderBuilds: Long = cellsReaderCount.get
 
-  /** [[writeGraphCells]] for a PQ index — the writer is schema-agnostic
-    * (partition-per-cell on `part`), named so the PQ serving surface is
-    * complete on its own: this is the layout
-    * [[searchGraphRoutedPqPersisted]] reads, ~(subspaces + 2m·8) B/node
-    * on disk instead of the float tier's (dim·4 + 2m·8).
-    */
-  def writeGraphCellsPq(nodes: DataFrame, dir: String): Unit =
-    writeGraphCells(nodes, dir)
-
-  /** [[publishGraphCells]] for a PQ index (same atomic pointer flip). */
-  def publishGraphCellsPq(nodes: DataFrame, root: String,
-      keepVersions: Int = 2): String =
-    publishGraphCells(nodes, root, keepVersions)
-
   /** Publish the COMPLETE PQ serving state under one version — graph
     * cells AND the training artifacts ([[Similarity.writeIvfPq]]:
     * centroids, codebook, coded table, clump-bound manifest) — so a
     * single pointer flip covers codes, adjacency and the state a fresh
     * process needs to serve them. This closes the cold-start gap the
-    * split publish left: [[publishGraphCellsPq]] made the ADJACENCY
+    * split publish left: [[publishGraphCells]] made the ADJACENCY
     * durable while the `IvfPqIndex` stayed a JVM object, so a restarted
     * server could read the graph but not rebuild ADC tables (and
     * retraining would orphan every persisted code byte). Layout:
@@ -1485,7 +1471,7 @@ object GraphAnn {
       keepVersions: Int = 2): String =
     graft.pipeline.VersionedIndex.publishInto(root, keepVersions) { dir =>
       overlapWrites(
-        () => writeGraphCellsPq(nodes, s"$dir/cells"),
+        () => writeGraphCells(nodes, s"$dir/cells"),
         () => Similarity.writeIvfPq(index, s"$dir/artifacts", clumpBound,
           driftStats))
     }
@@ -1501,6 +1487,15 @@ object GraphAnn {
     * index artifacts never duplicate it). Artifacts are one tiny read
     * per probe BATCH; a long-lived server calls [[Similarity.readIvfPq]]
     * once per published version instead.
+    *
+    * The tier comes from the version ([[ServingTier.of]]). An
+    * [[Opq.publishPqServingOpq]] root rotates the probes into the space
+    * its cells and codes live in and hands the rotation to the exact
+    * rerank as the survivor transform (O(k·rerankFactor·|probes|) —
+    * never the corpus) — row-identical to the in-memory
+    * [[Opq.searchGraphRoutedPqOpq]] over the same files (gate v40). A
+    * float root holds no codes and is refused, naming
+    * [[searchGraphRoutedColdStart]].
     */
   def searchGraphRoutedPqColdStart(spark: SparkSession, root: String,
       corpus: DataFrame, idCol: String, vecCol: String, probes: DataFrame,
@@ -1509,11 +1504,18 @@ object GraphAnn {
       allowed: Option[DataFrame] = None): DataFrame = {
     val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no published PQ serving state under $root"))
+    val tier = ServingTier.of(spark, root, v)
+    if (tier == ServingTier.Float)
+      throw new IllegalStateException(s"$root/$v is a float serving root " +
+        "(no PQ codes) — serve it with GraphAnn.searchGraphRoutedColdStart")
+    val rot = tier.rotation(spark).map(Opq.rotateUnitUdf(spark, _))
     val art = Similarity.readIvfPq(spark, s"$root/$v/artifacts")
     searchGraphRoutedPqPersisted(spark, s"$root/$v/cells", art.index,
-      corpus, idCol, vecCol, probes, probeId, probeVec, nprobe, k, ef,
-      rerankFactor, clumpGuard = true, clumpBound = art.clumpBound,
-      tombstones = tombstones, allowed = allowed)
+      corpus, idCol, vecCol,
+      rot.fold(probes)(Opq.rotateRows(probes, probeId, probeVec, _)),
+      probeId, probeVec, nprobe, k, ef, rerankFactor, clumpGuard = true,
+      clumpBound = art.clumpBound, tombstones = tombstones,
+      allowed = allowed, corpusVecTransform = rot)
   }
 
   /** [[searchGraphRoutedPq]] against the PERSISTED partition-per-cell
@@ -1558,7 +1560,7 @@ object GraphAnn {
   }
 
   /** [[searchGraphRoutedPqPersisted]] against the CURRENTLY PUBLISHED
-    * version under a [[publishGraphCellsPq]] root (one version resolve
+    * version under a [[publishGraphCells]] root (one version resolve
     * per probe batch — [[searchGraphRoutedPublished]]'s snapshot
     * discipline on the PQ tier).
     */
@@ -1852,40 +1854,38 @@ object GraphAnn {
     * discipline, Singh et al. 2021: maintenance cost scales with the
     * CHANGED region, not the corpus — the cost lever the reference names
     * too, CHANGELOG v2.2.5 "full re-index = significant cost
-    * implications"). Against the CURRENT published version under `root`:
+    * implications"). Against the CURRENT version under `root`, whatever
+    * its tier ([[ServingTier.of]]: a [[publishServing]],
+    * [[publishPqServing]] or [[Opq.publishPqServingOpq]] root):
     *
     *  1. Localize: score `batch` against the stored drift reference and
-    *     take [[Similarity.trippedCells]] — the per-cell work list. No
-    *     tripped cells → None (the signal was global noise; the caller's
-    *     normal monitored append is the right path).
+    *     take [[Similarity.trippedCells]]. No tripped cell → None (the
+    *     caller's normal monitored append is the right path).
     *  2. Split the batch by the index's OWN routing: rows landing in
-    *     tripped cells join the retrain region; the in-distribution
-    *     remainder appends as fresh segments ([[appendGraphCellsPq]]'s
-    *     no-retrain discipline) — every arrival lands exactly once.
-    *  3. Retrain ONLY the region ([[Similarity.retrainCellsIvfPq]]):
-    *     tripped cells' members (floats fetched from `corpus` by one
-    *     id-join) plus the batch's tripped rows re-center, re-encode
-    *     against the UNCHANGED codebook, and rebuild their graph
-    *     segments; untouched cells' coded rows and adjacency pass
-    *     through physically unchanged (gate v37 pins row-identity).
-    *  4. Republish through the same ONE [[publishPqServing]] flip:
-    *     codes + adjacency + centroids + codebook + merged clump bound +
-    *     the EXACTLY-merged drift reference swap atomically.
+    *     tripped cells join the region, the remainder appends as fresh
+    *     segments — every arrival lands exactly once.
+    *  3. Retrain ONLY the region — the tripped cells' members (one
+    *     corpus id-join, [[trippedMembers]]) plus the batch's tripped
+    *     rows ([[Similarity.retrainCellsIvf]]; on PQ and OPQ
+    *     [[Similarity.retrainCellsIvfPq]], against the UNCHANGED
+    *     codebook) — and rebuild its graph; untouched cells pass through
+    *     physically unchanged (gates v37, v38).
+    *  4. Republish through the tier's ONE flip, with the EXACTLY-merged
+    *     drift reference (and, on PQ and OPQ, the coded table and the
+    *     conservatively merged clump bound: max(stored, fresh rows)).
     *
-    * Lloyd training, PQ encoding and graph construction — the costs that
-    * make the full rebuild O(corpus) — all run over O(region + batch)
-    * rows here; the publish's pass-through write of untouched cells is a
-    * copy, not a rebuild. The clump bound merges conservatively
-    * (max(stored, fresh-rows bound) — a guard may widen a search it
-    * didn't need to, never narrow one it did). The merged reference
-    * FOLDS the appended remainder's post-append per-cell stats in
-    * (measured on the same assignment pass that drove the split), so
-    * the published reference covers every row the index serves —
-    * repeated partial rebuilds keep reference.n tracking the corpus
-    * instead of drifting behind it. Batch ids must be globally unique
-    * vs the index ([[appendGraphCellsPq]]'s contract).
+    * On an OPQ root `batch` and `corpus` arrive RAW: the batch rotates
+    * once (O(batch)), the member floats rotate AFTER the O(corpus)
+    * id-join checkpoints them (O(region)), and the rotation stays
+    * frozen like the codebook. Lloyd, encoding and graph builds all run
+    * over O(region + batch) rows. The reference folds the remainder's
+    * post-append stats in, so it covers every served row. Batch ids must
+    * be unique vs the index (the append contract). `appendWhenClean`
+    * (r17 advice — the tick is the root's only writer): a batch that
+    * trips no cell appends whole against the UNCHANGED index and
+    * publishes, reported with an empty `tripped` set.
     */
-  def rebuildDriftedPqServing(spark: SparkSession, root: String,
+  def rebuildDriftedServing(spark: SparkSession, root: String,
       corpus: DataFrame, idCol: String, vecCol: String,
       batch: DataFrame, batchIdCol: String, batchVecCol: String,
       splitFactor: Int = 2, ivfIters: Int = 3, m: Int = 8,
@@ -1896,200 +1896,193 @@ object GraphAnn {
       appendWhenClean: Boolean = false): Option[PartialRebuildReport] = {
     val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
       throw new IllegalStateException(
-        s"no published PQ serving state under $root"))
-    // REFUSAL, not silence: an [[Opq.publishPqServingOpq]] root is
-    // layout-compatible with a plain root (cells/ + artifacts/) except
-    // for its rotation/, and this rotation-blind rebuild would (a)
-    // assign UNROTATED batch/corpus vectors against rotated-space
-    // centroids — mixed-space drift attribution, retraining and append
-    // — and (b) republish a version dir with NO rotation/, so the OPQ
-    // cold-start path throws (and once retention reaps the old version
-    // the rotation is lost entirely). Same silent-wrong-space class the
-    // stale-corpus / duplicate-id checks refuse.
-    if (graft.core.Fs.exists(spark, s"$root/$v/rotation"))
-      throw new IllegalStateException(
-        s"$root/$v is an OPQ serving root (rotation/ present) — a " +
-          "rotation-blind rebuild would mix spaces and drop the rotation " +
-          "from the republished version; use Opq.rebuildDriftedPqServingOpq " +
-          "(or Maintenance.runDriftMaintenanceOpq for the scheduler tick)")
-    rebuildDriftedPqServingCore(spark, root, v, corpus, idCol, vecCol,
-      batch, batchIdCol, batchVecCol, splitFactor, ivfIters, m,
-      efConstruction, maxSegmentSize, residRatioMax, massRatioMax, minMass,
-      appendWhenClean, memberVecTransform = None,
-      publishFn = (nodes, index, bound, ref) =>
-        publishPqServing(nodes, index, root, bound, ref, keepVersions))
-  }
-
-  /** The one rebuild body both tiers of the PQ serving path share —
-    * [[rebuildDriftedPqServing]] (identity space) and
-    * [[Opq.rebuildDriftedPqServingOpq]] (rotated space) differ only in
-    * (a) `memberVecTransform`: applied to the tripped cells' member
-    * floats AFTER the O(corpus) id-join checkpoints them — O(region)
-    * dim×dim applications, never the corpus (the r17 rerank lesson,
-    * same placement discipline); the BATCH arrives already in index
-    * space (the OPQ wrapper rotates it at the tick boundary, O(batch));
-    * and (b) `publishFn`: the OPQ publish carries rotation/ through the
-    * SAME version flip as cells + artifacts.
-    */
-  private[operators] def rebuildDriftedPqServingCore(spark: SparkSession,
-      root: String, v: String,
-      corpus: DataFrame, idCol: String, vecCol: String,
-      batch: DataFrame, batchIdCol: String, batchVecCol: String,
-      splitFactor: Int, ivfIters: Int, m: Int,
-      efConstruction: Int, maxSegmentSize: Int,
-      residRatioMax: Double, massRatioMax: Double,
-      minMass: Double,
-      appendWhenClean: Boolean,
-      memberVecTransform: Option[
-        org.apache.spark.sql.expressions.UserDefinedFunction],
-      publishFn: (DataFrame, Similarity.IvfPqIndex, Option[Int],
-        Option[Similarity.DriftStats]) => String)
-      : Option[PartialRebuildReport] = {
-    val art = Similarity.readIvfPq(spark, s"$root/$v/artifacts")
-    val ref = art.driftStats.getOrElse(throw new IllegalStateException(
-      s"$root/$v carries no drift reference — republish with one " +
-        "(publishPqServing(driftStats = Some(...)))"))
+        s"no published serving state under $root"))
+    val head = readDriftState(spark, root, v)
+    // the tier's differences: PQ and OPQ route unit vectors (the float
+    // tier routes them as given), and an OPQ index lives in rotated space
+    val unit = head.isInstanceOf[PqDrift]
+    val rot = head match {
+      case PqDrift(_, _, r) => r.map(Opq.rotateUnitUdf(spark, _))
+      case _ => None
+    }
     // ONE nearest-centroid pass over the batch: the assignment drives
     // BOTH the drift scoring and the tripped/rest split below
-    val assignedBatch = Similarity.assignUnitCells(spark, batch, batchIdCol,
-      batchVecCol, art.index.centroids).localCheckpoint(true)
+    val assignedBatch = Similarity.assignUnitCells(spark,
+      rot.fold(batch)(Opq.rotateRows(batch, batchIdCol, batchVecCol, _)),
+      batchIdCol, batchVecCol, head.centroids, unit)
+      .localCheckpoint(true)
     val batchStats = Similarity.statsOverCellRn(
       assignedBatch.select(col("cell"), col("rn")))
-    val tripped = Similarity.trippedCells(batchStats, ref, residRatioMax,
-      massRatioMax, minMass)
-    if (tripped.isEmpty) {
-      if (!appendWhenClean) {
-        log.info(s"no cell of $root/$v trips on this batch " +
-          s"(n=${batchStats.n}) — appending normally is the right response")
-        return None
-      }
-      // appendWhenClean (r17 advice): in a deployment where this
-      // orchestrator is the ONLY writer to the serving root (the
-      // maintenance tick's shape), "appending normally" must happen HERE
-      // or the drifted arrivals are never served. The append-only
-      // republish is the main path's remainder leg applied to the whole
-      // batch against the UNCHANGED index: fresh segments, codes derived
-      // from the segments, post-append stats folded into the reference,
-      // one flip. O(batch) work; the report's empty tripped set is the
-      // "nothing retrained" signal.
-      val batchAll = assignedBatch.select(col("id"), col("vec"))
-        .localCheckpoint(true)
-      // the one nearest-centroid pass already counted the batch
-      // (statsOverCellRn) — no second count job (r19). n counts the
-      // batch's non-null-vector rows (driftStats filters vec IS NOT
-      // NULL); assigned batches are null-free by construction — the
-      // assignment itself dereferences every vector — so n == the full
-      // batch count (r19 verdict item 5 pins this invariant).
-      val n = batchStats.n
-      if (n == 0L) return None
-      val nodes0 = spark.read.schema(pqCellsSchema).parquet(s"$root/$v/cells")
-      val freshSegs = buildAppendSegmentsPq(nodes0, batchAll, "id", "vec",
-        art.index, m, efConstruction, maxSegmentSize).localCheckpoint(true)
-      val restCoded = freshSegs.select(col("id"),
-        col("part").as("cell"), col("codes").as("pq_codes"))
-      val unitU = udf((vv: Seq[Float]) => Similarity.l2unit(vv).toSeq)
-      val restStats = Similarity.driftStatsAssigned(spark,
-        batchAll.join(freshSegs.select(col("id"),
-          col("part").as("cell")), Seq("id"))
-          .withColumn("vec", unitU(col("vec"))),
-        "cell", "vec", art.index.centroids)
-      val bound = art.clumpBound match {
-        case Some(b) => math.max(b, clumpBoundOf(freshSegs))
-        case None => clumpBoundOf(nodes0.unionByName(freshSegs))
-      }
-      val index = Similarity.IvfPqIndex(art.index.centroids,
-        art.index.book, art.index.coded.unionByName(restCoded))
-      val newV = publishFn(nodes0.unionByName(freshSegs), index,
-        Some(bound), Some(Similarity.combineRefs(ref, restStats)))
+    val tripped = Similarity.trippedCells(batchStats, head.ref,
+      residRatioMax, massRatioMax, minMass)
+    if (tripped.isEmpty && !appendWhenClean) {
       log.info(s"no cell of $root/$v trips on this batch " +
-        s"(n=${batchStats.n}) — appended the $n rows normally, " +
-        s"published $newV")
-      return Some(PartialRebuildReport(newV, Array.empty, Array.empty,
-        0L, n))
+        s"(n=${batchStats.n}) — appending normally is the right response")
+      return None
     }
+    // the one nearest-centroid pass already counted the batch
+    // (statsOverCellRn) — no second count job (r19). n counts the
+    // batch's non-null-vector rows (driftStats filters vec IS NOT NULL);
+    // assigned batches are null-free by construction — the assignment
+    // itself dereferences every vector — so n == the full batch count
+    // (r19 verdict item 5 pins this invariant).
+    if (tripped.isEmpty && batchStats.n == 0L) return None
+    val nodes = spark.read.schema(if (unit) pqCellsSchema else cellsSchema)
+      .parquet(s"$root/$v/cells")
     val trippedSeq = tripped.toSeq
-    val nodes = spark.read.schema(pqCellsSchema).parquet(s"$root/$v/cells")
-    val untouched = nodes.filter(!col("part").isin(trippedSeq: _*))
-    // region floats: tripped cells' CURRENT members (ids from the graph —
-    // it carries post-publish appends the artifacts' coded table may
-    // lack; this rebuild heals that asymmetry for the region) + the
-    // batch's tripped rows. One id-join against the corpus, O(region).
-    val memberRaw = trippedMembers(nodes, corpus, idCol, vecCol, tripped)
-    // into index space AFTER the checkpointed O(corpus) id-join lands
-    // its O(region) rows — the transform (OPQ: unit-normalize + rotate,
-    // a dim×dim product per row) must never see the corpus
-    val memberFloats = memberVecTransform.fold(memberRaw)(t =>
-      memberRaw.select(col("id"), t(col("vec")).as("vec")))
-    val batchTripped = assignedBatch.filter(col("cell").isin(trippedSeq: _*))
-      .select(col("id"), col("vec"))
-    val batchRest = assignedBatch.filter(!col("cell").isin(trippedSeq: _*))
-      .select(col("id"), col("vec")).localCheckpoint(true)
-    val regionFloats = memberFloats.unionByName(batchTripped)
-      .localCheckpoint(true) // feeds retrain, graph build and the count
-    val partial = Similarity.retrainCellsIvfPq(spark, art, regionFloats,
-      "id", "vec", tripped, splitFactor, ivfIters)
-    // graph build joins against the REGION-restricted coded view so it
-    // touches only region rows (the full view would re-scan the corpus)
-    val regionIndex = Similarity.IvfPqIndex(partial.index.centroids,
-      partial.index.book, partial.regionCoded)
-    val regionNodes = buildGraphPerCellPq(spark, regionFloats, "id", "vec",
-        regionIndex, m, efConstruction, maxSegmentSize)
-      .localCheckpoint(true)
-    val withRegion = untouched.unionByName(regionNodes)
-    val restRows = batchRest.count()
-    val (newNodes, newCoded, freshBound, publishedRef) =
-      if (restRows == 0L)
-        (withRegion, partial.index.coded, clumpBoundOf(regionNodes),
-          partial.mergedStats)
+    // a clean batch is all remainder against the unchanged index
+    val region =
+      if (tripped.isEmpty) None
       else {
-        val freshSegs = buildAppendSegmentsPq(withRegion, batchRest, "id",
-            "vec", partial.index, m, efConstruction, maxSegmentSize)
-          .localCheckpoint(true)
-        // the segments already carry the codes — derive the coded rows
-        // instead of encoding the remainder twice (emit yields exactly
-        // one row per node; neighbors nest the levels)
-        val restCoded = freshSegs.select(col("id"),
-          col("part").as("cell"), col("codes").as("pq_codes"))
-        // the remainder's stats at its POST-APPEND routing (the append
-        // re-routes against the retrained centroid set, so a remainder
-        // row can land in a fresh cell — the pre-split assignment is the
-        // wrong basis), folded into the published reference so it covers
-        // EVERY row the index serves. O(rest) join + one bounded agg.
-        val unitU = udf((v: Seq[Float]) => Similarity.l2unit(v).toSeq)
-        val restStats = Similarity.driftStatsAssigned(spark,
-          batchRest.join(freshSegs.select(col("id"),
-            col("part").as("cell")), Seq("id"))
-            .withColumn("vec", unitU(col("vec"))),
-          "cell", "vec", partial.index.centroids)
-        (withRegion.unionByName(freshSegs),
-          partial.index.coded.unionByName(restCoded),
-          clumpBoundOf(regionNodes.unionByName(freshSegs)),
-          Similarity.combineRefs(partial.mergedStats, restStats))
+        // region floats: tripped cells' CURRENT members (ids from the
+        // graph — it carries post-publish appends the PQ coded table may
+        // lack; this rebuild heals that asymmetry for the region) + the
+        // batch's tripped rows. One id-join against the corpus,
+        // O(region), rotated into index space only after it lands.
+        val members = trippedMembers(nodes, corpus, idCol, vecCol, tripped)
+        val regionFloats = rot.fold(members)(t =>
+            members.select(col("id"), t(col("vec")).as("vec")))
+          .unionByName(assignedBatch.filter(col("cell").isin(trippedSeq: _*))
+            .select(col("id"), col("vec")))
+          .localCheckpoint(true) // feeds retrain, graph build and the count
+        Some(head match {
+          case FloatDrift(centroids, ref) =>
+            val p = Similarity.retrainCellsIvf(spark, centroids, Some(ref),
+              regionFloats, "id", "vec", tripped, splitFactor, ivfIters)
+            Retrained(FloatDrift(p.centroids, p.mergedStats),
+              buildGraphPerCell(spark, p.regionAssignments, m,
+                efConstruction, maxSegmentSize).localCheckpoint(true),
+              p.newCells, p.regionStats.n)
+          case pq @ PqDrift(art, _, _) =>
+            // re-encoded against the UNCHANGED codebook; the graph build
+            // joins the REGION-restricted coded view so it touches only
+            // region rows (the full view would re-scan the corpus)
+            val p = Similarity.retrainCellsIvfPq(spark, art, regionFloats,
+              "id", "vec", tripped, splitFactor, ivfIters)
+            Retrained(pq.copy(art = art.copy(index = p.index),
+                ref = p.mergedStats),
+              buildGraphPerCellPq(spark, regionFloats, "id", "vec",
+                p.index.copy(coded = p.regionCoded), m, efConstruction,
+                maxSegmentSize).localCheckpoint(true),
+              p.newCells, p.regionStats.n)
+        })
       }
-    val bound = art.clumpBound match {
-      case Some(b) => math.max(b, freshBound)
-      case None => clumpBoundOf(newNodes) // no stored bound to merge with
+    val state = region.fold(head)(_.next)
+    val kept = region.fold(nodes)(r => nodes
+      .filter(!col("part").isin(trippedSeq: _*)).unionByName(r.nodes))
+    val rest = (if (region.isEmpty) assignedBatch
+      else assignedBatch.filter(!col("cell").isin(trippedSeq: _*)))
+      .select(col("id"), col("vec")).localCheckpoint(true)
+    val restRows = if (region.isEmpty) batchStats.n else rest.count()
+    // fresh segments ONLY: the remainder's post-append routing and the
+    // PQ coded rows read from the O(batch) delta, never a full-graph scan
+    val appended =
+      if (restRows == 0L) None
+      else Some((state match {
+        case FloatDrift(centroids, _) => buildAppendSegments(kept, rest,
+          "id", "vec", centroids, m, efConstruction, maxSegmentSize)
+        case PqDrift(art, _, _) => buildAppendSegmentsPq(kept, rest, "id",
+          "vec", art.index, m, efConstruction, maxSegmentSize)
+      }).localCheckpoint(true))
+    // the remainder's stats at its POST-APPEND routing (the append routes
+    // against the retrained centroid set, so a remainder row can land in
+    // a fresh cell — the pre-split assignment is the wrong basis), folded
+    // into the published reference so it covers EVERY row the index
+    // serves. Segments emit exactly ONE row per node (levels nest in the
+    // neighbors array — Builder.emit), so the id-join is 1:1. PQ and OPQ
+    // measure on unit vectors; the float reference on raw ones.
+    val publishedRef = appended.fold(state.ref) { fresh =>
+      val assigned = rest.join(fresh.select(col("id"),
+        col("part").as("cell")), Seq("id"))
+      val unitU = udf((vv: Seq[Float]) => Similarity.l2unit(vv).toSeq)
+      Similarity.combineRefs(state.ref, Similarity.driftStatsAssigned(spark,
+        if (unit) assigned.withColumn("vec", unitU(col("vec"))) else assigned,
+        "cell", "vec", state.centroids))
     }
-    val index = Similarity.IvfPqIndex(partial.index.centroids,
-      partial.index.book, newCoded)
-    val newV = publishFn(newNodes, index, Some(bound), Some(publishedRef))
-    // the retrain measured the region's stats over exactly these rows —
-    // its n IS the region count (no extra count job, r19). Post
-    // null-vector filter, which is exact here: region rows come from
-    // assignment/serving state that dereferences every vector.
-    val regionRows = partial.regionStats.n
-    log.info(s"partial rebuild of $root: cells " +
-      s"[${tripped.mkString(",")}] retired → [${partial.newCells.mkString(",")}], " +
-      s"$regionRows region rows retrained, $restRows appended, " +
-      s"published $newV")
-    Some(PartialRebuildReport(newV, tripped, partial.newCells, regionRows,
-      restRows))
+    val newNodes = appended.fold(kept)(kept.unionByName)
+    val newV = state match {
+      case FloatDrift(centroids, _) => publishServing(newNodes, centroids,
+        root, Some(publishedRef), keepVersions)
+      case PqDrift(art, _, rotation) =>
+        // the segments already carry the codes — derive the coded rows
+        // instead of encoding the remainder twice
+        val index = art.index.copy(coded = appended.fold(art.index.coded)(f =>
+          art.index.coded.unionByName(f.select(col("id"),
+            col("part").as("cell"), col("codes").as("pq_codes")))))
+        // conservative merge over the rows this rebuild built
+        val bound = art.clumpBound.fold(pqClumpBound(newNodes))(b =>
+          math.max(b, pqClumpBound(
+            (region.map(_.nodes) ++ appended).reduce(_ unionByName _))))
+        rotation.fold(publishPqServing(newNodes, index, root, Some(bound),
+          Some(publishedRef), keepVersions))(r =>
+          // the ONE OPQ publish carries rotation/ through the same flip
+          Opq.publishPqServingOpq(spark, newNodes, Opq.IvfOpqIndex(r, index),
+            root, Some(bound), Some(publishedRef), keepVersions))
+    }
+    // the retrain measured the region's stats over exactly its rows — its
+    // n IS the region count (no extra count job, r19; post null-vector
+    // filter, exact here: region rows come from assignment/serving state
+    // that dereferences every vector)
+    val regionRows = region.fold(0L)(_.rows)
+    val newCells = region.fold(Array.empty[Int])(_.newCells)
+    log.info(
+      if (region.isEmpty) s"no cell of $root/$v trips on this batch " +
+        s"(n=${batchStats.n}) — appended the $restRows rows normally, " +
+        s"published $newV"
+      else s"partial rebuild of $root: cells [${tripped.mkString(",")}] " +
+        s"retired → [${newCells.mkString(",")}], $regionRows region rows " +
+        s"retrained, $restRows appended, published $newV")
+    Some(PartialRebuildReport(newV, tripped, newCells, regionRows, restRows))
+  }
+
+  /** The served state [[rebuildDriftedServing]] reads, extends and
+    * republishes: the float tier's routing head, or the PQ tier's
+    * artifacts with the frozen rotation of an OPQ root.
+    */
+  private sealed trait DriftState {
+    def centroids: Array[(Int, Array[Float])]
+    def ref: Similarity.DriftStats
+  }
+  private final case class FloatDrift(centroids: Array[(Int, Array[Float])],
+      ref: Similarity.DriftStats) extends DriftState
+  private final case class PqDrift(art: Similarity.IvfPqArtifacts,
+      ref: Similarity.DriftStats, rotation: Option[Array[Array[Float]]])
+      extends DriftState {
+    def centroids: Array[(Int, Array[Float])] = art.index.centroids
+  }
+
+  /** A partial retrain's output: the next state, the region's graph
+    * nodes, the replacement cell ids and the region's row count.
+    */
+  private final case class Retrained(next: DriftState, nodes: DataFrame,
+      newCells: Array[Int], rows: Long)
+
+  /** Version `v`'s drift state, by its tier ([[ServingTier.of]]); a
+    * missing drift reference is a refusal naming the tier's publisher.
+    */
+  private def readDriftState(spark: SparkSession, root: String,
+      v: String): DriftState = {
+    val dir = s"$root/$v/artifacts"
+    def noRef(publisher: String) = new IllegalStateException(
+      s"$root/$v carries no drift reference — republish with one " +
+        s"($publisher(driftStats = Some(...)))")
+    ServingTier.of(spark, root, v) match {
+      case ServingTier.Float =>
+        val (centroids, ref) = Similarity.readIvfHead(spark, dir)
+        FloatDrift(centroids, ref.getOrElse(throw noRef("publishServing")))
+      case tier =>
+        val rotation = tier.rotation(spark)
+        val art = Similarity.readIvfPq(spark, dir)
+        PqDrift(art, art.driftStats.getOrElse(throw noRef(
+          if (rotation.isEmpty) "publishPqServing"
+          else "Opq.publishPqServingOpq")), rotation)
+    }
   }
 
   /** The tripped cells' member floats, fetched from `corpus` by one
-    * id-join — shared by both partial-rebuild orchestrators. The join
-    * must cover EVERY member: a corpus view missing indexed ids (stale
-    * snapshot, filtered table) would otherwise silently shrink the
+    * id-join — [[rebuildDriftedServing]]'s region fetch on every tier.
+    * The join must cover EVERY member: a corpus view missing indexed ids
+    * (stale snapshot, filtered table) would otherwise silently shrink the
     * index — tripped cells drop unconditionally and only what the join
     * returns comes back, so a shortfall is a refusal.
     */
@@ -2126,142 +2119,15 @@ object GraphAnn {
     memberFloats
   }
 
-  /** [[rebuildDriftedPqServing]]'s FLOAT-tier twin — the bounded drift
-    * response against a [[publishServing]] root: localize via
-    * [[Similarity.trippedCells]] (raw-space stats — this tier routes
-    * vectors as given), split the batch by the index's own routing,
-    * retrain ONLY the region ([[Similarity.retrainCellsIvf]] — no
-    * codebook here, so the only frozen state is the untouched cells'
-    * adjacency, passed through physically unchanged), rebuild the
-    * region's graph segments, append the in-distribution remainder as
-    * fresh segments, republish cells + routing head + the
-    * exactly-merged reference through ONE [[publishServing]] flip.
-    * Same cost shape: Lloyd, graph construction and the publish's
-    * pass-through copy are all O(region + batch) work over a corpus
-    * that only the one id-join ever scans.
-    */
-  def rebuildDriftedServing(spark: SparkSession, root: String,
-      corpus: DataFrame, idCol: String, vecCol: String,
-      batch: DataFrame, batchIdCol: String, batchVecCol: String,
-      splitFactor: Int = 2, ivfIters: Int = 3, m: Int = 8,
-      efConstruction: Int = 64, maxSegmentSize: Int = Int.MaxValue,
-      residRatioMax: Double = 1.25, massRatioMax: Double = 4.0,
-      minMass: Double = 0.01,
-      keepVersions: Int = 2,
-      appendWhenClean: Boolean = false): Option[PartialRebuildReport] = {
-    val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
-      throw new IllegalStateException(
-        s"no published serving state under $root"))
-    val (centroids, refOpt) = Similarity.readIvfHead(spark,
-      s"$root/$v/artifacts")
-    val ref = refOpt.getOrElse(throw new IllegalStateException(
-      s"$root/$v carries no drift reference — republish with one " +
-        "(publishServing(driftStats = Some(...)))"))
-    // ONE nearest-centroid pass: assignment drives scoring AND the split
-    val assignedBatch = Similarity.assignUnitCells(spark, batch, batchIdCol,
-      batchVecCol, centroids, unit = false).localCheckpoint(true)
-    val batchStats = Similarity.statsOverCellRn(
-      assignedBatch.select(col("cell"), col("rn")))
-    val tripped = Similarity.trippedCells(batchStats, ref, residRatioMax,
-      massRatioMax, minMass)
-    if (tripped.isEmpty) {
-      if (!appendWhenClean) {
-        log.info(s"no cell of $root/$v trips on this batch " +
-          s"(n=${batchStats.n}) — appending normally is the right response")
-        return None
-      }
-      // the PQ twin's appendWhenClean leg in float space: fresh segments
-      // against the unchanged centroids, post-append stats folded into
-      // the raw-space reference, one flip. O(batch).
-      val batchAll = assignedBatch.select(col("id"), col("vec"))
-        .localCheckpoint(true)
-      // the one nearest-centroid pass already counted the batch
-      // (statsOverCellRn) — no second count job (r19). n counts the
-      // batch's non-null-vector rows (driftStats filters vec IS NOT
-      // NULL); assigned batches are null-free by construction — the
-      // assignment itself dereferences every vector — so n == the full
-      // batch count (r19 verdict item 5 pins this invariant).
-      val n = batchStats.n
-      if (n == 0L) return None
-      val nodes0 = spark.read.schema(cellsSchema).parquet(s"$root/$v/cells")
-      val freshSegs = buildAppendSegments(nodes0, batchAll, "id", "vec",
-        centroids, m, efConstruction, maxSegmentSize).localCheckpoint(true)
-      val restStats = Similarity.driftStatsAssigned(spark,
-        batchAll.join(freshSegs.select(col("id"),
-          col("part").as("cell")), Seq("id")),
-        "cell", "vec", centroids)
-      val newV = publishServing(nodes0.unionByName(freshSegs), centroids,
-        root, Some(Similarity.combineRefs(ref, restStats)), keepVersions)
-      log.info(s"no cell of $root/$v trips on this batch " +
-        s"(n=${batchStats.n}) — appended the $n rows normally, " +
-        s"published $newV")
-      return Some(PartialRebuildReport(newV, Array.empty, Array.empty,
-        0L, n))
-    }
-    val trippedSeq = tripped.toSeq
-    val nodes = spark.read.schema(cellsSchema).parquet(s"$root/$v/cells")
-    val untouched = nodes.filter(!col("part").isin(trippedSeq: _*))
-    val memberFloats = trippedMembers(nodes, corpus, idCol, vecCol, tripped)
-    val batchTripped = assignedBatch.filter(col("cell").isin(trippedSeq: _*))
-      .select(col("id"), col("vec"))
-    val batchRest = assignedBatch.filter(!col("cell").isin(trippedSeq: _*))
-      .select(col("id"), col("vec")).localCheckpoint(true)
-    val regionFloats = memberFloats.unionByName(batchTripped)
-      .localCheckpoint(true)
-    val partial = Similarity.retrainCellsIvf(spark, centroids, Some(ref),
-      regionFloats, "id", "vec", tripped, splitFactor, ivfIters)
-    val regionNodes = buildGraphPerCell(spark, partial.regionAssignments,
-      m, efConstruction, maxSegmentSize).localCheckpoint(true)
-    val withRegion = untouched.unionByName(regionNodes)
-    val restRows = batchRest.count()
-    val (newNodes, publishedRef) =
-      if (restRows == 0L) (withRegion, partial.mergedStats)
-      else {
-        // fresh segments ONLY (the PQ twin's shape): the remainder's
-        // post-append routing reads from the O(batch) delta, never a
-        // full-graph scan
-        val freshSegs = buildAppendSegments(withRegion, batchRest, "id",
-            "vec", partial.centroids, m, efConstruction, maxSegmentSize)
-          .localCheckpoint(true)
-        // remainder stats at the POST-APPEND routing; this tier's
-        // reference is measured on RAW vectors, and the appended nodes
-        // store unit vectors, so the vecs come from batchRest by id.
-        // Segments emit exactly ONE row per node (levels nest in the
-        // neighbors array — Builder.emit), so the id-join is 1:1; no
-        // distinct needed (the PQ twin omits it for the same reason).
-        val restStats = Similarity.driftStatsAssigned(spark,
-          batchRest.join(freshSegs.select(col("id"),
-            col("part").as("cell")), Seq("id")),
-          "cell", "vec", partial.centroids)
-        (withRegion.unionByName(freshSegs),
-          Similarity.combineRefs(partial.mergedStats, restStats))
-      }
-    val newV = publishServing(newNodes, partial.centroids, root,
-      Some(publishedRef), keepVersions)
-    // regionStats measured exactly the region rows (r19, as the PQ
-    // twin; n is post null-vector filter — exact, batches are null-free
-    // by construction)
-    val regionRows = partial.regionStats.n
-    log.info(s"partial rebuild of $root: cells " +
-      s"[${tripped.mkString(",")}] retired → [${partial.newCells.mkString(",")}], " +
-      s"$regionRows region rows retrained, $restRows appended, " +
-      s"published $newV")
-    Some(PartialRebuildReport(newV, tripped, partial.newCells, regionRows,
-      restRows))
-  }
-
   /** The index's clump bound — the largest group of nodes sharing one
     * (part, seg, codes) key, i.e. the widest set ADC cannot distinguish.
     * Compute ONCE at build time and pass to [[searchGraphRoutedPq]]'s
     * `clumpBound` so the guard costs nothing per serving call (store it
     * beside the index the way the centroid table is stored). One
-    * aggregate over the coded nodes; driver state is one int.
+    * aggregate over the coded nodes; driver state is one int. The same
+    * measurement serves every PQ search path's guard.
     */
-  def pqClumpBound(nodes: DataFrame): Int = clumpBoundOf(nodes)
-
-  /** The guard's clump measurement — ONE definition for every PQ search
-    * path and the build-time [[pqClumpBound]]. */
-  private def clumpBoundOf(nodes: DataFrame): Int = {
+  def pqClumpBound(nodes: DataFrame): Int = {
     val r = nodes.groupBy(col("part"), col("seg"), hex(col("codes"))).count()
       .agg(max(col("count"))).head()
     if (r.isNullAt(0)) 0 else math.min(r.getLong(0), 1L << 30).toInt
@@ -2302,7 +2168,7 @@ object GraphAnn {
         }
       }
       perPlan.getOrElseUpdate(routedCells.sorted,
-        clumpBoundOf(nodes.filter(col("part").isin(routedCells: _*))))
+        pqClumpBound(nodes.filter(col("part").isin(routedCells: _*))))
     }
     if (clump + k > k * rerankFactor)
       log.warn(s"PQ clump guard widened the survivor pool to ${clump + k} " +

@@ -66,6 +66,16 @@ object Opq {
       if (v == null) null else rotate(bc.value, Similarity.l2unit(v)).toSeq)
   }
 
+  /** `rows`' (id, vec) pairs with null vectors dropped and the rest
+    * passed through `rot` (a [[rotateUnitUdf]]) — how probes, batches
+    * and corpora enter the rotated space.
+    */
+  private[operators] def rotateRows(rows: DataFrame, idCol: String,
+      vecCol: String, rot: org.apache.spark.sql.expressions
+        .UserDefinedFunction): DataFrame =
+    rows.filter(col(vecCol).isNotNull)
+      .select(col(idCol), rot(col(vecCol)).as(vecCol))
+
   /** Mean squared quantization error of `book` over the (unit,
     * R-rotated) corpus — OPQ's training objective, and the gate's
     * strict-improvement measurand. One treeAggregate; driver state is
@@ -285,8 +295,7 @@ object Opq {
       opqIters: Int = 3): IvfOpqIndex = {
     val (r, _) = trainRotation(spark, corpus, idCol, vecCol, subspaces,
       codesPerSub, opqIters, pqIters)
-    val rotated = corpus.filter(col(vecCol).isNotNull).select(
-      col(idCol), rotateUnitUdf(spark, r)(col(vecCol)).as(vecCol))
+    val rotated = rotateRows(corpus, idCol, vecCol, rotateUnitUdf(spark, r))
     IvfOpqIndex(r,
       Similarity.buildIvfPq(spark, rotated, idCol, vecCol, nCells,
         subspaces, codesPerSub, ivfIters, pqIters))
@@ -327,9 +336,8 @@ object Opq {
       rerankFactor: Int = 4): (DataFrame,
       org.apache.spark.util.LongAccumulator) = {
     val acc = spark.sparkContext.longAccumulator("opq_rerank_rotations")
-    val rotProbes = probes.filter(col(probeVec).isNotNull)
-      .select(col(probeId),
-        rotateUnitUdf(spark, ix.rotation)(col(probeVec)).as(probeVec))
+    val rotProbes = rotateRows(probes, probeId, probeVec,
+      rotateUnitUdf(spark, ix.rotation))
     val bc = spark.sparkContext.broadcast(ix.rotation)
     // asNondeterministic pins the side-effecting UDF to ONE evaluation
     // per output row — without it Catalyst may duplicate the expression
@@ -381,7 +389,7 @@ object Opq {
       .coalesce(1).write.mode("overwrite").parquet(dir)
   }
 
-  private def readRotation(spark: SparkSession,
+  private[operators] def readRotation(spark: SparkSession,
       dir: String): Array[Array[Float]] =
     spark.read.schema(rotationSchema).parquet(dir)
       .collect() // dim rows — bounded driver state
@@ -406,8 +414,8 @@ object Opq {
       corpus: DataFrame, idCol: String, vecCol: String, m: Int = 8,
       efConstruction: Int = 64,
       maxSegmentSize: Int = Int.MaxValue): DataFrame = {
-    val rotated = corpus.filter(col(vecCol).isNotNull).select(
-      col(idCol), rotateUnitUdf(spark, ix.rotation)(col(vecCol)).as(vecCol))
+    val rotated = rotateRows(corpus, idCol, vecCol,
+      rotateUnitUdf(spark, ix.rotation))
     GraphAnn.buildGraphPerCellPq(spark, rotated, idCol, vecCol, ix.index,
       m, efConstruction, maxSegmentSize)
   }
@@ -423,7 +431,7 @@ object Opq {
       keepVersions: Int = 2): String =
     graft.pipeline.VersionedIndex.publishInto(root, keepVersions) { dir =>
       GraphAnn.overlapWrites(
-        () => GraphAnn.writeGraphCellsPq(nodes, s"$dir/cells"),
+        () => GraphAnn.writeGraphCells(nodes, s"$dir/cells"),
         () => Similarity.writeIvfPq(ix.index, s"$dir/artifacts", clumpBound,
           driftStats),
         () => writeRotation(spark, ix.rotation, s"$dir/rotation"))
@@ -442,55 +450,18 @@ object Opq {
       clumpBound: Option[Int] = None,
       tombstones: Option[DataFrame] = None): DataFrame = {
     val rot = rotateUnitUdf(spark, ix.rotation)
-    val rotProbes = probes.filter(col(probeVec).isNotNull)
-      .select(col(probeId), rot(col(probeVec)).as(probeVec))
     GraphAnn.searchGraphRoutedPq(nodes, ix.index, corpus, idCol, vecCol,
-      rotProbes, probeId, probeVec, nprobe, k, ef, rerankFactor,
-      clumpGuard = true, clumpBound = clumpBound, tombstones = tombstones,
+      rotateRows(probes, probeId, probeVec, rot), probeId, probeVec, nprobe,
+      k, ef, rerankFactor, clumpGuard = true, clumpBound = clumpBound, tombstones = tombstones,
       corpusVecTransform = Some(rot))
   }
 
-  /** COLD-START OPQ graph serving — [[GraphAnn.searchGraphRoutedPqColdStart]]
-    * over a [[publishPqServingOpq]] root: resolve CURRENT once, read
-    * centroids + codebook + clump bound + ROTATION from the version dir
-    * (bit-exact round-trips), serve through the persisted
-    * PartitionFilters-pruned path. Row-identical to the in-memory
-    * [[searchGraphRoutedPqOpq]] over the same files (gate v40).
-    */
-  def searchGraphRoutedPqColdStartOpq(spark: SparkSession, root: String,
-      corpus: DataFrame, idCol: String, vecCol: String, probes: DataFrame,
-      probeId: String, probeVec: String, nprobe: Int, k: Int, ef: Int,
-      rerankFactor: Int = 4, tombstones: Option[DataFrame] = None,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
-      throw new IllegalStateException(
-        s"no published OPQ serving state under $root"))
-    val art = Similarity.readIvfPq(spark, s"$root/$v/artifacts")
-    val rot = rotateUnitUdf(spark, readRotation(spark, s"$root/$v/rotation"))
-    val rotProbes = probes.filter(col(probeVec).isNotNull)
-      .select(col(probeId), rot(col(probeVec)).as(probeVec))
-    GraphAnn.searchGraphRoutedPqPersisted(spark, s"$root/$v/cells",
-      art.index, corpus, idCol, vecCol, rotProbes, probeId, probeVec,
-      nprobe, k, ef, rerankFactor, clumpGuard = true,
-      clumpBound = art.clumpBound, tombstones = tombstones,
-      allowed = allowed, corpusVecTransform = Some(rot))
-  }
-
   // ── OPQ × drift maintenance ─────────────────────────────────────────
-  // The tick-side composition that closes the OPQ serving lifecycle
-  // (r18 verdict item 1): arrivals and the corpus live in RAW space,
-  // the published index in ROTATED space, so the rotation must apply at
-  // exactly two tick-side seams — the pending batch (O(batch), here)
-  // and the tripped cells' member floats (O(region), inside the shared
-  // core, AFTER the id-join checkpoints them) — and the republish must
-  // carry rotation/ through the SAME version flip as cells + artifacts
-  // (the invariant publishPqServingOpq advertises). The rotation itself
-  // is FROZEN across partial rebuilds, exactly like the codebook: the
-  // untouched cells' codes were trained under this R, so re-learning R
-  // mid-partial-rebuild would invalidate every code the rebuild
-  // deliberately passes through unchanged. A scheduled FULL retrain
-  // (buildIvfOpq on the union → publishPqServingOpq) is where R
-  // refreshes.
+  // [[GraphAnn.rebuildDriftedServing]] serves an OPQ root on the one
+  // rebuild path (rotating the RAW batch and member floats, carrying
+  // rotation/ through the flip). R is FROZEN across partial rebuilds like
+  // the codebook — untouched codes were trained under it; a scheduled
+  // FULL retrain (buildIvfOpq → publishPqServingOpq) is where R refreshes.
 
   /** The serving centroids expressed in RAW space: c ↦ Rᵀ·c. Because R
     * is an isometry (‖Rx − c‖ = ‖x − Rᵀc‖ and the assignment argmax is
@@ -517,48 +488,4 @@ object Opq {
       }
       (cell, out)
     }
-
-  /** [[GraphAnn.rebuildDriftedPqServing]]'s OPQ twin — the bounded
-    * drift response against a [[publishPqServingOpq]] root. Reads the
-    * CURRENT version's rotation (refusing a plain root — the mirror of
-    * the generic path's OPQ refusal), rotates the pending batch at the
-    * tick boundary (`batch`/`corpus` arrive RAW — the views a
-    * deployment already has; everything index-side stays in rotated
-    * space), and runs the shared core with the rotation as the member
-    * transform and a publish that lands `rotation/` in the new version
-    * dir under the one flip. Cost shape unchanged: the rotation is
-    * O(batch) + O(region) dim×dim products; Lloyd/encode/graph remain
-    * O(region + batch); the corpus is scanned only by the one id-join.
-    */
-  def rebuildDriftedPqServingOpq(spark: SparkSession, root: String,
-      corpus: DataFrame, idCol: String, vecCol: String,
-      batch: DataFrame, batchIdCol: String, batchVecCol: String,
-      splitFactor: Int = 2, ivfIters: Int = 3, m: Int = 8,
-      efConstruction: Int = 64, maxSegmentSize: Int = Int.MaxValue,
-      residRatioMax: Double = 1.25, massRatioMax: Double = 4.0,
-      minMass: Double = 0.01,
-      keepVersions: Int = 2,
-      appendWhenClean: Boolean = false)
-      : Option[GraphAnn.PartialRebuildReport] = {
-    val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
-      throw new IllegalStateException(
-        s"no published OPQ serving state under $root"))
-    if (!graft.core.Fs.exists(spark, s"$root/$v/rotation"))
-      throw new IllegalStateException(
-        s"$root/$v carries no rotation/ — not an OPQ serving root; use " +
-          "GraphAnn.rebuildDriftedPqServing (Maintenance.runDriftMaintenance)")
-    val r = readRotation(spark, s"$root/$v/rotation")
-    val rot = rotateUnitUdf(spark, r)
-    val rotBatch = batch.filter(col(batchVecCol).isNotNull)
-      .select(col(batchIdCol), rot(col(batchVecCol)).as(batchVecCol))
-    GraphAnn.rebuildDriftedPqServingCore(spark, root, v, corpus, idCol,
-      vecCol, rotBatch, batchIdCol, batchVecCol, splitFactor, ivfIters, m,
-      efConstruction, maxSegmentSize, residRatioMax, massRatioMax, minMass,
-      appendWhenClean, memberVecTransform = Some(rot),
-      // the ONE OPQ publish path — layout changes to publishPqServingOpq
-      // (a manifest, say) automatically cover rebuild-published versions
-      publishFn = (nodes, index, bound, ref) =>
-        publishPqServingOpq(spark, nodes, IvfOpqIndex(r, index), root,
-          bound, ref, keepVersions))
-  }
 }

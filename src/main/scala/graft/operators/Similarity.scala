@@ -1591,7 +1591,8 @@ object Similarity {
   }
 
   /** Count-weighted combination of two complete drift references — the
-    * partial-rebuild orchestrators fold the appended remainder's
+    * partial rebuild ([[graft.operators.GraphAnn.rebuildDriftedServing]])
+    * folds the appended remainder's
     * POST-APPEND stats (measured at the routing the published index
     * actually serves) into the retrain's merged reference, so the
     * published reference covers EVERY row the index serves; without the

@@ -866,7 +866,7 @@ object VectorQueries {
           m = 8, efConstruction = 48))
       val root = Fixtures.cachedObj(s, s"v31_root:$d") {
         val t = java.nio.file.Files.createTempDirectory("graft-v31").toString
-        GraphAnn.publishGraphCellsPq(nodes, t)
+        GraphAnn.publishGraphCells(nodes, t)
         t
       }
       val bound = Fixtures.cachedObj(s, s"v31_clump:$d")(
@@ -1031,7 +1031,7 @@ object VectorQueries {
       // one root per (session, sf), re-published per run (v32 note)
       val root = Fixtures.cachedObj(s, s"v33_root:$d")(
         java.nio.file.Files.createTempDirectory("graft-v33").toString)
-      GraphAnn.publishGraphCellsPq(purged, root)
+      GraphAnn.publishGraphCells(purged, root)
       val allowed = emb.filter($"vec_id" % 3 =!= 1).select($"vec_id".as("id"))
       val tombs2 = emb.filter($"vec_id" % 7 === 3).select($"vec_id".as("id"))
       val probes = emb.filter($"vec_id" < 3)
@@ -1418,7 +1418,7 @@ object VectorQueries {
       val corpus = Fixtures.cached(s, s"v37_corpus:$d")(
         base.select($"vec_id", $"embedding")
           .unionByName(batch.select($"vec_id", $"embedding")))
-      val res = GraphAnn.rebuildDriftedPqServing(s, root, corpus,
+      val res = GraphAnn.rebuildDriftedServing(s, root, corpus,
         "vec_id", "embedding", batch, "vec_id", "embedding",
         splitFactor = 2, ivfIters = 2, m = 8, efConstruction = 48)
         .getOrElse(throw new IllegalStateException(
@@ -2052,7 +2052,7 @@ object VectorQueries {
           nprobe = 4, k = k, ef = 64, rerankFactor = 4,
           clumpBound = Some(boundOpq))
         .select($"probe_id", $"id", $"rank").localCheckpoint(true)
-      val cold = Opq.searchGraphRoutedPqColdStartOpq(s, root, emb,
+      val cold = GraphAnn.searchGraphRoutedPqColdStart(s, root, emb,
           "vec_id", "embedding", probes, "probe_id", "probe_vec",
           nprobe = 4, k = k, ef = 64, rerankFactor = 4)
         .select($"probe_id", $"id", $"rank").localCheckpoint(true)
@@ -2083,13 +2083,14 @@ object VectorQueries {
     // isometry, so the RAW-space head (Opq.unrotatedCentroids) plus the
     // rotated-space reference yields the same verdicts (clean batch
     // clean, planted batch trips) at zero per-row ingest cost; (b) the
-    // PLAIN tick pointed at the OPQ root REFUSES (names the OPQ path)
-    // with the pending window intact — the silent-wrong-space hazard is
-    // closed on both sides; (c) the OPQ tick rotates the batch at the
-    // tick boundary, retrains the tripped region in rotated space, and
-    // the rotation SURVIVES the republish flip bit-exactly (frozen-R,
-    // the codebook discipline); (d) cold-start OPQ serving over the
-    // flipped root recovers brute force for the drifted mode; (e) a
+    // tick pointed at a root that is not a serving root REFUSES at tick
+    // start with the pending window intact (the tier is read from the
+    // root, so no per-tier tick is left to miswire); (c) the one tick
+    // reads the OPQ tier, rotates the batch at the tick boundary,
+    // retrains the tripped region in rotated space, and the rotation
+    // SURVIVES the republish flip bit-exactly (frozen-R, the codebook
+    // discipline); (d) cold-start OPQ serving over the flipped root
+    // recovers brute force for the drifted mode; (e) a
     // second tick is a no-op and the processed window cleared.
     "v41_opq_maintenance" -> ((s, d) => {
       import s.implicits._
@@ -2146,24 +2147,29 @@ object VectorQueries {
       val corpus = Fixtures.cached(s, s"v41_corpus:$d")(
         base.select($"vec_id", $"embedding")
           .unionByName(drifted.select($"vec_id", $"embedding")))
-      // the rotation-blind tick REFUSES the OPQ root, pending intact
+      // the tick REFUSES a root that is not a serving root (a published
+      // version with no artifacts/, made with no Spark job) at tick
+      // start, pending intact
+      val plainRoot = java.nio.file.Files.createTempDirectory("graft-v41-cells")
+      graft.pipeline.VersionedIndex.publishInto(plainRoot.toString)(dir =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir)))
       val refused =
         try {
           graft.streaming.Maintenance.runDriftMaintenance(s, s"$run/index",
-            root, corpus, "vec_id", "embedding", splitFactor = 2,
-            ivfIters = 2, m = 8, efConstruction = 48)
+            plainRoot.toString, corpus, "vec_id", "embedding",
+            splitFactor = 2, ivfIters = 2, m = 8, efConstruction = 48)
           false
         } catch {
           case e: IllegalStateException =>
-            e.getMessage.contains("rebuildDriftedPqServingOpq")
+            e.getMessage.contains("not a serving version")
         }
       val pendingIntact = graft.core.Fs.exists(s,
         s"$run/index/drift_batches/batch_id=${driftedIds.head}") &&
         !s.read.schema(Similarity.driftLogSchema).parquet(s"$run/index/drift_log")
           .filter($"batch_id".isNotNull).isEmpty
-      // the OPQ tick: rotate at the boundary, retrain in rotated space,
-      // carry rotation/ through the flip
-      val tick1 = graft.streaming.Maintenance.runDriftMaintenanceOpq(s,
+      // the one tick on the OPQ root: rotate at the boundary, retrain in
+      // rotated space, carry rotation/ through the flip
+      val tick1 = graft.streaming.Maintenance.runDriftMaintenance(s,
         s"$run/index", root, corpus, "vec_id", "embedding",
         splitFactor = 2, ivfIters = 2, m = 8, efConstruction = 48)
       val rebuildFired = tick1.rebuild.nonEmpty &&
@@ -2179,7 +2185,7 @@ object VectorQueries {
       val probes = drifted.filter($"vec_id" < 2000020L)
         .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
       val k = 8
-      val got = Opq.searchGraphRoutedPqColdStartOpq(s, root, corpus,
+      val got = GraphAnn.searchGraphRoutedPqColdStart(s, root, corpus,
           "vec_id", "embedding", probes, "probe_id", "probe_vec",
           nprobe = 16, k = k, ef = 128, rerankFactor = 64)
         .localCheckpoint(true)
@@ -2205,7 +2211,7 @@ object VectorQueries {
           .filter($"batch_id" <= mx).isEmpty)
       val pendingCleared = !graft.core.Fs.exists(s,
         s"$run/index/drift_batches/batch_id=${driftedIds.head}")
-      val tick2 = graft.streaming.Maintenance.runDriftMaintenanceOpq(s,
+      val tick2 = graft.streaming.Maintenance.runDriftMaintenance(s,
         s"$run/index", root, corpus, "vec_id", "embedding")
       val secondNoop = tick2.pendingBatchIds.isEmpty &&
         tick2.rebuild.isEmpty &&
@@ -2241,7 +2247,7 @@ object VectorQueries {
       def sameRot(a: Array[Array[Float]], b: Array[Array[Float]]) =
         a.length == b.length && a.zip(b).forall { case (x, y) =>
           java.util.Arrays.equals(x, y) }
-      val coldFull = Opq.searchGraphRoutedPqColdStartOpq(s, root, corpus,
+      val coldFull = GraphAnn.searchGraphRoutedPqColdStart(s, root, corpus,
         "vec_id", "embedding", probes, "probe_id", "probe_vec",
         nprobe = 16, k = k, ef = 128, rerankFactor = 64)
       val rotationRefreshed =
@@ -2250,7 +2256,7 @@ object VectorQueries {
         sameRot(rotServed, ixFull.rotation) &&
         !sameRot(rotServed, ixOpq.rotation) &&
         coldFull.count() == nProbes * k
-      Seq(root, run.toString).foreach(p =>
+      Seq(root, run.toString, plainRoot.toString).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
       s.range(1).select(
         lit(tripLogged).as("trip_logged_raw_head"),

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{GraphAnn, Similarity}
+import graft.operators.{GraphAnn, ServingTier, Similarity}
 
 /** The scheduler leg that closes the auto-maintenance loop (ST8) — the
   * Spark-native analog of the reference's cron-driven index maintenance
@@ -21,9 +21,10 @@ import graft.operators.{GraphAnn, Similarity}
   *        ("batch_id")` — the log is a monitor, replays append duplicate
   *        rows), takes the drifted batch ids whose pending rows exist,
   *        unions those rows into ONE batch, and hands it to
-  *        [[GraphAnn.rebuildDriftedPqServing]] — v37's bounded response:
-  *        localize → retrain tripped cells only → remainder append →
-  *        exact reference merge → one-flip republish
+  *        [[GraphAnn.rebuildDriftedServing]] — v37's bounded response on
+  *        whatever tier the root serves (float, PQ or OPQ): localize →
+  *        retrain tripped cells only → remainder append → exact
+  *        reference merge → one-flip republish
   *     →  on ANY terminal verdict (rebuilt, or None = the signal is
   *        already absorbed by the current reference) the pending state
   *        clears: the processed window's log rows prune
@@ -220,11 +221,32 @@ object Maintenance {
     (upto, pending)
   }
 
-  /** One maintenance tick against a [[GraphAnn.publishPqServing]] root.
-    * `corpus` is the view the index was built/appended from (the member
-    * fetch for tripped cells — [[GraphAnn.rebuildDriftedPqServing]]'s
-    * contract, including its missing-row and duplicate-id refusals).
-    * Nothing pending → cheap no-op (one log read).
+  /** One maintenance tick against a serving root of any tier: float
+    * ([[GraphAnn.publishServing]]), PQ ([[GraphAnn.publishPqServing]]) or
+    * OPQ ([[graft.operators.Opq.publishPqServingOpq]]) — the reference's
+    * one cron job per index, whatever it stores. `corpus` is the view the
+    * index was built/appended from (the member fetch for tripped cells —
+    * [[GraphAnn.rebuildDriftedServing]]'s contract, including its
+    * missing-row and duplicate-id refusals); `corpus` and the landed
+    * batches stay RAW on an OPQ root (the rebuild rotates them). Nothing
+    * pending → cheap no-op (one log read). The tick's Spark jobs carry
+    * the description `maintenance tick: index I, root R (tier T)`.
+    *
+    * A root that is not a serving root ([[ServingTier.of]]: no
+    * `artifacts/` in its CURRENT version, e.g. a
+    * [[GraphAnn.publishGraphCells]] root) is refused at TICK START, quiet
+    * ticks included, before the lease — a scheduler pointed at the wrong
+    * root must fail its FIRST tick (a config review at rollout), not run
+    * silent healthy-path prunes for days and then fail at the first
+    * drift trip (r19 review). A root with no published version yet
+    * passes: it has no layout until the first publish, and a pending
+    * batch then fails inside the rebuild with the lease released.
+    *
+    * The arrival-point monitor needs no OPQ variant: feed
+    * [[graft.streaming.StreamingIngest.DriftMonitorConfig]] the raw-space
+    * head from [[graft.operators.Opq.unrotatedCentroids]] (rotation is an
+    * isometry — identical verdicts, zero per-row rotation cost at
+    * ingest).
     */
   def runDriftMaintenance(spark: SparkSession, indexDir: String,
       servingRoot: String, corpus: DataFrame, idCol: String, vecCol: String,
@@ -234,88 +256,21 @@ object Maintenance {
       minMass: Double = 0.01, keepVersions: Int = 2,
       appendCleanNovel: Boolean = true,
       leaseMs: Long = 30L * 60 * 1000): MaintenanceReport = {
-    checkRootTier(spark, servingRoot, expect = "PQ")
-    runTick(spark, indexDir, servingRoot, leaseMs,
-      batch => GraphAnn.rebuildDriftedPqServing(spark, servingRoot,
-        corpus, idCol, vecCol, batch, "id", "vec", splitFactor, ivfIters,
-        m, efConstruction, maxSegmentSize, residRatioMax, massRatioMax,
-        minMass, keepVersions, appendWhenClean = appendCleanNovel))
-  }
-
-  /** Refuse a tier/root layout mismatch at TICK START, quiet ticks
-    * included — a scheduler wired to the wrong tier variant must fail
-    * its FIRST tick (a config review at rollout), not run silent
-    * healthy-path prunes for days and then start throwing at the first
-    * drift trip (r19 review). Tier detection is by the layout the three
-    * publish families leave behind: `rotation/` ⇒ OPQ
-    * ([[graft.operators.Opq.publishPqServingOpq]]),
-    * `artifacts/codebook` ⇒ PQ ([[GraphAnn.publishPqServing]]), neither
-    * ⇒ float ([[GraphAnn.publishServing]]). The OPQ↔PQ confusion is the
-    * SILENT-wrong-space hazard (identical schemas); float↔PQ would fail
-    * on schema eventually, but only after retraining work and with a
-    * column-mismatch error that doesn't name the misconfiguration. The
-    * rebuild orchestrators keep their own refusals for direct callers.
-    * No published version yet → nothing to check (the root has no
-    * layout until the first publish).
-    */
-  private def checkRootTier(spark: SparkSession, servingRoot: String,
-      expect: String): Unit =
-    graft.pipeline.VersionedIndex.currentVersion(servingRoot).foreach { v =>
-      val hasRot = graft.core.Fs.exists(spark, s"$servingRoot/$v/rotation")
-      val hasBook =
-        graft.core.Fs.exists(spark, s"$servingRoot/$v/artifacts/codebook")
-      val actual = if (hasRot) "OPQ" else if (hasBook) "PQ" else "float"
-      val an = if (actual == "OPQ") "an" else "a"
-      if (actual != expect)
-        throw new IllegalStateException(
-          s"$servingRoot/$v is $an $actual serving root but this tick " +
-            s"expects a $expect one — use " + (actual match {
-              case "OPQ" => "Maintenance.runDriftMaintenanceOpq " +
-                "(Opq.rebuildDriftedPqServingOpq)"
-              case "PQ" => "Maintenance.runDriftMaintenance " +
-                "(GraphAnn.rebuildDriftedPqServing)"
-              case _ => "Maintenance.runDriftMaintenanceFloat " +
-                "(GraphAnn.rebuildDriftedServing)"
-            }))
+    val tier = graft.pipeline.VersionedIndex.currentVersion(servingRoot)
+      .fold("unpublished")(v => ServingTier.of(spark, servingRoot, v).name)
+    graft.core.Jobs.labelled(spark.sparkContext,
+      s"maintenance tick: index $indexDir, root $servingRoot (tier $tier)") {
+      runTick(spark, indexDir, servingRoot, leaseMs,
+        batch => GraphAnn.rebuildDriftedServing(spark, servingRoot,
+          corpus, idCol, vecCol, batch, "id", "vec", splitFactor, ivfIters,
+          m, efConstruction, maxSegmentSize, residRatioMax, massRatioMax,
+          minMass, keepVersions, appendWhenClean = appendCleanNovel))
     }
-
-  /** [[runDriftMaintenance]]'s OPQ twin, against a
-    * [[graft.operators.Opq.publishPqServingOpq]] root. `corpus` and the
-    * landed batches stay RAW (the views the deployment already has);
-    * [[graft.operators.Opq.rebuildDriftedPqServingOpq]] reads the
-    * CURRENT version's rotation under the lease, rotates the pending
-    * batch at this tick boundary, retrains in rotated space and carries
-    * `rotation/` through the republish flip. Pointing the PLAIN
-    * [[runDriftMaintenance]] at an OPQ root refuses (names this path)
-    * with the pending state intact — the refusal happens before any
-    * prune or sweep, so the next OPQ tick processes the same window.
-    * The arrival-point monitor needs no OPQ variant: feed
-    * [[graft.streaming.StreamingIngest.DriftMonitorConfig]] the
-    * raw-space head from [[graft.operators.Opq.unrotatedCentroids]]
-    * (rotation is an isometry — identical verdicts, zero per-row
-    * rotation cost at ingest).
-    */
-  def runDriftMaintenanceOpq(spark: SparkSession, indexDir: String,
-      servingRoot: String, corpus: DataFrame, idCol: String, vecCol: String,
-      splitFactor: Int = 2, ivfIters: Int = 3, m: Int = 8,
-      efConstruction: Int = 64, maxSegmentSize: Int = Int.MaxValue,
-      residRatioMax: Double = 1.25, massRatioMax: Double = 4.0,
-      minMass: Double = 0.01, keepVersions: Int = 2,
-      appendCleanNovel: Boolean = true,
-      leaseMs: Long = 30L * 60 * 1000): MaintenanceReport = {
-    checkRootTier(spark, servingRoot, expect = "OPQ")
-    runTick(spark, indexDir, servingRoot, leaseMs,
-      batch => graft.operators.Opq.rebuildDriftedPqServingOpq(spark,
-        servingRoot, corpus, idCol, vecCol, batch, "id", "vec",
-        splitFactor, ivfIters, m, efConstruction, maxSegmentSize,
-        residRatioMax, massRatioMax, minMass, keepVersions,
-        appendWhenClean = appendCleanNovel))
   }
 
-  /** The tick body both tiers share — only the rebuild call differs.
-    * One rebuild for the union of pending batches: a single localize/
-    * retrain/publish beats one flip per logged batch (the monitor can
-    * trip several times on one mode). Already-served ids drop first
+  /** The tick body under the lease. One rebuild for the union of
+    * pending batches: a single localize/retrain/publish beats one flip
+    * per logged batch (the monitor can trip several times on one mode). Already-served ids drop first
     * ([[novelPending]]) — a crash-replayed tick re-pends rows the
     * interrupted tick's publish already indexed, and handing them back
     * to the rebuild would violate the append leg's id-uniqueness
@@ -427,25 +382,5 @@ object Maintenance {
         pending.join(served, Seq("id"), "left_anti").localCheckpoint(true)
       case None => pending.localCheckpoint(true)
     }
-  }
-
-  /** [[runDriftMaintenance]]'s float-tier twin, against a
-    * [[GraphAnn.publishServing]] root ([[GraphAnn.rebuildDriftedServing]]
-    * does the bounded response; same land-then-log pending contract).
-    */
-  def runDriftMaintenanceFloat(spark: SparkSession, indexDir: String,
-      servingRoot: String, corpus: DataFrame, idCol: String, vecCol: String,
-      splitFactor: Int = 2, ivfIters: Int = 3, m: Int = 8,
-      efConstruction: Int = 64, maxSegmentSize: Int = Int.MaxValue,
-      residRatioMax: Double = 1.25, massRatioMax: Double = 4.0,
-      minMass: Double = 0.01, keepVersions: Int = 2,
-      appendCleanNovel: Boolean = true,
-      leaseMs: Long = 30L * 60 * 1000): MaintenanceReport = {
-    checkRootTier(spark, servingRoot, expect = "float")
-    runTick(spark, indexDir, servingRoot, leaseMs,
-      batch => GraphAnn.rebuildDriftedServing(spark, servingRoot,
-        corpus, idCol, vecCol, batch, "id", "vec", splitFactor, ivfIters,
-        m, efConstruction, maxSegmentSize, residRatioMax, massRatioMax,
-        minMass, keepVersions, appendWhenClean = appendCleanNovel))
   }
 }

@@ -779,7 +779,7 @@ class GraphAnnSpec extends AnyFunSuite {
 
   test("PQ published serving: version-pinned, pruned scan, filtered leg row-identical") {
     val root = java.nio.file.Files.createTempDirectory("graft-pqroot").toString
-    GraphAnn.publishGraphCellsPq(pqNodes, root)
+    GraphAnn.publishGraphCells(pqNodes, root)
     val probes = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
     def flat(df: org.apache.spark.sql.DataFrame) = df.collect()

@@ -156,7 +156,7 @@ class OpqSpec extends AnyFunSuite {
         "embedding", probes, "probe_id", "probe_vec", nprobe = 2, k = k,
         ef = 32, rerankFactor = 4, clumpBound = Some(bound))
       .select($"probe_id", $"id", $"rank").localCheckpoint(true)
-    val cold = Opq.searchGraphRoutedPqColdStartOpq(spark, root, emb,
+    val cold = GraphAnn.searchGraphRoutedPqColdStart(spark, root, emb,
         "vec_id", "embedding", probes, "probe_id", "probe_vec",
         nprobe = 2, k = k, ef = 32, rerankFactor = 4)
       .select($"probe_id", $"id", $"rank").localCheckpoint(true)
@@ -179,6 +179,58 @@ class OpqSpec extends AnyFunSuite {
       hits.agg(min($"count")).head().getLong(0) >= k - 1,
       "graph + rotation must not break exact recovery under full probe")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  test("PQ cold start reads the tier: an OPQ root serves the rotated rows, a float root refuses") {
+    val ix = Opq.buildIvfOpq(spark, emb, "vec_id", "embedding",
+      nCells = 8, subspaces = 8, codesPerSub = 8, ivfIters = 1,
+      pqIters = 1, opqIters = 2)
+    val nodes = Opq.buildGraphCellsOpq(spark, ix, emb, "vec_id",
+      "embedding", m = 4, efConstruction = 16).localCheckpoint(true)
+    val root = java.nio.file.Files.createTempDirectory("graft-opq-pqcold")
+      .toString
+    val v = Opq.publishPqServingOpq(spark, nodes, ix, root,
+      Some(GraphAnn.pqClumpBound(nodes)))
+    val probes = emb.filter($"vec_id" % 16 === 0)
+      .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .sortBy(t => (t._1, t._4)).toSeq
+    // the OPQ cold path as the OPQ-only entry point served it: artifacts
+    // and rotation read from the version, probes rotated, the rotation
+    // handed to the rerank as the survivor transform
+    val art = Similarity.readIvfPq(spark, s"$root/$v/artifacts")
+    val rot = Opq.rotateUnitUdf(spark,
+      spark.read.parquet(s"$root/$v/rotation").collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+        .sortBy(_._1).map(_._2))
+    val want = rows(GraphAnn.searchGraphRoutedPqPersisted(spark,
+      s"$root/$v/cells", art.index, emb, "vec_id", "embedding",
+      probes.filter($"probe_vec".isNotNull)
+        .select($"probe_id", rot($"probe_vec").as("probe_vec")),
+      "probe_id", "probe_vec", nprobe = 2, k = 5, ef = 32, rerankFactor = 4,
+      clumpBound = art.clumpBound, corpusVecTransform = Some(rot)))
+    val got = rows(GraphAnn.searchGraphRoutedPqColdStart(spark, root, emb,
+      "vec_id", "embedding", probes, "probe_id", "probe_vec", nprobe = 2,
+      k = 5, ef = 32, rerankFactor = 4))
+    assert(want.nonEmpty && got == want,
+      "the PQ cold start must route and score an OPQ root in rotated space")
+    // a float root holds no codes: refused, naming the float cold start
+    val ivf = Similarity.buildIvf(spark,
+      emb.select($"vec_id".as("id"), $"embedding".as("vec")), "id", "vec",
+      nCells = 4, iters = 1)
+    val fRoot = java.nio.file.Files.createTempDirectory("graft-opq-fcold")
+      .toString
+    GraphAnn.publishServing(GraphAnn.buildGraphPerCell(spark,
+      ivf.assignments, m = 4, efConstruction = 8), ivf.centroids, fRoot)
+    val e = intercept[IllegalStateException] {
+      GraphAnn.searchGraphRoutedPqColdStart(spark, fRoot, emb, "vec_id",
+        "embedding", probes, "probe_id", "probe_vec", nprobe = 2, k = 5,
+        ef = 32)
+    }
+    assert(e.getMessage.contains("searchGraphRoutedColdStart"), e.getMessage)
+    Seq(root, fRoot).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
 
   test("end-to-end: all-cells probe + big rerank recovers brute force through the rotation") {
@@ -204,8 +256,8 @@ class OpqSpec extends AnyFunSuite {
   }
 
   test("unrotatedCentroids: raw-space monitor scoring matches rotated-space scoring (isometry)") {
-    // the claim runDriftMaintenanceOpq's scaladoc makes for the ingest
-    // hot path: an arrival monitor fed c ↦ Rᵀc plus the rotated-space
+    // the claim Maintenance.runDriftMaintenance's scaladoc makes for the
+    // ingest hot path: an arrival monitor fed c ↦ Rᵀc plus the rotated-space
     // reference produces the same verdicts as rotating every batch row —
     // because ‖unit(x) − Rᵀc‖ = ‖R·unit(x) − c‖ and the assignment
     // argmax is preserved. Checked on a clean AND a drifted batch.

@@ -88,7 +88,7 @@ class PartialRebuildSpec extends AnyFunSuite {
       Some(GraphAnn.pqClumpBound(baseNodes)), Some(baseRef))
     val batch = driftedBatch.localCheckpoint(true)
     val corpus = base.unionByName(batch).localCheckpoint(true)
-    val res = GraphAnn.rebuildDriftedPqServing(spark, root, corpus,
+    val res = GraphAnn.rebuildDriftedServing(spark, root, corpus,
       "vec_id", "embedding", batch, "vec_id", "embedding",
       splitFactor = 2, ivfIters = 2, m = 4, efConstruction = 16)
       .getOrElse(fail("the planted drift must trigger a partial rebuild"))
@@ -224,7 +224,7 @@ class PartialRebuildSpec extends AnyFunSuite {
     val stale = base.join(memberIds, Seq("vec_id"), "left_anti")
       .unionByName(batch)
     val e = intercept[IllegalArgumentException] {
-      GraphAnn.rebuildDriftedPqServing(spark, root, stale,
+      GraphAnn.rebuildDriftedServing(spark, root, stale,
         "vec_id", "embedding", batch, "vec_id", "embedding",
         splitFactor = 2, ivfIters = 2, m = 4, efConstruction = 16)
     }
@@ -243,7 +243,7 @@ class PartialRebuildSpec extends AnyFunSuite {
     // duplicates), and each duplicate would republish as a duplicate node
     val dup = base.unionByName(base).unionByName(batch)
     val e = intercept[IllegalArgumentException] {
-      GraphAnn.rebuildDriftedPqServing(spark, root, dup,
+      GraphAnn.rebuildDriftedServing(spark, root, dup,
         "vec_id", "embedding", batch, "vec_id", "embedding",
         splitFactor = 2, ivfIters = 2, m = 4, efConstruction = 16)
     }
@@ -357,14 +357,37 @@ class PartialRebuildSpec extends AnyFunSuite {
   }
 
   test("a clean batch is a refusal: None, version unchanged") {
-    val root = java.nio.file.Files.createTempDirectory("graft-pr4").toString
+    // on every tier: a PQ, a float and an OPQ root
+    val pqRoot = java.nio.file.Files.createTempDirectory("graft-pr4").toString
     val baseNodes = GraphAnn.buildGraphPerCellPq(spark, base, "vec_id",
       "embedding", baseIx, m = 4, efConstruction = 16)
-    val v0 = GraphAnn.publishPqServing(baseNodes, baseIx, root,
+    GraphAnn.publishPqServing(baseNodes, baseIx, pqRoot,
       Some(GraphAnn.pqClumpBound(baseNodes)), Some(baseRef))
-    val res = GraphAnn.rebuildDriftedPqServing(spark, root,
-      base, "vec_id", "embedding", inDistBatch, "vec_id", "embedding")
-    assert(res.isEmpty)
-    assert(graft.pipeline.VersionedIndex.currentVersion(root).contains(v0))
+    val fRoot = java.nio.file.Files.createTempDirectory("graft-pr4f").toString
+    val ivf = Similarity.buildIvf(spark, base.select($"vec_id".as("id"),
+      $"embedding".as("vec")), "id", "vec", nCells = 8, iters = 2)
+    GraphAnn.publishServing(GraphAnn.buildGraphPerCell(spark,
+        ivf.assignments, m = 4, efConstruction = 16), ivf.centroids, fRoot,
+      Some(Similarity.driftStatsAssigned(spark, ivf.assignments, "cell",
+        "vec", ivf.centroids)))
+    val oRoot = java.nio.file.Files.createTempDirectory("graft-pr4o").toString
+    val ox = Opq.buildIvfOpq(spark, base, "vec_id", "embedding", nCells = 8,
+      subspaces = 8, codesPerSub = 8, ivfIters = 2, pqIters = 1,
+      opqIters = 1)
+    val oNodes = Opq.buildGraphCellsOpq(spark, ox, base, "vec_id",
+      "embedding", m = 4, efConstruction = 16)
+    val rotU = Opq.rotateUnitUdf(spark, ox.rotation)
+    Opq.publishPqServingOpq(spark, oNodes, ox, oRoot,
+      Some(GraphAnn.pqClumpBound(oNodes)), Some(Similarity.driftStats(spark,
+        base.select(rotU($"embedding").as("embedding")), "embedding",
+        ox.index.centroids, unit = true)))
+    Seq(pqRoot, fRoot, oRoot).foreach { root =>
+      val v0 = graft.pipeline.VersionedIndex.currentVersion(root)
+      val res = GraphAnn.rebuildDriftedServing(spark, root,
+        base, "vec_id", "embedding", inDistBatch, "vec_id", "embedding")
+      assert(res.isEmpty, root)
+      assert(graft.pipeline.VersionedIndex.currentVersion(root) == v0)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
   }
 }

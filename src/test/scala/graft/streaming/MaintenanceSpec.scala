@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{GraphAnn, Similarity}
+import graft.operators.{GraphAnn, Opq, ServingTier, Similarity}
 import graft.pipeline.PartitionedUpsert
 
 /** The ST8 scheduler leg: land-then-log pending state, the one-tick
@@ -62,6 +62,40 @@ class MaintenanceSpec extends AnyFunSuite {
     val v0 = GraphAnn.publishPqServing(nodes, ix, root,
       Some(GraphAnn.pqClumpBound(nodes)), Some(ref))
     (root, ix, ref, v0)
+  }
+
+  /** Float deployment: raw-space IVF + graph + reference under a fresh
+    * publishServing root; returns (root, v0).
+    */
+  private def publishFloat(): (String, String) = {
+    val ivf = Similarity.buildIvf(spark,
+      base.select($"vec_id".as("id"), $"embedding".as("vec")),
+      "id", "vec", nCells = 8, iters = 2)
+    val assignments = ivf.assignments.localCheckpoint(true)
+    val nodes = GraphAnn.buildGraphPerCell(spark, assignments, m = 4,
+      efConstruction = 16)
+    val ref = Similarity.driftStatsAssigned(spark, assignments, "cell",
+      "vec", ivf.centroids)
+    val root = Files.createTempDirectory("graft-mt-froot").toString
+    (root, GraphAnn.publishServing(nodes, ivf.centroids, root, Some(ref)))
+  }
+
+  /** OPQ deployment: rotated-space IVF-PQ + graph + reference under a
+    * fresh publishPqServingOpq root; returns (root, ix, v0).
+    */
+  private def publishOpq(): (String, Opq.IvfOpqIndex, String) = {
+    val ix = Opq.buildIvfOpq(spark, base, "vec_id", "embedding",
+      nCells = 8, subspaces = 8, codesPerSub = 8, ivfIters = 2,
+      pqIters = 1, opqIters = 2)
+    val nodes = Opq.buildGraphCellsOpq(spark, ix, base, "vec_id",
+      "embedding", m = 4, efConstruction = 16)
+    val rotU = Opq.rotateUnitUdf(spark, ix.rotation)
+    val ref = Similarity.driftStats(spark,
+      base.select(rotU($"embedding").as("embedding")), "embedding",
+      ix.index.centroids, unit = true)
+    val root = Files.createTempDirectory("graft-mt-oroot").toString
+    (root, ix, Opq.publishPqServingOpq(spark, nodes, ix, root,
+      Some(GraphAnn.pqClumpBound(nodes)), Some(ref)))
   }
 
   test("pruneDriftLog: window rows drop, null-id and later rows stay") {
@@ -141,18 +175,8 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("float tier tick: rebuild fires, window prunes, second tick no-op, replay absorbed") {
-    // float deployment: raw-space IVF + graph + reference under a
-    // publishServing root (the PQ tick test's shape on the other tier)
-    val ivf = Similarity.buildIvf(spark,
-      base.select($"vec_id".as("id"), $"embedding".as("vec")),
-      "id", "vec", nCells = 8, iters = 2)
-    val assignments = ivf.assignments.localCheckpoint(true)
-    val nodes = GraphAnn.buildGraphPerCell(spark, assignments, m = 4,
-      efConstruction = 16)
-    val ref = Similarity.driftStatsAssigned(spark, assignments, "cell",
-      "vec", ivf.centroids)
-    val root = Files.createTempDirectory("graft-mt-froot").toString
-    val v0 = GraphAnn.publishServing(nodes, ivf.centroids, root, Some(ref))
+    // float deployment (the PQ tick test's shape on the other tier)
+    val (root, v0) = publishFloat()
     val run = Files.createTempDirectory("graft-mt-ftick").toString
     // the stream's on-disk pending contract, constructed directly:
     // land-then-log the drifted batch under one stream batch id
@@ -167,7 +191,7 @@ class MaintenanceSpec extends AnyFunSuite {
     }
     land(4L)
     val corpus = base.unionByName(batch).localCheckpoint(true)
-    val tick1 = Maintenance.runDriftMaintenanceFloat(spark, s"$run/index",
+    val tick1 = Maintenance.runDriftMaintenance(spark, s"$run/index",
       root, corpus, "vec_id", "embedding", splitFactor = 2, ivfIters = 2,
       m = 4, efConstruction = 16)
     assert(tick1.rebuild.nonEmpty, "the planted mode must rebuild")
@@ -184,7 +208,7 @@ class MaintenanceSpec extends AnyFunSuite {
       .join(served, Seq("id"), "left_anti").isEmpty,
       "every drifted row must be served after the tick")
     // second tick: no-op, no flip
-    val tick2 = Maintenance.runDriftMaintenanceFloat(spark, s"$run/index",
+    val tick2 = Maintenance.runDriftMaintenance(spark, s"$run/index",
       root, corpus, "vec_id", "embedding")
     assert(tick2.pendingBatchIds.isEmpty && tick2.rebuild.isEmpty)
     assert(graft.pipeline.VersionedIndex.currentVersion(root)
@@ -192,7 +216,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // crash replay: the same rows re-land under a NEW id (post-publish
     // re-log) — novelPending absorbs them, state clears, no second flip
     land(5L)
-    val replay = Maintenance.runDriftMaintenanceFloat(spark, s"$run/index",
+    val replay = Maintenance.runDriftMaintenance(spark, s"$run/index",
       root, corpus, "vec_id", "embedding")
     assert(replay.pendingBatchIds == Seq(5L) && replay.rebuild.isEmpty,
       "already-served rows drop in novelPending — nothing to rebuild")
@@ -379,7 +403,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val run = Files.createTempDirectory("graft-mt-crash").toString
     val batch = drifted.localCheckpoint(true)
     val corpus = base.unionByName(batch).localCheckpoint(true)
-    val res = graft.operators.GraphAnn.rebuildDriftedPqServing(spark, root,
+    val res = GraphAnn.rebuildDriftedServing(spark, root,
       corpus, "vec_id", "embedding", batch, "vec_id", "embedding",
       splitFactor = 2, ivfIters = 2, m = 4, efConstruction = 16)
     assert(res.nonEmpty, "fixture: the planted mode must rebuild")
@@ -415,22 +439,8 @@ class MaintenanceSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(run))
   }
 
-  test("OPQ tick: plain tick refuses the OPQ root, rotation survives the flip, replay absorbed") {
-    import graft.operators.Opq
-    // OPQ deployment: rotated-space IVF-PQ + graph + reference under a
-    // publishPqServingOpq root
-    val ix = Opq.buildIvfOpq(spark, base, "vec_id", "embedding",
-      nCells = 8, subspaces = 8, codesPerSub = 8, ivfIters = 2,
-      pqIters = 1, opqIters = 2)
-    val nodes = Opq.buildGraphCellsOpq(spark, ix, base, "vec_id",
-      "embedding", m = 4, efConstruction = 16)
-    val rotU = Opq.rotateUnitUdf(spark, ix.rotation)
-    val ref = Similarity.driftStats(spark,
-      base.select(rotU($"embedding").as("embedding")), "embedding",
-      ix.index.centroids, unit = true)
-    val root = Files.createTempDirectory("graft-mt-oroot").toString
-    val v0 = Opq.publishPqServingOpq(spark, nodes, ix, root,
-      Some(GraphAnn.pqClumpBound(nodes)), Some(ref))
+  test("OPQ tick: the one tick serves an OPQ root, rotation survives the flip, replay absorbed") {
+    val (root, ix, v0) = publishOpq()
     val run = Files.createTempDirectory("graft-mt-otick").toString
     val batch = drifted.localCheckpoint(true)
     def land(id: Long): Unit = {
@@ -443,24 +453,12 @@ class MaintenanceSpec extends AnyFunSuite {
     }
     land(4L)
     val corpus = base.unionByName(batch).localCheckpoint(true)
-    // 1. the rotation-blind tick REFUSES (names the OPQ path) before any
-    // mutation: pending window intact, lease released
-    val ex = intercept[IllegalStateException] {
-      Maintenance.runDriftMaintenance(spark, s"$run/index", root, corpus,
-        "vec_id", "embedding", splitFactor = 2, ivfIters = 2, m = 4,
-        efConstruction = 16)
-    }
-    assert(ex.getMessage.contains("rebuildDriftedPqServingOpq"))
-    assert(Maintenance.pendingDriftBatchIds(spark, s"$run/index")
-      == Seq(4L), "refusal must leave the pending window intact")
-    assert(graft.pipeline.VersionedIndex.currentVersion(root).contains(v0),
-      "refusal must not flip")
-    // 2. the OPQ tick: not skipped (the refusal released the lease),
-    // rebuild fires, rotation carried through the flip BIT-EXACTLY
-    val tick1 = Maintenance.runDriftMaintenanceOpq(spark, s"$run/index",
+    // 1. the one tick reads the OPQ tier from the root: the RAW pending
+    // batch rotates at the tick boundary, the region retrains in rotated
+    // space, and the rotation is carried through the flip BIT-EXACTLY
+    val tick1 = Maintenance.runDriftMaintenance(spark, s"$run/index",
       root, corpus, "vec_id", "embedding", splitFactor = 2, ivfIters = 2,
       m = 4, efConstruction = 16)
-    assert(!tick1.skipped, "the refused tick must have released the lease")
     assert(tick1.rebuild.nonEmpty, "the planted mode must rebuild")
     val res = tick1.rebuild.get
     assert(res.version != v0 &&
@@ -473,76 +471,153 @@ class MaintenanceSpec extends AnyFunSuite {
       rotAfter.zip(ix.rotation).forall {
         case (a, b) => java.util.Arrays.equals(a, b) },
       "the frozen rotation must survive the flip bit-exactly")
-    // every drifted row served; the OPQ cold-start path works on the
-    // flipped version (it throws on a missing rotation/)
+    // 2. every drifted row served; the PQ cold start reads the flipped
+    // version as OPQ
     val served = spark.read.parquet(s"$root/${res.version}/cells")
       .select($"id").distinct()
     assert(batch.select($"vec_id".cast("long").as("id"))
       .join(served, Seq("id"), "left_anti").isEmpty,
       "every drifted row must be served after the tick")
+    assert(ServingTier.of(spark, root, res.version).name == "OPQ")
     val probes = batch.limit(5)
       .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
-    val got = Opq.searchGraphRoutedPqColdStartOpq(spark, root, corpus,
+    val got = GraphAnn.searchGraphRoutedPqColdStart(spark, root, corpus,
       "vec_id", "embedding", probes, "probe_id", "probe_vec",
       nprobe = 8, k = 4, ef = 64, rerankFactor = 16)
     assert(got.count() == 5L * 4, "cold OPQ serve over the flipped root")
     // 3. window cleared; second tick no-op; a crash replay (same rows,
     // new id) is absorbed without a second flip
     assert(Maintenance.pendingDriftBatchIds(spark, s"$run/index").isEmpty)
-    val tick2 = Maintenance.runDriftMaintenanceOpq(spark, s"$run/index",
+    val tick2 = Maintenance.runDriftMaintenance(spark, s"$run/index",
       root, corpus, "vec_id", "embedding")
     assert(tick2.pendingBatchIds.isEmpty && tick2.rebuild.isEmpty)
     land(5L)
-    val replay = Maintenance.runDriftMaintenanceOpq(spark, s"$run/index",
+    val replay = Maintenance.runDriftMaintenance(spark, s"$run/index",
       root, corpus, "vec_id", "embedding")
     assert(replay.pendingBatchIds == Seq(5L) && replay.rebuild.isEmpty,
       "already-served rows drop in novelPending — nothing to rebuild")
     assert(graft.pipeline.VersionedIndex.currentVersion(root)
       .contains(res.version), "no second flip")
-    // 4. the mirror refusal: the OPQ rebuild pointed at a PLAIN root
-    val (plainRoot, _, _, _) = publishBase()
-    val ex2 = intercept[IllegalStateException] {
-      Opq.rebuildDriftedPqServingOpq(spark, plainRoot, corpus, "vec_id",
-        "embedding", batch, "vec_id", "embedding")
-    }
-    assert(ex2.getMessage.contains("not an OPQ serving root"))
-    Seq(root, run, plainRoot).foreach(p =>
+    Seq(root, run).foreach(p =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
 
-  test("tier mismatch refuses at TICK START, quiet ticks included, naming the remedy") {
-    // PQ root ← float tick: would otherwise run quiet prunes silently
-    // and only fail (on a schema mismatch) at the first drift trip
-    val (pqRoot, _, _, _) = publishBase()
+  test("a root that is not a serving root refuses at TICK START, quiet ticks included") {
+    // a publishGraphCells root: graph cells, no artifacts/. Read as a
+    // serving root it would run quiet prunes and fail only at the first
+    // drift trip, with a path-not-found error
+    val (pqRoot, ix, _, _) = publishBase()
+    val cellsRoot = Files.createTempDirectory("graft-mt-cells").toString
+    GraphAnn.publishGraphCells(GraphAnn.buildGraphPerCellPq(spark, base,
+      "vec_id", "embedding", ix, m = 4, efConstruction = 8), cellsRoot)
     val run = Files.createTempDirectory("graft-mt-tier").toString
+    val index = s"$run/index"
+    Similarity.appendDriftLog(spark, s"$index/drift_log",
+      Similarity.DriftReport(4, 1.0, 1.0, 1.0, 0.1, drifted = false),
+      Some(0L))
     val ex = intercept[IllegalStateException] {
-      Maintenance.runDriftMaintenanceFloat(spark, s"$run/index", pqRoot,
-        base, "vec_id", "embedding")
+      Maintenance.runDriftMaintenance(spark, index, cellsRoot, base,
+        "vec_id", "embedding")
     }
-    assert(ex.getMessage.contains("a PQ serving root") &&
-      ex.getMessage.contains("runDriftMaintenance "), ex.getMessage)
-    // float root ← PQ tick
-    val ivf = Similarity.buildIvf(spark,
-      base.select($"vec_id".as("id"), $"embedding".as("vec")),
-      "id", "vec", nCells = 4, iters = 1)
-    val fNodes = GraphAnn.buildGraphPerCell(spark, ivf.assignments, m = 4,
-      efConstruction = 8)
-    val fRef = Similarity.driftStatsAssigned(spark, ivf.assignments,
-      "cell", "vec", ivf.centroids)
-    val fRoot = Files.createTempDirectory("graft-mt-tierf").toString
-    GraphAnn.publishServing(fNodes, ivf.centroids, fRoot, Some(fRef))
-    val ex2 = intercept[IllegalStateException] {
-      Maintenance.runDriftMaintenance(spark, s"$run/index", fRoot,
-        base, "vec_id", "embedding")
-    }
-    assert(ex2.getMessage.contains("a float serving root") &&
-      ex2.getMessage.contains("runDriftMaintenanceFloat"), ex2.getMessage)
-    // ... and a matched quiet tick still no-ops cleanly (the check does
-    // not break the healthy path)
-    val ok = Maintenance.runDriftMaintenance(spark, s"$run/index", pqRoot,
-      base, "vec_id", "embedding")
-    assert(ok.pendingBatchIds.isEmpty && ok.rebuild.isEmpty && !ok.skipped)
-    Seq(pqRoot, fRoot, run).foreach(p =>
+    assert(Seq("not a serving version", "GraphAnn.publishServing",
+      "GraphAnn.publishPqServing", "Opq.publishPqServingOpq")
+      .forall(ex.getMessage.contains), ex.getMessage)
+    assert(spark.read.parquet(s"$index/drift_log").count() == 1L,
+      "the refusal comes before the prune")
+    // ... and a quiet tick on a serving root still no-ops cleanly (the
+    // check does not break the healthy path; the refusal held no lease)
+    val ok = Maintenance.runDriftMaintenance(spark, index, pqRoot, base,
+      "vec_id", "embedding")
+    assert(ok.pendingBatchIds.isEmpty && ok.rebuild.isEmpty &&
+      !ok.skipped && ok.logRowsPruned == 1L)
+    Seq(pqRoot, cellsRoot, run).foreach(p =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+  }
+
+  test("a tick's jobs carry its description; a quiet tick runs as many jobs on every tier") {
+    val roots = Seq("float" -> publishFloat()._1, "PQ" -> publishBase()._1,
+      "OPQ" -> publishOpq()._1)
+    // each root's tier is read from its layout
+    assert(roots.map { case (_, r) => ServingTier.of(spark, r,
+      graft.pipeline.VersionedIndex.currentVersion(r).get).name } ==
+      roots.map(_._1))
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull))
+    }
+    val run = Files.createTempDirectory("graft-mt-label").toString
+    val jobs = roots.map { case (tier, root) =>
+      val index = s"$run/$tier/index"
+      def rep = Similarity.DriftReport(4, 1.0, 1.0, 1.0, 0.1, drifted = false)
+      Similarity.appendDriftLog(spark, s"$index/drift_log", rep, Some(0L))
+      Similarity.appendDriftLog(spark, s"$index/drift_log", rep, Some(1L))
+      graft.ListenerDrain.drain(spark)
+      seen.clear()
+      sc.addSparkListener(listener)
+      val tick =
+        try Maintenance.runDriftMaintenance(spark, index, root, base,
+          "vec_id", "embedding")
+        finally {
+          graft.ListenerDrain.drain(spark)
+          sc.removeSparkListener(listener)
+        }
+      assert(tick.rebuild.isEmpty && tick.logRowsPruned == 2L)
+      import scala.jdk.CollectionConverters._
+      val labels = seen.asScala.toSeq
+      val want = s"maintenance tick: index $index, root $root (tier $tier)"
+      assert(labels.nonEmpty && labels.forall(_ == want), s"$tier: $labels")
+      labels.size
+    }
+    // the tier read itself launches no job
+    assert(jobs.distinct.size == 1,
+      s"quiet-tick jobs on the float, PQ and OPQ roots: $jobs")
+    (roots.map(_._2) :+ run).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+  }
+
+  test("pool threads made under a tick's label do not keep it") {
+    // the tick's publish legs run on graft.core.Pools.io; a thread the
+    // pool makes while the tick's description is set must not carry that
+    // label into later, unrelated jobs
+    val sc = spark.sparkContext
+    implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.io
+    import scala.concurrent.duration._
+    // n legs held at a barrier: each takes its own pool thread
+    def onPoolThreads(n: Int)(body: => Unit): Unit = {
+      val barrier = new java.util.concurrent.CountDownLatch(n)
+      (1 to n).map(_ => scala.concurrent.Future {
+        barrier.countDown()
+        barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        body
+      }).foreach(scala.concurrent.Await.result(_, 2.minutes))
+    }
+    val label = "maintenance tick: index i, root r (tier PQ)"
+    // more legs than the pool holds idle, so it makes threads here
+    graft.core.Jobs.labelled(sc, label)(onPoolThreads(32)(()))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.test.probe") != null)
+          seen.add(String.valueOf(
+            e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try onPoolThreads(32) {
+      sc.setLocalProperty("graft.test.probe", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.probe", null)
+    } finally {
+      graft.ListenerDrain.drain(spark)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val labels = seen.asScala.toSeq
+    assert(labels.size == 32 && !labels.contains(label), s"labels: $labels")
   }
 }
