@@ -22,8 +22,8 @@ Prints the phase totals, then the call sites by sample count with their
 phase split. Record with e.g.
 `java -XX:StartFlightRecording=filename=run.jfr,settings=profile ...`;
 `perfbench/run.py` fixes its JVM options, so to record a benchmark run,
-launch `perfbench.Main` on the classpath it saves in
-`perfbench/target/classpath.txt` with its options plus that flag.
+pass that flag after `--` to `scripts/bench_jvm.py`, which launches the
+run with `run.py`'s classpath and options plus the flags given.
 `jfr summary run.jfr` counts other events, e.g. `jdk.ProcessStart` forks.
 """
 import argparse

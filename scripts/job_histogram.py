@@ -21,7 +21,8 @@ Produce a log by starting the JVM with
 `-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=<dir>
 -Dspark.eventLog.rolling.enabled=false` (Spark 4 otherwise writes a rolling
 log directory); add `-Dspark.eventLog.compress=true
--Dspark.eventLog.compression.codec=zstd` for a compressed one.
+-Dspark.eventLog.compression.codec=zstd` for a compressed one. For a
+benchmark run, pass those flags after `--` to `scripts/bench_jvm.py`.
 """
 import argparse
 import collections

@@ -12,4 +12,10 @@ object Jobs {
     sc.setJobDescription(description)
     try body finally sc.setJobDescription(null)
   }
+
+  /** The calling thread's job description (null when none is set): what
+    * work it hands to a [[Pools.io]] thread runs [[labelled]] with.
+    */
+  def description(sc: SparkContext): String =
+    sc.getLocalProperty("spark.job.description")
 }

@@ -1129,22 +1129,93 @@ object GraphAnn {
   }
 
   /** Collect the probe batch (bounded — a serving batch, never the
-    * corpus) as (id, vec). A null id or vector has no route and no
-    * beam, so it is refused up front with the column's name rather than
-    * surfacing as an NPE inside the decoder or the normalizer. The rows
-    * are read by index: a typed `.as[...]` would derive a reflection
-    * encoder on every call.
+    * corpus) as (id, vec), in the frame's row order. A null id, a null
+    * vector or a null vector element has no route and no beam, so it is
+    * refused up front with the column's name rather than surfacing as an
+    * NPE inside the decoder or the normalizer (or, for an element, as a
+    * silent 0.0f).
+    *
+    * A frame whose analyzed plan is a `LocalRelation` (a serving
+    * request's `createDataFrame` batch) with an integral id column and
+    * an `array<float>` vector column is read straight from the rows the
+    * driver already holds: no Spark action, so no analysis, optimization,
+    * planning or codegen of a collect. Any other frame is collected with
+    * `select(cast).collect()`; its rows are read by index, since a typed
+    * `.as[...]` would derive a reflection encoder on every call. Both
+    * reads refuse the same rows with the same messages.
     */
-  private def collectProbes(probes: DataFrame, probeId: String,
+  private[operators] def collectProbes(probes: DataFrame, probeId: String,
       probeVec: String): Array[(Long, Array[Float])] =
-    probes.select(col(probeId).cast("long"), col(probeVec)).collect().map { r =>
-      if (r.isNullAt(0)) throw new IllegalArgumentException(
-        s"routed search: probe id column `$probeId` holds a null " +
-          "(or a value that does not cast to long)")
-      if (r.isNullAt(1)) throw new IllegalArgumentException(
-        s"routed search: probe vector column `$probeVec` holds a null")
-      (r.getLong(0), r.getSeq[Float](1).toArray)
+    localProbes(probes, probeId, probeVec).map(_.toArray).getOrElse(
+      probes.select(col(probeId).cast("long"), col(probeVec)).collect().map(r =>
+        probe(probeId, probeVec, r.isNullAt(0), r.getLong(0),
+          if (r.isNullAt(1)) null
+          else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+            r.getSeq[Any](1)))))
+
+  /** One probe row, refused as [[collectProbes]] says: `idNull` is
+    * checked before `id` is read, and `vec` is null for a null vector.
+    */
+  private def probe(probeId: String, probeVec: String, idNull: Boolean,
+      id: => Long, vec: org.apache.spark.sql.catalyst.util.ArrayData)
+      : (Long, Array[Float]) = {
+    if (idNull) throw new IllegalArgumentException(
+      s"routed search: probe id column `$probeId` holds a null " +
+        "(or a value that does not cast to long)")
+    if (vec == null) throw new IllegalArgumentException(
+      s"routed search: probe vector column `$probeVec` holds a null")
+    var i = 0
+    while (i < vec.numElements()) {
+      if (vec.isNullAt(i)) throw new IllegalArgumentException(
+        s"routed search: probe vector column `$probeVec` holds a null element")
+      i += 1
     }
+    (id, vec.toFloatArray())
+  }
+
+  /** [[collectProbes]]' read of a frame analyzed to a `LocalRelation`
+    * whose `probeId` column (resolved with the session's resolver) is
+    * integral and whose `probeVec` column is `array<float>`: its rows,
+    * refused lazily as they are read. None for any other frame — an
+    * ambiguous, unknown or nested name included, which the collect then
+    * reports as Spark does.
+    */
+  private[operators] def localProbes(probes: DataFrame, probeId: String,
+      probeVec: String): Option[Iterator[(Long, Array[Float])]] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types._
+    probes.queryExecution.analyzed match {
+      case rel: LocalRelation if !rel.isStreaming =>
+        val resolver = probes.sparkSession.sessionState.conf.resolver
+        def ordinal(name: String): Option[Int] =
+          UnresolvedAttribute.quotedString(name).nameParts match {
+            case Seq(n) => rel.output.indices.filter(i =>
+                resolver(rel.output(i).name, n)) match {
+              case Seq(i) => Some(i)
+              case _ => None
+            }
+            case _ => None
+          }
+        for {
+          i <- ordinal(probeId)
+          v <- ordinal(probeVec)
+          readId <- rel.output(i).dataType match {
+            case LongType => Some((r: InternalRow) => r.getLong(i))
+            case IntegerType => Some((r: InternalRow) => r.getInt(i).toLong)
+            case ShortType => Some((r: InternalRow) => r.getShort(i).toLong)
+            case ByteType => Some((r: InternalRow) => r.getByte(i).toLong)
+            case _ => None
+          }
+          if (rel.output(v).dataType match {
+            case ArrayType(FloatType, _) => true
+            case _ => false
+          })
+        } yield rel.data.iterator.map(r => probe(probeId, probeVec,
+          r.isNullAt(i), readId(r), if (r.isNullAt(v)) null else r.getArray(v)))
+      case _ => None
+    }
+  }
 
   /** Route each probe of the batch to its nprobe cells: routing in RAW
     * space (the centroids' space), searching on unit vectors.
@@ -1328,6 +1399,30 @@ object GraphAnn {
         reader))
   }
 
+  /** Run a publish's independent directory writes CONCURRENTLY (guide
+    * §2.6: the scheduler back-fills one write's task tail with the
+    * other's tasks; the legs touch disjoint dirs and their inputs are
+    * checkpointed by the callers). Await-all-then-rethrow. Each leg runs
+    * under the calling thread's job description: a pool thread inherits
+    * none ([[graft.core.Pools.io]]).
+    */
+  private[operators] def overlapWrites(spark: SparkSession,
+      legs: (() => Unit)*): Unit = {
+    import scala.concurrent.{Await, Future}
+    // dedicated cached pool, NOT the process-global EC: a publish leg that
+    // itself overlaps its side writes (publishPqServingOpq → writeIvfPq)
+    // nests overlap, and the fixed-size global pool can serialize or
+    // wedge the inner legs on a low-core machine (r19 advice)
+    implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.io
+    val sc = spark.sparkContext
+    val description = graft.core.Jobs.description(sc)
+    legs.map(l => Future(graft.core.Jobs.labelled(sc, description)(l())))
+      .map(f => scala.util.Try(
+        Await.result(f, scala.concurrent.duration.Duration.Inf)))
+      .collectFirst { case scala.util.Failure(e) => throw e }
+    ()
+  }
+
   /** Publish the COMPLETE FLOAT serving state under one version — graph
     * cells AND the routing head ([[Similarity.writeIvfHead]]: centroids
     * + drift reference; the nodes table already carries the vectors, so
@@ -1336,45 +1431,45 @@ object GraphAnn {
     * and the monitor's reference, and a fresh process serves from the
     * root alone ([[searchGraphRoutedColdStart]]). Layout:
     * `<root>/v<NNN>/cells` + `<root>/v<NNN>/artifacts`.
+    *
+    * After the flip the publish hands this JVM's searchers the head it
+    * just wrote: the root's [[routingHead]] entry becomes the written
+    * centroids (copied, in [[Similarity.readCentroids]]' cell order) under
+    * the stamp a search computes for the version, keeping the held cells
+    * reader when it was built for `nodes`' session and SQL settings. The
+    * first search after the publish then reads no centroids.
     */
-
-  /** Run a publish's independent directory writes CONCURRENTLY (guide
-    * §2.6: the scheduler back-fills one write's task tail with the
-    * other's tasks; the legs touch disjoint dirs and their inputs are
-    * checkpointed by the callers). Await-all-then-rethrow.
-    */
-  private[operators] def overlapWrites(legs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    // dedicated cached pool, NOT the process-global EC: a publish leg that
-    // itself overlaps its side writes (publishPqServingOpq → writeIvfPq)
-    // nests overlap, and the fixed-size global pool can serialize or
-    // wedge the inner legs on a low-core machine (r19 advice)
-    implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.io
-    legs.map(l => Future(l()))
-      .map(f => scala.util.Try(
-        Await.result(f, scala.concurrent.duration.Duration.Inf)))
-      .collectFirst { case scala.util.Failure(e) => throw e }
-    ()
-  }
-
   def publishServing(nodes: DataFrame,
       centroids: Array[(Int, Array[Float])], root: String,
       driftStats: Option[Similarity.DriftStats] = None,
-      keepVersions: Int = 2): String =
-    graft.pipeline.VersionedIndex.publishInto(root, keepVersions) { dir =>
-      overlapWrites(
+      keepVersions: Int = 2): String = {
+    val spark = nodes.sparkSession
+    val v = graft.pipeline.VersionedIndex.publishInto(root, keepVersions) { dir =>
+      overlapWrites(spark,
         () => writeGraphCells(nodes, s"$dir/cells"),
-        () => Similarity.writeIvfHead(nodes.sparkSession, centroids,
-          s"$dir/artifacts", driftStats))
+        () => Similarity.writeIvfHead(spark, centroids, s"$dir/artifacts",
+          driftStats))
     }
+    val stamp = headStamp(spark, root, v)
+    val confs = spark.sessionState.conf.getAllConfs
+    val written = centroids.map { case (c, x) => (c, x.clone()) }.sortBy(_._1)
+    routingHeads.compute(root, (_, held) => RoutingHead(stamp, written,
+      Option(held).flatMap(_.reader).filter(_.builtFor(spark, confs))))
+    v
+  }
 
   /** COLD-START float serving — [[searchGraphRoutedPqColdStart]]'s
     * float twin: resolve CURRENT on every call, take the version's
     * routing centroids from [[routingHead]] (decoded at most once per
-    * published version; the drift reference is not read — routing
+    * published version, and not at all after this JVM's
+    * [[publishServing]] of it; the drift reference is not read — routing
     * never needs it), serve through [[searchGraphRoutedPersisted]]
     * (row-identical to the in-memory routed search over the same
     * files). No corpus handle needed — the cells carry the floats.
+    *
+    * A request whose probes are a `LocalRelation` ([[collectProbes]])
+    * builds its search with no Spark action: the caller's own action on
+    * the returned frame is the request's one SQL execution and one job.
     */
   def searchGraphRoutedColdStart(spark: SparkSession, root: String,
       probes: DataFrame, probeId: String, probeVec: String, nprobe: Int,
@@ -1385,7 +1480,7 @@ object GraphAnn {
         s"no published serving state under $root"))
     val head = routingHead(spark, root, v)
     persistedSearch(spark, s"$root/$v/cells", s"root $root version $v",
-      head.centroids, Some(head.reader.read), probes, probeId, probeVec,
+      head.centroids, head.reader.map(_.read), probes, probeId, probeVec,
       nprobe, k, ef, tombstones, allowed)
   }
 
@@ -1397,18 +1492,21 @@ object GraphAnn {
     * and republished at the same path and version name — changes the
     * stamp and the next call re-reads; a hit costs one directory
     * listing and no Spark job. One entry per root; `compute` serializes
-    * a root's concurrent misses into one read.
+    * a root's concurrent misses into one read. [[publishServing]] seeds
+    * the entry with the head it wrote, so only a root published by
+    * another process, or without [[publishServing]], is read here.
     *
     * Beside the centroids the entry keeps the cells reader the search
-    * reads the version's files with ([[RoutedGraphSearchExec.cellsReader]]:
-    * a Hadoop-configuration copy and its broadcast). It is rebuilt with
-    * the head, and on a hit whose session or SQL settings
+    * reads the files with ([[RoutedGraphSearchExec.cellsReader]]: a
+    * Hadoop-configuration copy and its broadcast). The reader does not
+    * depend on the version, so a new head keeps it; it is rebuilt when
+    * the entry has none or the session or SQL settings
     * (`sessionState.conf.getAllConfs`) differ from those it was built
     * under. A direct `sparkContext.hadoopConfiguration` edit is not seen
-    * by that check: it takes effect at the next publish.
+    * by that check: it takes effect when a reader is next built.
     */
   private final case class RoutingHead(stamp: Seq[String],
-      centroids: Array[(Int, Array[Float])], reader: CellsReader)
+      centroids: Array[(Int, Array[Float])], reader: Option[CellsReader])
   /** A cells reader and the session (held weakly) and settings it was
     * built under.
     */
@@ -1430,18 +1528,37 @@ object GraphAnn {
       RoutedGraphSearchExec.cellsReader(spark))
   }
 
+  /** A version's routing-head stamp: its name and the part-file names of
+    * its `artifacts/centroids`.
+    */
+  private def headStamp(spark: SparkSession, root: String,
+      version: String): Seq[String] =
+    version +: graft.core.Fs.listDataFileNames(spark,
+      s"$root/$version/artifacts/centroids")
+
+  /** The root's routing head for `version`, as [[RoutingHead]] says: the
+    * held entry on a stamp hit, else the version's centroids read with
+    * the held reader kept; then a reader built unless the held one was
+    * built for `spark` and its current SQL settings.
+    */
   private def routingHead(spark: SparkSession, root: String,
       version: String): RoutingHead = {
-    val dir = s"$root/$version/artifacts/centroids"
-    val stamp = version +: graft.core.Fs.listDataFileNames(spark, dir)
+    val stamp = headStamp(spark, root, version)
     val confs = spark.sessionState.conf.getAllConfs
-    routingHeads.compute(root, (_, held) =>
-      if (held == null || held.stamp != stamp)
-        RoutingHead(stamp, Similarity.readCentroids(spark, dir),
-          buildCellsReader(spark, confs))
-      else if (held.reader.builtFor(spark, confs)) held
-      else held.copy(reader = buildCellsReader(spark, confs)))
+    routingHeads.compute(root, (_, held) => {
+      val head =
+        if (held != null && held.stamp == stamp) held
+        else RoutingHead(stamp, Similarity.readCentroids(spark,
+          s"$root/$version/artifacts/centroids"), Option(held).flatMap(_.reader))
+      if (head.reader.exists(_.builtFor(spark, confs))) head
+      else head.copy(reader = Some(buildCellsReader(spark, confs)))
+    })
   }
+
+  /** The root's held routing head: its stamp and centroids. */
+  private[operators] def heldRoutingHead(
+      root: String): Option[(Seq[String], Array[(Int, Array[Float])])] =
+    Option(routingHeads.get(root)).map(h => (h.stamp, h.centroids))
 
   /** Roots the routing-head memo holds an entry for. */
   private[operators] def routingHeadRoots: Int = routingHeads.size
@@ -1470,7 +1587,7 @@ object GraphAnn {
       driftStats: Option[Similarity.DriftStats] = None,
       keepVersions: Int = 2): String =
     graft.pipeline.VersionedIndex.publishInto(root, keepVersions) { dir =>
-      overlapWrites(
+      overlapWrites(nodes.sparkSession,
         () => writeGraphCells(nodes, s"$dir/cells"),
         () => Similarity.writeIvfPq(index, s"$dir/artifacts", clumpBound,
           driftStats))

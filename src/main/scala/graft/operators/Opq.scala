@@ -430,7 +430,7 @@ object Opq {
       driftStats: Option[Similarity.DriftStats] = None,
       keepVersions: Int = 2): String =
     graft.pipeline.VersionedIndex.publishInto(root, keepVersions) { dir =>
-      GraphAnn.overlapWrites(
+      GraphAnn.overlapWrites(spark,
         () => GraphAnn.writeGraphCells(nodes, s"$dir/cells"),
         () => Similarity.writeIvfPq(ix.index, s"$dir/artifacts", clumpBound,
           driftStats),

@@ -1345,8 +1345,13 @@ object Similarity {
     // dedicated cached pool (see GraphAnn.overlapWrites): these legs run
     // NESTED inside a publish's own overlap — the global EC can starve
     implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.io
+    // a pool thread inherits no job description: each leg runs under this
+    // thread's
+    val description = graft.core.Jobs.description(spark.sparkContext)
+    def leg(body: => Unit) = Future(
+      graft.core.Jobs.labelled(spark.sparkContext, description)(body))
     val sideWrites = Seq(
-      Future {
+      leg {
         driftStats match {
           case Some(st) => writeDriftStats(spark, st, s"$dir/drift_stats")
           case None =>
@@ -1355,18 +1360,18 @@ object Similarity {
             if (fs.exists(p)) fs.delete(p, true)
         }
       },
-      Future {
+      leg {
         index.centroids.toSeq.map { case (ci, c) => (ci, c.toSeq) }
           .toDF("cell", "centroid")
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
       },
-      Future {
+      leg {
         (for { sc <- 0 until b.subspaces; code <- b.centroids(sc).indices }
           yield (sc, code, b.centroids(sc)(code).toSeq))
           .toDF("sub", "code", "centroid")
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
       },
-      Future {
+      leg {
         Seq((b.subspaces, b.subDim, clumpBound))
           .toDF("subspaces", "sub_dim", "clump_bound")
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")

@@ -1110,11 +1110,26 @@ class GraphAnnSpec extends AnyFunSuite {
   private lazy val cellNodes2 = GraphAnn.buildGraphPerCell(spark,
     ivf2.assignments, m = M, efConstruction = 48).localCheckpoint(true)
 
+  /** A copy of `root` at a fresh path: a root this JVM did not publish. */
+  private def copyRoot(root: String): String = {
+    val from = java.nio.file.Paths.get(root)
+    val to = java.nio.file.Files.createTempDirectory("graft-root-copy")
+    val walk = java.nio.file.Files.walk(from)
+    try walk.forEach { p =>
+      val q = to.resolve(from.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
+      else java.nio.file.Files.copy(p, q)
+    } finally walk.close()
+    to.toString
+  }
+
   test("cold start: a repeat search on one version reads no routing head") {
-    val root = java.nio.file.Files.createTempDirectory("graft-head1").toString
+    val published = java.nio.file.Files.createTempDirectory("graft-head1").toString
     val ref = Similarity.driftStatsAssigned(spark, ivf.assignments, "cell",
       "vec", ivf.centroids)
-    val v = GraphAnn.publishServing(cellNodes, ivf.centroids, root, Some(ref))
+    val v = GraphAnn.publishServing(cellNodes, ivf.centroids, published, Some(ref))
+    // a root this JVM did not publish holds no seeded head
+    val root = copyRoot(published)
     val (first, missSites) = withJobSites(coldStart(root))
     assert(headReads(missSites).nonEmpty,
       "the first search on a version must read its centroids")
@@ -1175,7 +1190,7 @@ class GraphAnnSpec extends AnyFunSuite {
       assert(coldStart(root) == expected) } == 1,
       "two searches on one version build one reader")
     val v1 = GraphAnn.publishServing(cellNodes2, ivf2.centroids, root)
-    assert(builds(coldStart(root)) == 1, "a publish builds a new reader")
+    assert(builds(coldStart(root)) == 0, "a publish keeps the reader")
     assert(builds(coldStart(root)) == 0)
     spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
     try assert(builds { assert(coldStart(root) ==
@@ -1470,5 +1485,208 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(df.queryExecution.executedPlan.isInstanceOf[RoutedGraphSearchExec],
       df.queryExecution.executedPlan.treeString)
     graft.core.Fs.delete(spark, dir)
+  }
+
+  // ---- the probe read without an action, and the head a publish hands over
+
+  private val probeSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("probe_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("probe_vec",
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
+  /** A `createDataFrame` probe batch: its analyzed plan is a LocalRelation. */
+  private def localBatch(rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType = probeSchema) = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+  /** The same batch behind a projection: read by the collect path. */
+  private def projected(df: org.apache.spark.sql.DataFrame) =
+    df.select(df.columns.map(col).toSeq: _*)
+  private def probeRead(df: org.apache.spark.sql.DataFrame) =
+    scala.util.Try(GraphAnn.collectProbes(df, "probe_id", "probe_vec").toSeq
+      .map { case (id, v) => (id, v.map(java.lang.Float.floatToRawIntBits).toSeq) })
+      .toEither.left.map(e => (e.getClass, e.getMessage))
+
+  test("probe collect: a null vector element is refused on the local and the collect path") {
+    val root = java.nio.file.Files.createTempDirectory("graft-null-elem").toString
+    GraphAnn.publishServing(cellNodes, ivf.centroids, root)
+    val vec = memoProbes.select($"probe_vec").as[Array[Float]].head()
+    val batch = localBatch(Seq(org.apache.spark.sql.Row(0L, vec.toSeq),
+      org.apache.spark.sql.Row(1L, vec.toSeq.updated(2, null))))
+    assert(GraphAnn.localProbes(batch, "probe_id", "probe_vec").isDefined)
+    assert(GraphAnn.localProbes(projected(batch), "probe_id", "probe_vec").isEmpty)
+    Seq(batch, projected(batch)).foreach { p =>
+      val e = intercept[IllegalArgumentException](GraphAnn.searchGraphRoutedColdStart(
+        spark, root, p, "probe_id", "probe_vec", nprobe = 2, k = 5, ef = 32))
+      assert(e.getMessage ==
+        "routed search: probe vector column `probe_vec` holds a null element")
+    }
+  }
+
+  test("probe collect: a local batch reads as the collect path does, row for row") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val element = Gen.frequency(8 -> Gen.choose(-2f, 2f).map(f => f: Any),
+      1 -> Gen.const(-0.0f), 1 -> Gen.const(null))
+    val vector = Gen.frequency(8 -> Gen.choose(0, 4).flatMap(Gen.listOfN(_, element)),
+      1 -> Gen.const(null))
+    val gen = for {
+      long <- Gen.oneOf(true, false)
+      n <- Gen.choose(0, 6)
+      // Long ids beyond the Int range; a few values, so ids repeat
+      ids <- Gen.listOfN(n, Gen.frequency(8 -> Gen.choose(-2, 3).map(i =>
+        if (long) (i * 3000000000L: Any) else (i: Any)), 1 -> Gen.const(null)))
+      vecs <- Gen.listOfN(n, vector)
+    } yield (long, ids.zip(vecs).map { case (i, v) => Row(i, v) })
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(60),
+      Prop.forAllNoShrink(gen) { case (long, rows) =>
+        val batch = localBatch(rows, probeSchema.copy(fields = probeSchema.fields.updated(0,
+          StructField("probe_id", if (long) LongType else IntegerType))))
+        GraphAnn.localProbes(batch, "probe_id", "probe_vec").isDefined &&
+          GraphAnn.localProbes(projected(batch), "probe_id", "probe_vec").isEmpty &&
+          probeRead(batch) == probeRead(projected(batch))
+      })
+    assert(res.passed, res.status.toString)
+  }
+
+  test("probe collect: a local batch resolves names as the session does, else takes the collect path") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def batch(id: DataType, vec: DataType, idValue: Any, extra: Seq[StructField] = Nil,
+        vecValue: Seq[Any] = Seq(1f, 2f)) =
+      localBatch(Seq(Row.fromSeq(Seq(idValue, vecValue) ++ extra.map(_ => 7L))),
+        StructType(Seq(StructField("probe_id", id), StructField("probe_vec", vec)) ++ extra))
+    def local(df: org.apache.spark.sql.DataFrame, probeId: String = "probe_id") =
+      GraphAnn.localProbes(df, probeId, "probe_vec").isDefined
+    def read(df: org.apache.spark.sql.DataFrame, probeId: String = "probe_id") =
+      GraphAnn.collectProbes(df, probeId, "probe_vec").toSeq.map(p => (p._1, p._2.toSeq))
+    val floats = ArrayType(FloatType)
+    // case-insensitive by default, like the collect's own resolution
+    val longs = batch(LongType, floats, 7L)
+    assert(local(longs, "PROBE_ID") && read(longs, "PROBE_ID") == Seq((7L, Seq(1f, 2f))))
+    val strings = batch(StringType, floats, "7")
+    assert(!local(strings) && read(strings) == Seq((7L, Seq(1f, 2f))))
+    assert(!local(batch(LongType, ArrayType(DoubleType), 7L, vecValue = Seq(1.0, 2.0))))
+    val twice = batch(LongType, floats, 7L, Seq(StructField("PROBE_ID", LongType)))
+    assert(!local(twice))
+    assert(intercept[org.apache.spark.sql.AnalysisException](read(twice))
+      .getMessage.contains("AMBIGUOUS"))
+  }
+
+  /** Run `body`; return it with the SQL executions and jobs it started
+    * from this thread. */
+  private def executionsAndJobs[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"graft-test-${java.util.UUID.randomUUID()}"
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && Option(e.properties.getProperty("spark.job.tags"))
+            .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if s.jobTags.contains(tag) => executions.incrementAndGet()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val out = body
+      graft.ListenerDrain.drain(spark)
+      (out, executions.get, jobs.get)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("cold start: a search over a local batch is one SQL execution and one job") {
+    val root = java.nio.file.Files.createTempDirectory("graft-one-exec").toString
+    val v = GraphAnn.publishServing(cellNodes, ivf.centroids, root)
+    val batch = localBatch(memoProbes.as[(Long, Array[Float])].collect().toSeq
+      .map { case (i, x) => org.apache.spark.sql.Row(i, x.toSeq) })
+    val (got, executions, jobs) = executionsAndJobs(rows(
+      GraphAnn.searchGraphRoutedColdStart(spark, root, batch, "probe_id",
+        "probe_vec", nprobe = 2, k = 5, ef = 32)))
+    assert((executions, jobs) == (1, 1))
+    assert(got == persisted(s"$root/$v/cells", ivf.centroids))
+  }
+
+  test("publish: the seeded head is bitwise the published centroids, under the search's stamp") {
+    val root = java.nio.file.Files.createTempDirectory("graft-seeded").toString
+    val v = GraphAnn.publishServing(cellNodes, ivf.centroids.reverse, root)
+    val dir = s"$root/$v/artifacts/centroids"
+    val (stamp, held) = GraphAnn.heldRoutingHead(root).getOrElse(fail("no seeded head"))
+    def bits(cs: Array[(Int, Array[Float])]) =
+      cs.toSeq.map { case (c, x) => (c, x.map(java.lang.Float.floatToRawIntBits).toSeq) }
+    assert(bits(held) == bits(Similarity.readCentroids(spark, dir)))
+    assert(stamp == v +: graft.core.Fs.listDataFileNames(spark, dir))
+    assert(held.forall { case (_, x) => !ivf.centroids.exists(_._2 eq x) },
+      "the head holds a copy of the caller's arrays")
+  }
+
+  test("cold start: the first search after a publish reads no head and builds no reader") {
+    val root = java.nio.file.Files.createTempDirectory("graft-handoff").toString
+    GraphAnn.publishServing(cellNodes, ivf.centroids, root)
+    coldStart(root)
+    val v1 = GraphAnn.publishServing(cellNodes2, ivf2.centroids, root)
+    val before = GraphAnn.cellsReaderBuilds
+    val (got, sites) = withJobSites(coldStart(root))
+    assert(headReads(sites).isEmpty, headReads(sites))
+    assert(GraphAnn.cellsReaderBuilds == before)
+    assert(got == persisted(s"$root/$v1/cells", ivf2.centroids))
+  }
+
+  test("cold start: a root republished without publishServing is re-read") {
+    val root = java.nio.file.Files.createTempDirectory("graft-foreign").toString
+    GraphAnn.publishServing(cellNodes, ivf.centroids, root)
+    coldStart(root)
+    val v1 = graft.pipeline.VersionedIndex.publishInto(root) { dir =>
+      GraphAnn.writeGraphCells(cellNodes2, s"$dir/cells")
+      Similarity.writeIvfHead(spark, ivf2.centroids, s"$dir/artifacts")
+    }
+    val (got, sites) = withJobSites(coldStart(root))
+    assert(headReads(sites).nonEmpty, "the new version's centroids must be read")
+    assert(got == persisted(s"$root/$v1/cells", ivf2.centroids))
+  }
+
+  test("publish: every job of a labelled caller's publish carries its label") {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descriptions.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull))
+    }
+    val label = s"maintenance tick ${java.util.UUID.randomUUID()}"
+    val roots = Seq("graft-label-f", "graft-label-pq")
+      .map(java.nio.file.Files.createTempDirectory(_).toString)
+    cellNodes.count(); pqNodes.count()
+    sc.addSparkListener(listener)
+    try {
+      graft.core.Jobs.labelled(sc, label) {
+        GraphAnn.publishServing(cellNodes, ivf.centroids, roots(0))
+        GraphAnn.publishPqServing(pqNodes, ivfPq, roots(1))
+      }
+      graft.ListenerDrain.drain(spark)
+    } finally sc.removeSparkListener(listener)
+    val seen = descriptions.asScala.toSeq
+    assert(seen.nonEmpty && seen.forall(_ == label), seen.distinct)
+    // every idle pool thread (and more) at once: none keeps the label
+    val n = 8
+    val barrier = new java.util.concurrent.CyclicBarrier(n)
+    implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.io
+    val left = scala.concurrent.Await.result(scala.concurrent.Future.sequence(
+      (1 to n).map(_ => scala.concurrent.Future {
+        barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+        graft.core.Jobs.description(sc)
+      })), scala.concurrent.duration.Duration(60, "s"))
+    assert(left.forall(_ == null), left)
   }
 }
