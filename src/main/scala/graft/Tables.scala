@@ -109,10 +109,6 @@ object Tables {
       normalizeInts(normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))))
   }
 
-  /** Register all tables as temp views (for spark.sql entry points). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
-
   // keyed by (path, cols) with the file fingerprint INSIDE the value: a
   // rewrite of the path replaces (never accumulates beside) the old entry,
   // so a long-lived process rewriting one table holds exactly one entry per

@@ -73,12 +73,6 @@ object TextKeys {
     cur
   }
 
-  /** X7: lossy decode — UTF-8 with replacement (charset detection is an
-    * external concern; the trait-level seam is the byte→string boundary).
-    */
-  def decodeUtf8Lossy(bytes: Array[Byte]): String =
-    if (bytes == null) null else new String(bytes, UTF_8)
-
   /** Rolling polynomial fingerprint of normalized text (document
     * fingerprinting for the dedup/text-analysis operators).
     */

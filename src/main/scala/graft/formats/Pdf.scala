@@ -1,7 +1,7 @@
 package graft.formats
 
 import java.io.ByteArrayOutputStream
-import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.util.zip.{Deflater, Inflater}
 
 /** Minimal PDF text extraction (SURVEY §2.1 S13, §2.9 C1), JDK-only.
@@ -234,9 +234,6 @@ object Pdf {
     w(s"trailer\n<< /Size ${offsets.length + 1} /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
     out.toByteArray
   }
-
-  /** UTF-8 helper for callers chunking extracted text. */
-  def extractTextUtf8(pdf: Array[Byte]): Array[Byte] = extractText(pdf).getBytes(UTF_8)
 
   /** Multi-page fixture: one page object + one content stream per entry of
     * `pages` (each a list of text lines), under a single /Pages node —

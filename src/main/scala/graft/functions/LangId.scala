@@ -47,10 +47,4 @@ object LangId {
     val (bestLang, bestScore) = scores.maxBy { case (l, sc) => (sc, l) }
     if (bestScore <= 0.0) "und" else bestLang
   }
-
-  /** Per-language stopword hit count (SQL-oracle-friendly component). */
-  def stopwordHits(text: String, lang: String): Int = {
-    val sw = stopwords.getOrElse(lang, Set.empty)
-    WhitespaceTokenizer.tokens(text.toLowerCase).count(sw.contains)
-  }
 }

@@ -14,7 +14,18 @@ import org.apache.spark.sql.functions._
   * adjacency is closed over (part, seg) and 0 everywhere otherwise.
   */
 final case class GraphNode(part: Int, id: Long, vec: Array[Float],
-    level: Int, neighbors: Array[Array[Long]], seg: Int = 0)
+    level: Int, neighbors: Array[Array[Long]], seg: Int = 0) extends SegmentNode
+
+/** A stored graph node's structure, whatever payload it carries: what a
+  * beam needs besides the payload ([[GraphAnn.searchSegment]]).
+  */
+private[operators] trait SegmentNode {
+  def part: Int
+  def id: Long
+  def level: Int
+  def neighbors: Array[Array[Long]]
+  def seg: Int
+}
 
 /** Partitioned graph-ANN — an HNSW-style navigable-small-world tier
   * (Malkov & Yashunin 2016, arXiv:1603.09320), shaped for Spark the way
@@ -319,49 +330,37 @@ object GraphAnn {
     val maxSegOf = sizes.groupBy(_._1._1)
       .map { case (p, xs) => p -> xs.map(_._1._2).max }
     // greedy first-fit pack of the under-target segments, in sorted
-    // order; each merged group maps to the (part, seg) it will emit as
-    val group = scala.collection.mutable.Map.empty[(Int, Int), (Int, Int)]
-    if (withinPart) {
-      var curPart = Integer.MIN_VALUE
+    // order (per cell when withinPart); each merged group maps to the
+    // (part, seg) it will emit as
+    val bins = if (withinPart) sizes.groupBy(_._1._1).toSeq.sortBy(_._1)
+        .map(_._2.sortBy { case ((_, s), n) => (n, s) })
+      else Seq(sizes)
+    val group = bins.flatMap { bin =>
       var gid = 0; var acc = 0L; var members = 0
-      sizes.sortBy { case ((p, s), n) => (p, n, s) }.foreach {
-        case (key @ (p, _), n) =>
-          if (p != curPart) { curPart = p; gid = 0; acc = 0L; members = 0 }
-          if (n < targetNodesPerSegment) {
-            if (members > 0 && acc + n > targetNodesPerSegment) {
-              gid += 1; acc = 0L; members = 0
-            }
-            group(key) = (p, maxSegOf(p) + 1 + gid); acc += n; members += 1
-          }
-      }
-    } else {
-      var gid = 0; var acc = 0L; var members = 0
-      sizes.foreach { case (key, n) =>
-        if (n < targetNodesPerSegment) {
-          if (members > 0 && acc + n > targetNodesPerSegment) {
-            gid += 1; acc = 0L; members = 0
-          }
-          group(key) = (maxPart + 1 + gid, 0); acc += n; members += 1
+      bin.filter(_._2 < targetNodesPerSegment).map { case (key @ (p, _), n) =>
+        if (members > 0 && acc + n > targetNodesPerSegment) {
+          gid += 1; acc = 0L; members = 0
         }
+        acc += n; members += 1
+        key -> (if (withinPart) (p, maxSegOf(p) + 1 + gid) else (maxPart + 1 + gid, 0))
       }
-    }
+    }.toMap
     // singleton groups rebuild nothing — their segment passes through
     val counts = group.groupBy(_._2).map { case (t, ms) => t -> ms.size }
     val merged = group.filter { case (_, t) => counts(t) > 1 }.toMap
+    if (merged.isEmpty) return nodes
+    val sizeOf = sizes.toMap
     val bc = spark.sparkContext.broadcast(merged)
-    val untouched = nodes.as[GraphNode]
-      .filter(n => !bc.value.contains((n.part, n.seg)))
-    val rebuilt = nodes.as[GraphNode]
-      .filter(n => bc.value.contains((n.part, n.seg)))
-      .groupByKey(n => bc.value((n.part, n.seg)))
-      .flatMapGroups { (t: (Int, Int), it) =>
-        val rows = it.map(n => (n.id, n.vec)).toArray
-        java.util.Arrays.sort(rows, Ordering.by[(Long, Array[Float]), Long](_._1))
-        val b = new Builder(m, efConstruction)
-        rows.foreach { case (id, v) => b.insert(id, v) } // vecs already unit
-        b.emit(t._1, t._2)
-      }
-    untouched.unionByName(rebuilt).toDF()
+    val isMerged = segmentKey(col("part"), col("seg"))
+      .isin(merged.keys.toSeq.map(segmentKey): _*)
+    // ascending-id re-insertion of the stored unit vectors, one task per group
+    val rebuilt = buildSegments(nodes.filter(isMerged).as[GraphNode].map { n =>
+        val (part, seg) = bc.value((n.part, n.seg))
+        (part, seg, (n.id, n.vec, null: Array[Byte])) },
+      packedTasks(spark, merged.groupBy(_._2).map { case (t, ms) =>
+        t -> ms.keysIterator.map(sizeOf).sum }), m, efConstruction, Map.empty)
+    nodes.filter(!isMerged)
+      .unionByName(rebuilt.select(nodes.columns.toSeq.map(col): _*))
   }
 
   // --------------------------------------------- NN-Descent k-NN graph ----
@@ -723,16 +722,17 @@ object GraphAnn {
     * the id→idx view, pick the entry (highest level, ties to smallest
     * id), then per query descend greedily to layer 1 and ef-beam layer 0
     * seeded with the descent result plus the reachability roots
-    * ([[entryAndRoots]]). Emits (probe_id, id, sim) candidate rows, ≤ k
-    * per query.
+    * ([[entryAndRoots]]). `score(q)` scores the query against a node —
+    * the segment's [[NodeCodec.scorer]]. Emits (probe_id, id, sim)
+    * candidate rows, ≤ k per query.
     */
-  private[operators] def searchSegment(ns: Array[GraphNode],
+  private[operators] def searchSegment[N <: SegmentNode](ns: Array[N],
       queries: Iterable[(Long, Array[Float])], k: Int, ef: Int,
-      emit: Int => Boolean = emitAll): Iterator[(Long, Long, Double)] = {
+      emit: Int => Boolean,
+      score: Array[Float] => Int => Double): Iterator[(Long, Long, Double)] = {
     if (ns.isEmpty) return Iterator.empty
     val idIdx = new java.util.HashMap[Long, Integer](ns.length * 2)
     ns.indices.foreach(i => idIdx.put(ns(i).id, i))
-    val vecs: Int => Array[Float] = i => ns(i).vec
     val adjLocal = resolveAdj(i => ns(i).neighbors, ns.length, idIdx)
     val adj: (Int, Int) => Iterable[Int] = (n, l) =>
       if (l < adjLocal(n).length) adjLocal(n)(l) else Nil
@@ -740,7 +740,7 @@ object GraphAnn {
       entryAndRoots(ns.length, i => ns(i).level, i => ns(i).id, adj)
     val visited = new java.util.BitSet(ns.length)
     queries.iterator.flatMap { case (pid, q) =>
-      val simOf: Int => Double = i => dot(q, vecs(i))
+      val simOf = score(q)
       var ep = entry
       var l = ns(entry).level
       while (l > 0) { ep = greedyStep(simOf, ep, l, adj); l -= 1 }
@@ -753,6 +753,95 @@ object GraphAnn {
       }
       out
     }
+  }
+
+  /** What a per-cell graph node stores, and how a beam scores it: the one
+    * difference between the float and PQ serving tiers, whose builds,
+    * appends, purges and beams are otherwise one body each. The graph
+    * STRUCTURE is built on exact unit vectors on both (build memory is
+    * transient, one segment per task); only the stored payload differs.
+    */
+  private[operators] sealed abstract class NodeCodec[N <: SegmentNode]
+      extends Serializable {
+    /** The stored payload column: `vec` or `codes`. */
+    def payload: String
+    /** A cells frame's code word column (null on float). */
+    def codes: Column
+    /** `batch` (id: long, vec) as a cells frame — (id, vec, cell), plus
+      * `pq_codes` on PQ — each row in its nearest cell of `routing` by the
+      * index's own rule, so appended nodes route like indexed ones.
+      */
+    def assign(batch: DataFrame, routing: Array[(Int, Array[Float])]): DataFrame
+    /** The stored node's encoder, derived on the driver. */
+    def encoder: org.apache.spark.sql.Encoder[N]
+    /** The beam's scorer over segment `ns` of `cell`: per query, its
+      * score of the node at a local index.
+      */
+    def scorer(ns: Array[N], cell: Int): Array[Float] => Int => Double
+    /** The stored node columns, in [[GraphNode]] / [[PqGraphNode]] order. */
+    final def columns: Seq[Column] =
+      Seq("part", "id", payload, "level", "neighbors", "seg").map(col)
+  }
+
+  private[operators] object NodeCodec {
+    /** The unit vector, scored with `dot`; cells by raw nearest centroid
+      * ([[Similarity.buildIvf]] trains on vectors as given).
+      */
+    case object Float extends NodeCodec[GraphNode] {
+      def payload: String = "vec"
+      def codes: Column = lit(null).cast("binary")
+      def assign(batch: DataFrame,
+          routing: Array[(Int, Array[Float])]): DataFrame = {
+        val spark = batch.sparkSession
+        import spark.implicits._
+        val bc = spark.sparkContext.broadcast(routing)
+        batch.as[(Long, Array[Float])]
+          .map { case (id, v) => (id, v, Similarity.nearestCells(bc.value, v, 1).head) }
+          .toDF("id", "vec", "cell")
+      }
+      def encoder: org.apache.spark.sql.Encoder[GraphNode] =
+        org.apache.spark.sql.Encoders.product[GraphNode]
+      def scorer(ns: Array[GraphNode], cell: Int): Array[Float] => Int => Double =
+        q => i => dot(q, ns(i).vec)
+    }
+
+    /** The IVF-PQ residual code word ([[Similarity.encodePq]] bytes),
+      * scored with the ADC decomposition `q̂·c_cell + Σ table(sub)(code)`
+      * exactly like [[Similarity.searchIvfPq]] — no float vector is read;
+      * the table is built once per (query, segment) before the walk.
+      * Arrivals encode against the EXISTING codebook
+      * ([[Similarity.encodeIntoIvfPq]], unit space — no retrain).
+      */
+    final case class Pq(centroids: Array[(Int, Array[Float])],
+        book: Similarity.PqCodebook) extends NodeCodec[PqGraphNode] {
+      @transient private lazy val centroidOf = centroids.toMap
+      def payload: String = "codes"
+      def codes: Column = col("pq_codes")
+      def assign(batch: DataFrame, routing: Array[(Int, Array[Float])]): DataFrame =
+        batch.join(Similarity.encodeIntoIvfPq(batch.sparkSession, batch, "id",
+          "vec", Similarity.IvfPqIndex(routing, book, null)), Seq("id"))
+      def encoder: org.apache.spark.sql.Encoder[PqGraphNode] =
+        org.apache.spark.sql.Encoders.product[PqGraphNode]
+      def scorer(ns: Array[PqGraphNode], cell: Int): Array[Float] => Int => Double = {
+        val cellCentroid = centroidOf(cell)
+        q => {
+          val const = dot(q, cellCentroid)
+          // the one shared ADC builder — graph-vs-IVF score equality is
+          // gate-pinned and holds only while every tier builds it identically
+          val table = Similarity.adcTable(book, q)
+          i => {
+            val cs = ns(i).codes
+            var s = const
+            var sc = 0
+            while (sc < cs.length) { s += table(sc)(cs(sc) & 0xff); sc += 1 }
+            s
+          }
+        }
+      }
+    }
+
+    /** The PQ codec of `index`'s cells and codebook. */
+    def pq(index: Similarity.IvfPqIndex): Pq = Pq(index.centroids, index.book)
   }
 
   /** Per-probe global top-k over segment candidates via the bounded-heap
@@ -808,34 +897,35 @@ object GraphAnn {
       // is closed over `part`, so co-located groups (e.g. several cells
       // hashed into one partition) are disconnected graphs with their own
       // entry points — one beam per group, never one beam per partition
-      it.toArray.groupBy(n => (n.part, n.seg)).iterator.flatMap { case (_, ns) =>
-        searchSegment(ns, bc.value, kLocal, efLocal, liveEmit(bcTomb.map(_.value), ns))
+      it.toArray.groupBy(n => (n.part, n.seg)).iterator.flatMap { case ((part, _), ns) =>
+        searchSegment(ns, bc.value, kLocal, efLocal, liveEmit(bcTomb.map(_.value), ns),
+          NodeCodec.Float.scorer(ns, part))
       }
     }.toDF("probe_id", "id", "sim")
     mergeTopK(cands, k)
   }
 
   /** Tombstone ids as a SORTED long array (binary-search membership, no
-    * boxing in the beam loop). None stays None so the unfiltered path
-    * pays nothing.
+    * boxing in the beam loop).
     */
-  private def collectTombstones(tombstones: Option[DataFrame]): Option[Array[Long]] =
-    tombstones.map { df =>
-      val ids = df.select(col("id").cast("long"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
-      java.util.Arrays.sort(ids)
-      ids
-    }
+  private def collectTombstones(tombstones: DataFrame): Array[Long] = {
+    val ids = tombstones.select(col("id").cast("long"))
+      .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
+    java.util.Arrays.sort(ids)
+    ids
+  }
 
-  /** [[collectTombstones]] as a broadcast. */
+  /** [[collectTombstones]] as a broadcast; None stays None so the
+    * unfiltered path pays nothing.
+    */
   private def broadcastTombstones(spark: SparkSession,
       tombstones: Option[DataFrame]): Option[
         org.apache.spark.broadcast.Broadcast[Array[Long]]] =
-    collectTombstones(tombstones).map(spark.sparkContext.broadcast(_))
+    tombstones.map(t => spark.sparkContext.broadcast(collectTombstones(t)))
 
   /** Per-segment emit predicate masking a sorted tombstone set. */
   private[operators] def liveEmit(tombstones: Option[Array[Long]],
-      ns: Array[GraphNode]): Int => Boolean = tombstones match {
+      ns: Array[_ <: SegmentNode]): Int => Boolean = tombstones match {
     case None => emitAll
     case Some(sorted) => i => java.util.Arrays.binarySearch(sorted, ns(i).id) < 0
   }
@@ -861,38 +951,56 @@ object GraphAnn {
     */
   def buildGraphPerCell(spark: SparkSession, assignments: DataFrame,
       m: Int = 8, efConstruction: Int = 64,
-      maxSegmentSize: Int = Int.MaxValue): DataFrame = {
-    import spark.implicits._
-    val base = assignments.select(col("cell").cast("int"),
-        col("id").cast("long"), col("vec"))
-      .as[(Int, Long, Array[Float])]
-    buildCellSegments(base, m, efConstruction, maxSegmentSize, Map.empty)
-  }
+      maxSegmentSize: Int = Int.MaxValue): DataFrame =
+    buildCellSegments(NodeCodec.Float, assignments, m, efConstruction,
+      maxSegmentSize, Map.empty)
 
-  /** The ONE per-cell build body [[buildGraphPerCell]] and
-    * [[appendGraphCells]] share (a hand-mirrored divergence here would
-    * make builds and appends emit structurally different segments):
-    * hash-slice oversized cells, sort ascending-id, insert unit vectors,
-    * emit at `segBase(cell) + slice` (0 for an initial build).
+  /** The ONE per-cell build body every build and append shares, on both
+    * tiers (a hand-mirrored divergence here would make builds and appends
+    * emit structurally different segments): `cells` is a cells frame
+    * (id, vec, cell, plus `pq_codes` on PQ); oversized cells hash-slice,
+    * each slice builds as a segment at `segBase(cell) + slice` (0 for an
+    * initial build) and stores `codec`'s payload.
     */
-  private def buildCellSegments(
-      base: org.apache.spark.sql.Dataset[(Int, Long, Array[Float])],
-      m: Int, efConstruction: Int, maxSegmentSize: Int,
+  private def buildCellSegments(codec: NodeCodec[_], cells: DataFrame, m: Int,
+      efConstruction: Int, maxSegmentSize: Int,
       segBase: Map[Int, Int]): DataFrame = {
-    val spark = base.sparkSession
+    val spark = cells.sparkSession
     import spark.implicits._
+    val base = cells.select(col("cell").cast("int"), col("id").cast("long"),
+        col("vec"), codec.codes)
+      .as[(Int, Long, Array[Float], Array[Byte])]
     val bcSlices = spark.sparkContext.broadcast(
       cellSlices(base.groupByKey(_._1).count(), maxSegmentSize))
+    val keyed = base.map { case (c, id, v, cs) =>
+      (c, sliceOf(id, c, bcSlices.value), (id, l2unit(v), cs)) }
+    buildSegments(keyed, cellTasks(spark), m, efConstruction, segBase)
+      .select(codec.columns: _*)
+  }
+
+  /** The ONE per-segment graph build of every build, append and purge:
+    * each (part, seg) group of `keyed` — build rows (id, unit vector,
+    * code word or null) — inserts ascending-id and emits at
+    * `segBase(part) + seg`, carrying each row's vector and code word;
+    * callers keep the payload column they store.
+    */
+  private def buildSegments(
+      keyed: org.apache.spark.sql.Dataset[(Int, Int, (Long, Array[Float], Array[Byte]))],
+      tasks: SegmentTasks, m: Int, efConstruction: Int,
+      segBase: Map[Int, Int]): DataFrame = {
+    val spark = keyed.sparkSession
+    import spark.implicits._
     val bcBase = spark.sparkContext.broadcast(segBase)
-    val keyed = base.map { case (c, id, v) =>
-      (c, sliceOf(id, c, bcSlices.value), (id, v)) }
-    perSegment(keyed, cellTasks(spark)) { (cell, slice, it) =>
+    perSegment(keyed, tasks) { (part, seg, it) =>
       val rows = it.toArray
-      java.util.Arrays.sort(rows, Ordering.by[(Long, Array[Float]), Long](_._1))
+      java.util.Arrays.sort(rows,
+        Ordering.by[(Long, Array[Float], Array[Byte]), Long](_._1))
       val b = new Builder(m, efConstruction)
-      rows.foreach { case (id, v) => b.insert(id, l2unit(v)) }
-      b.emit(cell, bcBase.value.getOrElse(cell, 0) + slice)
-    }.toDF()
+      rows.foreach { case (id, u, _) => b.insert(id, u) }
+      // emit walks the insertion order: node i is rows(i)
+      b.emit(part, bcBase.value.getOrElse(part, 0) + seg).zip(rows.iterator)
+        .map { case (n, r) => (n.part, n.id, n.vec, r._3, n.level, n.neighbors, n.seg) }
+    }.toDF("part", "id", "vec", "codes", "level", "neighbors", "seg")
   }
 
   /** Build each (part, seg) group of `keyed` — rows (part, seg, payload)
@@ -947,21 +1055,20 @@ object GraphAnn {
     val keys = groups.keys.toIndexedSeq.sorted
     val (n, task) = graft.core.TaskPacking.leastLoaded(keys.map(groups),
       spark.sparkContext.defaultParallelism)
-    // keyed by one long per (part, seg): part · 2^32 + seg
-    val taskOf = keys.indices.map { i =>
-      val (part, seg) = keys(i)
-      ((part.toLong << 32) + seg) -> task(i)
-    }.toMap
-    SegmentTasks(n, (part, seg) =>
-      element_at(typedLit(taskOf), shiftleft(part.cast("long"), 32) + seg.cast("long")))
+    val taskOf = keys.indices.map(i => segmentKey(keys(i)) -> task(i)).toMap
+    SegmentTasks(n, (part, seg) => element_at(typedLit(taskOf), segmentKey(part, seg)))
   }
 
-  /** Every (part, seg) segment of `nodes` holding one of the sorted
-    * tombstone `ids`, with its node count: ≤ nSegments driver rows.
+  /** One long per (part, seg): part · 2^32 + seg. */
+  private def segmentKey(key: (Int, Int)): Long = (key._1.toLong << 32) + key._2
+  private def segmentKey(part: Column, seg: Column): Column =
+    shiftleft(part.cast("long"), 32) + seg.cast("long")
+
+  /** Every (part, seg) segment of `nodes` holding an id `isTomb` flags,
+    * with its node count: ≤ nSegments driver rows.
     */
   private def touchedSegments(nodes: DataFrame,
-      ids: org.apache.spark.broadcast.Broadcast[Array[Long]]): Map[(Int, Int), Long] = {
-    val isTomb = udf((id: Long) => java.util.Arrays.binarySearch(ids.value, id) >= 0)
+      isTomb: org.apache.spark.sql.expressions.UserDefinedFunction): Map[(Int, Int), Long] = {
     nodes.groupBy(col("part"), col("seg"))
       .agg(count(lit(1)), max(isTomb(col("id"))).as("hit"))
       .filter(col("hit"))
@@ -992,30 +1099,25 @@ object GraphAnn {
       efConstruction: Int = 64,
       maxSegmentSize: Int = Int.MaxValue): DataFrame =
     existing.unionByName(buildAppendSegments(existing, batch, idCol,
-      vecCol, centroids, m, efConstruction, maxSegmentSize))
+      vecCol, centroids, NodeCodec.Float, m, efConstruction, maxSegmentSize))
 
-  /** [[appendGraphCells]]'s fresh-segment half on its own — ONLY the new
-    * slices ([[buildAppendSegmentsPq]]'s float twin): the monitored
+  /** An append's fresh-segment half on its own, on either tier — ONLY the
+    * new slices (existing rows are the caller's to union): the monitored
     * append materializes just this delta before logging, and a partial
-    * rebuild's bookkeeping wants the added rows separately.
+    * rebuild's bookkeeping wants the added rows separately. `codec`
+    * assigns each arrival its cell against `centroids` (the index's own).
     */
   private[graft] def buildAppendSegments(existing: DataFrame,
       batch: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[(Int, Array[Float])], m: Int = 8,
-      efConstruction: Int = 64,
-      maxSegmentSize: Int = Int.MaxValue): DataFrame = {
-    val spark = existing.sparkSession
-    import spark.implicits._
+      centroids: Array[(Int, Array[Float])], codec: NodeCodec[_], m: Int,
+      efConstruction: Int, maxSegmentSize: Int): DataFrame = {
     // a cell the existing index never saw starts its slices at 0
     val segBase = existing.groupBy(col("part")).agg(max(col("seg")))
       .collect().map(r => r.getInt(0) -> (r.getInt(1) + 1)).toMap
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val assigned = batch
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        (Similarity.nearestCells(bcC.value, v, 1).head, id, v) }
-    buildCellSegments(assigned, m, efConstruction, maxSegmentSize, segBase)
+    val arrivals = codec.assign(
+      batch.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")),
+      centroids)
+    buildCellSegments(codec, arrivals, m, efConstruction, maxSegmentSize, segBase)
   }
 
   /** Slice counts for cells exceeding `maxSegmentSize` — the build-skew
@@ -1062,9 +1164,9 @@ object GraphAnn {
       centroids: Array[(Int, Array[Float])], probes: DataFrame,
       probeId: String, probeVec: String, nprobe: Int, k: Int,
       ef: Int, tombstones: Option[DataFrame] = None): DataFrame =
-    routedSearchCore(nodes,
-      routeBatch(probes, probeId, probeVec, centroids, nprobe), k, ef,
-      tombstones)
+    mergeTopK(routedCandidates(NodeCodec.Float, nodes, routeBatch(probes,
+      probeId, probeVec, centroids, nprobe, unit = false), None, k, ef,
+      tombstones).toDF("probe_id", "id", "sim"), k)
 
   /** FILTERED routed graph search — the [[Similarity.searchIvfFiltered]]
     * contract on the graph tier (the reference's own serving surface
@@ -1093,40 +1195,10 @@ object GraphAnn {
   def searchGraphRoutedFiltered(nodes: DataFrame,
       centroids: Array[(Int, Array[Float])], probes: DataFrame,
       probeId: String, probeVec: String, allowed: DataFrame, nprobe: Int,
-      k: Int, ef: Int, tombstones: Option[DataFrame] = None): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val routes = routeBatch(probes, probeId, probeVec, centroids, nprobe)
-    val cells = routes.keys.toSeq
-    val flagged = nodes.filter(col("part").isin(cells: _*))
-      // distinct: an attribute predicate can emit one row per (id, match)
-      // — duplicate allowed ids would otherwise duplicate graph nodes
-      // through the left join and emit the same id twice in a top-k
-      .join(allowed.select(col("id").cast("long").as("id")).distinct()
-        .withColumn("allowed", lit(true)), Seq("id"), "left")
-      .withColumn("allowed", coalesce(col("allowed"), lit(false)))
-      // the join redistributed rows by id — reassemble segments whole
-      .repartition(col("part"), col("seg"))
-    val bc = spark.sparkContext.broadcast(routes)
-    val bcTomb = broadcastTombstones(spark, tombstones)
-    val kLocal = k
-    val efLocal = math.max(ef, k)
-    val cands = flagged.as[FlaggedNode].mapPartitions { it =>
-      it.toArray.groupBy(n => (n.part, n.seg)).iterator.flatMap {
-        case ((cell, _), fs) =>
-          bc.value.get(cell) match {
-            case Some(qs) =>
-              val ns = fs.map(f =>
-                GraphNode(f.part, f.id, f.vec, f.level, f.neighbors, f.seg))
-              val live = liveEmit(bcTomb.map(_.value), ns)
-              searchSegment(ns, qs, kLocal, efLocal,
-                i => fs(i).allowed && live(i))
-            case None => Iterator.empty
-          }
-      }
-    }.toDF("probe_id", "id", "sim")
-    mergeTopK(cands, k)
-  }
+      k: Int, ef: Int, tombstones: Option[DataFrame] = None): DataFrame =
+    mergeTopK(routedCandidates(NodeCodec.Float, nodes, routeBatch(probes,
+      probeId, probeVec, centroids, nprobe, unit = false), Some(allowed), k, ef,
+      tombstones).toDF("probe_id", "id", "sim"), k)
 
   /** Collect the probe batch (bounded — a serving batch, never the
     * corpus) as (id, vec), in the frame's row order. A null id, a null
@@ -1217,39 +1289,70 @@ object GraphAnn {
     }
   }
 
-  /** Route each probe of the batch to its nprobe cells: routing in RAW
-    * space (the centroids' space), searching on unit vectors.
+  /** Route each probe of the batch to its nprobe cells, searching on unit
+    * vectors: routing in the centroids' space — RAW on the float tier
+    * (`unit = false`), unit on the PQ tier, whose index trains its cells
+    * on unit vectors. ONE definition serves every routed search path.
     */
   private def routeBatch(probes: DataFrame, probeId: String,
       probeVec: String, centroids: Array[(Int, Array[Float])],
-      nprobe: Int): Map[Int, Array[(Long, Array[Float])]] =
+      nprobe: Int, unit: Boolean): Map[Int, Array[(Long, Array[Float])]] =
     collectProbes(probes, probeId, probeVec)
       .flatMap { case (pid, v) =>
         val u = l2unit(v)
-        Similarity.nearestCells(centroids, v, nprobe).map(c => (c, (pid, u)))
+        Similarity.nearestCells(centroids, if (unit) u else v, nprobe)
+          .map(c => (c, (pid, u)))
       }
       .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
 
-  private def routedSearchCore(nodes: DataFrame,
-      routes: Map[Int, Array[(Long, Array[Float])]], k: Int, ef: Int,
-      tombstones: Option[DataFrame] = None): DataFrame = {
+  /** The ONE in-memory routed beam of both tiers, filtered or not: each
+    * (part, seg) segment of a routed cell beams its cell's probes with
+    * `codec`'s scorer and emits ≤ k (probe_id, id, score) candidates per
+    * probe. `allowed` (one `id` column, any size — it joins, never
+    * collects) flags each node of the routed cells, and the flag rides
+    * the node through the locality-restoring shuffle; the beam traverses
+    * every node but emits only allowed, live ones
+    * ([[searchGraphRoutedFiltered]]). `tombstones` masks deletes on both.
+    */
+  private def routedCandidates[N <: SegmentNode: scala.reflect.ClassTag](
+      codec: NodeCodec[N], nodes: DataFrame,
+      routes: Map[Int, Array[(Long, Array[Float])]], allowed: Option[DataFrame],
+      k: Int, ef: Int, tombstones: Option[DataFrame])
+      : org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(routes)
+    val flagged = allowed match {
+      case None => nodes.withColumn("allowed", lit(true))
+      case Some(a) => nodes.filter(col("part").isin(routes.keys.toSeq: _*))
+        // distinct: an attribute predicate can emit one row per (id, match)
+        // — duplicate allowed ids would otherwise duplicate graph nodes
+        // through the left join and emit the same id twice in a top-k
+        .join(a.select(col("id").cast("long").as("id")).distinct()
+          .withColumn("allowed", lit(true)), Seq("id"), "left")
+        .withColumn("allowed", coalesce(col("allowed"), lit(false)))
+        // the join redistributed rows by id — reassemble segments whole
+        .repartition(col("part"), col("seg"))
+    }
+    val bc = spark.sparkContext.broadcast((routes, codec))
     val bcTomb = broadcastTombstones(spark, tombstones)
-    val kLocal = k
     val efLocal = math.max(ef, k)
-    val cands = nodes.as[GraphNode].mapPartitions { it =>
-      it.toArray.groupBy(n => (n.part, n.seg)).iterator.flatMap {
-        case ((cell, _), ns) =>
-          bc.value.get(cell) match {
-            case Some(qs) =>
-              searchSegment(ns, qs, kLocal, efLocal, liveEmit(bcTomb.map(_.value), ns))
-            case None => Iterator.empty
-          }
+    flagged.select(struct(codec.columns: _*).as("_1"), col("allowed").as("_2"))
+      .as(org.apache.spark.sql.Encoders.tuple(codec.encoder,
+        org.apache.spark.sql.Encoders.scalaBoolean))
+      .mapPartitions { it =>
+        val (rts, c) = bc.value
+        it.toArray.groupBy(f => (f._1.part, f._1.seg)).iterator.flatMap {
+          case ((cell, _), fs) =>
+            rts.get(cell) match {
+              case Some(qs) =>
+                val ns = fs.map(_._1)
+                val live = liveEmit(bcTomb.map(_.value), ns)
+                searchSegment(ns, qs, k, efLocal, i => fs(i)._2 && live(i),
+                  c.scorer(ns, cell))
+              case None => Iterator.empty
+            }
+        }
       }
-    }.toDF("probe_id", "id", "sim")
-    mergeTopK(cands, k)
   }
 
   /** Persist the per-cell graph in the partition-pruned serving layout —
@@ -1267,31 +1370,25 @@ object GraphAnn {
   private def longArr2 = org.apache.spark.sql.types.ArrayType(
     org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.LongType, containsNull = false))
-  private[graft] val cellsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
+  private def cellsSchemaWith(payload: org.apache.spark.sql.types.StructField) =
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType),
+      payload,
+      org.apache.spark.sql.types.StructField("level",
+        org.apache.spark.sql.types.IntegerType),
+      org.apache.spark.sql.types.StructField("neighbors", longArr2),
+      org.apache.spark.sql.types.StructField("seg",
+        org.apache.spark.sql.types.IntegerType),
+      org.apache.spark.sql.types.StructField("part",
+        org.apache.spark.sql.types.IntegerType)))
+  private[graft] val cellsSchema = cellsSchemaWith(
     org.apache.spark.sql.types.StructField("vec",
       org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, containsNull = false)),
-    org.apache.spark.sql.types.StructField("level",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("neighbors", longArr2),
-    org.apache.spark.sql.types.StructField("seg",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("part",
-      org.apache.spark.sql.types.IntegerType)))
-  private[graft] val pqCellsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.FloatType, containsNull = false)))
+  private[graft] val pqCellsSchema = cellsSchemaWith(
     org.apache.spark.sql.types.StructField("codes",
-      org.apache.spark.sql.types.BinaryType),
-    org.apache.spark.sql.types.StructField("level",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("neighbors", longArr2),
-    org.apache.spark.sql.types.StructField("seg",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("part",
-      org.apache.spark.sql.types.IntegerType)))
+      org.apache.spark.sql.types.BinaryType))
 
   def writeGraphCells(nodes: DataFrame, dir: String): Unit = {
     // one task per cell, cells round robin over the cores: one file per
@@ -1387,14 +1484,15 @@ object GraphAnn {
       // route ONCE: the same map picks the cells' files and drives the
       // beams; each cell's files are read whole by one task, so every
       // (part, seg) segment stays local without a repartition
-      val routes = routeBatch(probes, probeId, probeVec, centroids, nprobe)
+      val routes = routeBatch(probes, probeId, probeVec, centroids, nprobe,
+        unit = false)
       val cells = routes.keys.toSeq.sorted
       val files = cells.flatMap(c =>
         graft.core.Fs.listDataFiles(spark, s"$dir/part=$c").map(st =>
           CellFile(c, st.getPath.toString, st.getLen, st.getModificationTime)))
       val nProbes = routes.valuesIterator.flatMap(_.iterator.map(_._1)).toSet.size
       RoutedGraphSearch.toDF(spark, RoutedGraphSearchSpec(files, routes, k, ef,
-        collectTombstones(tombstones),
+        tombstones.map(collectTombstones),
         s"routed graph search: $where, ${cells.size} probed cells, $nProbes probes",
         reader))
   }
@@ -1658,22 +1756,18 @@ object GraphAnn {
       tombstones: Option[DataFrame] = None,
       allowed: Option[DataFrame] = None,
       corpusVecTransform: Option[org.apache.spark.sql.expressions
-        .UserDefinedFunction] = None): DataFrame = allowed match {
-    case Some(a) =>
-      searchGraphRoutedPqFiltered(spark.read.schema(pqCellsSchema).parquet(dir), index, corpus,
-        idCol, vecCol, probes, probeId, probeVec, a, nprobe, k, ef,
-        rerankFactor, clumpGuard, clumpBound, tombstones,
-        corpusVecTransform)
-    case None =>
-      // route ONCE: the same map prunes the scan and drives the beams
-      val routes = routePqBatch(probes, probeId, probeVec, index, nprobe)
-      val cells = routes.keys.toSeq
-      val nodes = spark.read.schema(pqCellsSchema).parquet(dir)
-        .filter(col("part").isin(cells: _*))
+        .UserDefinedFunction] = None): DataFrame = {
+    // route ONCE: the same map prunes the scan and drives the beams
+    val routes = routeBatch(probes, probeId, probeVec, index.centroids,
+      nprobe, unit = true)
+    val cells = spark.read.schema(pqCellsSchema).parquet(dir)
+    // a filtered search prunes and restores locality after its flag join
+    val nodes = if (allowed.isDefined) cells
+      else cells.filter(col("part").isin(routes.keys.toSeq: _*))
         .repartition(col("part"), col("seg"))
-      searchGraphRoutedPqWithRoutes(nodes, index, corpus, idCol, vecCol,
-        probes, probeId, probeVec, routes, k, ef, rerankFactor, clumpGuard,
-        clumpBound, tombstones, corpusVecTransform)
+    routedPq(nodes, index, corpus, idCol, vecCol, probes, probeId, probeVec,
+      routes, allowed, k, ef, rerankFactor, clumpGuard, clumpBound,
+      tombstones, corpusVecTransform)
   }
 
   /** [[searchGraphRoutedPqPersisted]] against the CURRENTLY PUBLISHED
@@ -1712,42 +1806,34 @@ object GraphAnn {
     */
   def purgeTombstones(nodes: DataFrame, tombstones: DataFrame, m: Int = 8,
       efConstruction: Int = 64): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val ids = tombstones.select(col("id").cast("long"))
-      .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
-    java.util.Arrays.sort(ids)
-    val bcIds = spark.sparkContext.broadcast(ids)
-    val ds = nodes.as[GraphNode]
-    def isTomb(id: Long): Boolean =
-      java.util.Arrays.binarySearch(bcIds.value, id) >= 0
-    val touched = touchedSegments(nodes, bcIds)
-    if (touched.isEmpty) return nodes
-    val bcSegs = spark.sparkContext.broadcast(touched.keySet)
-    val untouched = ds.filter(n => !bcSegs.value.contains((n.part, n.seg)))
-    val survivors = ds
-      .filter(n => bcSegs.value.contains((n.part, n.seg)) && !isTomb(n.id))
-      .map(n => (n.part, n.seg, (n.id, n.vec)))
-    val rebuilt = perSegment(survivors, packedTasks(spark, touched)) { (part, seg, it) =>
-      val rows = it.toArray
-      java.util.Arrays.sort(rows, Ordering.by[(Long, Array[Float]), Long](_._1))
-      val b = new Builder(m, efConstruction)
-      rows.foreach { case (id, v) => b.insert(id, v) } // vecs already unit
-      b.emit(part, seg)
-    }
-    untouched.unionByName(rebuilt).toDF()
+    import nodes.sparkSession.implicits._
+    purgeSegments(nodes, tombstones, m, efConstruction)(
+      _.as[GraphNode].map(n => (n.part, n.seg, (n.id, n.vec, null: Array[Byte]))))
   }
 
-  /** Per-segment live-node view for [[searchGraphRoutedFiltered]]: a
-    * [[GraphNode]] plus its allowed-set membership (the flag rides the
-    * node through the locality-restoring shuffle instead of broadcasting
-    * a possibly corpus-sized allowed set).
+  /** The ONE purge body of both tiers: the segments holding a tombstone
+    * rebuild from `survivorRows` of their surviving nodes — build rows
+    * keyed (part, seg) — on min(#touched, cores) packed tasks, keeping
+    * `nodes`' columns; the untouched segments pass through by a (part,
+    * seg) column predicate, never decoded. An empty touched set returns
+    * `nodes` itself.
     */
-  // private[graft], not private: Spark's generated row deserializer
-  // constructs it from bytecode, which a JVM-private class would reject
-  private[graft] final case class FlaggedNode(part: Int, id: Long,
-      vec: Array[Float], level: Int, neighbors: Array[Array[Long]], seg: Int,
-      allowed: Boolean)
+  private def purgeSegments(nodes: DataFrame, tombstones: DataFrame, m: Int,
+      efConstruction: Int)(survivorRows: DataFrame => org.apache.spark.sql.Dataset[
+        (Int, Int, (Long, Array[Float], Array[Byte]))]): DataFrame = {
+    val spark = nodes.sparkSession
+    val ids = spark.sparkContext.broadcast(collectTombstones(tombstones))
+    val isTomb = udf((id: Long) => java.util.Arrays.binarySearch(ids.value, id) >= 0)
+    val touched = touchedSegments(nodes, isTomb)
+    if (touched.isEmpty) return nodes
+    val isTouched = segmentKey(col("part"), col("seg"))
+      .isin(touched.keys.toSeq.map(segmentKey): _*)
+    val rebuilt = buildSegments(
+      survivorRows(nodes.filter(isTouched && !isTomb(col("id")))),
+      packedTasks(spark, touched), m, efConstruction, Map.empty)
+    nodes.filter(!isTouched)
+      .unionByName(rebuilt.select(nodes.columns.toSeq.map(col): _*))
+  }
 
   /** PQ-compressed graph node: `codes` is the IVF-PQ RESIDUAL code word
     * ([[Similarity.encodePq]] bytes, e.g. 8 B vs the 256 B float vector a
@@ -1759,7 +1845,7 @@ object GraphAnn {
     * full vectors live elsewhere and only rerank survivors).
     */
   final case class PqGraphNode(part: Int, id: Long, codes: Array[Byte],
-      level: Int, neighbors: Array[Array[Long]], seg: Int = 0)
+      level: Int, neighbors: Array[Array[Long]], seg: Int = 0) extends SegmentNode
 
   /** [[buildGraphPerCell]] with PQ-compressed storage: cell membership
     * and code words come from the IVF-PQ index's own `coded` table (so
@@ -1772,46 +1858,17 @@ object GraphAnn {
   def buildGraphPerCellPq(spark: SparkSession, corpus: DataFrame,
       idCol: String, vecCol: String, index: Similarity.IvfPqIndex,
       m: Int = 8, efConstruction: Int = 64,
-      maxSegmentSize: Int = Int.MaxValue): DataFrame = {
-    import spark.implicits._
-    val base = corpus
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .join(index.coded.select(col("id"), col("cell"), col("pq_codes")),
-        Seq("id"))
-      .select(col("cell").cast("int"), col("id"), col("vec"), col("pq_codes"))
-      .as[(Int, Long, Array[Float], Array[Byte])]
-    buildCellSegmentsPq(base, m, efConstruction, maxSegmentSize, Map.empty)
-  }
+      maxSegmentSize: Int = Int.MaxValue): DataFrame =
+    buildCellSegments(NodeCodec.pq(index), codedCells(corpus, idCol, vecCol,
+      index.coded), m, efConstruction, maxSegmentSize, Map.empty)
 
-  /** [[buildCellSegments]]' PQ twin — the ONE per-cell build body
-    * [[buildGraphPerCellPq]] and [[appendGraphCellsPq]] share: graph
-    * STRUCTURE built on the exact unit vectors (build memory is
-    * transient, one cell slice per task), only the codes persist.
+  /** A PQ cells frame: `corpus`' floats joined to the cell and code word
+    * of their `coded` rows (an IVF-PQ index's `coded` table).
     */
-  private def buildCellSegmentsPq(
-      base: org.apache.spark.sql.Dataset[(Int, Long, Array[Float], Array[Byte])],
-      m: Int, efConstruction: Int, maxSegmentSize: Int,
-      segBase: Map[Int, Int]): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val bcSlices = spark.sparkContext.broadcast(
-      cellSlices(base.groupByKey(_._1).count(), maxSegmentSize))
-    val bcBase = spark.sparkContext.broadcast(segBase)
-    val keyed = base.map { case (c, id, v, cs) =>
-      (c, sliceOf(id, c, bcSlices.value), (id, v, cs)) }
-    perSegment(keyed, cellTasks(spark)) { (cell, slice, it) =>
-      val rows = it.toArray
-      java.util.Arrays.sort(rows,
-        Ordering.by[(Long, Array[Float], Array[Byte]), Long](_._1))
-      val codesOf = new java.util.HashMap[Long, Array[Byte]](rows.length * 2)
-      rows.foreach { case (id, _, cs) => codesOf.put(id, cs) }
-      val b = new Builder(m, efConstruction)
-      rows.foreach { case (id, v, _) => b.insert(id, l2unit(v)) }
-      b.emit(cell, bcBase.value.getOrElse(cell, 0) + slice).map(n =>
-        PqGraphNode(n.part, n.id, codesOf.get(n.id), n.level, n.neighbors,
-          n.seg))
-    }.toDF()
-  }
+  private def codedCells(corpus: DataFrame, idCol: String, vecCol: String,
+      coded: DataFrame): DataFrame =
+    corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+      .join(coded.select(col("id"), col("cell"), col("pq_codes")), Seq("id"))
 
   /** Incremental append for the PQ tier — [[appendGraphCells]]' twin on
     * a [[buildGraphPerCellPq]] index, closing the DiskANN-shaped tier's
@@ -1830,30 +1887,9 @@ object GraphAnn {
       idCol: String, vecCol: String, index: Similarity.IvfPqIndex,
       m: Int = 8, efConstruction: Int = 64,
       maxSegmentSize: Int = Int.MaxValue): DataFrame =
-    existing.unionByName(buildAppendSegmentsPq(existing, batch, idCol,
-      vecCol, index, m, efConstruction, maxSegmentSize))
-
-  /** [[appendGraphCellsPq]]'s fresh-segment half on its own — ONLY the
-    * new slices (existing rows are the caller's to union). The partial
-    * rebuild needs the new rows separately so its clump-bound merge
-    * measures just the rows this batch added, not the whole index.
-    */
-  private[graft] def buildAppendSegmentsPq(existing: DataFrame,
-      batch: DataFrame, idCol: String, vecCol: String,
-      index: Similarity.IvfPqIndex, m: Int = 8, efConstruction: Int = 64,
-      maxSegmentSize: Int = Int.MaxValue): DataFrame = {
-    val spark = existing.sparkSession
-    import spark.implicits._
-    val segBase = existing.groupBy(col("part")).agg(max(col("seg")))
-      .collect().map(r => r.getInt(0) -> (r.getInt(1) + 1)).toMap
-    val base = batch
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .join(Similarity.encodeIntoIvfPq(spark, batch, idCol, vecCol, index),
-        Seq("id"))
-      .select(col("cell").cast("int"), col("id"), col("vec"), col("pq_codes"))
-      .as[(Int, Long, Array[Float], Array[Byte])]
-    buildCellSegmentsPq(base, m, efConstruction, maxSegmentSize, segBase)
-  }
+    existing.unionByName(buildAppendSegments(existing, batch, idCol,
+      vecCol, index.centroids, NodeCodec.pq(index), m, efConstruction,
+      maxSegmentSize))
 
   /** [[appendGraphCells]] with the drift monitor wired in — the float
     * graph tier's leg of the monitored-append surface (the three
@@ -1870,34 +1906,39 @@ object GraphAnn {
       ref: Similarity.DriftStats, m: Int = 8, efConstruction: Int = 64,
       maxSegmentSize: Int = Int.MaxValue, residRatioMax: Double = 1.25,
       klMax: Double = 0.5,
-      logTo: Option[String] = None): (DataFrame, Similarity.DriftReport) = {
-    val report = monitorBatch(batch, vecCol, centroids, ref, unit = false,
-      residRatioMax, klMax, remedy = "publishGraphCells")
-    (landThenLog(existing, buildAppendSegments(existing, batch, idCol,
-      vecCol, centroids, m, efConstruction, maxSegmentSize), report,
-      logTo), report)
-  }
+      logTo: Option[String] = None): (DataFrame, Similarity.DriftReport) =
+    monitoredAppend(existing, batch, idCol, vecCol, centroids, NodeCodec.Float,
+      ref, unit = false, remedy = "publishGraphCells", m, efConstruction,
+      maxSegmentSize, residRatioMax, klMax, logTo)
 
-  /** ONE copy of the score-warn-log choreography both graph-tier
-    * monitored appends share (a threshold-semantics or warn-format fix
-    * lands on every leg). The monitor pass is one broadcast map over the
-    * ARRIVAL batch only — the append's own assignment repeats it, a
-    * bounded second map with no shuffle, which keeps the append entry
-    * points untouched (the float IVF leg, whose write is a plain
-    * projection, does fuse the two —
-    * [[Similarity.appendToIvfMonitored]]). The durable-history half
-    * lives in [[landThenLog]]: `logTo` is the serving root the caller
-    * publishes to (e.g. a [[publishPqServing]] root) — when set, the
-    * report lands as one `<logTo>/drift_log` row in the same format as
-    * the IVF-dir and streaming legs, so a v36-style scheduler reads one
-    * log across all three and a cold-started root carries its drift
-    * history. The graph legs stay DataFrame-in/DataFrame-out when it's
-    * None — an in-memory build has no directory to log beside.
+  /** The ONE monitored append of both graph tiers (a threshold-semantics
+    * or warn-format fix lands on every leg): score, warn, append, log.
+    * The monitor pass is one broadcast map over the ARRIVAL batch only —
+    * the append's own assignment repeats it, a bounded second map with
+    * no shuffle (the float IVF leg, whose write is a plain projection,
+    * does fuse the two — [[Similarity.appendToIvfMonitored]]).
+    *
+    * `logTo` is the serving root the caller publishes to (e.g. a
+    * [[publishPqServing]] root): when set, the report lands as one
+    * `<logTo>/drift_log` row in the same format as the IVF-dir and
+    * streaming legs, so a v36-style scheduler reads one log across all
+    * three and a cold-started root carries its drift history. Compute,
+    * then log: ONLY the fresh segments (the O(batch) delta — never the
+    * O(index) union) materialize before the row writes, so a plan that
+    * would fail never logs. That is the strongest ordering a
+    * DataFrame-in/DataFrame-out leg can give — the delta provably
+    * COMPUTED, but durability stays the caller's publish (if the process
+    * dies between this log row and the publish, the root carries one log
+    * row whose append never landed durably — replay dedup by `batch_id`
+    * absorbs the retry). Without `logTo` the legs stay fully lazy — an
+    * in-memory build has no directory to log beside.
     */
-  private def monitorBatch(batch: DataFrame, vecCol: String,
-      centroids: Array[(Int, Array[Float])], ref: Similarity.DriftStats,
-      unit: Boolean, residRatioMax: Double, klMax: Double,
-      remedy: String): Similarity.DriftReport = {
+  private def monitoredAppend(existing: DataFrame, batch: DataFrame,
+      idCol: String, vecCol: String, centroids: Array[(Int, Array[Float])],
+      codec: NodeCodec[_], ref: Similarity.DriftStats, unit: Boolean,
+      remedy: String, m: Int, efConstruction: Int, maxSegmentSize: Int,
+      residRatioMax: Double, klMax: Double,
+      logTo: Option[String]): (DataFrame, Similarity.DriftReport) = {
     val report = Similarity.driftReport(batch.sparkSession,
       batch.select(col(vecCol)), vecCol, centroids, ref, unit,
       residRatioMax, klMax)
@@ -1907,30 +1948,13 @@ object GraphAnn {
         f"massKl ${report.massKl}%.3f vs max $klMax over ${report.n} rows): " +
         s"appended vectors degrade recall as drift grows — schedule a " +
         s"retrain and republish via $remedy")
-    report
-  }
-
-  /** Compute-then-log: with `logTo` set, ONLY the fresh segments (the
-    * O(batch) delta — never the O(index) union) materialize before the
-    * `drift_log` row writes, so a plan that would fail never logs.
-    * Honestly stated: this is the strongest ordering a
-    * DataFrame-in/DataFrame-out leg can give — the delta provably
-    * COMPUTED, but durability stays the caller's publish (the IVF-dir
-    * leg is stronger because its append IS a durable write; if the
-    * process dies between this log row and the caller's publish, the
-    * root carries one log row whose append never landed durably —
-    * replay dedup by `batch_id` absorbs the retry). Without `logTo`
-    * the legs stay fully lazy.
-    */
-  private def landThenLog(existing: DataFrame, freshSegs: DataFrame,
-      report: Similarity.DriftReport,
-      logTo: Option[String]): DataFrame = logTo match {
-    case None => existing.unionByName(freshSegs)
-    case Some(root) =>
-      val landed = freshSegs.localCheckpoint(true)
-      Similarity.appendDriftLog(landed.sparkSession, s"$root/drift_log",
-        report)
+    val fresh = buildAppendSegments(existing, batch, idCol, vecCol, centroids,
+      codec, m, efConstruction, maxSegmentSize)
+    (logTo.fold(existing.unionByName(fresh)) { root =>
+      val landed = fresh.localCheckpoint(true)
+      Similarity.appendDriftLog(landed.sparkSession, s"$root/drift_log", report)
       existing.unionByName(landed)
+    }, report)
   }
 
   /** [[appendGraphCellsPq]] with the drift monitor wired in (the float
@@ -1950,13 +1974,10 @@ object GraphAnn {
       ref: Similarity.DriftStats, m: Int = 8, efConstruction: Int = 64,
       maxSegmentSize: Int = Int.MaxValue, residRatioMax: Double = 1.25,
       klMax: Double = 0.5,
-      logTo: Option[String] = None): (DataFrame, Similarity.DriftReport) = {
-    val report = monitorBatch(batch, vecCol, index.centroids, ref,
-      unit = true, residRatioMax, klMax, remedy = "publishPqServing")
-    (landThenLog(existing, buildAppendSegmentsPq(existing, batch, idCol,
-      vecCol, index, m, efConstruction, maxSegmentSize), report, logTo),
-      report)
-  }
+      logTo: Option[String] = None): (DataFrame, Similarity.DriftReport) =
+    monitoredAppend(existing, batch, idCol, vecCol, index.centroids,
+      NodeCodec.pq(index), ref, unit = true, remedy = "publishPqServing", m,
+      efConstruction, maxSegmentSize, residRatioMax, klMax, logTo)
 
   /** One bounded maintenance cycle's receipt: the republished version,
     * which cells tripped (now retired), their replacement cell ids, and
@@ -2062,13 +2083,12 @@ object GraphAnn {
           .unionByName(assignedBatch.filter(col("cell").isin(trippedSeq: _*))
             .select(col("id"), col("vec")))
           .localCheckpoint(true) // feeds retrain, graph build and the count
-        Some(head match {
+        // the retrain is the tier's own; the region's graph is one build
+        val (next, cells, newCells, rows) = head match {
           case FloatDrift(centroids, ref) =>
             val p = Similarity.retrainCellsIvf(spark, centroids, Some(ref),
               regionFloats, "id", "vec", tripped, splitFactor, ivfIters)
-            Retrained(FloatDrift(p.centroids, p.mergedStats),
-              buildGraphPerCell(spark, p.regionAssignments, m,
-                efConstruction, maxSegmentSize).localCheckpoint(true),
+            (FloatDrift(p.centroids, p.mergedStats), p.regionAssignments,
               p.newCells, p.regionStats.n)
           case pq @ PqDrift(art, _, _) =>
             // re-encoded against the UNCHANGED codebook; the graph build
@@ -2076,13 +2096,13 @@ object GraphAnn {
             // region rows (the full view would re-scan the corpus)
             val p = Similarity.retrainCellsIvfPq(spark, art, regionFloats,
               "id", "vec", tripped, splitFactor, ivfIters)
-            Retrained(pq.copy(art = art.copy(index = p.index),
-                ref = p.mergedStats),
-              buildGraphPerCellPq(spark, regionFloats, "id", "vec",
-                p.index.copy(coded = p.regionCoded), m, efConstruction,
-                maxSegmentSize).localCheckpoint(true),
-              p.newCells, p.regionStats.n)
-        })
+            (pq.copy(art = art.copy(index = p.index), ref = p.mergedStats),
+              codedCells(regionFloats, "id", "vec", p.regionCoded), p.newCells,
+              p.regionStats.n)
+        }
+        Some(Retrained(next, buildCellSegments(next.codec, cells, m,
+          efConstruction, maxSegmentSize, Map.empty).localCheckpoint(true),
+          newCells, rows))
       }
     val state = region.fold(head)(_.next)
     val kept = region.fold(nodes)(r => nodes
@@ -2095,12 +2115,8 @@ object GraphAnn {
     // PQ coded rows read from the O(batch) delta, never a full-graph scan
     val appended =
       if (restRows == 0L) None
-      else Some((state match {
-        case FloatDrift(centroids, _) => buildAppendSegments(kept, rest,
-          "id", "vec", centroids, m, efConstruction, maxSegmentSize)
-        case PqDrift(art, _, _) => buildAppendSegmentsPq(kept, rest, "id",
-          "vec", art.index, m, efConstruction, maxSegmentSize)
-      }).localCheckpoint(true))
+      else Some(buildAppendSegments(kept, rest, "id", "vec", state.centroids,
+        state.codec, m, efConstruction, maxSegmentSize).localCheckpoint(true))
     // the remainder's stats at its POST-APPEND routing (the append routes
     // against the retrained centroid set, so a remainder row can land in
     // a fresh cell — the pre-split assignment is the wrong basis), folded
@@ -2159,13 +2175,17 @@ object GraphAnn {
   private sealed trait DriftState {
     def centroids: Array[(Int, Array[Float])]
     def ref: Similarity.DriftStats
+    def codec: NodeCodec[_]
   }
   private final case class FloatDrift(centroids: Array[(Int, Array[Float])],
-      ref: Similarity.DriftStats) extends DriftState
+      ref: Similarity.DriftStats) extends DriftState {
+    def codec: NodeCodec[_] = NodeCodec.Float
+  }
   private final case class PqDrift(art: Similarity.IvfPqArtifacts,
       ref: Similarity.DriftStats, rotation: Option[Array[Array[Float]]])
       extends DriftState {
     def centroids: Array[(Int, Array[Float])] = art.index.centroids
+    def codec: NodeCodec[_] = NodeCodec.pq(art.index)
   }
 
   /** A partial retrain's output: the next state, the region's graph
@@ -2299,75 +2319,6 @@ object GraphAnn {
     clump
   }
 
-  /** Collect + unit-normalize the probe batch and route it with the
-    * IVF-PQ rule (unit space — the index trains its cells on unit
-    * vectors); ONE definition serves every PQ search path.
-    */
-  private def routePqBatch(probes: DataFrame, probeId: String,
-      probeVec: String, index: Similarity.IvfPqIndex,
-      nprobe: Int): Map[Int, Array[(Long, Array[Float])]] =
-    collectProbes(probes, probeId, probeVec)
-      .flatMap { case (pid, v) =>
-        val u = l2unit(v)
-        Similarity.nearestCells(index.centroids, u, nprobe)
-          .map(c => (c, (pid, u)))
-      }
-      .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-
-  /** Beam-search one PQ segment (= one IVF cell): scores are the ADC
-    * decomposition `q̂·c_cell + Σ table(sub)(code)` — no float vector is
-    * read; the table ((subspaces × codes) floats) is built once per
-    * (probe, cell) before the walk. Emits ≤ `kCand` candidates per probe.
-    */
-  private def searchSegmentPq(ns: Array[PqGraphNode],
-      queries: Iterable[(Long, Array[Float])], cellCentroid: Array[Float],
-      book: Similarity.PqCodebook, kCand: Int, ef: Int,
-      emit: Int => Boolean = emitAll): Iterator[(Long, Long, Double)] = {
-    if (ns.isEmpty) return Iterator.empty
-    val idIdx = new java.util.HashMap[Long, Integer](ns.length * 2)
-    ns.indices.foreach(i => idIdx.put(ns(i).id, i))
-    val adjLocal = resolveAdj(i => ns(i).neighbors, ns.length, idIdx)
-    val adj: (Int, Int) => Iterable[Int] = (n, l) =>
-      if (l < adjLocal(n).length) adjLocal(n)(l) else Nil
-    val (entry, roots) =
-      entryAndRoots(ns.length, i => ns(i).level, i => ns(i).id, adj)
-    val visited = new java.util.BitSet(ns.length)
-    queries.iterator.flatMap { case (pid, q) =>
-      val const = dot(q, cellCentroid)
-      // the one shared ADC builder — graph-vs-IVF score equality is
-      // gate-pinned and holds only while every tier builds it identically
-      val table = Similarity.adcTable(book, q)
-      val simOf: Int => Double = i => {
-        val cs = ns(i).codes
-        var s = const
-        var sc = 0
-        while (sc < cs.length) { s += table(sc)(cs(sc) & 0xff); sc += 1 }
-        s
-      }
-      var ep = entry
-      var l = ns(entry).level
-      while (l > 0) { ep = greedyStep(simOf, ep, l, adj); l -= 1 }
-      val w = searchLayer(simOf, ep :: roots, ef, 0, adj, visited, emit)
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-      val it2 = w.iterator()
-      var taken = 0
-      while (it2.hasNext && taken < kCand) {
-        val (i, s) = it2.next(); out += ((pid, ns(i).id, s)); taken += 1
-      }
-      out
-    }
-  }
-
-  /** [[liveEmit]] for PQ segments. */
-  private def liveEmitPq(
-      bcTomb: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]],
-      ns: Array[PqGraphNode]): Int => Boolean = bcTomb match {
-    case None => emitAll
-    case Some(b) =>
-      val sorted = b.value
-      i => java.util.Arrays.binarySearch(sorted, ns(i).id) < 0
-  }
-
   /** Routed batch search over a [[buildGraphPerCellPq]] index — the full
     * DiskANN-shaped serving path: probes route to their nprobe cells in
     * UNIT space (identical to [[Similarity.searchIvfPq]]'s rule), each
@@ -2404,29 +2355,27 @@ object GraphAnn {
       tombstones: Option[DataFrame] = None,
       corpusVecTransform: Option[org.apache.spark.sql.expressions
         .UserDefinedFunction] = None): DataFrame =
-    searchGraphRoutedPqWithRoutes(nodes, index, corpus, idCol, vecCol,
-      probes, probeId, probeVec,
-      routePqBatch(probes, probeId, probeVec, index, nprobe), k, ef,
-      rerankFactor, clumpGuard, clumpBound, tombstones, corpusVecTransform)
+    routedPq(nodes, index, corpus, idCol, vecCol, probes, probeId, probeVec,
+      routeBatch(probes, probeId, probeVec, index.centroids, nprobe, unit = true),
+      None, k, ef, rerankFactor, clumpGuard, clumpBound, tombstones,
+      corpusVecTransform)
 
-  /** [[searchGraphRoutedPq]] body with the routing PRECOMPUTED — shared
-    * with [[searchGraphRoutedPqPersisted]], which routes once to prune
-    * the scan and must drive the beams with that SAME map (routing twice
+  /** The PQ search body with the routing PRECOMPUTED — shared by
+    * [[searchGraphRoutedPq]], [[searchGraphRoutedPqFiltered]] (`allowed`)
+    * and [[searchGraphRoutedPqPersisted]], which routes once to prune the
+    * scan and must drive the beams with that SAME map (routing twice
     * would collect the probe batch twice, and a nondeterministic probes
-    * frame could then prune one cell set while beaming another).
+    * frame could then prune one cell set while beaming another): the
+    * clump guard, ADC beams over the routed cells, then [[pqRerank]].
     */
-  private def searchGraphRoutedPqWithRoutes(nodes: DataFrame,
+  private def routedPq(nodes: DataFrame,
       index: Similarity.IvfPqIndex, corpus: DataFrame, idCol: String,
       vecCol: String, probes: DataFrame, probeId: String, probeVec: String,
-      routes: Map[Int, Array[(Long, Array[Float])]], k: Int, ef: Int,
-      rerankFactor: Int, clumpGuard: Boolean, clumpBound: Option[Int],
-      tombstones: Option[DataFrame],
+      routes: Map[Int, Array[(Long, Array[Float])]], allowed: Option[DataFrame],
+      k: Int, ef: Int, rerankFactor: Int, clumpGuard: Boolean,
+      clumpBound: Option[Int], tombstones: Option[DataFrame],
       corpusVecTransform: Option[org.apache.spark.sql.expressions
-        .UserDefinedFunction] = None): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val bcR = spark.sparkContext.broadcast(
-      (routes, index.centroids.toMap, index.book))
+        .UserDefinedFunction]): DataFrame = {
     val routedCells = routes.keys.toSeq
     // a serving deployment passes the build-time pqClumpBound so the
     // guard costs nothing per call; the default measures the probed
@@ -2436,20 +2385,8 @@ object GraphAnn {
       if (!clumpGuard || routedCells.isEmpty) 0
       else servingClumpBound(nodes, routedCells, clumpBound, k, rerankFactor)
     val kCand = math.max(k * rerankFactor, if (clump > 0) clump + k else 0)
-    val efLocal = math.max(ef, kCand)
-    val bcTomb = broadcastTombstones(spark, tombstones)
-    val approx = nodes.as[PqGraphNode].mapPartitions { it =>
-      val (rts, centroidOf, book) = bcR.value
-      it.toArray.groupBy(n => (n.part, n.seg)).iterator.flatMap {
-        case ((cell, _), ns) =>
-          rts.get(cell) match {
-            case Some(qs) =>
-              searchSegmentPq(ns, qs, centroidOf(cell), book, kCand, efLocal,
-                liveEmitPq(bcTomb, ns))
-            case None => Iterator.empty
-          }
-      }
-    }.toDF("probe_id", "id", "approx_sim")
+    val approx = routedCandidates(NodeCodec.pq(index), nodes, routes, allowed,
+      kCand, ef, tombstones).toDF("probe_id", "id", "approx_sim")
     pqRerank(approx, corpus, idCol, vecCol, probes, probeId, probeVec,
       kCand, k, corpusVecTransform)
   }
@@ -2472,48 +2409,11 @@ object GraphAnn {
       clumpBound: Option[Int] = None,
       tombstones: Option[DataFrame] = None,
       corpusVecTransform: Option[org.apache.spark.sql.expressions
-        .UserDefinedFunction] = None): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val routes = routePqBatch(probes, probeId, probeVec, index, nprobe)
-    val routedCells = routes.keys.toSeq
-    val routedNodes = nodes.filter(col("part").isin(routedCells: _*))
-    val clump =
-      if (!clumpGuard || routedCells.isEmpty) 0
-      else servingClumpBound(nodes, routedCells, clumpBound, k, rerankFactor)
-    val kCand = math.max(k * rerankFactor, if (clump > 0) clump + k else 0)
-    val efLocal = math.max(ef, kCand)
-    val flagged = routedNodes
-      .join(allowed.select(col("id").cast("long").as("id")).distinct()
-        .withColumn("allowed", lit(true)), Seq("id"), "left")
-      .withColumn("allowed", coalesce(col("allowed"), lit(false)))
-      .repartition(col("part"), col("seg"))
-    val bcR = spark.sparkContext.broadcast(
-      (routes, index.centroids.toMap, index.book))
-    val bcTomb = broadcastTombstones(spark, tombstones)
-    val approx = flagged.as[FlaggedPqNode].mapPartitions { it =>
-      val (rts, centroidOf, book) = bcR.value
-      it.toArray.groupBy(n => (n.part, n.seg)).iterator.flatMap {
-        case ((cell, _), fs) =>
-          rts.get(cell) match {
-            case Some(qs) =>
-              val ns = fs.map(f =>
-                PqGraphNode(f.part, f.id, f.codes, f.level, f.neighbors, f.seg))
-              val live = liveEmitPq(bcTomb, ns)
-              searchSegmentPq(ns, qs, centroidOf(cell), book, kCand, efLocal,
-                i => fs(i).allowed && live(i))
-            case None => Iterator.empty
-          }
-      }
-    }.toDF("probe_id", "id", "approx_sim")
-    pqRerank(approx, corpus, idCol, vecCol, probes, probeId, probeVec,
-      kCand, k, corpusVecTransform)
-  }
-
-  /** [[FlaggedNode]]'s PQ twin (see the encoder visibility note there). */
-  private[graft] final case class FlaggedPqNode(part: Int, id: Long,
-      codes: Array[Byte], level: Int, neighbors: Array[Array[Long]], seg: Int,
-      allowed: Boolean)
+        .UserDefinedFunction] = None): DataFrame =
+    routedPq(nodes, index, corpus, idCol, vecCol, probes, probeId, probeVec,
+      routeBatch(probes, probeId, probeVec, index.centroids, nprobe, unit = true),
+      Some(allowed), k, ef, rerankFactor, clumpGuard, clumpBound, tombstones,
+      corpusVecTransform)
 
   /** The shared stage-1-merge + exact-rerank tail of both PQ search
     * paths: per-probe ADC survivors cap at `kCand` through the
@@ -2559,55 +2459,28 @@ object GraphAnn {
   def purgeTombstonesPq(nodes: DataFrame, tombstones: DataFrame,
       corpus: DataFrame, idCol: String, vecCol: String, m: Int = 8,
       efConstruction: Int = 64): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val ids = tombstones.select(col("id").cast("long"))
-      .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
-    java.util.Arrays.sort(ids)
-    val bcIds = spark.sparkContext.broadcast(ids)
-    val ds = nodes.as[PqGraphNode]
-    def isTomb(id: Long): Boolean =
-      java.util.Arrays.binarySearch(bcIds.value, id) >= 0
-    val touched = touchedSegments(nodes, bcIds)
-    if (touched.isEmpty) return nodes
-    val bcSegs = spark.sparkContext.broadcast(touched.keySet)
-    val untouched = ds.filter(n => !bcSegs.value.contains((n.part, n.seg)))
-    val survivors = ds
-      .filter(n => bcSegs.value.contains((n.part, n.seg)) && !isTomb(n.id))
-      .map(n => (n.part, n.seg, n.id, n.codes))
-      .toDF("part", "seg", "id", "codes")
-      .localCheckpoint(true) // read twice: drift check + rebuild
-    val joined = survivors
-      .join(corpus.select(col(idCol).cast("long").as("id"),
-        col(vecCol).as("vec")), Seq("id"))
-      .localCheckpoint(true) // read twice: drift check + rebuild
-    // fail fast on corpus drift: unlike the float tier (which rebuilds
-    // from STORED vectors), this rebuild derives vectors from the
-    // caller's corpus — a survivor missing there would silently vanish
-    // from the index, a duplicated corpus id would duplicate nodes
-    val nSurv = survivors.count()
-    val nJoined = joined.count()
-    require(nJoined == nSurv,
-      s"purgeTombstonesPq: the touched segments hold $nSurv surviving " +
-        s"nodes but the corpus join returned $nJoined rows — the corpus " +
-        "has drifted from the index (missing or duplicated ids); " +
-        "rebuilding would silently lose or duplicate nodes")
-    val keyed = joined
-      .as[(Long, Int, Int, Array[Byte], Array[Float])]
-      .map { case (id, part, seg, cs, v) => (part, seg, (id, v, cs)) }
-    val rebuilt = perSegment(keyed, packedTasks(spark, touched)) { (part, seg, it) =>
-      val rows = it.toArray
-      java.util.Arrays.sort(rows,
-        Ordering.by[(Long, Array[Float], Array[Byte]), Long](_._1))
-      val codesOf = new java.util.HashMap[Long, Array[Byte]](rows.length * 2)
-      rows.foreach { case (id, _, cs) => codesOf.put(id, cs) }
-      val b = new Builder(m, efConstruction)
-      rows.foreach { case (id, v, _) => b.insert(id, l2unit(v)) }
-      b.emit(part, seg).map(n =>
-        PqGraphNode(n.part, n.id, codesOf.get(n.id), n.level, n.neighbors,
-          n.seg))
+    import nodes.sparkSession.implicits._
+    purgeSegments(nodes, tombstones, m, efConstruction) { survivors =>
+      val kept = survivors.select(col("part"), col("seg"), col("id"), col("codes"))
+        .localCheckpoint(true) // read twice: drift check + rebuild
+      val joined = kept
+        .join(corpus.select(col(idCol).cast("long").as("id"),
+          col(vecCol).as("vec")), Seq("id"))
+        .localCheckpoint(true) // read twice: drift check + rebuild
+      // fail fast on corpus drift: unlike the float tier (which rebuilds
+      // from STORED vectors), this rebuild derives vectors from the
+      // caller's corpus — a survivor missing there would silently vanish
+      // from the index, a duplicated corpus id would duplicate nodes
+      val nSurv = kept.count()
+      val nJoined = joined.count()
+      require(nJoined == nSurv,
+        s"purgeTombstonesPq: the touched segments hold $nSurv surviving " +
+          s"nodes but the corpus join returned $nJoined rows — the corpus " +
+          "has drifted from the index (missing or duplicated ids); " +
+          "rebuilding would silently lose or duplicate nodes")
+      joined.as[(Long, Int, Int, Array[Byte], Array[Float])]
+        .map { case (id, part, seg, cs, v) => (part, seg, (id, l2unit(v), cs)) }
     }
-    untouched.toDF().unionByName(rebuilt.toDF())
   }
 
   /** Single-probe convenience over [[searchGraphBatch]]. */

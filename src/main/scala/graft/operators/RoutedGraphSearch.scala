@@ -198,7 +198,8 @@ private[operators] final class SearchCellsTask(
     nodes.groupBy(g => (g.part, g.seg)).toSeq
       .flatMap { case ((cell, _), ns) =>
         routes.get(cell).fold(Iterator.empty[(Long, Long, Double)])(qs =>
-          GraphAnn.searchSegment(ns, qs, k, ef, GraphAnn.liveEmit(tombstones, ns)))
+          GraphAnn.searchSegment(ns, qs, k, ef, GraphAnn.liveEmit(tombstones, ns),
+            GraphAnn.NodeCodec.Float.scorer(ns, cell)))
       }
       .groupBy(_._1).iterator.flatMap { case (pid, cs) =>
         RoutedGraphSearchExec.topK(cs, k).map { case (id, sim) => (pid, id, sim) }

@@ -81,11 +81,6 @@ object ChunkIndexer {
   def purgeMissing(index: DataFrame, liveParents: DataFrame): DataFrame =
     index.join(liveParents.select(col("parent_id")).distinct(), Seq("parent_id"), "left_semi")
 
-  /** A1 state snapshot: per-parent chunk count + max token count. */
-  def stateSnapshot(index: DataFrame): DataFrame =
-    index.groupBy(col("parent_id"))
-      .agg(count(lit(1)).as("n_chunks"), max(col("n_tokens")).as("max_tokens"))
-
   /** Flagship end-to-end slice (SURVEY §7.2): chunk+embed the documents table
     * and attach the per-source chunk counts — exercises scan, generator,
     * window, service map and aggregation in one job.

@@ -849,7 +849,7 @@ class GraphAnnSpec extends AnyFunSuite {
         m = M, efConstruction = 48)
       .as[GraphAnn.PqGraphNode].localCheckpoint(true)
     // maxSegmentSize forces the arrival batch to hash-slice per cell,
-    // like the float twin's spec — the shared buildCellSegmentsPq body
+    // like the float twin's spec — the one buildCellSegments body
     val appended = GraphAnn.appendGraphCellsPq(even.toDF(),
       emb.filter($"vec_id" % 2 === 1), "vec_id", "embedding", ivfPq,
       m = M, efConstruction = 48, maxSegmentSize = 20).localCheckpoint(true)
@@ -1290,6 +1290,47 @@ class GraphAnnSpec extends AnyFunSuite {
         "9e965219b8e59563fa37712a7e8ca2f951242cbbb4386ffa2f4aecf152c1b4c2",
       "pq append" ->
         "8c0eb5ac55e49e356de3a12c3abd1d3e04ac634138b660ecd7a7f54bfd19f1f5"))
+  }
+
+  /** The seeded PQ graph, at most 20 nodes per segment. */
+  private lazy val slicedPqNodes = GraphAnn.buildGraphPerCellPq(spark, seededDf, "id", "vec",
+    seededPq, m = M, efConstruction = 48, maxSegmentSize = 20).localCheckpoint(true)
+
+  test("a purge passes untouched segments through undecoded, on both tiers") {
+    import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, TypedFilter, Union}
+    val purged = Seq(
+      "float" -> GraphAnn.purgeTombstones(slicedNodes, tombsTouching(slicedNodes, 3),
+        m = M, efConstruction = 48),
+      "pq" -> GraphAnn.purgeTombstonesPq(slicedPqNodes, tombsTouching(slicedPqNodes, 3),
+        seededDf, "id", "vec", m = M, efConstruction = 48))
+    purged.foreach { case (tier, df) =>
+      val passThrough = df.queryExecution.optimizedPlan
+        .collectFirst { case u: Union => u.children.head }
+      assert(passThrough.isDefined, s"$tier: no pass-through branch")
+      val decodes = passThrough.get.collect {
+        case d: DeserializeToObject => d
+        case f: TypedFilter => f
+      }
+      assert(decodes.isEmpty, s"$tier: the pass-through branch decodes nodes: $decodes")
+    }
+    val none = Seq(-1L).toDF("id")
+    assert(GraphAnn.purgeTombstones(slicedNodes, none, m = M, efConstruction = 48) eq slicedNodes)
+    assert(GraphAnn.purgeTombstonesPq(slicedPqNodes, none, seededDf, "id", "vec", m = M,
+      efConstruction = 48) eq slicedPqNodes)
+  }
+
+  test("a PQ purge refuses a corpus that is missing or duplicates a survivor") {
+    // the first segment's ids: tombstone its smallest, so the next survives
+    val seg = slicedPqNodes.select($"part", $"seg", $"id").as[(Int, Int, Long)].collect()
+      .groupBy(t => (t._1, t._2)).toSeq.sortBy(_._1).head._2.map(_._3).sorted
+    val survivor = seg(1)
+    Seq("missing" -> seededDf.filter($"id" =!= survivor),
+      "duplicated" -> seededDf.unionByName(seededDf.filter($"id" === survivor))).foreach {
+      case (how, corpus) =>
+        val e = intercept[IllegalArgumentException](GraphAnn.purgeTombstonesPq(slicedPqNodes,
+          Seq(seg(0)).toDF("id"), corpus, "id", "vec", m = M, efConstruction = 48))
+        assert(e.getMessage.contains("missing or duplicated"), s"$how: ${e.getMessage}")
+    }
   }
 
   /** Tasks that read shuffle rows while `body` materializes. */
