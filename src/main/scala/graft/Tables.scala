@@ -239,8 +239,6 @@ object Tables {
   private val rowCountMemo =
     new scala.collection.concurrent.TrieMap[String, (String, Long)]()
 
-  private[graft] def rowCountMemoSize: Int = rowCountMemo.size
-
   /** Exact table row count straight from parquet FOOTER metadata (every
     * row group records its row count) — ZERO Spark jobs, same lakehouse
     * stats posture and fingerprint-validated replace-on-write memo as

@@ -1165,7 +1165,7 @@ object GraphAnn {
       probeId: String, probeVec: String, nprobe: Int, k: Int,
       ef: Int, tombstones: Option[DataFrame] = None): DataFrame =
     mergeTopK(routedCandidates(NodeCodec.Float, nodes, routeBatch(probes,
-      probeId, probeVec, centroids, nprobe, unit = false), None, k, ef,
+      probeId, probeVec, centroids, nprobe, pq = None), None, k, ef,
       tombstones).toDF("probe_id", "id", "sim"), k)
 
   /** FILTERED routed graph search — the [[Similarity.searchIvfFiltered]]
@@ -1197,7 +1197,7 @@ object GraphAnn {
       probeId: String, probeVec: String, allowed: DataFrame, nprobe: Int,
       k: Int, ef: Int, tombstones: Option[DataFrame] = None): DataFrame =
     mergeTopK(routedCandidates(NodeCodec.Float, nodes, routeBatch(probes,
-      probeId, probeVec, centroids, nprobe, unit = false), Some(allowed), k, ef,
+      probeId, probeVec, centroids, nprobe, pq = None), Some(allowed), k, ef,
       tombstones).toDF("probe_id", "id", "sim"), k)
 
   /** Collect the probe batch (bounded — a serving batch, never the
@@ -1291,16 +1291,18 @@ object GraphAnn {
 
   /** Route each probe of the batch to its nprobe cells, searching on unit
     * vectors: routing in the centroids' space — RAW on the float tier
-    * (`unit = false`), unit on the PQ tier, whose index trains its cells
-    * on unit vectors. ONE definition serves every routed search path.
+    * (`pq = None`), unit on the PQ tier, whose index trains its cells
+    * on unit vectors (rotated first on an OPQ index, [[Opq.intoSpace]]).
+    * ONE definition serves every routed search path.
     */
   private def routeBatch(probes: DataFrame, probeId: String,
-      probeVec: String, centroids: Array[(Int, Array[Float])],
-      nprobe: Int, unit: Boolean): Map[Int, Array[(Long, Array[Float])]] =
+      probeVec: String, centroids: Array[(Int, Array[Float])], nprobe: Int,
+      pq: Option[Similarity.IvfPqIndex]): Map[Int, Array[(Long, Array[Float])]] =
     collectProbes(probes, probeId, probeVec)
-      .flatMap { case (pid, v) =>
+      .flatMap { case (pid, raw) =>
+        val v = pq.fold(raw)(ix => Opq.intoSpace(raw, ix.rotation).toArray)
         val u = l2unit(v)
-        Similarity.nearestCells(centroids, if (unit) u else v, nprobe)
+        Similarity.nearestCells(centroids, if (pq.isDefined) u else v, nprobe)
           .map(c => (c, (pid, u)))
       }
       .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
@@ -1485,7 +1487,7 @@ object GraphAnn {
       // beams; each cell's files are read whole by one task, so every
       // (part, seg) segment stays local without a repartition
       val routes = routeBatch(probes, probeId, probeVec, centroids, nprobe,
-        unit = false)
+        pq = None)
       val cells = routes.keys.toSeq.sorted
       val files = cells.flatMap(c =>
         graft.core.Fs.listDataFiles(spark, s"$dir/part=$c").map(st =>
@@ -1508,7 +1510,7 @@ object GraphAnn {
       legs: (() => Unit)*): Unit = {
     import scala.concurrent.{Await, Future}
     // dedicated cached pool, NOT the process-global EC: a publish leg that
-    // itself overlaps its side writes (publishPqServingOpq → writeIvfPq)
+    // itself overlaps its side writes (publishPqServing → writeIvfPq)
     // nests overlap, and the fixed-size global pool can serialize or
     // wedge the inner legs on a low-core machine (r19 advice)
     implicit val ec: scala.concurrent.ExecutionContext = graft.core.Pools.io
@@ -1568,6 +1570,9 @@ object GraphAnn {
     * A request whose probes are a `LocalRelation` ([[collectProbes]])
     * builds its search with no Spark action: the caller's own action on
     * the returned frame is the request's one SQL execution and one job.
+    * A PQ or OPQ root holds no float vectors and is refused, naming
+    * [[searchGraphRoutedPqColdStart]] (checked when [[routingHead]]
+    * reads a version's head, so a warm request pays nothing for it).
     */
   def searchGraphRoutedColdStart(spark: SparkSession, root: String,
       probes: DataFrame, probeId: String, probeVec: String, nprobe: Int,
@@ -1635,19 +1640,26 @@ object GraphAnn {
       s"$root/$version/artifacts/centroids")
 
   /** The root's routing head for `version`, as [[RoutingHead]] says: the
-    * held entry on a stamp hit, else the version's centroids read with
-    * the held reader kept; then a reader built unless the held one was
-    * built for `spark` and its current SQL settings.
+    * held entry on a stamp hit, else — once [[ServingTier.of]] shows a
+    * float version — the version's centroids read with the held reader
+    * kept; then a reader built unless the held one was built for `spark`
+    * and its current SQL settings.
     */
   private def routingHead(spark: SparkSession, root: String,
       version: String): RoutingHead = {
     val stamp = headStamp(spark, root, version)
     val confs = spark.sessionState.conf.getAllConfs
     routingHeads.compute(root, (_, held) => {
+      def read() = ServingTier.of(spark, root, version) match {
+        case ServingTier.Float => Similarity.readCentroids(spark,
+          s"$root/$version/artifacts/centroids")
+        case tier => throw new IllegalStateException(s"$root/$version is " +
+          s"a ${tier.name} serving root (codes, no float vectors) — serve " +
+          "it with GraphAnn.searchGraphRoutedPqColdStart")
+      }
       val head =
         if (held != null && held.stamp == stamp) held
-        else RoutingHead(stamp, Similarity.readCentroids(spark,
-          s"$root/$version/artifacts/centroids"), Option(held).flatMap(_.reader))
+        else RoutingHead(stamp, read(), Option(held).flatMap(_.reader))
       if (head.reader.exists(_.builtFor(spark, confs))) head
       else head.copy(reader = Some(buildCellsReader(spark, confs)))
     })
@@ -1703,13 +1715,11 @@ object GraphAnn {
     * per probe BATCH; a long-lived server calls [[Similarity.readIvfPq]]
     * once per published version instead.
     *
-    * The tier comes from the version ([[ServingTier.of]]). An
-    * [[Opq.publishPqServingOpq]] root rotates the probes into the space
-    * its cells and codes live in and hands the rotation to the exact
-    * rerank as the survivor transform (O(k·rerankFactor·|probes|) —
-    * never the corpus) — row-identical to the in-memory
-    * [[Opq.searchGraphRoutedPqOpq]] over the same files (gate v40). A
-    * float root holds no codes and is refused, naming
+    * The tier comes from the version ([[ServingTier.of]]). An OPQ
+    * root's rotation comes back with the artifacts, in the same read,
+    * and the index serves it as the in-memory search does — row-identical
+    * to [[searchGraphRoutedPq]] over the same files (gate v40). A float
+    * root holds no codes and is refused, naming
     * [[searchGraphRoutedColdStart]].
     */
   def searchGraphRoutedPqColdStart(spark: SparkSession, root: String,
@@ -1719,18 +1729,14 @@ object GraphAnn {
       allowed: Option[DataFrame] = None): DataFrame = {
     val v = graft.pipeline.VersionedIndex.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no published PQ serving state under $root"))
-    val tier = ServingTier.of(spark, root, v)
-    if (tier == ServingTier.Float)
+    if (ServingTier.of(spark, root, v) == ServingTier.Float)
       throw new IllegalStateException(s"$root/$v is a float serving root " +
         "(no PQ codes) — serve it with GraphAnn.searchGraphRoutedColdStart")
-    val rot = tier.rotation(spark).map(Opq.rotateUnitUdf(spark, _))
     val art = Similarity.readIvfPq(spark, s"$root/$v/artifacts")
     searchGraphRoutedPqPersisted(spark, s"$root/$v/cells", art.index,
-      corpus, idCol, vecCol,
-      rot.fold(probes)(Opq.rotateRows(probes, probeId, probeVec, _)),
-      probeId, probeVec, nprobe, k, ef, rerankFactor, clumpGuard = true,
-      clumpBound = art.clumpBound, tombstones = tombstones,
-      allowed = allowed, corpusVecTransform = rot)
+      corpus, idCol, vecCol, probes, probeId, probeVec, nprobe, k, ef,
+      rerankFactor, clumpGuard = true, clumpBound = art.clumpBound,
+      tombstones = tombstones, allowed = allowed)
   }
 
   /** [[searchGraphRoutedPq]] against the PERSISTED partition-per-cell
@@ -1754,12 +1760,10 @@ object GraphAnn {
       nprobe: Int, k: Int, ef: Int, rerankFactor: Int = 4,
       clumpGuard: Boolean = true, clumpBound: Option[Int] = None,
       tombstones: Option[DataFrame] = None,
-      allowed: Option[DataFrame] = None,
-      corpusVecTransform: Option[org.apache.spark.sql.expressions
-        .UserDefinedFunction] = None): DataFrame = {
+      allowed: Option[DataFrame] = None): DataFrame = {
     // route ONCE: the same map prunes the scan and drives the beams
     val routes = routeBatch(probes, probeId, probeVec, index.centroids,
-      nprobe, unit = true)
+      nprobe, Some(index))
     val cells = spark.read.schema(pqCellsSchema).parquet(dir)
     // a filtered search prunes and restores locality after its flag join
     val nodes = if (allowed.isDefined) cells
@@ -1767,7 +1771,7 @@ object GraphAnn {
         .repartition(col("part"), col("seg"))
     routedPq(nodes, index, corpus, idCol, vecCol, probes, probeId, probeVec,
       routes, allowed, k, ef, rerankFactor, clumpGuard, clumpBound,
-      tombstones, corpusVecTransform)
+      tombstones)
   }
 
   /** [[searchGraphRoutedPqPersisted]] against the CURRENTLY PUBLISHED
@@ -1853,14 +1857,17 @@ object GraphAnn {
     * q̂·c_cell + residual table lookups), the per-cell graphs are built
     * on the exact unit vectors, and the emitted nodes carry ONLY the
     * codes — (subspaces + 2m·8) B/node instead of (dim·4 + 2m·8) B.
-    * One corpus join (id → codes) + one group-by-cell shuffle.
+    * One corpus join (id → codes) + one group-by-cell shuffle. On an OPQ
+    * index the corpus rotates first — one O(n) pass at BUILD time, never
+    * at serving time.
     */
   def buildGraphPerCellPq(spark: SparkSession, corpus: DataFrame,
       idCol: String, vecCol: String, index: Similarity.IvfPqIndex,
       m: Int = 8, efConstruction: Int = 64,
       maxSegmentSize: Int = Int.MaxValue): DataFrame =
-    buildCellSegments(NodeCodec.pq(index), codedCells(corpus, idCol, vecCol,
-      index.coded), m, efConstruction, maxSegmentSize, Map.empty)
+    buildCellSegments(NodeCodec.pq(index), codedCells(Opq.intoSpace(corpus,
+      idCol, vecCol, index.rotation), idCol, vecCol, index.coded), m,
+      efConstruction, maxSegmentSize, Map.empty)
 
   /** A PQ cells frame: `corpus`' floats joined to the cell and code word
     * of their `coded` rows (an IVF-PQ index's `coded` table).
@@ -1881,14 +1888,16 @@ object GraphAnn {
     * byte-identical. Ids must be globally unique across existing + batch
     * ([[appendGraphCells]]' contract). Compact slice growth later with
     * `mergeSegments(withinPart = true)`; retrain drift via a scheduled
-    * rebuild published through [[publishGraphCells]].
+    * rebuild published through [[publishGraphCells]]. An OPQ index's
+    * batch rotates into its space first.
     */
   def appendGraphCellsPq(existing: DataFrame, batch: DataFrame,
       idCol: String, vecCol: String, index: Similarity.IvfPqIndex,
       m: Int = 8, efConstruction: Int = 64,
       maxSegmentSize: Int = Int.MaxValue): DataFrame =
-    existing.unionByName(buildAppendSegments(existing, batch, idCol,
-      vecCol, index.centroids, NodeCodec.pq(index), m, efConstruction,
+    existing.unionByName(buildAppendSegments(existing,
+      Opq.intoSpace(batch, idCol, vecCol, index.rotation), idCol, vecCol,
+      index.centroids, NodeCodec.pq(index), m, efConstruction,
       maxSegmentSize))
 
   /** [[appendGraphCells]] with the drift monitor wired in — the float
@@ -1975,9 +1984,10 @@ object GraphAnn {
       maxSegmentSize: Int = Int.MaxValue, residRatioMax: Double = 1.25,
       klMax: Double = 0.5,
       logTo: Option[String] = None): (DataFrame, Similarity.DriftReport) =
-    monitoredAppend(existing, batch, idCol, vecCol, index.centroids,
-      NodeCodec.pq(index), ref, unit = true, remedy = "publishPqServing", m,
-      efConstruction, maxSegmentSize, residRatioMax, klMax, logTo)
+    monitoredAppend(existing, Opq.intoSpace(batch, idCol, vecCol,
+      index.rotation), idCol, vecCol, index.centroids, NodeCodec.pq(index),
+      ref, unit = true, remedy = "publishPqServing", m, efConstruction,
+      maxSegmentSize, residRatioMax, klMax, logTo)
 
   /** One bounded maintenance cycle's receipt: the republished version,
     * which cells tripped (now retired), their replacement cell ids, and
@@ -1993,8 +2003,8 @@ object GraphAnn {
     * CHANGED region, not the corpus — the cost lever the reference names
     * too, CHANGELOG v2.2.5 "full re-index = significant cost
     * implications"). Against the CURRENT version under `root`, whatever
-    * its tier ([[ServingTier.of]]: a [[publishServing]],
-    * [[publishPqServing]] or [[Opq.publishPqServingOpq]] root):
+    * its tier ([[ServingTier.of]]: a [[publishServing]] or
+    * [[publishPqServing]] root, the latter PQ or OPQ):
     *
     *  1. Localize: score `batch` against the stored drift reference and
     *     take [[Similarity.trippedCells]]. No tripped cell → None (the
@@ -2038,15 +2048,16 @@ object GraphAnn {
     val head = readDriftState(spark, root, v)
     // the tier's differences: PQ and OPQ route unit vectors (the float
     // tier routes them as given), and an OPQ index lives in rotated space
-    val unit = head.isInstanceOf[PqDrift]
-    val rot = head match {
-      case PqDrift(_, _, r) => r.map(Opq.rotateUnitUdf(spark, _))
-      case _ => None
+    // — the batch enters it here, the region's members once fetched, and
+    // everything in between runs in index space
+    val (unit, rotation) = head match {
+      case PqDrift(art, _) => (true, art.index.rotation)
+      case _ => (false, None)
     }
     // ONE nearest-centroid pass over the batch: the assignment drives
     // BOTH the drift scoring and the tripped/rest split below
     val assignedBatch = Similarity.assignUnitCells(spark,
-      rot.fold(batch)(Opq.rotateRows(batch, batchIdCol, batchVecCol, _)),
+      Opq.intoSpace(batch, batchIdCol, batchVecCol, rotation),
       batchIdCol, batchVecCol, head.centroids, unit)
       .localCheckpoint(true)
     val batchStats = Similarity.statsOverCellRn(
@@ -2077,9 +2088,9 @@ object GraphAnn {
         // lack; this rebuild heals that asymmetry for the region) + the
         // batch's tripped rows. One id-join against the corpus,
         // O(region), rotated into index space only after it lands.
-        val members = trippedMembers(nodes, corpus, idCol, vecCol, tripped)
-        val regionFloats = rot.fold(members)(t =>
-            members.select(col("id"), t(col("vec")).as("vec")))
+        val regionFloats = Opq.intoSpace(
+            trippedMembers(nodes, corpus, idCol, vecCol, tripped), "id", "vec",
+            rotation)
           .unionByName(assignedBatch.filter(col("cell").isin(trippedSeq: _*))
             .select(col("id"), col("vec")))
           .localCheckpoint(true) // feeds retrain, graph build and the count
@@ -2090,7 +2101,7 @@ object GraphAnn {
               regionFloats, "id", "vec", tripped, splitFactor, ivfIters)
             (FloatDrift(p.centroids, p.mergedStats), p.regionAssignments,
               p.newCells, p.regionStats.n)
-          case pq @ PqDrift(art, _, _) =>
+          case pq @ PqDrift(art, _) =>
             // re-encoded against the UNCHANGED codebook; the graph build
             // joins the REGION-restricted coded view so it touches only
             // region rows (the full view would re-scan the corpus)
@@ -2136,7 +2147,7 @@ object GraphAnn {
     val newV = state match {
       case FloatDrift(centroids, _) => publishServing(newNodes, centroids,
         root, Some(publishedRef), keepVersions)
-      case PqDrift(art, _, rotation) =>
+      case PqDrift(art, _) =>
         // the segments already carry the codes — derive the coded rows
         // instead of encoding the remainder twice
         val index = art.index.copy(coded = appended.fold(art.index.coded)(f =>
@@ -2146,11 +2157,9 @@ object GraphAnn {
         val bound = art.clumpBound.fold(pqClumpBound(newNodes))(b =>
           math.max(b, pqClumpBound(
             (region.map(_.nodes) ++ appended).reduce(_ unionByName _))))
-        rotation.fold(publishPqServing(newNodes, index, root, Some(bound),
-          Some(publishedRef), keepVersions))(r =>
-          // the ONE OPQ publish carries rotation/ through the same flip
-          Opq.publishPqServingOpq(spark, newNodes, Opq.IvfOpqIndex(r, index),
-            root, Some(bound), Some(publishedRef), keepVersions))
+        // an OPQ index carries its frozen rotation through the same flip
+        publishPqServing(newNodes, index, root, Some(bound),
+          Some(publishedRef), keepVersions)
     }
     // the retrain measured the region's stats over exactly its rows — its
     // n IS the region count (no extra count job, r19; post null-vector
@@ -2170,7 +2179,7 @@ object GraphAnn {
 
   /** The served state [[rebuildDriftedServing]] reads, extends and
     * republishes: the float tier's routing head, or the PQ tier's
-    * artifacts with the frozen rotation of an OPQ root.
+    * artifacts (an OPQ root's frozen rotation among them).
     */
   private sealed trait DriftState {
     def centroids: Array[(Int, Array[Float])]
@@ -2182,8 +2191,7 @@ object GraphAnn {
     def codec: NodeCodec[_] = NodeCodec.Float
   }
   private final case class PqDrift(art: Similarity.IvfPqArtifacts,
-      ref: Similarity.DriftStats, rotation: Option[Array[Array[Float]]])
-      extends DriftState {
+      ref: Similarity.DriftStats) extends DriftState {
     def centroids: Array[(Int, Array[Float])] = art.index.centroids
     def codec: NodeCodec[_] = NodeCodec.pq(art.index)
   }
@@ -2207,12 +2215,9 @@ object GraphAnn {
       case ServingTier.Float =>
         val (centroids, ref) = Similarity.readIvfHead(spark, dir)
         FloatDrift(centroids, ref.getOrElse(throw noRef("publishServing")))
-      case tier =>
-        val rotation = tier.rotation(spark)
+      case _ =>
         val art = Similarity.readIvfPq(spark, dir)
-        PqDrift(art, art.driftStats.getOrElse(throw noRef(
-          if (rotation.isEmpty) "publishPqServing"
-          else "Opq.publishPqServingOpq")), rotation)
+        PqDrift(art, art.driftStats.getOrElse(throw noRef("publishPqServing")))
     }
   }
 
@@ -2352,13 +2357,10 @@ object GraphAnn {
       probeId: String, probeVec: String, nprobe: Int, k: Int, ef: Int,
       rerankFactor: Int = 4, clumpGuard: Boolean = true,
       clumpBound: Option[Int] = None,
-      tombstones: Option[DataFrame] = None,
-      corpusVecTransform: Option[org.apache.spark.sql.expressions
-        .UserDefinedFunction] = None): DataFrame =
+      tombstones: Option[DataFrame] = None): DataFrame =
     routedPq(nodes, index, corpus, idCol, vecCol, probes, probeId, probeVec,
-      routeBatch(probes, probeId, probeVec, index.centroids, nprobe, unit = true),
-      None, k, ef, rerankFactor, clumpGuard, clumpBound, tombstones,
-      corpusVecTransform)
+      routeBatch(probes, probeId, probeVec, index.centroids, nprobe, Some(index)),
+      None, k, ef, rerankFactor, clumpGuard, clumpBound, tombstones)
 
   /** The PQ search body with the routing PRECOMPUTED — shared by
     * [[searchGraphRoutedPq]], [[searchGraphRoutedPqFiltered]] (`allowed`)
@@ -2366,16 +2368,15 @@ object GraphAnn {
     * scan and must drive the beams with that SAME map (routing twice
     * would collect the probe batch twice, and a nondeterministic probes
     * frame could then prune one cell set while beaming another): the
-    * clump guard, ADC beams over the routed cells, then [[pqRerank]].
+    * clump guard, ADC beams over the routed cells, then
+    * [[Similarity.pqRerank]].
     */
   private def routedPq(nodes: DataFrame,
       index: Similarity.IvfPqIndex, corpus: DataFrame, idCol: String,
       vecCol: String, probes: DataFrame, probeId: String, probeVec: String,
       routes: Map[Int, Array[(Long, Array[Float])]], allowed: Option[DataFrame],
       k: Int, ef: Int, rerankFactor: Int, clumpGuard: Boolean,
-      clumpBound: Option[Int], tombstones: Option[DataFrame],
-      corpusVecTransform: Option[org.apache.spark.sql.expressions
-        .UserDefinedFunction]): DataFrame = {
+      clumpBound: Option[Int], tombstones: Option[DataFrame]): DataFrame = {
     val routedCells = routes.keys.toSeq
     // a serving deployment passes the build-time pqClumpBound so the
     // guard costs nothing per call; the default measures the probed
@@ -2387,8 +2388,8 @@ object GraphAnn {
     val kCand = math.max(k * rerankFactor, if (clump > 0) clump + k else 0)
     val approx = routedCandidates(NodeCodec.pq(index), nodes, routes, allowed,
       kCand, ef, tombstones).toDF("probe_id", "id", "approx_sim")
-    pqRerank(approx, corpus, idCol, vecCol, probes, probeId, probeVec,
-      kCand, k, corpusVecTransform)
+    Similarity.pqRerank(index, approx, corpus, idCol, vecCol, probes,
+      probeId, probeVec, kCand, k)
   }
 
   /** FILTERED PQ-routed graph search — [[searchGraphRoutedFiltered]]'s
@@ -2407,48 +2408,10 @@ object GraphAnn {
       allowed: DataFrame, nprobe: Int, k: Int, ef: Int,
       rerankFactor: Int = 4, clumpGuard: Boolean = true,
       clumpBound: Option[Int] = None,
-      tombstones: Option[DataFrame] = None,
-      corpusVecTransform: Option[org.apache.spark.sql.expressions
-        .UserDefinedFunction] = None): DataFrame =
+      tombstones: Option[DataFrame] = None): DataFrame =
     routedPq(nodes, index, corpus, idCol, vecCol, probes, probeId, probeVec,
-      routeBatch(probes, probeId, probeVec, index.centroids, nprobe, unit = true),
-      Some(allowed), k, ef, rerankFactor, clumpGuard, clumpBound, tombstones,
-      corpusVecTransform)
-
-  /** The shared stage-1-merge + exact-rerank tail of both PQ search
-    * paths: per-probe ADC survivors cap at `kCand` through the
-    * bounded-heap aggregator, join their float vectors back, and rerank
-    * exactly to k. Output: (probe_id, id, sim, rank), sims exact.
-    */
-  private def pqRerank(approx: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, probes: DataFrame, probeId: String, probeVec: String,
-      kCand: Int, k: Int,
-      corpusVecTransform: Option[org.apache.spark.sql.expressions
-        .UserDefinedFunction] = None): DataFrame = {
-    val stage1 = udaf(new graft.functions.TopKByScore(kCand))
-    val survivors = approx.groupBy(col("probe_id"))
-      .agg(stage1(col("id"), col("approx_sim")).as("top"))
-      .select(col("probe_id"), explode(col("top")).as("p"))
-      .select(col("probe_id"), col("p._1").as("id"))
-    val stage2 = udaf(new graft.functions.TopKByScore(k))
-    // `corpusVecTransform` (the OPQ tier's rotation) applies ABOVE the
-    // survivors join — O(kCand·|probes|) rows, never O(corpus); see
-    // Similarity.searchIvfPqBatch for the r17 lesson this placement pins.
-    survivors
-      .join(corpus.select(col(idCol).cast("long").as("id"),
-        col(vecCol).as("vec")), Seq("id"))
-      .join(broadcast(probes.select(col(probeId).cast("long").as("probe_id"),
-        col(probeVec).as("probe_vec"))), Seq("probe_id"))
-      .withColumn("vec", corpusVecTransform.map(f => f(col("vec")))
-        .getOrElse(col("vec")))
-      .withColumn("sim", graft.functions.GraftFunctions
-        .cosine_f32(col("vec"), col("probe_vec")))
-      .groupBy(col("probe_id"))
-      .agg(stage2(col("id"), col("sim")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r", "p")))
-      .select(col("probe_id"), col("p._1").as("id"), col("p._2").as("sim"),
-        (col("r") + 1).cast("int").as("rank"))
-  }
+      routeBatch(probes, probeId, probeVec, index.centroids, nprobe, Some(index)),
+      Some(allowed), k, ef, rerankFactor, clumpGuard, clumpBound, tombstones)
 
   /** [[purgeTombstones]] for a PQ index — same touched-segment rebuild,
     * except a [[PqGraphNode]] stores no float vector, so rebuilt

@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
   * (cos(Rx, Rq) = cos(x, q)), the rotated tier is exactly the existing
   * IVF-PQ machinery applied to rotated vectors — cells, codes, ADC
   * tables, graph serving and the cold-start path all reuse
-  * [[Similarity]] verbatim; the ONLY new state is the dim×dim rotation,
-  * persisted beside the artifacts.
+  * [[Similarity]] and [[GraphAnn]] verbatim; the ONLY new state is the
+  * dim×dim rotation, carried by the index itself
+  * ([[Similarity.IvfPqIndex]]`.rotation`) and persisted beside its
+  * other artifacts.
   *
   * Training is scale-true in the centroid-table discipline: each OPQ
   * iteration is (a) one [[Similarity.trainPq]] over the rotated corpus
@@ -29,12 +31,6 @@ import org.apache.spark.sql.functions._
   * unrotated baseline it is measured against.
   */
 object Opq {
-
-  /** The OPQ serving index: the learned rotation + a standard
-    * [[Similarity.IvfPqIndex]] built over the ROTATED unit vectors.
-    */
-  final case class IvfOpqIndex(rotation: Array[Array[Float]],
-      index: Similarity.IvfPqIndex)
 
   private def identityMatrix(n: Int): Array[Array[Float]] =
     Array.tabulate(n, n)((i, j) => if (i == j) 1.0f else 0.0f)
@@ -66,15 +62,26 @@ object Opq {
       if (v == null) null else rotate(bc.value, Similarity.l2unit(v)).toSeq)
   }
 
-  /** `rows`' (id, vec) pairs with null vectors dropped and the rest
-    * passed through `rot` (a [[rotateUnitUdf]]) — how probes, batches
-    * and corpora enter the rotated space.
+  /** `rows`' (id, vec) pairs in the space of an index with `rotation`:
+    * as given without one; with one, null vectors dropped and the rest
+    * passed through [[rotateUnitUdf]] — how corpora and batches enter an
+    * OPQ index's space.
     */
-  private[operators] def rotateRows(rows: DataFrame, idCol: String,
-      vecCol: String, rot: org.apache.spark.sql.expressions
-        .UserDefinedFunction): DataFrame =
-    rows.filter(col(vecCol).isNotNull)
-      .select(col(idCol), rot(col(vecCol)).as(vecCol))
+  private[operators] def intoSpace(rows: DataFrame, idCol: String,
+      vecCol: String, rotation: Option[Array[Array[Float]]]): DataFrame =
+    rotation.fold(rows)(r => rows.filter(col(vecCol).isNotNull)
+      .select(col(idCol), rotateUnitUdf(rows.sparkSession, r)(col(vecCol))
+        .as(vecCol)))
+
+  /** One vector in the space of an index with `rotation`, by
+    * [[rotateUnitUdf]]'s arithmetic: as given without one, else unit-
+    * normalized and rotated. Every PQ path unit-normalizes the result,
+    * as it does an unrotated vector. JVM float arithmetic is strict, so
+    * a probe rotated here on the driver carries the bits the UDF gives.
+    */
+  private[operators] def intoSpace(v: Seq[Float],
+      rotation: Option[Array[Array[Float]]]): Seq[Float] =
+    rotation.fold(v)(r => rotate(r, Similarity.l2unit(v)).toSeq)
 
   /** Mean squared quantization error of `book` over the (unit,
     * R-rotated) corpus — OPQ's training objective, and the gate's
@@ -287,58 +294,42 @@ object Opq {
     * rotated corpus to the UNCHANGED [[Similarity.buildIvfPq]] (cells,
     * residual codes, everything downstream identical — rotation
     * preserves the unit sphere, so residual decomposition and ADC
-    * scoring hold verbatim in the rotated space).
+    * scoring hold verbatim in the rotated space). The result is a
+    * [[Similarity.IvfPqIndex]] carrying the rotation: every PQ entry
+    * point serves it from RAW vectors — [[Similarity.searchIvfPqBatch]],
+    * [[GraphAnn.buildGraphPerCellPq]], [[GraphAnn.searchGraphRoutedPq]],
+    * [[GraphAnn.publishPqServing]] (rotation/ under the same flip) and
+    * the cold start among them.
     */
   def buildIvfOpq(spark: SparkSession, corpus: DataFrame, idCol: String,
       vecCol: String, nCells: Int, subspaces: Int, codesPerSub: Int,
       ivfIters: Int = 3, pqIters: Int = 3,
-      opqIters: Int = 3): IvfOpqIndex = {
+      opqIters: Int = 3): Similarity.IvfPqIndex = {
     val (r, _) = trainRotation(spark, corpus, idCol, vecCol, subspaces,
       codesPerSub, opqIters, pqIters)
-    val rotated = rotateRows(corpus, idCol, vecCol, rotateUnitUdf(spark, r))
-    IvfOpqIndex(r,
-      Similarity.buildIvfPq(spark, rotated, idCol, vecCol, nCells,
-        subspaces, codesPerSub, ivfIters, pqIters))
+    Similarity.buildIvfPq(spark, intoSpace(corpus, idCol, vecCol, Some(r)),
+      idCol, vecCol, nCells, subspaces, codesPerSub, ivfIters, pqIters)
+      .copy(rotation = Some(r))
   }
 
-  /** Batch search — rotate the probes (O(|batch|) rows) and hand the
-    * UNROTATED corpus to [[Similarity.searchIvfPqBatch]] with the
-    * rotation as its post-join `corpusVecTransform`, so corpus rows are
-    * rotated only AFTER the stage-1 survivors join:
-    * O(k·rerankFactor·|probes|) dim×dim applications per batch instead
-    * of O(n). (The r17 path rotated the whole corpus below that join —
-    * at dim 64 that is ~4 096 flops on EVERY corpus row per batch, 64×
-    * the cosine the PQ stage-1 exists to avoid; a scale-killer at
-    * 100 TB.) Rotation preserves cosines, so the returned sims ARE the
-    * original-space cosines (up to float rounding of the rotation
-    * itself), and per-row values are identical to the r17 path — the
-    * same UDF on the same surviving rows, just placed above the join.
+  /** [[Similarity.searchIvfPqBatch]] on an OPQ index plus the accumulator
+    * counting corpus-row rotations in the rerank stage — the
+    * O(survivors) scale pin. After one action on the result, the
+    * accumulator reads ~|probes|·k·rerankFactor at most (each stage-1
+    * survivor joins exactly one corpus row), NOT the corpus size;
+    * `OpqSpec` and the v39 gate assert it with a 3× margin —
+    * accumulators over-count under task retries/speculation, so the pin
+    * is a bounded-above signal, never an equality.
     */
-  def searchIvfOpqBatch(spark: SparkSession, ix: IvfOpqIndex,
-      corpus: DataFrame, idCol: String, vecCol: String, probes: DataFrame,
-      probeId: String, probeVec: String, nprobe: Int, k: Int,
-      rerankFactor: Int = 4): DataFrame =
-    searchIvfOpqBatchCounted(spark, ix, corpus, idCol, vecCol, probes,
-      probeId, probeVec, nprobe, k, rerankFactor)._1
-
-  /** [[searchIvfOpqBatch]] plus the accumulator counting corpus-row
-    * rotation invocations in the rerank stage — the O(survivors) scale
-    * pin. After one action on the result, the accumulator reads
-    * ~|probes|·k·rerankFactor at most (each stage-1 survivor joins
-    * exactly one corpus row), NOT the corpus size; `OpqSpec` and the
-    * v39 gate assert it with a 3× margin — accumulators over-count
-    * under task retries/speculation, so the pin is a bounded-above
-    * signal, never an equality.
-    */
-  def searchIvfOpqBatchCounted(spark: SparkSession, ix: IvfOpqIndex,
+  def searchIvfOpqBatchCounted(spark: SparkSession, ix: Similarity.IvfPqIndex,
       corpus: DataFrame, idCol: String, vecCol: String, probes: DataFrame,
       probeId: String, probeVec: String, nprobe: Int, k: Int,
       rerankFactor: Int = 4): (DataFrame,
       org.apache.spark.util.LongAccumulator) = {
+    val r = ix.rotation.getOrElse(throw new IllegalArgumentException(
+      "searchIvfOpqBatchCounted counts rotations: the index has none"))
     val acc = spark.sparkContext.longAccumulator("opq_rerank_rotations")
-    val rotProbes = rotateRows(probes, probeId, probeVec,
-      rotateUnitUdf(spark, ix.rotation))
-    val bc = spark.sparkContext.broadcast(ix.rotation)
+    val bc = spark.sparkContext.broadcast(r)
     // asNondeterministic pins the side-effecting UDF to ONE evaluation
     // per output row — without it Catalyst may duplicate the expression
     // (collapsed projects, subexpression elimination) and inflate the
@@ -347,123 +338,13 @@ object Opq {
       acc.add(1L)
       if (v == null) null else rotate(bc.value, Similarity.l2unit(v)).toSeq
     }).asNondeterministic()
-    val out = Similarity.searchIvfPqBatch(spark, ix.index,
-      corpus.filter(col(vecCol).isNotNull), idCol, vecCol, rotProbes,
-      probeId, probeVec, nprobe, k, rerankFactor,
-      corpusVecTransform = Some(rotCounting))
-    (out, acc)
+    (Similarity.ivfPqBatch(spark, ix, corpus, idCol, vecCol, probes,
+      probeId, probeVec, nprobe, k, rerankFactor, maxCachedTables = 8192,
+      rotateSurvivors = Some(rotCounting)), acc)
   }
 
-  /** Persist rotation + artifacts under one root; [[readIvfOpq]] serves
-    * from disk alone (cold start) — parquet floats round-trip
-    * bit-exactly, so the reread rotation is the trained one.
-    */
-  def writeIvfOpq(spark: SparkSession, ix: IvfOpqIndex, dir: String,
-      clumpBound: Option[Int] = None,
-      driftStats: Option[Similarity.DriftStats] = None): Unit = {
-    writeRotation(spark, ix.rotation, s"$dir/rotation")
-    Similarity.writeIvfPq(ix.index, s"$dir/pq", clumpBound, driftStats)
-  }
-
-  def readIvfOpq(spark: SparkSession, dir: String): IvfOpqIndex = {
-    IvfOpqIndex(readRotation(spark, s"$dir/rotation"),
-      Similarity.readIvfPq(spark, s"$dir/pq").index)
-  }
-
-  /** [[writeRotation]]'s layout, supplied to every rotation read so
-    * none pays a schema-inference job (see Similarity's artifact-schema
-    * note). */
-  private[graft] val rotationSchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("i",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("row",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, containsNull = false))))
-
-  private def writeRotation(spark: SparkSession,
-      r: Array[Array[Float]], dir: String): Unit = {
-    import spark.implicits._
-    r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
-      .toDF("i", "row")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-  }
-
-  private[operators] def readRotation(spark: SparkSession,
-      dir: String): Array[Array[Float]] =
-    spark.read.schema(rotationSchema).parquet(dir)
-      .collect() // dim rows — bounded driver state
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1).map(_._2)
-
-  // ── The OPQ GRAPH serving tier ──────────────────────────────────────
-  // The rotation slots in at exactly three seams — probe transform
-  // (routing + ADC run in the rotated space the codes were trained in),
-  // graph build input (rotated unit corpus), and the exact rerank's
-  // survivor transform — and EVERYTHING else is [[GraphAnn]]'s
-  // partitioned PQ graph machinery verbatim, so the 100 TB serving path
-  // (DiskANN-posture codes+adjacency on disk, PartitionFilters-pruned
-  // cell reads, bounded rerank) gets v39's MSE cut for free.
-
-  /** Build the graph nodes for an OPQ index: [[GraphAnn.buildGraphPerCellPq]]
-    * over the ROTATED unit corpus (the space `ix.index`'s cells and
-    * codes live in). One O(n) rotation pass at BUILD time — never at
-    * serving time.
-    */
-  def buildGraphCellsOpq(spark: SparkSession, ix: IvfOpqIndex,
-      corpus: DataFrame, idCol: String, vecCol: String, m: Int = 8,
-      efConstruction: Int = 64,
-      maxSegmentSize: Int = Int.MaxValue): DataFrame = {
-    val rotated = rotateRows(corpus, idCol, vecCol,
-      rotateUnitUdf(spark, ix.rotation))
-    GraphAnn.buildGraphPerCellPq(spark, rotated, idCol, vecCol, ix.index,
-      m, efConstruction, maxSegmentSize)
-  }
-
-  /** [[GraphAnn.publishPqServing]] plus the rotation, under ONE version
-    * dir — the same atomic pointer flip covers cells, artifacts AND the
-    * rotation, so a cold-started server can never read a codebook with
-    * the wrong rotation. Layout: `<root>/v<NNN>/{cells,artifacts,rotation}`.
-    */
-  def publishPqServingOpq(spark: SparkSession, nodes: DataFrame,
-      ix: IvfOpqIndex, root: String, clumpBound: Option[Int] = None,
-      driftStats: Option[Similarity.DriftStats] = None,
-      keepVersions: Int = 2): String =
-    graft.pipeline.VersionedIndex.publishInto(root, keepVersions) { dir =>
-      GraphAnn.overlapWrites(spark,
-        () => GraphAnn.writeGraphCells(nodes, s"$dir/cells"),
-        () => Similarity.writeIvfPq(ix.index, s"$dir/artifacts", clumpBound,
-          driftStats),
-        () => writeRotation(spark, ix.rotation, s"$dir/rotation"))
-    }
-
-  /** In-memory OPQ graph search: rotate the probes (O(|batch|)), run
-    * [[GraphAnn.searchGraphRoutedPq]] with the rotation as the rerank's
-    * survivor transform (O(k·rerankFactor·|probes|) — never the corpus;
-    * the r17 lesson). Sims are original-space cosines up to the
-    * rotation's float rounding.
-    */
-  def searchGraphRoutedPqOpq(spark: SparkSession, nodes: DataFrame,
-      ix: IvfOpqIndex, corpus: DataFrame, idCol: String, vecCol: String,
-      probes: DataFrame, probeId: String, probeVec: String, nprobe: Int,
-      k: Int, ef: Int, rerankFactor: Int = 4,
-      clumpBound: Option[Int] = None,
-      tombstones: Option[DataFrame] = None): DataFrame = {
-    val rot = rotateUnitUdf(spark, ix.rotation)
-    GraphAnn.searchGraphRoutedPq(nodes, ix.index, corpus, idCol, vecCol,
-      rotateRows(probes, probeId, probeVec, rot), probeId, probeVec, nprobe,
-      k, ef, rerankFactor, clumpGuard = true, clumpBound = clumpBound, tombstones = tombstones,
-      corpusVecTransform = Some(rot))
-  }
-
-  // ── OPQ × drift maintenance ─────────────────────────────────────────
-  // [[GraphAnn.rebuildDriftedServing]] serves an OPQ root on the one
-  // rebuild path (rotating the RAW batch and member floats, carrying
-  // rotation/ through the flip). R is FROZEN across partial rebuilds like
-  // the codebook — untouched codes were trained under it; a scheduled
-  // FULL retrain (buildIvfOpq → publishPqServingOpq) is where R refreshes.
-
-  /** The serving centroids expressed in RAW space: c ↦ Rᵀ·c. Because R
+  /** The serving centroids expressed in RAW space: c ↦ Rᵀ·c (as stored
+    * on an index without a rotation). Because R
     * is an isometry (‖Rx − c‖ = ‖x − Rᵀc‖ and the assignment argmax is
     * preserved), an arrival-point drift monitor
     * ([[graft.streaming.StreamingIngest.DriftMonitorConfig]]) given
@@ -472,20 +353,25 @@ object Opq {
     * rounding, far below the ratio thresholds) to scoring rotated
     * vectors against the rotated centroids — so the ingest hot path
     * never pays a per-row rotation and never changes for OPQ.
-    * Dim × nCells driver work, once per published version.
+    * Dim × nCells driver work, once per published version. R is FROZEN
+    * across partial rebuilds ([[GraphAnn.rebuildDriftedServing]]) like
+    * the codebook — untouched codes were trained under it; a scheduled
+    * FULL retrain ([[buildIvfOpq]] → [[GraphAnn.publishPqServing]]) is
+    * where R refreshes.
     */
-  def unrotatedCentroids(ix: IvfOpqIndex): Array[(Int, Array[Float])] =
-    ix.index.centroids.map { case (cell, c) =>
-      val n = ix.rotation.length
+  def unrotatedCentroids(
+      ix: Similarity.IvfPqIndex): Array[(Int, Array[Float])] =
+    ix.rotation.fold(ix.centroids)(r => ix.centroids.map { case (cell, c) =>
+      val n = r.length
       val out = new Array[Float](n)
       var j = 0
       while (j < n) {
         var s = 0.0
         var i = 0
-        while (i < n) { s += ix.rotation(i)(j) * c(i); i += 1 }
+        while (i < n) { s += r(i)(j) * c(i); i += 1 }
         out(j) = s.toFloat
         j += 1
       }
       (cell, out)
-    }
+    })
 }

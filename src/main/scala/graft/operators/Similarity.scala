@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import graft.functions.GraftFunctions
 import scala.jdk.CollectionConverters._
 
@@ -626,6 +627,9 @@ object Similarity {
     StructField("subspaces", IntegerType),
     StructField("sub_dim", IntegerType),
     StructField("clump_bound", IntegerType)))
+  /** An OPQ index's rotation: row `i` of the dim×dim matrix. */
+  private[graft] val rotationSchema = StructType(Seq(
+    StructField("i", IntegerType), StructField("row", floatArr)))
   private val driftStatsSchema = StructType(Seq(
     StructField("cell", IntegerType), StructField("mass", DoubleType),
     StructField("n", LongType), StructField("mean_rn", DoubleType),
@@ -1224,9 +1228,18 @@ object Similarity {
     * residual PQ training is the same one-shuffle-per-iteration Lloyd as
     * [[trainPq]]; the index is (id, cell, 8-byte codes) — the float
     * corpus is never read again until the final rerank.
+    *
+    * `rotation` is an OPQ index's learned orthonormal rotation
+    * ([[Opq.buildIvfOpq]]): its cells, codes and graph live in the space
+    * of the rotated unit vectors. Every entry point that takes the index
+    * takes RAW vectors and moves them into that space itself
+    * ([[Opq.intoSpace]]) — probes before routing, build and append
+    * inputs, and the exact rerank's survivors — and [[writeIvfPq]] /
+    * [[readIvfPq]] carry it beside the other artifacts.
     */
   final case class IvfPqIndex(centroids: Array[(Int, Array[Float])],
-      book: PqCodebook, coded: DataFrame)
+      book: PqCodebook, coded: DataFrame,
+      rotation: Option[Array[Array[Float]]] = None)
 
   def buildIvfPq(spark: SparkSession, corpus: DataFrame, idCol: String,
       vecCol: String, nCells: Int, subspaces: Int, codesPerSub: Int,
@@ -1261,18 +1274,18 @@ object Similarity {
     * codebook — no retrain, so appended codes score through the same ADC
     * tables as every stored code word. Distribution drift is a scheduled
     * rebuild (publish via [[graft.pipeline.VersionedIndex]]), not a
-    * per-batch cost. One broadcast (centroids + book), one map — no
-    * shuffle. Returns (id, cell, pq_codes).
+    * per-batch cost. One broadcast (centroids + book + rotation), one
+    * map — no shuffle. Returns (id, cell, pq_codes).
     */
   def encodeIntoIvfPq(spark: SparkSession, df: DataFrame, idCol: String,
       vecCol: String, index: IvfPqIndex): DataFrame = {
     // centroid lookup map built ONCE (a find/sort inside the per-row UDF
     // would multiply encode cost by O(nCells) at production cell counts)
     val bc = spark.sparkContext.broadcast(
-      (index.centroids, index.centroids.toMap, index.book))
+      (index.centroids, index.centroids.toMap, index.book, index.rotation))
     val enc = udf((v: Seq[Float]) => {
-      val (cents, centroidOf, book) = bc.value
-      val u = l2unit(v)
+      val (cents, centroidOf, book, rotation) = bc.value
+      val u = l2unit(Opq.intoSpace(v, rotation))
       var cell = 0; var bestD = Double.MaxValue
       var ci = 0
       while (ci < cents.length) {
@@ -1332,8 +1345,10 @@ object Similarity {
     // artifact here is mode(overwrite), and an in-place rewrite that left
     // the old index's drift_stats behind would hand the monitor a
     // reference from the WRONG centroids (silently mis-scoring every
-    // batch) instead of the honest "no reference stored".
-    // The four driver-sized side tables write CONCURRENTLY (guide §2.6:
+    // batch) instead of the honest "no reference stored". An OPQ index's
+    // rotation is stored and deleted by the same rule: a stale rotation/
+    // would serve a plain index in a rotated space.
+    // The driver-sized side tables write CONCURRENTLY (guide §2.6:
     // overlap independent jobs — each is a one-task write whose wall is
     // the scheduler floor, and they touch disjoint directories); the
     // data-sized coded write keeps the whole cluster first. Await-all-
@@ -1350,15 +1365,22 @@ object Similarity {
     val description = graft.core.Jobs.description(spark.sparkContext)
     def leg(body: => Unit) = Future(
       graft.core.Jobs.labelled(spark.sparkContext, description)(body))
-    val sideWrites = Seq(
+    def optional[A](value: Option[A], name: String)(write: (A, String) => Unit) =
       leg {
-        driftStats match {
-          case Some(st) => writeDriftStats(spark, st, s"$dir/drift_stats")
+        value match {
+          case Some(a) => write(a, s"$dir/$name")
           case None =>
-            val p = new org.apache.hadoop.fs.Path(s"$dir/drift_stats")
+            val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
             val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             if (fs.exists(p)) fs.delete(p, true)
         }
+      }
+    val sideWrites = Seq(
+      optional(driftStats, "drift_stats")(writeDriftStats(spark, _, _)),
+      optional(index.rotation, "rotation") { (r, path) =>
+        r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
+          .toDF("i", "row")
+          .coalesce(1).write.mode("overwrite").parquet(path)
       },
       leg {
         index.centroids.toSeq.map { case (ci, c) => (ci, c.toSeq) }
@@ -1389,13 +1411,13 @@ object Similarity {
     * tables, routing order (centroids sort by cell, [[buildIvf]]'s own
     * order) and code bytes are identical to the build-time index, which
     * is what pins cold-start searches row-identical to in-memory ones
-    * (gate v34). Driver state: centroids + codebook only; the coded
-    * table stays a lazy partition-pruned scan.
+    * (gate v34). Driver state: centroids + codebook (+ rotation) only;
+    * the coded table stays a lazy partition-pruned scan.
     */
   def readIvfPq(spark: SparkSession, dir: String): IvfPqArtifacts = {
     // ONE collect job for the whole cold read: manifest + centroids +
-    // codebook (+ the drift reference when stored) union under a tagged
-    // wide schema and collect together. Read table-by-table this was
+    // codebook (+ an OPQ index's rotation and the drift reference when
+    // stored) union under a tagged wide schema and collect together. Read table-by-table this was
     // ~10 one-task jobs (schema inference + collect per table) — pure
     // scheduler floor, paid per cold read (v34 per probe batch, the
     // rebuild orchestrators 2-3× per tick). The files, their layout and
@@ -1411,6 +1433,11 @@ object Similarity {
       spark.read.schema(sch).parquet(path)
         .select((lit(tag).as("t") +: cols): _*)
     val hasDrift = graft.core.Fs.exists(spark, s"$dir/drift_stats")
+    val hasRotation = graft.core.Fs.exists(spark, s"$dir/rotation")
+    def rotationLeg = leg(s"$dir/rotation", rotationSchema, "r",
+      col("i").as("a"), nullI.as("b"), col("row").as("vec"),
+      nullI.as("clump"), nullD.as("mass"), nullL.as("n"),
+      nullD.as("mean_rn"), nullD.as("p95_rn"), nullD.as("cmr"))
     val coreLegs = Seq(
       leg(s"$dir/manifest", manifestSchema, "m",
         col("subspaces").as("a"), col("sub_dim").as("b"), nullF.as("vec"),
@@ -1423,7 +1450,8 @@ object Similarity {
       leg(s"$dir/codebook", codebookSchema, "k",
         col("sub").as("a"), col("code").as("b"), col("centroid").as("vec"),
         nullI.as("clump"), nullD.as("mass"), nullL.as("n"),
-        nullD.as("mean_rn"), nullD.as("p95_rn"), nullD.as("cmr")))
+        nullD.as("mean_rn"), nullD.as("p95_rn"), nullD.as("cmr"))) ++
+      (if (hasRotation) Seq(rotationLeg) else Nil)
     def driftLeg = leg(s"$dir/drift_stats", driftStatsSchema, "d",
       col("cell").as("a"), nullI.as("b"), nullF.as("vec"),
       nullI.as("clump"), col("mass"), col("n"), col("mean_rn"),
@@ -1466,6 +1494,9 @@ object Similarity {
     val centroids = Array.tabulate(subspaces) { sc =>
       bySub(sc).sortBy(_._2).map(_._3)
     }
+    val rotation = if (!hasRotation) None
+      else Some(byTag.getOrElse("r", Array.empty[Row])
+        .map(r => (r.getInt(1), r.getSeq[Float](3).toArray)).sortBy(_._1).map(_._2))
     val drift =
       if (!driftReadable) None
       else driftStatsFromRows(byTag.getOrElse("d", Array.empty[Row]).map(r =>
@@ -1473,7 +1504,8 @@ object Similarity {
     val coded = spark.read.schema(codedSchema).parquet(s"$dir/coded")
       .select(col("id"), col("cell"), col("pq_codes"))
     IvfPqArtifacts(
-      IvfPqIndex(cents, PqCodebook(subspaces, subDim, centroids), coded),
+      IvfPqIndex(cents, PqCodebook(subspaces, subDim, centroids), coded,
+        rotation),
       clump, drift)
   }
 
@@ -1493,7 +1525,10 @@ object Similarity {
     * the O(corpus) alternative this replaces when [[trippedCells]]
     * confines the drift). `regionFloats` is the float rows of the
     * drifted region — the tripped cells' current members plus the
-    * drifted arrivals; everything here is linear in THAT region:
+    * drifted arrivals, in the index's space (rotated on an OPQ index, as
+    * [[GraphAnn.rebuildDriftedServing]] hands them over; the rotation
+    * carries into the result unchanged); everything here is linear in
+    * THAT region:
     *
     *  - `tripped.length × splitFactor` fresh centroids train by the same
     *    deterministic Lloyd as [[buildIvf]], on the region only. New
@@ -1558,11 +1593,11 @@ object Similarity {
       .select(col("id"), col("cell"), col("pq_codes"))
       .localCheckpoint(true)
     val merged = mergeDriftRefs(ref, regionStats, trippedSet)
-    val newIndex = IvfPqIndex(
-      (art.index.centroids.filterNot(c => trippedSet.contains(c._1)) ++
-        newCents).sortBy(_._1),
-      art.index.book,
-      art.index.coded.filter(!col("cell").isin(tripped.map(Int.box): _*))
+    val newIndex = art.index.copy(
+      centroids = (art.index.centroids.filterNot(c =>
+        trippedSet.contains(c._1)) ++ newCents).sortBy(_._1),
+      coded = art.index.coded
+        .filter(!col("cell").isin(tripped.map(Int.box): _*))
         .unionByName(regionCoded))
     IvfPqPartial(newIndex, merged, newCents.map(_._1), regionCoded,
       regionStats)
@@ -1769,18 +1804,21 @@ object Similarity {
     * stage-1 scan is cell-bounded.
     */
   def probedCells(index: IvfPqIndex, probe: Array[Float], nprobe: Int): Seq[Int] =
-    nearestCells(index.centroids, l2unit(probe), nprobe)
+    nearestCells(index.centroids, l2unit(Opq.intoSpace(probe, index.rotation)),
+      nprobe)
 
   /** ANN search over an IVF-PQ index: probe the nprobe nearest cells,
     * ADC-score ONLY their codes (`q̂·c_cell` constant + residual table
     * lookups), exact-rerank `k·rerankFactor` candidates against the float
     * corpus. Stage 1 touches nprobe/nCells of the 8-byte codes and no
-    * float vector at all.
+    * float vector at all. On an OPQ index stage 1 runs in the rotated
+    * space; the rerank scores the raw vectors (a rotation preserves
+    * cosines).
     */
   def searchIvfPq(spark: SparkSession, index: IvfPqIndex, corpus: DataFrame,
       idCol: String, vecCol: String, probe: Array[Float], nprobe: Int,
       k: Int, rerankFactor: Int = 4): DataFrame = {
-    val q = l2unit(probe)
+    val q = l2unit(Opq.intoSpace(probe, index.rotation))
     val cells = nearestCells(index.centroids, q, nprobe)
     val centroidOf = index.centroids.toMap
     val cellConst: Map[Int, Float] = cells.map { ci =>
@@ -1839,21 +1877,32 @@ object Similarity {
     * bulk at the cap, bounding memory at maxCachedTables × subspaces ×
     * codesPerSub × 4 B ≈ 4 MB at the 8192 default with 8×16 codebooks).
     * Stage-2 exact rerank joins the top k·rerankFactor survivors back to
-    * their float vectors per probe. Per-probe results are row-identical
-    * to [[searchIvfPq]] (spec-pinned), and unchanged by the r11 de-skew
-    * (ADC scores don't depend on which task computes them).
+    * their float vectors per probe ([[pqRerank]]). Per-probe results are
+    * row-identical to [[searchIvfPq]] (spec-pinned), and unchanged by the
+    * r11 de-skew (ADC scores don't depend on which task computes them).
+    * On an OPQ index the probes rotate before routing (O(|batch|)) and
+    * the rerank's survivors above their join; a probe with a null vector
+    * is skipped, on every index.
     */
   def searchIvfPqBatch(spark: SparkSession, index: IvfPqIndex,
       corpus: DataFrame, idCol: String, vecCol: String, probes: DataFrame,
       probeId: String, probeVec: String, nprobe: Int, k: Int,
-      rerankFactor: Int = 4, maxCachedTables: Int = 8192,
-      corpusVecTransform: Option[org.apache.spark.sql.expressions
-        .UserDefinedFunction] = None): DataFrame = {
+      rerankFactor: Int = 4, maxCachedTables: Int = 8192): DataFrame =
+    ivfPqBatch(spark, index, corpus, idCol, vecCol, probes, probeId,
+      probeVec, nprobe, k, rerankFactor, maxCachedTables, None)
+
+  /** [[searchIvfPqBatch]] with `rotateSurvivors` handed to [[pqRerank]]. */
+  private[operators] def ivfPqBatch(spark: SparkSession, index: IvfPqIndex,
+      corpus: DataFrame, idCol: String, vecCol: String, probes: DataFrame,
+      probeId: String, probeVec: String, nprobe: Int, k: Int,
+      rerankFactor: Int, maxCachedTables: Int,
+      rotateSurvivors: Option[UserDefinedFunction]): DataFrame = {
     val bc = spark.sparkContext.broadcast((index.centroids, index.book))
     val unitUdf = udf((v: Seq[Float]) => l2unit(v).toSeq)
     val cellsUdf = udf((q: Seq[Float]) =>
       nearestCells(bc.value._1, q.toArray, nprobe))
-    val probeCells = probes.filter(col(probeVec).isNotNull)
+    val probeCells = Opq.intoSpace(probes, probeId, probeVec, index.rotation)
+      .filter(col(probeVec).isNotNull)
       .select(col(probeId).cast("long").as("probe_id"),
         col(probeVec).as("probe_vec"))
       .withColumn("qunit", unitUdf(col("probe_vec")))
@@ -1901,26 +1950,49 @@ object Similarity {
         Row(pid, r.getLong(idIdx), s)
       }
     }(Encoders.row(approxSchema))
-    val stage1 = udaf(new graft.functions.TopKByScore(k * rerankFactor))
+    // a rotated rerank drops null corpus vectors before its join
+    pqRerank(index, approx,
+      if (index.rotation.isEmpty) corpus else corpus.filter(col(vecCol).isNotNull),
+      idCol, vecCol, probes, probeId, probeVec, k * rerankFactor, k,
+      rotateSurvivors)
+  }
+
+  /** The exact-rerank tail of every PQ search ([[searchIvfPqBatch]] and
+    * the [[GraphAnn]] PQ searches): per-probe ADC survivors (`approx`:
+    * probe_id, id, approx_sim) cap at `kCand` through the bounded-heap
+    * aggregator, join their float vectors back, and rerank exactly to k.
+    * Output: (probe_id, id, sim, rank), sims exact.
+    *
+    * On an OPQ index the probes and the survivors' vectors enter the
+    * rotated space ([[Opq.rotateUnitUdf]]) ABOVE the survivors join, so
+    * the rotation evaluates O(kCand·|probes|) rows — placing it on the
+    * corpus side below the join pays it on EVERY corpus row per batch
+    * (the r17 OPQ path did exactly that: dim×dim flops × n, 64× the
+    * cosine the PQ stage-1 exists to avoid). Spark has no rule that
+    * pushes a Project's expressions through a join, so the placement
+    * here is the plan's placement. `rotateSurvivors` replaces the
+    * survivors' rotation ([[Opq.searchIvfOpqBatchCounted]]'s counting
+    * copy).
+    */
+  private[operators] def pqRerank(index: IvfPqIndex, approx: DataFrame,
+      corpus: DataFrame, idCol: String, vecCol: String, probes: DataFrame,
+      probeId: String, probeVec: String, kCand: Int, k: Int,
+      rotateSurvivors: Option[UserDefinedFunction] = None): DataFrame = {
+    val rotate = index.rotation.map(Opq.rotateUnitUdf(corpus.sparkSession, _))
+    def rotated(f: Option[UserDefinedFunction], c: String) =
+      f.fold(col(c))(_(col(c)))
+    val stage1 = udaf(new graft.functions.TopKByScore(kCand))
     val survivors = approx
       .groupBy(col("probe_id"))
       .agg(stage1(col("id"), col("approx_sim").cast("double")).as("top"))
       .select(col("probe_id"), explode(col("top")).as("p"))
       .select(col("probe_id"), col("p._1").as("id"))
     val stage2 = udaf(new graft.functions.TopKByScore(k))
-    // `corpusVecTransform` (OPQ's rotation) applies ABOVE the survivors
-    // join, so it evaluates O(k·rerankFactor·|probes|) rows — placing it on
-    // the corpus side below the join pays the transform on EVERY corpus row
-    // per batch (the r17 OPQ path did exactly that: dim×dim flops × n,
-    // 64× the cosine the PQ stage-1 exists to avoid). Spark has no rule
-    // that pushes a Project's expressions through a join, so the placement
-    // here is the plan's placement.
     survivors
       .join(corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")), Seq("id"))
       .join(broadcast(probes.select(col(probeId).cast("long").as("probe_id"),
-        col(probeVec).as("probe_vec"))), Seq("probe_id"))
-      .withColumn("vec", corpusVecTransform.map(f => f(col("vec")))
-        .getOrElse(col("vec")))
+        rotated(rotate, probeVec).as("probe_vec"))), Seq("probe_id"))
+      .withColumn("vec", rotated(rotateSurvivors.orElse(rotate), "vec"))
       .withColumn("sim", GraftFunctions.cosine_f32(col("vec"), col("probe_vec")))
       .groupBy(col("probe_id"))
       .agg(stage2(col("id"), col("sim")).as("top"))

@@ -244,6 +244,8 @@ object IncrementalIndexer {
       .collect().map(_.getLong(0))
   }
 
+  private val runLogMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Run-summary log sink with retention (api/admin.py:202-228 semantics:
     * one JSON blob per run under `runs/`, keep the newest `maxRunFiles`,
     * delete the oldest beyond it). File timestamps order retention like the
@@ -252,26 +254,23 @@ object IncrementalIndexer {
   def writeRunLog(summary: RunSummary, logDir: String, maxRunFiles: Int = 500): Unit = {
     val dir = java.nio.file.Paths.get(logDir, "runs")
     java.nio.file.Files.createDirectories(dir)
-    // runId is caller-supplied: JSON-escape it in the payload and slug it
-    // for the file name so a quote can't corrupt the S12 scan and a '/'
-    // can't write outside the retention directory
-    val jsonId = summary.runId.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+    // runId is caller-supplied: the JSON writer escapes it in the payload,
+    // and it is slugged for the file name so a '/' can't write outside
+    // the retention directory
     val fileId = graft.core.TextKeys.sanitizeKey(summary.runId) match {
       case "" => "run"
       case s => s
     }
-    val json =
-      s"""{"runId":"$jsonId","sourceDocs":${summary.sourceDocs},
-         |"processed":${summary.processed},"skippedNoChange":${summary.skippedNoChange},
-         |"skippedBlocked":${summary.skippedBlocked},"purgedParents":${summary.purgedParents},
-         |"chunksWritten":${summary.chunksWritten},"indexSize":${summary.indexSize}}"""
-        .stripMargin.replace("\n", "")
-    java.nio.file.Files.writeString(dir.resolve(s"$fileId.json"), json)
+    val json = runLogMapper.createObjectNode()
+      .put("runId", summary.runId).put("sourceDocs", summary.sourceDocs)
+      .put("processed", summary.processed)
+      .put("skippedNoChange", summary.skippedNoChange)
+      .put("skippedBlocked", summary.skippedBlocked)
+      .put("purgedParents", summary.purgedParents)
+      .put("chunksWritten", summary.chunksWritten)
+      .put("indexSize", summary.indexSize)
+    java.nio.file.Files.writeString(dir.resolve(s"$fileId.json"),
+      runLogMapper.writeValueAsString(json))
     import scala.jdk.CollectionConverters._
     val listing = java.nio.file.Files.list(dir)
     val all =

@@ -1933,21 +1933,22 @@ object VectorQueries {
       val hitsBase = hits(Similarity.searchIvfPqBatch(s, ixBase, emb,
         "vec_id", "embedding", probes, "probe_id", "probe_vec",
         nprobe = nCells, k = k, rerankFactor = 1))
-      val hitsOpq = hits(Opq.searchIvfOpqBatch(s, ixOpq, emb,
+      val hitsOpq = hits(Similarity.searchIvfPqBatch(s, ixOpq, emb,
         "vec_id", "embedding", probes, "probe_id", "probe_vec",
         nprobe = nCells, k = k, rerankFactor = 1))
       // cold-start: rotation + artifacts round-trip, serving identical
       val root = java.nio.file.Files.createTempDirectory("graft-v39")
         .toString
-      Opq.writeIvfOpq(s, ixOpq, root)
-      val reread = Opq.readIvfOpq(s, root)
-      val rotRt = reread.rotation.zip(ixOpq.rotation).forall {
-        case (a, b) => java.util.Arrays.equals(a, b) }
-      val servedMem = Opq.searchIvfOpqBatch(s, ixOpq, emb, "vec_id",
+      Similarity.writeIvfPq(ixOpq, root)
+      val reread = Similarity.readIvfPq(s, root).index
+      val rotRt = reread.rotation.zip(ixOpq.rotation).exists {
+        case (a, b) => a.zip(b).forall { case (x, y) =>
+          java.util.Arrays.equals(x, y) } }
+      val servedMem = Similarity.searchIvfPqBatch(s, ixOpq, emb, "vec_id",
           "embedding", probes, "probe_id", "probe_vec", nprobe = 4,
           k = k, rerankFactor = 4)
         .select($"probe_id", $"id", $"rank").localCheckpoint(true)
-      val servedCold = Opq.searchIvfOpqBatch(s, reread, emb, "vec_id",
+      val servedCold = Similarity.searchIvfPqBatch(s, reread, emb, "vec_id",
           "embedding", probes, "probe_id", "probe_vec", nprobe = 4,
           k = k, rerankFactor = 4)
         .select($"probe_id", $"id", $"rank").localCheckpoint(true)
@@ -1999,8 +2000,8 @@ object VectorQueries {
     // rotation merely reshuffles (sign flips with ef; clump bounds
     // equal in both spaces — SCALING.md r18 table); the STRICT
     // code-quality-improvement claim lives in v39 (code-ranked, all
-    // cells, green at x8). (b) a publishPqServingOpq
-    // root serves cold-start row-identical to the in-memory path
+    // cells, green at x8). (b) a publishPqServing root of the OPQ
+    // index serves cold-start row-identical to the in-memory path
     // (rotation under the SAME version flip), (c) the cold serve
     // returns the full top-k for every probe.
     "v40_opq_graph_serving" -> ((s, d) => {
@@ -2020,8 +2021,8 @@ object VectorQueries {
         GraphAnn.buildGraphPerCellPq(s, emb, "vec_id", "embedding",
           ixBase, m, efC))
       val nodesOpq = Fixtures.cached(s, s"v40_nodes_opq:$d")(
-        Opq.buildGraphCellsOpq(s, ixOpq, emb, "vec_id", "embedding",
-          m, efC))
+        GraphAnn.buildGraphPerCellPq(s, emb, "vec_id", "embedding",
+          ixOpq, m, efC))
       val probes = emb.filter($"vec_id" % 16 === 0)
         .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
       val k = 10
@@ -2038,16 +2039,16 @@ object VectorQueries {
         emb, "vec_id", "embedding", probes, "probe_id", "probe_vec",
         nprobe = 8, k = k, ef = 64, rerankFactor = 4,
         clumpBound = Some(boundBase)))
-      val hitsOpq = hits(Opq.searchGraphRoutedPqOpq(s, nodesOpq, ixOpq,
+      val hitsOpq = hits(GraphAnn.searchGraphRoutedPq(nodesOpq, ixOpq,
         emb, "vec_id", "embedding", probes, "probe_id", "probe_vec",
         nprobe = 8, k = k, ef = 64, rerankFactor = 4,
         clumpBound = Some(boundOpq)))
       // one flip publishes cells + artifacts + rotation; cold ≡ memory
       val root = java.nio.file.Files.createTempDirectory("graft-v40")
         .toString
-      val v1 = Opq.publishPqServingOpq(s, nodesOpq, ixOpq, root,
+      val v1 = GraphAnn.publishPqServing(nodesOpq, ixOpq, root,
         Some(boundOpq))
-      val mem = Opq.searchGraphRoutedPqOpq(s, nodesOpq, ixOpq, emb,
+      val mem = GraphAnn.searchGraphRoutedPq(nodesOpq, ixOpq, emb,
           "vec_id", "embedding", probes, "probe_id", "probe_vec",
           nprobe = 4, k = k, ef = 64, rerankFactor = 4,
           clumpBound = Some(boundOpq))
@@ -2075,7 +2076,7 @@ object VectorQueries {
     }),
 
     // V41: OPQ × the auto-maintenance loop (r18 verdict item 1 — the
-    // drift tick was rotation-blind: pointed at a publishPqServingOpq
+    // drift tick was rotation-blind: pointed at an OPQ serving
     // root it would assign UNROTATED batch/corpus vectors against
     // rotated-space centroids and republish with no rotation/). Gates,
     // on st8's exact loop shape but an OPQ serving root: (a) the
@@ -2103,13 +2104,13 @@ object VectorQueries {
           subspaces = 8, codesPerSub = 16, ivfIters = 2, pqIters = 2,
           opqIters = 2))
       val nodes = Fixtures.cached(s, s"v41_nodes:$d")(
-        Opq.buildGraphCellsOpq(s, ixOpq, base, "vec_id", "embedding",
+        GraphAnn.buildGraphPerCellPq(s, base, "vec_id", "embedding", ixOpq,
           m = 8, efConstruction = 48))
-      val rotU = Opq.rotateUnitUdf(s, ixOpq.rotation)
+      val rotU = Opq.rotateUnitUdf(s, ixOpq.rotation.get)
       val refRot = Fixtures.cachedObj(s, s"v41_ref:$d")(
         Similarity.driftStats(s,
           base.select(rotU($"embedding").as("embedding")), "embedding",
-          ixOpq.index.centroids, unit = true))
+          ixOpq.centroids, unit = true))
       // st8's arrival files verbatim (same fixture key): b0 in-dist,
       // b1 the planted +0.5/dim drifted mode, disjoint id spaces
       val inDist = emb.filter($"vec_id" % 16 === 3)
@@ -2122,7 +2123,7 @@ object VectorQueries {
       val root = java.nio.file.Files.createTempDirectory("graft-v41-root")
         .toString
       val run = java.nio.file.Files.createTempDirectory("graft-v41-run")
-      Opq.publishPqServingOpq(s, nodes, ixOpq, root,
+      GraphAnn.publishPqServing(nodes, ixOpq, root,
         Some(GraphAnn.pqClumpBound(nodes)), Some(refRot))
       // ingest with the RAW-space monitor head — the isometry claim.
       // sourceSchema = the staged frames' own shape: skips the stream's
@@ -2175,12 +2176,14 @@ object VectorQueries {
       val rebuildFired = tick1.rebuild.nonEmpty &&
         tick1.pendingBatchIds == driftedIds
       val res = tick1.rebuild.get
-      val rotAfter = s.read.schema(Opq.rotationSchema).parquet(s"$root/${res.version}/rotation")
+      val rotAfter = s.read.schema(Similarity.rotationSchema)
+        .parquet(s"$root/${res.version}/artifacts/rotation")
         .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
         .sortBy(_._1).map(_._2)
-      val rotationSurvives = rotAfter.length == ixOpq.rotation.length &&
-        rotAfter.zip(ixOpq.rotation).forall { case (a, b) =>
-          java.util.Arrays.equals(a, b) }
+      val rotationSurvives = ixOpq.rotation.exists(r =>
+        rotAfter.length == r.length &&
+        rotAfter.zip(r).forall { case (a, b) =>
+          java.util.Arrays.equals(a, b) })
       // keystone: cold OPQ serve over the flipped root, drifted probes
       val probes = drifted.filter($"vec_id" < 2000020L)
         .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
@@ -2222,7 +2225,7 @@ object VectorQueries {
       // r18 verdict stretch: partial rebuilds FREEZE R (the codebook
       // discipline) — the scheduled FULL retrain is where R refreshes.
       // buildIvfOpq on the union re-learns rotation + codebook, the
-      // SAME publishPqServingOpq flip lands them, and the served
+      // SAME publishPqServing flip lands them, and the served
       // rotation is the refreshed one (bit-exact, ≠ the frozen R).
       // Build artifacts are FIXTURE (training is v39/v16's gated claim;
       // this gate's claim is the publish + serve of the refreshed R) —
@@ -2232,16 +2235,17 @@ object VectorQueries {
           val ix2 = Opq.buildIvfOpq(s, corpus, "vec_id", "embedding",
             nCells = 16, subspaces = 8, codesPerSub = 16, ivfIters = 2,
             pqIters = 2, opqIters = 2)
-          val n2 = Opq.buildGraphCellsOpq(s, ix2, corpus, "vec_id",
-            "embedding", m = 8, efConstruction = 48).localCheckpoint(true)
-          val rot2 = Opq.rotateUnitUdf(s, ix2.rotation)
+          val n2 = GraphAnn.buildGraphPerCellPq(s, corpus, "vec_id",
+            "embedding", ix2, m = 8, efConstruction = 48).localCheckpoint(true)
+          val rot2 = Opq.rotateUnitUdf(s, ix2.rotation.get)
           (ix2, n2, Similarity.driftStats(s,
             corpus.select(rot2($"embedding").as("embedding")), "embedding",
-            ix2.index.centroids, unit = true))
+            ix2.centroids, unit = true))
         }
-      val vFull = Opq.publishPqServingOpq(s, nodesFull, ixFull, root,
+      val vFull = GraphAnn.publishPqServing(nodesFull, ixFull, root,
         Some(GraphAnn.pqClumpBound(nodesFull)), Some(refFull))
-      val rotServed = s.read.schema(Opq.rotationSchema).parquet(s"$root/$vFull/rotation")
+      val rotServed = s.read.schema(Similarity.rotationSchema)
+        .parquet(s"$root/$vFull/artifacts/rotation")
         .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
         .sortBy(_._1).map(_._2)
       def sameRot(a: Array[Array[Float]], b: Array[Array[Float]]) =
@@ -2253,8 +2257,8 @@ object VectorQueries {
       val rotationRefreshed =
         graft.pipeline.VersionedIndex.currentVersion(root)
           .contains(vFull) &&
-        sameRot(rotServed, ixFull.rotation) &&
-        !sameRot(rotServed, ixOpq.rotation) &&
+        ixFull.rotation.exists(sameRot(rotServed, _)) &&
+        !ixOpq.rotation.exists(sameRot(rotServed, _)) &&
         coldFull.count() == nProbes * k
       Seq(root, run.toString, plainRoot.toString).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))

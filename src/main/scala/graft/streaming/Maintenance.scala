@@ -223,7 +223,8 @@ object Maintenance {
 
   /** One maintenance tick against a serving root of any tier: float
     * ([[GraphAnn.publishServing]]), PQ ([[GraphAnn.publishPqServing]]) or
-    * OPQ ([[graft.operators.Opq.publishPqServingOpq]]) — the reference's
+    * OPQ (the same publish of a [[graft.operators.Opq.buildIvfOpq]]
+    * index) — the reference's
     * one cron job per index, whatever it stores. `corpus` is the view the
     * index was built/appended from (the member fetch for tripped cells —
     * [[GraphAnn.rebuildDriftedServing]]'s contract, including its

@@ -94,14 +94,14 @@ class OpqSpec extends AnyFunSuite {
       nCells = 4, subspaces = 8, codesPerSub = 8, ivfIters = 1,
       pqIters = 1, opqIters = 1)
     val dir = java.nio.file.Files.createTempDirectory("graft-opq").toString
-    Opq.writeIvfOpq(spark, ix, dir)
-    val back = Opq.readIvfOpq(spark, dir)
-    assert(back.rotation.zip(ix.rotation).forall {
+    Similarity.writeIvfPq(ix, dir)
+    val back = Similarity.readIvfPq(spark, dir).index
+    assert(back.rotation.get.zip(ix.rotation.get).forall {
       case (a, b) => java.util.Arrays.equals(a, b) })
     val probes = emb.filter($"vec_id" % 16 === 0)
       .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
-    def serve(i: Opq.IvfOpqIndex) =
-      Opq.searchIvfOpqBatch(spark, i, emb, "vec_id", "embedding",
+    def serve(i: Similarity.IvfPqIndex) =
+      Similarity.searchIvfPqBatch(spark, i, emb, "vec_id", "embedding",
         probes, "probe_id", "probe_vec", nprobe = 2, k = 5)
         .select($"probe_id", $"id", $"rank").localCheckpoint(true)
     val a = serve(ix); val b = serve(back)
@@ -142,17 +142,17 @@ class OpqSpec extends AnyFunSuite {
     val ix = Opq.buildIvfOpq(spark, emb, "vec_id", "embedding",
       nCells = 4, subspaces = 8, codesPerSub = 8, ivfIters = 1,
       pqIters = 1, opqIters = 1)
-    val nodes = Opq.buildGraphCellsOpq(spark, ix, emb, "vec_id",
-      "embedding", m = 4, efConstruction = 16).localCheckpoint(true)
+    val nodes = GraphAnn.buildGraphPerCellPq(spark, emb, "vec_id",
+      "embedding", ix, m = 4, efConstruction = 16).localCheckpoint(true)
     val bound = GraphAnn.pqClumpBound(nodes)
     val root = java.nio.file.Files.createTempDirectory("graft-opq-root")
       .toString
-    val v1 = Opq.publishPqServingOpq(spark, nodes, ix, root, Some(bound))
+    val v1 = GraphAnn.publishPqServing(nodes, ix, root, Some(bound))
     assert(graft.pipeline.VersionedIndex.currentVersion(root).contains(v1))
     val probes = emb.filter($"vec_id" % 16 === 0)
       .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
     val k = 5
-    val mem = Opq.searchGraphRoutedPqOpq(spark, nodes, ix, emb, "vec_id",
+    val mem = GraphAnn.searchGraphRoutedPq(nodes, ix, emb, "vec_id",
         "embedding", probes, "probe_id", "probe_vec", nprobe = 2, k = k,
         ef = 32, rerankFactor = 4, clumpBound = Some(bound))
       .select($"probe_id", $"id", $"rank").localCheckpoint(true)
@@ -170,7 +170,7 @@ class OpqSpec extends AnyFunSuite {
         emb, "vec_id", "embedding", k = k)
       .select($"probe_id".cast("long").as("probe_id"),
         $"vec_id".cast("long").as("id"))
-    val got = Opq.searchGraphRoutedPqOpq(spark, nodes, ix, emb, "vec_id",
+    val got = GraphAnn.searchGraphRoutedPq(nodes, ix, emb, "vec_id",
       "embedding", probes, "probe_id", "probe_vec", nprobe = 4, k = k,
       ef = 128, rerankFactor = 64, clumpBound = Some(bound))
     val hits = got.join(exact, Seq("probe_id", "id"), "left_semi")
@@ -185,31 +185,34 @@ class OpqSpec extends AnyFunSuite {
     val ix = Opq.buildIvfOpq(spark, emb, "vec_id", "embedding",
       nCells = 8, subspaces = 8, codesPerSub = 8, ivfIters = 1,
       pqIters = 1, opqIters = 2)
-    val nodes = Opq.buildGraphCellsOpq(spark, ix, emb, "vec_id",
-      "embedding", m = 4, efConstruction = 16).localCheckpoint(true)
+    val nodes = GraphAnn.buildGraphPerCellPq(spark, emb, "vec_id",
+      "embedding", ix, m = 4, efConstruction = 16).localCheckpoint(true)
     val root = java.nio.file.Files.createTempDirectory("graft-opq-pqcold")
       .toString
-    val v = Opq.publishPqServingOpq(spark, nodes, ix, root,
+    val v = GraphAnn.publishPqServing(nodes, ix, root,
       Some(GraphAnn.pqClumpBound(nodes)))
     val probes = emb.filter($"vec_id" % 16 === 0)
       .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .sortBy(t => (t._1, t._4)).toSeq
-    // the OPQ cold path as the OPQ-only entry point served it: artifacts
-    // and rotation read from the version, probes rotated, the rotation
-    // handed to the rerank as the survivor transform
+    // the OPQ cold path built by hand: artifacts and rotation read from
+    // the version, then a rotation-free index served pre-rotated probes
+    // over a pre-rotated corpus (the same UDF on the same survivor rows;
+    // only where the rotation is applied differs)
     val art = Similarity.readIvfPq(spark, s"$root/$v/artifacts")
     val rot = Opq.rotateUnitUdf(spark,
-      spark.read.parquet(s"$root/$v/rotation").collect()
+      spark.read.parquet(s"$root/$v/artifacts/rotation").collect()
         .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
         .sortBy(_._1).map(_._2))
     val want = rows(GraphAnn.searchGraphRoutedPqPersisted(spark,
-      s"$root/$v/cells", art.index, emb, "vec_id", "embedding",
+      s"$root/$v/cells", art.index.copy(rotation = None),
+      emb.select($"vec_id", rot($"embedding").as("embedding")), "vec_id",
+      "embedding",
       probes.filter($"probe_vec".isNotNull)
         .select($"probe_id", rot($"probe_vec").as("probe_vec")),
       "probe_id", "probe_vec", nprobe = 2, k = 5, ef = 32, rerankFactor = 4,
-      clumpBound = art.clumpBound, corpusVecTransform = Some(rot)))
+      clumpBound = art.clumpBound))
     val got = rows(GraphAnn.searchGraphRoutedPqColdStart(spark, root, emb,
       "vec_id", "embedding", probes, "probe_id", "probe_vec", nprobe = 2,
       k = 5, ef = 32, rerankFactor = 4))
@@ -240,8 +243,8 @@ class OpqSpec extends AnyFunSuite {
     val probes = emb.filter($"vec_id" % 32 === 0)
       .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
     val k = 5
-    val got = Opq.searchIvfOpqBatch(spark, ix, emb, "vec_id", "embedding",
-      probes, "probe_id", "probe_vec", nprobe = 4, k = k,
+    val got = Similarity.searchIvfPqBatch(spark, ix, emb, "vec_id",
+      "embedding", probes, "probe_id", "probe_vec", nprobe = 4, k = k,
       rerankFactor = 64)
     val exact = Similarity.topKPerProbe(probes, "probe_id", "probe_vec",
         emb, "vec_id", "embedding", k = k)
@@ -265,16 +268,16 @@ class OpqSpec extends AnyFunSuite {
       nCells = 4, subspaces = 8, codesPerSub = 8, ivfIters = 1,
       pqIters = 1, opqIters = 2)
     val rawHead = Opq.unrotatedCentroids(ix)
-    val rotU = Opq.rotateUnitUdf(spark, ix.rotation)
+    val rotU = Opq.rotateUnitUdf(spark, ix.rotation.get)
     val ref = Similarity.driftStats(spark,
       emb.select(rotU($"embedding").as("v")), "v",
-      ix.index.centroids, unit = true)
+      ix.centroids, unit = true)
     def both(batch: org.apache.spark.sql.DataFrame) = {
       val raw = Similarity.driftReport(spark, batch.select($"embedding"),
         "embedding", rawHead, ref, unit = true)
       val rot = Similarity.driftReport(spark,
         batch.select(rotU($"embedding").as("embedding")), "embedding",
-        ix.index.centroids, ref, unit = true)
+        ix.centroids, ref, unit = true)
       (raw, rot)
     }
     val clean = emb.filter($"vec_id" % 8 === 3)
@@ -292,5 +295,85 @@ class OpqSpec extends AnyFunSuite {
     }
     val (rawD, _) = both(drifted)
     assert(rawD.drifted, "the planted mode must trip through the raw head")
+  }
+
+  /** A published OPQ root and a published PQ root over `emb`, each with
+    * its version: (opqRoot, opqVersion, pqRoot, pqVersion).
+    */
+  private def opqAndPqRoots(): (String, String, String, String) = {
+    def publish(ix: Similarity.IvfPqIndex, prefix: String) = {
+      val nodes = GraphAnn.buildGraphPerCellPq(spark, emb, "vec_id",
+        "embedding", ix, m = 4, efConstruction = 16).localCheckpoint(true)
+      val root = java.nio.file.Files.createTempDirectory(prefix).toString
+      (root, GraphAnn.publishPqServing(nodes, ix, root,
+        Some(GraphAnn.pqClumpBound(nodes))))
+    }
+    val (oRoot, oV) = publish(Opq.buildIvfOpq(spark, emb, "vec_id",
+      "embedding", nCells = 4, subspaces = 8, codesPerSub = 8, ivfIters = 1,
+      pqIters = 1, opqIters = 1), "graft-opq-o")
+    val (pRoot, pV) = publish(Similarity.buildIvfPq(spark, emb, "vec_id",
+      "embedding", nCells = 4, subspaces = 8, codesPerSub = 8, ivfIters = 1,
+      pqIters = 1), "graft-opq-p")
+    (oRoot, oV, pRoot, pV)
+  }
+
+  private def deleteAll(paths: String*): Unit = paths.foreach(p =>
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+
+  test("an OPQ probe batch with a null vector is refused as on the PQ tier") {
+    val (root, v, pqRoot, _) = opqAndPqRoots()
+    val art = Similarity.readIvfPq(spark, s"$root/$v/artifacts")
+    assert(art.index.rotation.nonEmpty && ServingTier.of(spark, root, v).name == "OPQ")
+    val nodes = spark.read.parquet(s"$root/$v/cells")
+    val dim = emb.select($"embedding").head().getSeq[Float](0).length
+    val probes = Seq((1L, Some(Array.fill(dim)(0.1f))), (2L, None))
+      .toDF("probe_id", "probe_vec")
+    val searches = Seq[() => Unit](
+      () => GraphAnn.searchGraphRoutedPq(nodes, art.index, emb, "vec_id",
+        "embedding", probes, "probe_id", "probe_vec", nprobe = 2, k = 5,
+        ef = 32, clumpBound = art.clumpBound).collect(),
+      () => GraphAnn.searchGraphRoutedPqColdStart(spark, root, emb, "vec_id",
+        "embedding", probes, "probe_id", "probe_vec", nprobe = 2, k = 5,
+        ef = 32).collect())
+    searches.foreach { search =>
+      val e = intercept[IllegalArgumentException](search())
+      assert(e.getMessage.contains("probe vector column `probe_vec` holds a null"),
+        e.getMessage)
+    }
+    deleteAll(root, pqRoot)
+  }
+
+  test("a float cold start refuses a PQ root and an OPQ root, naming the PQ cold start") {
+    val (oRoot, _, pRoot, _) = opqAndPqRoots()
+    val probes = emb.filter($"vec_id" % 64 === 0)
+      .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
+    Seq(pRoot -> "PQ", oRoot -> "OPQ").foreach { case (root, tier) =>
+      val e = intercept[IllegalStateException](
+        GraphAnn.searchGraphRoutedColdStart(spark, root, probes, "probe_id",
+          "probe_vec", nprobe = 2, k = 5, ef = 32).collect())
+      assert(e.getMessage.contains(s"a $tier serving root") &&
+        e.getMessage.contains("searchGraphRoutedPqColdStart"), e.getMessage)
+    }
+    deleteAll(oRoot, pRoot)
+  }
+
+  test("a version that keeps its rotation outside artifacts/ is refused, naming the republish") {
+    val (root, v, pqRoot, _) = opqAndPqRoots()
+    // the older OPQ layout, <v>/{cells,artifacts,rotation}: read as PQ it
+    // would serve in the unrotated space
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$root/$v/artifacts/rotation"),
+      java.nio.file.Paths.get(s"$root/$v/rotation"))
+    val probes = emb.filter($"vec_id" % 64 === 0)
+      .select($"vec_id".as("probe_id"), $"embedding".as("probe_vec"))
+    val refusals = Seq(
+      intercept[IllegalStateException](ServingTier.of(spark, root, v)),
+      intercept[IllegalStateException](
+        GraphAnn.searchGraphRoutedPqColdStart(spark, root, emb, "vec_id",
+          "embedding", probes, "probe_id", "probe_vec", nprobe = 2, k = 5,
+          ef = 32).collect()))
+    refusals.foreach(e => assert(e.getMessage.contains("rotation/") &&
+      e.getMessage.contains("republish") &&
+      e.getMessage.contains("GraphAnn.publishPqServing"), e.getMessage))
+    deleteAll(root, pqRoot)
   }
 }

@@ -374,13 +374,13 @@ class PartialRebuildSpec extends AnyFunSuite {
     val ox = Opq.buildIvfOpq(spark, base, "vec_id", "embedding", nCells = 8,
       subspaces = 8, codesPerSub = 8, ivfIters = 2, pqIters = 1,
       opqIters = 1)
-    val oNodes = Opq.buildGraphCellsOpq(spark, ox, base, "vec_id",
-      "embedding", m = 4, efConstruction = 16)
-    val rotU = Opq.rotateUnitUdf(spark, ox.rotation)
-    Opq.publishPqServingOpq(spark, oNodes, ox, oRoot,
+    val oNodes = GraphAnn.buildGraphPerCellPq(spark, base, "vec_id",
+      "embedding", ox, m = 4, efConstruction = 16)
+    val rotU = Opq.rotateUnitUdf(spark, ox.rotation.get)
+    GraphAnn.publishPqServing(oNodes, ox, oRoot,
       Some(GraphAnn.pqClumpBound(oNodes)), Some(Similarity.driftStats(spark,
         base.select(rotU($"embedding").as("embedding")), "embedding",
-        ox.index.centroids, unit = true)))
+        ox.centroids, unit = true)))
     Seq(pqRoot, fRoot, oRoot).foreach { root =>
       val v0 = graft.pipeline.VersionedIndex.currentVersion(root)
       val res = GraphAnn.rebuildDriftedServing(spark, root,

@@ -476,6 +476,26 @@ class IncrementalIndexerSpec extends AnyFunSuite {
       java.nio.file.Paths.get(dir, "runs", "run007.json"))
     assert(one.contains("\"runId\":\"run007\"") && one.contains("\"chunksWritten\":10"))
   }
+
+  test("run log: a runId with a quote, a backslash and control characters round-trips as JSON") {
+    val dir = Files.createTempDirectory("graft-runlog-esc").toString
+    val runId = "a\"b\\c\nd\u0001e"
+    IncrementalIndexer.writeRunLog(
+      IncrementalIndexer.RunSummary(runId, 3, 2, 1, 0, 4, 10, 12), dir)
+    val runs = java.nio.file.Paths.get(dir, "runs")
+    val files = java.nio.file.Files.list(runs)
+    import scala.jdk.CollectionConverters._
+    val written = try files.iterator().asScala.toSeq finally files.close()
+    assert(written.size == 1, written)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Files.readString(written.head))
+    assert(node.get("runId").asText() == runId)
+    assert(node.fieldNames().asScala.toSeq == Seq("runId", "sourceDocs",
+      "processed", "skippedNoChange", "skippedBlocked", "purgedParents",
+      "chunksWritten", "indexSize"))
+    assert(Seq(3L, 2L, 1L, 0L, 4L, 10L, 12L) ==
+      node.fields().asScala.toSeq.tail.map(_.getValue.asLong()))
+  }
 }
 
 object IncrementalIndexerSpec {

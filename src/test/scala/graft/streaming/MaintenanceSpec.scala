@@ -81,20 +81,20 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   /** OPQ deployment: rotated-space IVF-PQ + graph + reference under a
-    * fresh publishPqServingOpq root; returns (root, ix, v0).
+    * fresh publishPqServing root; returns (root, ix, v0).
     */
-  private def publishOpq(): (String, Opq.IvfOpqIndex, String) = {
+  private def publishOpq(): (String, Similarity.IvfPqIndex, String) = {
     val ix = Opq.buildIvfOpq(spark, base, "vec_id", "embedding",
       nCells = 8, subspaces = 8, codesPerSub = 8, ivfIters = 2,
       pqIters = 1, opqIters = 2)
-    val nodes = Opq.buildGraphCellsOpq(spark, ix, base, "vec_id",
-      "embedding", m = 4, efConstruction = 16)
-    val rotU = Opq.rotateUnitUdf(spark, ix.rotation)
+    val nodes = GraphAnn.buildGraphPerCellPq(spark, base, "vec_id",
+      "embedding", ix, m = 4, efConstruction = 16)
+    val rotU = Opq.rotateUnitUdf(spark, ix.rotation.get)
     val ref = Similarity.driftStats(spark,
       base.select(rotU($"embedding").as("embedding")), "embedding",
-      ix.index.centroids, unit = true)
+      ix.centroids, unit = true)
     val root = Files.createTempDirectory("graft-mt-oroot").toString
-    (root, ix, Opq.publishPqServingOpq(spark, nodes, ix, root,
+    (root, ix, GraphAnn.publishPqServing(nodes, ix, root,
       Some(GraphAnn.pqClumpBound(nodes)), Some(ref)))
   }
 
@@ -464,11 +464,11 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(res.version != v0 &&
       graft.pipeline.VersionedIndex.currentVersion(root)
         .contains(res.version), "one-flip republish")
-    val rotAfter = spark.read.parquet(s"$root/${res.version}/rotation")
+    val rotAfter = spark.read.parquet(s"$root/${res.version}/artifacts/rotation")
       .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).map(_._2)
-    assert(rotAfter.length == ix.rotation.length &&
-      rotAfter.zip(ix.rotation).forall {
+    assert(rotAfter.length == ix.rotation.get.length &&
+      rotAfter.zip(ix.rotation.get).forall {
         case (a, b) => java.util.Arrays.equals(a, b) },
       "the frozen rotation must survive the flip bit-exactly")
     // 2. every drifted row served; the PQ cold start reads the flipped
@@ -520,7 +520,7 @@ class MaintenanceSpec extends AnyFunSuite {
         "vec_id", "embedding")
     }
     assert(Seq("not a serving version", "GraphAnn.publishServing",
-      "GraphAnn.publishPqServing", "Opq.publishPqServingOpq")
+      "GraphAnn.publishPqServing")
       .forall(ex.getMessage.contains), ex.getMessage)
     assert(spark.read.parquet(s"$index/drift_log").count() == 1L,
       "the refusal comes before the prune")
